@@ -9,12 +9,14 @@ max of the version columns, with the full remaining row as final
 tiebreak so results are stable under shuffle.
 
 Scale note: this is a shuffle on the key columns. At 100 TB you do NOT
-run this per query — you maintain a compacted table (the streaming
-ingest path does exactly that via ``dropDuplicatesWithinWatermark``)
-and the read-side dedup view is the escape hatch (`use_final=True`
-parity). The window variant below lets AQE handle skew, and because
-the key usually contains the partition column (e.g. ``underlying``)
-the shuffle is partition-pruned first.
+run this per query — you maintain a compacted table
+(:func:`compact_table`) and the read-side dedup view is the escape
+hatch (`use_final=True` parity). The streaming path's
+``dropDuplicatesWithinWatermark`` is not this semantics: it keeps the
+first-arriving version of a key, not the latest
+(``streaming/ingest.py:dedup_stream``). The window variant below lets
+AQE handle skew, and because the key usually contains the partition
+column (e.g. ``underlying``) the shuffle is partition-pruned first.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from __future__ import annotations
 import shutil
 from collections.abc import Mapping, Sequence
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -55,6 +58,61 @@ def dedup_latest(
     )
 
 
+def _partition_leaves(root: Path, depth: int) -> list[Path]:
+    """Partition leaf dirs ``depth`` levels under ``root``, relative to
+    it; ``Path(".")`` stands for an unpartitioned table's root."""
+    if not root.exists():
+        return []
+    if not depth:
+        return [Path(".")]
+    return [
+        p.relative_to(root)
+        for p in root.glob("/".join(["*=*"] * depth))
+        if p.is_dir()
+    ]
+
+
+def _selected(rel: Path, selectors: Sequence[Mapping[str, str]] | None) -> bool:
+    """Whether any selector picks the partition leaf ``rel``."""
+    if not selectors:
+        return True
+    values = {}
+    for part in rel.parts:
+        c, v = part.split("=", 1)
+        values[unquote(c)] = unquote(v)
+    return any(all(values[c] == str(v) for c, v in sel.items()) for sel in selectors)
+
+
+def _restore(old: Path, target: Path) -> None:
+    """Put the aside copy ``old`` back at ``target``, keeping any files
+    written to ``target`` since the crash."""
+    if target.exists():
+        for f in old.iterdir():
+            f.replace(target / f.name)
+        old.rmdir()
+    else:
+        target.parent.mkdir(parents=True, exist_ok=True)
+        old.rename(target)
+
+
+def _recover(root: Path, staging: Path, aside: Path, depth: int) -> None:
+    """Finish or undo the swap of a compaction that crashed.
+
+    A leaf under ``aside`` is the old copy of a partition whose swap
+    began. If its staging leaf has gone, the new copy is in place (or
+    the partition compacted to nothing), so the old copy is deleted
+    (roll forward). If its staging leaf is still there, the swap
+    stopped before the new copy moved in, so the old copy goes back
+    (roll back). Only then is staging deleted: by now it holds no
+    partition's only copy.
+    """
+    for rel in _partition_leaves(aside, depth):
+        if (staging / rel).exists():
+            _restore(aside / rel, root / rel)
+    shutil.rmtree(aside, ignore_errors=True)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -77,6 +135,14 @@ def compact_table(
     rewrite-then-rename a Delta/Iceberg ``OPTIMIZE`` performs, minus
     the transaction log.
 
+    Crash safety: the swap of one partition renames the live leaf
+    aside (``<path>__old``), renames the staged leaf in and deletes the
+    aside copy. Between the two renames the partition is missing from
+    the table; its rows survive in the aside and staging copies, and
+    every run starts with a recovery pass that rolls such a swap back
+    or forward (see :func:`_recover`), so a rerun after a crash at any
+    step loses and duplicates no row.
+
     Scale design: pass ``only_partitions`` (list of
     ``{partition_col: value}`` selectors, CH ``OPTIMIZE PARTITION``
     parity) to touch only hot partitions — cost is proportional to the
@@ -86,6 +152,19 @@ def compact_table(
     with ``underlying``) no row crosses a partition boundary.
     """
     root = Path(path)
+    staging = root.with_name(root.name + "__compacting")
+    # aside area OUTSIDE the table root (an __old dir inside it would be
+    # discovered as a bogus partition value)
+    aside = root.with_name(root.name + "__old")
+    depth = len(partition_cols)
+    for sel in only_partitions or ():
+        if not set(sel) <= set(partition_cols):
+            raise ValueError(
+                f"only_partitions selector {dict(sel)} names a column outside "
+                f"partition_cols {list(partition_cols)}"
+            )
+    _recover(root, staging, aside, depth)
+
     df = spark.read.parquet(path)
     if only_partitions:
         sel = None
@@ -96,62 +175,30 @@ def compact_table(
                 one = cond if one is None else one & cond
             sel = one if sel is None else sel | one
         df = df.filter(sel)
+    # every partition read is swapped, also one whose rows all lost to
+    # winners in other partitions and so has no staged leaf
+    leaves = {rel for rel in _partition_leaves(root, depth) if _selected(rel, only_partitions)}
     rows_before = df.count()
     out = dedup_latest(df, keys, version_cols)
     if sort_within_partitions:
         out = out.sortWithinPartitions(*sort_within_partitions)
 
-    staging = root.with_name(root.name + "__compacting")
-    if staging.exists():
-        shutil.rmtree(staging)
     writer = out.write.mode("overwrite").format("parquet")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.save(str(staging))
+    leaves |= set(_partition_leaves(staging, depth))
 
-    swapped = []
-    if partition_cols:
-        # leaf partition dirs, relative to the staging root
-        leaves = {
-            f.parent.relative_to(staging)
-            for f in staging.rglob("*.parquet")
-        }
-        # aside area OUTSIDE the table root (an __old dir inside it
-        # would be discovered as a bogus partition value on a crashed
-        # run's next read)
-        aside_root = root.with_name(root.name + "__old")
-        if aside_root.exists():
-            shutil.rmtree(aside_root)
-        for rel in sorted(leaves):
-            target = root / rel
-            # rename the live partition ASIDE before moving the
-            # replacement in: deleting it first opens a crash window
-            # where the only surviving copy sits in the staging dir —
-            # which a recovery rerun would rmtree. With rename-aside,
-            # every instant has either the old or the new partition
-            # complete under the table root.
-            old = aside_root / rel
-            had_old = target.exists()
-            if had_old:
-                old.parent.mkdir(parents=True, exist_ok=True)
-                target.rename(old)
+    for rel in sorted(leaves):
+        target, new, old = root / rel, staging / rel, aside / rel
+        if target.exists():
+            old.parent.mkdir(parents=True, exist_ok=True)
+            target.rename(old)
+        if new.exists():
             target.parent.mkdir(parents=True, exist_ok=True)
-            shutil.move(str(staging / rel), str(target))
-            if had_old:
-                shutil.rmtree(old)
-            swapped.append(str(rel))
-        shutil.rmtree(aside_root, ignore_errors=True)
-    else:
-        old = root.with_name(root.name + "__old")
-        if old.exists():
-            shutil.rmtree(old)
-        old.mkdir()
-        for f in root.glob("*.parquet"):
-            f.rename(old / f.name)
-        for f in staging.glob("*.parquet"):
-            shutil.move(str(f), str(root / f.name))
-        shutil.rmtree(old)
-        swapped.append(".")
+            new.rename(target)
+        shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(aside, ignore_errors=True)
     shutil.rmtree(staging, ignore_errors=True)
 
     # one real count on the rewritten slice keeps the stats honest
@@ -163,7 +210,7 @@ def compact_table(
         "rows_before": rows_before,
         "rows_after": rows_after,
         "removed": rows_before - rows_after,
-        "partitions": swapped,
+        "partitions": [str(rel) for rel in sorted(leaves)],
     }
 
 

@@ -17,9 +17,13 @@ trades_collector.py`` —
 Spark design: the network source is emulated by a deterministic
 synthetic page generator (no internet in this environment; the page
 protocol — count-limited, descending, cursor-driven — is identical).
-The sink is parquet partitioned by ``batch_token``: a replayed batch
-overwrites its own partition (idempotent, the Delta ``txnVersion``
-pattern without requiring Delta), never duplicating rows.
+The sink is a parquet staging area with one leaf per batch,
+``batch_token=<token>/``, holding one data file. Each batch is written
+with pyarrow to a hidden temp file in its leaf and renamed onto that
+file, so no Spark job runs per batch. A replayed batch replaces its own
+leaf's contents (idempotent, the Delta ``txnVersion`` pattern without
+requiring Delta), never duplicating rows; landing and compaction read
+the staging area with Spark.
 """
 
 from __future__ import annotations
@@ -31,9 +35,12 @@ import os
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _acceptable_types, _make_type_verifier
 
 from gapless_deribit_clickhouse_spark.exceptions import SourceError
 
@@ -53,6 +60,30 @@ TRADE_SCHEMA = T.StructType(
         T.StructField("index_price", T.DoubleType(), True),
     ]
 )
+
+# the staged layout: TRADE_SCHEMA with the epoch-ms ``timestamp`` stored
+# as a UTC timestamp
+_STAGED_ARROW = to_arrow_schema(
+    T.StructType(
+        [
+            T.StructField(f.name, T.TimestampType(), f.nullable) if f.name == "timestamp" else f
+            for f in TRADE_SCHEMA.fields
+        ]
+    )
+)
+# every batch_token=<token>/ leaf holds this one data file; the temp name
+# starts with "." and does not end in ".parquet", so Spark and parquet
+# globs skip a write that has not been renamed yet
+BATCH_FILE = "part-0.parquet"
+_BATCH_TMP = ".part-0.tmp"
+
+# createDataFrame(rows, TRADE_SCHEMA)'s own input check (private in
+# pyspark) and the exact Python types it accepts per field
+_verify_trade = _make_type_verifier(TRADE_SCHEMA)
+_ACCEPTED_TYPES = {
+    f.name: set(_acceptable_types[type(f.dataType)]) | ({type(None)} if f.nullable else set())
+    for f in TRADE_SCHEMA.fields
+}
 
 
 class SyntheticTradePages:
@@ -133,10 +164,14 @@ class CheckpointStore:
             return json.load(f)
 
     def save(self, currency: str, start_ts: int, end_ts: int, state: dict) -> None:
+        """Write to a temp file and rename it onto the checkpoint, so a
+        crash mid-write leaves the previous checkpoint loadable."""
         os.makedirs(self.directory, exist_ok=True)
         state = dict(state, updated_at=datetime.now(timezone.utc).isoformat())
-        with open(self._path(currency, start_ts, end_ts), "w") as f:
+        path = self._path(currency, start_ts, end_ts)
+        with open(path + ".tmp", "w") as f:
             json.dump(state, f)
+        os.replace(path + ".tmp", path)
 
     def clear(self, currency: str, start_ts: int, end_ts: int) -> None:
         path = self._path(currency, start_ts, end_ts)
@@ -144,20 +179,51 @@ class CheckpointStore:
             os.remove(path)
 
 
+def _trade_table(rows: list[dict]) -> pa.Table:
+    """``rows`` as an Arrow table in the staged layout.
+
+    Rejects exactly what ``spark.createDataFrame(rows, TRADE_SCHEMA)``
+    rejects, with the same error. pyarrow alone would store a null in a
+    non-nullable field and truncate 1.5 to 1 in a long field, so each
+    column's Python types are checked first; on a mismatch pyspark's
+    own verifier runs over the rows and raises createDataFrame's error.
+    """
+    arrays = []
+    for f in _STAGED_ARROW:
+        values = [r.get(f.name) for r in rows]
+        if not set(map(type, values)) <= _ACCEPTED_TYPES[f.name]:
+            for r in rows:
+                _verify_trade(r)
+            # only a string field passes the verifier here: it accepts
+            # any non-null value there, stored as its string form
+            values = [v if v is None or type(v) is str else str(v) for v in values]
+        if f.name == "timestamp":
+            ms = pa.array(values, pa.int64()).cast(pa.timestamp("ms", tz="UTC"))
+            arrays.append(ms.cast(f.type))
+        else:
+            arrays.append(pa.array(values, f.type))
+    return pa.Table.from_arrays(arrays, schema=_STAGED_ARROW)
+
+
 def _write_batch(spark: SparkSession, rows: list[dict], token: str, output_path: str) -> None:
-    """Idempotent write: each batch owns partition batch_token=<token>;
-    a replay overwrites the same partition (no duplicates)."""
-    df = spark.createDataFrame(rows, schema=TRADE_SCHEMA).withColumn(
-        "batch_token", F.lit(token)
-    )
-    (
-        df.withColumn("timestamp", F.timestamp_millis(F.col("timestamp")))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_token")
-        .parquet(output_path)
-    )
+    """Idempotent write: batch ``token`` owns the leaf
+    ``batch_token=<token>/`` and its one data file :data:`BATCH_FILE`.
+
+    The rows go through pyarrow into a hidden temp file in the leaf,
+    which is renamed onto :data:`BATCH_FILE`; then every other file in
+    the leaf is removed. A replay thus replaces the leaf's contents (no
+    duplicates), and a crash before the rename leaves readers seeing
+    the leaf as it was. No Spark job runs: ``spark`` is unused.
+    """
+    table = _trade_table(rows)
+    leaf = os.path.join(output_path, f"batch_token={token}")
+    os.makedirs(leaf, exist_ok=True)
+    tmp = os.path.join(leaf, _BATCH_TMP)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(leaf, BATCH_FILE))
+    for name in os.listdir(leaf):
+        if name != BATCH_FILE:
+            os.remove(os.path.join(leaf, name))
 
 
 def collect_trades(

@@ -5,7 +5,7 @@ reference's emulated-streaming semantics (SURVEY §2.9).
 |---------------------------------------------|------------------------------|
 | checkpoint file, resume same job            | ``checkpointLocation``       |
 | dedup token per insert batch                | idempotent ``foreachBatch``  |
-| inter-page dup detection + MergeTree dedup  | watermark + ``dropDuplicatesWithinWatermark`` |
+| inter-page dup detection + MergeTree dedup  | watermark + ``dropDuplicatesWithinWatermark`` (keeps the first-arriving version, not the latest) |
 | 15-min tumbling truncation                  | ``F.window(ts, '15 minutes')``|
 
 The file source (parquet page-drops) stands in for the REST feed —
@@ -39,8 +39,13 @@ def dedup_stream(
 ) -> DataFrame:
     """Late/duplicate handling: events later than the watermark are
     dropped; duplicates of an id within the watermark window are
-    dropped exactly-once (state is bounded by the delay — the
-    streaming-native ReplacingMergeTree)."""
+    dropped exactly-once (state is bounded by the delay).
+
+    The survivor is the FIRST-ARRIVING version of an id: a later
+    re-delivery with a revised row is dropped. FINAL reads
+    (``dedup_latest``) and ``compact_table`` keep the LATEST version,
+    the greatest (``timestamp``, ``trade_id``), so a stream's output
+    can differ from a compacted table's until it is compacted too."""
     return stream.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
         [id_col]
     )

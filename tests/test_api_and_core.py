@@ -123,6 +123,151 @@ def test_compact_table_unpartitioned(spark, tmp_path):
     assert got.loc["a"].x == 2.0
 
 
+_FACT_DDL = "trade_id string, timestamp timestamp, price double, trade_month string"
+
+
+def test_compact_table_all_losers_partition(spark, tmp_path):
+    """A touched partition whose rows all lose to winners in another
+    partition (a re-delivery that crossed the month boundary) is
+    swapped for nothing, not left holding the loser."""
+    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+
+    path = str(tmp_path / "fact")
+    rows = [
+        ("t1", dt.datetime(2024, 1, 31, 23, 59, 59), 1.0, "202401"),
+        ("t1", dt.datetime(2024, 2, 1, 0, 0, 1), 2.0, "202402"),
+        ("t2", dt.datetime(2024, 2, 2, 9), 3.0, "202402"),
+    ]
+    spark.createDataFrame(rows, _FACT_DDL).write.partitionBy("trade_month").parquet(path)
+    stats = compact_table(
+        spark, path, keys=["trade_id"], version_cols=["timestamp"], partition_cols=["trade_month"],
+    )
+    back = spark.read.parquet(path).toPandas()
+    assert back.trade_id.is_unique and len(back) == 2
+    assert back.set_index("trade_id").loc["t1"].price == 2.0
+    assert stats["removed"] == 1
+    assert stats["partitions"] == ["trade_month=202401", "trade_month=202402"]
+    # a selector on a data column would swap in a partial partition
+    with pytest.raises(ValueError, match="outside partition_cols"):
+        compact_table(
+            spark, path, keys=["trade_id"], version_cols=["timestamp"],
+            partition_cols=["trade_month"], only_partitions=[{"trade_id": "t1"}],
+        )
+
+
+def _fault_rows():
+    """Rows over three month partitions with in-partition re-deliveries
+    and one all-losers partition (202312), and the expected winners."""
+    base = dt.datetime(2024, 1, 1)
+    rows = []
+    for i in range(60):
+        ts = base + dt.timedelta(days=i, hours=i % 7)
+        rows.append((f"t{i:02d}", ts, float(i)))
+        if i % 4 == 0:  # re-delivered 1 s later with a revised price
+            rows.append((f"t{i:02d}", ts + dt.timedelta(seconds=1), i + 0.5))
+    # t_x's first version is alone in 202312; its winner lands in 202401
+    rows.append(("t_x", base - dt.timedelta(seconds=1), -1.0))
+    rows.append(("t_x", base + dt.timedelta(seconds=1), -2.0))
+    rows = [(k, ts, p, ts.strftime("%Y%m")) for k, ts, p in rows]
+    winners = {}
+    for r in rows:
+        if r[0] not in winners or r[1] > winners[r[0]][1]:
+            winners[r[0]] = r
+    return rows, sorted(winners.values())
+
+
+def _fact_rows(spark, path):
+    return spark.read.parquet(path).select(
+        "trade_id", "timestamp", "price", F.col("trade_month").cast("string")
+    )
+
+
+class _Crash(Exception):
+    pass
+
+
+def test_compact_table_recovers_from_a_crash_at_every_step(spark, tmp_path, monkeypatch):
+    """Crash the compaction at each rename and rmtree it makes, then
+    rerun it: every trade_id survives exactly once, as its winner, and
+    no aside or staging copy is left."""
+    import os
+    import shutil
+
+    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+
+    rows, want = _fault_rows()
+    calls, crash_at = [], [0]
+
+    def failing(real):
+        def op(*args, **kwargs):
+            calls.append(real.__name__)
+            if len(calls) == crash_at[0]:
+                raise _Crash(f"{real.__name__} #{crash_at[0]}")
+            return real(*args, **kwargs)
+        return op
+
+    monkeypatch.setattr(os, "rename", failing(os.rename))
+    monkeypatch.setattr(shutil, "rmtree", failing(shutil.rmtree))
+
+    def compact(path):
+        calls.clear()
+        return compact_table(
+            spark, path, keys=["trade_id"], version_cols=["timestamp"],
+            partition_cols=["trade_month"], sort_within_partitions=["timestamp"],
+        )
+
+    def fresh(name):
+        path = tmp_path / name / "fact"
+        spark.createDataFrame(rows, _FACT_DDL).write.partitionBy("trade_month").parquet(str(path))
+        return path
+
+    compact(str(fresh("clean")))
+    steps = len(calls)
+    assert calls.count("rename") >= 5  # two leaves renamed aside and in, one aside only
+    for n in range(1, steps + 1):
+        path = fresh(f"crash{n}")
+        crash_at[0] = n
+        with pytest.raises(_Crash):
+            compact(str(path))
+        crash_at[0] = 0
+        compact(str(path))
+        got = _fact_rows(spark, str(path))
+        assert got.select("trade_id").distinct().count() == len(want), f"crash at step {n}"
+        assert sorted(map(tuple, got.collect())) == want, f"crash at step {n}"
+        assert not any(p.name.endswith(("__old", "__compacting")) for p in path.parent.iterdir())
+
+
+def test_compact_table_recovery_keeps_rows_written_after_a_crash(spark, tmp_path, monkeypatch):
+    """A crash right after a partition with a staged leaf was renamed
+    aside, then an append into that partition before the rerun: the
+    restored old rows and the appended rows are both kept."""
+    import os
+
+    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+
+    rows, want = _fault_rows()
+    path = str(tmp_path / "fact")
+    spark.createDataFrame(rows, _FACT_DDL).write.partitionBy("trade_month").parquet(path)
+    real_rename = os.rename
+
+    def crash_after_202401_aside(src, dst):
+        real_rename(src, dst)
+        if str(dst).endswith("__old/trade_month=202401"):
+            raise _Crash("after rename aside")
+
+    kwargs = dict(keys=["trade_id"], version_cols=["timestamp"], partition_cols=["trade_month"])
+    monkeypatch.setattr(os, "rename", crash_after_202401_aside)
+    with pytest.raises(_Crash):
+        compact_table(spark, path, **kwargs)
+    monkeypatch.undo()
+    assert not (tmp_path / "fact" / "trade_month=202401").exists()
+    late = [("t_late", dt.datetime(2024, 1, 15, 12), 9.0, "202401")]
+    spark.createDataFrame(late, _FACT_DDL).write.mode("append").partitionBy("trade_month").parquet(path)
+    compact_table(spark, path, **kwargs)
+    got = _fact_rows(spark, path)
+    assert sorted(map(tuple, got.collect())) == sorted(want + late)
+
+
 def test_use_final_flag(spark):
     rows = [("t1", dt.datetime(2024, 1, 1, 10), 1.0), ("t1", dt.datetime(2024, 1, 1, 11), 2.0)]
     df = spark.createDataFrame(rows, "trade_id string, timestamp timestamp, price double")

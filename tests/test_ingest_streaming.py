@@ -4,14 +4,23 @@ Streaming (watermark dedup, windowed bars, exactly-once sink)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
 
+import duckdb
 import pandas as pd
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.exceptions import SourceError
+from gapless_deribit_clickhouse_spark.sources import rest_collector
 from gapless_deribit_clickhouse_spark.sources.rest_collector import (
+    BATCH_FILE,
+    TRADE_SCHEMA,
+    CheckpointStore,
     SyntheticTradePages,
+    _write_batch,
     batch_token,
     collect_trades,
     validate_page_continuity,
@@ -114,6 +123,154 @@ def test_collect_trades_resume_after_crash(spark, tmp_path):
     assert df.count() == n_expected
 
 
+def test_checkpoint_save_crash_keeps_previous_checkpoint(spark, tmp_path, monkeypatch):
+    """A save that dies mid-write leaves the previous checkpoint
+    loadable, and the resume then lands every trade exactly once."""
+    src = SyntheticTradePages(step_ms=1000)
+    out, ckpt = str(tmp_path / "trades"), str(tmp_path / "ckpt")
+    real_dump, saves = json.dump, []
+
+    def dump_dies_on_second_save(obj, f):
+        saves.append(obj)
+        if len(saves) == 2:
+            f.write(json.dumps(obj)[:10])
+            raise OSError("crash mid-write")
+        real_dump(obj, f)
+
+    monkeypatch.setattr(rest_collector.json, "dump", dump_dies_on_second_save)
+    with pytest.raises(OSError, match="mid-write"):
+        collect_trades(spark, src, T0, T0 + HOUR_MS, out, checkpoint_dir=ckpt,
+                       batch_rows=1000, page_size=500)
+    monkeypatch.undo()
+    state = CheckpointStore(ckpt).load(src.currency, T0, T0 + HOUR_MS)
+    assert state["batch_number"] == 1 and state["total_collected"] == 1000
+
+    collect_trades(spark, src, T0, T0 + HOUR_MS, out, checkpoint_dir=ckpt,
+                   batch_rows=1000, page_size=500)
+    df = spark.read.parquet(out)
+    assert df.count() == df.select("trade_id").distinct().count() == 3600 + 1
+
+
+# --- S5: the staging write (pyarrow + rename, no Spark job) ---
+def _spark_staging_write(spark, rows, token, output_path):
+    """The Spark staging write the pyarrow path replaced, kept as the
+    reference it must match."""
+    (
+        spark.createDataFrame(rows, schema=TRADE_SCHEMA)
+        .withColumn("batch_token", F.lit(token))
+        .withColumn("timestamp", F.timestamp_millis(F.col("timestamp")))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_token")
+        .parquet(output_path)
+    )
+
+
+def _trades(n=40):
+    rows = SyntheticTradePages(step_ms=1000).fetch_page(T0, T0 + HOUR_MS, n)
+    rows[1]["iv"] = None
+    rows[2]["index_price"] = None
+    return rows
+
+
+def _without(row, key):
+    return {k: v for k, v in row.items() if k != key}
+
+
+# each case changes row 2 of a batch; error condition prefix
+_REJECTED = {
+    "null trade_id": (lambda r: dict(r, trade_id=None), "FIELD_NOT_NULLABLE"),
+    "missing direction": (lambda r: _without(r, "direction"), "FIELD_NOT_NULLABLE"),
+    "float timestamp": (lambda r: dict(r, timestamp=1.5), "FIELD_DATA_TYPE_UNACCEPTABLE"),
+    "string price": (lambda r: dict(r, price="0.1"), "FIELD_DATA_TYPE_UNACCEPTABLE"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_REJECTED))
+def test_write_batch_rejects_what_create_dataframe_rejects(spark, tmp_path, case):
+    change, condition = _REJECTED[case]
+    rows = _trades(5)
+    rows[2] = change(rows[2])
+    with pytest.raises(PySparkException) as want:
+        spark.createDataFrame(rows, schema=TRADE_SCHEMA)
+    out = tmp_path / "staging"
+    with pytest.raises(PySparkException) as got:
+        _write_batch(spark, rows, "tok", str(out))
+    assert got.value.getCondition() == want.value.getCondition()
+    assert got.value.getCondition().startswith(condition)
+    assert not out.exists()
+
+
+def test_write_batch_accepts_null_iv(spark, tmp_path):
+    rows = _trades(5)
+    rows[3]["iv"] = None
+    out = str(tmp_path / "staging")
+    _write_batch(spark, rows, "tok", out)
+    got = spark.read.parquet(out).filter(F.col("iv").isNull()).select("trade_id").collect()
+    assert {r.trade_id for r in got} == {rows[1]["trade_id"], rows[3]["trade_id"]}
+
+
+def test_staging_reads_back_like_the_spark_write(spark, tmp_path):
+    """Same schema and values through ``spark.read.parquet`` as the
+    Spark write, under a session time zone other than UTC."""
+    rows = _trades()
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        _spark_staging_write(spark, rows, "tok", old)
+        _write_batch(spark, rows, "tok", new)
+        a, b = spark.read.parquet(old), spark.read.parquet(new)
+        assert b.schema == a.schema
+        assert sorted(b.collect()) == sorted(a.collect())
+        shown = ["trade_id", F.col("timestamp").cast("string"), F.unix_millis("timestamp")]
+        assert sorted(b.select(*shown).collect()) == sorted(a.select(*shown).collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    ms = {r.trade_id: r.ms for r in b.select("trade_id", F.unix_millis("timestamp").alias("ms")).collect()}
+    assert ms == {r["trade_id"]: r["timestamp"] for r in rows}
+
+
+def test_replay_over_spark_written_leaf_leaves_one_file(spark, tmp_path):
+    rows = _trades()
+    out = tmp_path / "staging"
+    _spark_staging_write(spark, rows, "tok", str(out))
+    _write_batch(spark, rows, "tok", str(out))
+    assert os.listdir(out / "batch_token=tok") == [BATCH_FILE]
+    assert spark.read.parquet(str(out)).count() == len(rows)
+
+
+def test_crash_before_rename_is_invisible(spark, tmp_path, monkeypatch):
+    """A staging write that dies before ``os.replace`` (a replay of a
+    written token and a new token) changes nothing Spark or a
+    ``*.parquet`` glob sees; the next write of the token cleans up."""
+    rows = _trades()
+    first, second = rows[:20], rows[20:]
+    out = tmp_path / "staging"
+    _write_batch(spark, first, "a", str(out))
+
+    def crash(*args):
+        raise OSError("crash before rename")
+
+    monkeypatch.setattr(rest_collector.os, "replace", crash)
+    for token in ("a", "b"):
+        with pytest.raises(OSError, match="before rename"):
+            _write_batch(spark, second, token, str(out))
+    monkeypatch.undo()
+
+    want = sorted(r["trade_id"] for r in first)
+    got = spark.read.parquet(str(out)).select("trade_id").collect()
+    assert sorted(r.trade_id for r in got) == want
+    with duckdb.connect() as con:
+        got = con.execute(f"SELECT trade_id FROM read_parquet('{out}/*/*.parquet')").fetchall()
+    assert sorted(r[0] for r in got) == want
+
+    _write_batch(spark, second, "b", str(out))
+    assert os.listdir(out / "batch_token=b") == [BATCH_FILE]
+    assert spark.read.parquet(str(out)).count() == len(rows)
+
+
 # --- §2.9: streaming with watermark dedup + idempotent sink ---
 def _write_pages(spark, path, with_dup=False):
     base = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -144,6 +301,39 @@ def test_stream_dedup_and_idempotent_sink(spark, tmp_path):
     out = spark.read.parquet(str(tmp_path / "out"))
     assert out.count() == 240  # duplicates dropped
     assert out.select("trade_id").distinct().count() == 240
+
+
+def test_stream_dedup_keeps_first_arrival_unlike_final(spark, tmp_path):
+    """Pins the documented difference: ``dedup_stream`` keeps the
+    first-arriving version of a trade_id, FINAL (``dedup_latest``)
+    keeps the latest, here a re-delivery 5 s later with a new price."""
+    from gapless_deribit_clickhouse_spark.operators.dedup import dedup_latest
+
+    src = str(tmp_path / "pages")
+    schema = "trade_id string, timestamp timestamp, price double"
+    base = dt.datetime(2024, 1, 1, 10)
+    first = [("T1", base, 1.0), ("T2", base, 3.0)]
+    redelivery = [("T1", base + dt.timedelta(seconds=5), 2.0)]
+    spark.createDataFrame(first, schema).coalesce(1).write.mode("append").parquet(src)
+    stream = read_trade_stream(spark, src, spark.read.parquet(src).schema)
+    q = (
+        dedup_stream(stream, watermark_delay="30 minutes")
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("first_arrival_out")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        spark.createDataFrame(redelivery, schema).coalesce(1).write.mode("append").parquet(src)
+        q.processAllAvailable()
+        streamed = spark.sql("SELECT trade_id, price FROM first_arrival_out").collect()
+    finally:
+        q.stop()
+    assert sorted(map(tuple, streamed)) == [("T1", 1.0), ("T2", 3.0)]
+
+    final = dedup_latest(spark.read.parquet(src), ["trade_id"], ["timestamp", "trade_id"])
+    assert sorted(map(tuple, final.select("trade_id", "price").collect())) == [("T1", 2.0), ("T2", 3.0)]
 
 
 def test_streaming_gap_monitor_stateful(spark, tmp_path):
