@@ -625,56 +625,6 @@ GROUP BY user_id
 """
 
 
-# --- semi-structured JSON projection + rollup (SURVEY §2.8 JSON
-# group: the reference round-trips JSON at its API/checkpoint edges;
-# here the engine-side equivalent — typed extraction with from_json
-# inside codegen, then a plain aggregate) ---
-def json_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    k = F.from_json(F.col("props"), "k INT")["k"]
-    return (
-        ev.select("event_type", k.alias("k"), "value")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").cast("bigint").alias("sum_k"),
-            F.avg("k").alias("avg_k"),
-            F.sum(F.when(F.col("k") > 50, 1).otherwise(0)).cast("bigint").alias("n_high"),
-        )
-    )
-
-
-JSON_EXTRACT_SQL = """
-SELECT event_type,
-       count(*) AS n,
-       CAST(sum(CAST(json_extract(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-       avg(CAST(json_extract(props, '$.k') AS INT)) AS avg_k,
-       CAST(sum(CASE WHEN CAST(json_extract(props, '$.k') AS INT) > 50
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_high
-FROM events GROUP BY event_type
-"""
-
-
-BINDINGS = [
-    ("sessionize", sessionize_q, SESSIONIZE_SQL),
-    ("interval_join_sessions", interval_join_q, INTERVAL_JOIN_SQL),
-    ("events_json_rollup", json_extract_q, JSON_EXTRACT_SQL),
-    ("asof_join_spot", asof_spot_q, ASOF_SPOT_SQL),
-    ("instrument_parse", instrument_parse_q, INSTRUMENT_PARSE_SQL),
-    ("portfolio_greeks", portfolio_greeks_q, PORTFOLIO_GREEKS_SQL),
-    ("greeks_by_bucket", greeks_by_bucket_q, GREEKS_BY_BUCKET_SQL),
-    ("smile_metrics", smile_metrics_q, SMILE_METRICS_SQL),
-    ("spot_coverage", spot_coverage_q, SPOT_COVERAGE_SQL),
-    ("egarch_params", egarch_params_q, None),
-    # real-decode binding holds the driver-window multimodal slot; the
-    # fake-kernel byte-feature variant is demoted to the CI-oracle tail
-    ("image_decode_features", image_decode_features_q, IMAGE_DECODE_SQL),
-    ("multimodal_features", multimodal_features_q, MULTIMODAL_SQL),
-    ("audio_decode_features", audio_decode_features_q, AUDIO_DECODE_SQL),
-    ("video_decode_features", video_decode_features_q, VIDEO_DECODE_SQL),
-]
-
-
 # --- behavioral analytics: windowFunnel / retention parity ---
 def window_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view -> click -> purchase funnel within 24h of the first view
@@ -1082,18 +1032,6 @@ FROM act ORDER BY event_type
 """
 
 
-# behavioral-analytics additions (round 5), past the stable window
-LATE_BINDINGS = [
-    ("egarch_inputs", egarch_inputs_q, EGARCH_INPUTS_SQL),
-    ("egarch_forecast_path", egarch_forecast_path_q, EGARCH_FORECAST_PATH_SQL),
-    ("egarch_loglik", egarch_loglik_q, EGARCH_LOGLIK_SQL),
-    ("egarch_nm_step", egarch_nm_step_q, EGARCH_NM_STEP_SQL),
-    ("window_funnel", window_funnel_q, WINDOW_FUNNEL_SQL),
-    ("sequence_count", sequence_count_q, SEQUENCE_COUNT_SQL),
-    ("retention", retention_q, RETENTION_SQL),
-]
-
-
 # --- as-of join, forward and nearest directions (merge_asof parity) ---
 def asof_forward_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of: each trade takes the EARLIEST spot quote at or
@@ -1175,12 +1113,6 @@ FROM t JOIN b USING (trade_id) JOIN f USING (trade_id)
 """
 
 
-LATE_BINDINGS += [
-    ("asof_join_forward", asof_forward_q, ASOF_FORWARD_SQL),
-    ("asof_join_nearest", asof_nearest_q, ASOF_NEAREST_SQL),
-]
-
-
 # --- interval-interval overlap join: sessions x hot hours ---
 def overlap_hot_hours_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every (user session, hot hour) overlap pair: sessions from the
@@ -1249,6 +1181,30 @@ FROM sess JOIN hot
  AND hot.hour_start <= sess.session_end
 """
 
-LATE_BINDINGS.append(
-    ("overlap_hot_hours", overlap_hot_hours_q, OVERLAP_HOT_HOURS_SQL)
-)
+
+
+BINDINGS = [
+    ("sessionize", sessionize_q, SESSIONIZE_SQL),
+    ("interval_join_sessions", interval_join_q, INTERVAL_JOIN_SQL),
+    ("overlap_hot_hours", overlap_hot_hours_q, OVERLAP_HOT_HOURS_SQL),
+    ("asof_join_spot", asof_spot_q, ASOF_SPOT_SQL),
+    ("asof_join_forward", asof_forward_q, ASOF_FORWARD_SQL),
+    ("asof_join_nearest", asof_nearest_q, ASOF_NEAREST_SQL),
+    ("window_funnel", window_funnel_q, WINDOW_FUNNEL_SQL),
+    ("sequence_count", sequence_count_q, SEQUENCE_COUNT_SQL),
+    ("retention", retention_q, RETENTION_SQL),
+    ("instrument_parse", instrument_parse_q, INSTRUMENT_PARSE_SQL),
+    ("portfolio_greeks", portfolio_greeks_q, PORTFOLIO_GREEKS_SQL),
+    ("greeks_by_bucket", greeks_by_bucket_q, GREEKS_BY_BUCKET_SQL),
+    ("smile_metrics", smile_metrics_q, SMILE_METRICS_SQL),
+    ("spot_coverage", spot_coverage_q, SPOT_COVERAGE_SQL),
+    ("egarch_params", egarch_params_q, None),
+    ("egarch_inputs", egarch_inputs_q, EGARCH_INPUTS_SQL),
+    ("egarch_forecast_path", egarch_forecast_path_q, EGARCH_FORECAST_PATH_SQL),
+    ("egarch_loglik", egarch_loglik_q, EGARCH_LOGLIK_SQL),
+    ("egarch_nm_step", egarch_nm_step_q, EGARCH_NM_STEP_SQL),
+    ("image_decode_features", image_decode_features_q, IMAGE_DECODE_SQL),
+    ("multimodal_features", multimodal_features_q, MULTIMODAL_SQL),
+    ("audio_decode_features", audio_decode_features_q, AUDIO_DECODE_SQL),
+    ("video_decode_features", video_decode_features_q, VIDEO_DECODE_SQL),
+]

@@ -2015,7 +2015,7 @@ SELECT query_id, vec_id, n_systems, rrf_score, rank FROM r WHERE rank <= 10
 """
 
 
-LATE_BINDINGS = [
+BINDINGS += [
     ("split_assign", split_assign_q, SPLIT_ASSIGN_SQL),
     ("interdoc_repetition", interdoc_repetition_q, INTERDOC_REPETITION_SQL),
     ("incremental_dedup", incremental_dedup_q, INCREMENTAL_DEDUP_SQL),
@@ -2055,7 +2055,7 @@ SELECT doc_id,
 FROM documents
 """
 
-LATE_BINDINGS.append(("epoch_shuffle", epoch_shuffle_q, EPOCH_SHUFFLE_SQL))
+BINDINGS.append(("epoch_shuffle", epoch_shuffle_q, EPOCH_SHUFFLE_SQL))
 
 
 # --- one oracled Lloyd's k-means iteration (VERDICT r7 #4) ---
@@ -2151,7 +2151,7 @@ FROM sums s JOIN nrm n USING (cluster_id)
 ORDER BY cluster_id, dim
 """
 
-LATE_BINDINGS.append(
+BINDINGS.append(
     ("kmeans_assign_step", kmeans_assign_step_q, KMEANS_ASSIGN_STEP_SQL)
 )
 
@@ -2186,6 +2186,6 @@ FROM j JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
 WHERE inter / least(sa.c, sb.c) >= 0.9
 """
 
-LATE_BINDINGS.append(
+BINDINGS.append(
     ("containment_pairs", containment_pairs_q, CONTAINMENT_PAIRS_SQL)
 )

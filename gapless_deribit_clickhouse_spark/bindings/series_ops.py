@@ -279,9 +279,7 @@ FROM l WHERE prev IS NOT NULL GROUP BY user_id
 """
 
 
-BINDINGS: list = []
-
-LATE_BINDINGS = [
+BINDINGS = [
     ("drawdown_stats", drawdown_q, DRAWDOWN_SQL),
     ("realized_vol_daily", realized_vol_q, REALIZED_VOL_SQL),
     ("ewma_by_user", ewma_q, EWMA_SQL),

@@ -31,48 +31,20 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Per-session plan catalog (optimization r13). ``spark.read.parquet``
-# re-reads the footer and re-infers the schema on EVERY call (~70-100
-# ms of driver work + one small job); a resident engine resolves a
-# table through its catalog once per session instead — the exact
-# metadata behavior the reference gets from ClickHouse's table
-# catalog. This memoizes the ANALYZED LOGICAL PLAN only: no data, no
-# results, nothing persisted — every action still scans the parquet
-# input, and a fresh process/session (every bench or oracle
-# invocation) starts cold. Keyed on the session's applicationId plus
-# the file's (mtime, size) so a stopped session or a rewritten file
-# can never serve a stale plan.
-_CATALOG: dict[tuple, DataFrame] = {}
-
-
-def _catalog_key(spark: SparkSession, path: str) -> tuple | None:
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        st.st_mtime_ns,
-        st.st_size,
-    )
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, adapting the events timestamp.
 
     Side effects, applied for the rest of the session: a UTC session
-    timezone on every catalog-miss load (date/hour extraction in any binding drifts
+    timezone on every load (date/hour extraction in any binding drifts
     vs the UTC-based oracle if a bare session on a non-UTC machine
     keeps its machine zone — and it must not flip mid-run depending on
     which table loads first), plus ``nanosAsLong`` for events (a
     TIMESTAMP(NANOS) footer is otherwise rejected outright; later
     nanos reads get LongType and must normalize as done here).
-    Runtime-settable confs, applied HERE because callers (including
-    the correctness harness) may hand us a bare SparkSession."""
-    key = _catalog_key(spark, f"{sf_dir}/{name}.parquet")
-    if key is not None and key in _CATALOG:
-        return _CATALOG[key]
+    Runtime-settable confs, applied HERE on every call because callers
+    may hand us a bare SparkSession, or a ``newSession()`` sibling with
+    its own SQL conf."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -87,8 +59,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif not isinstance(ts_type, T.TimestampType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if key is not None:
-        _CATALOG[key] = df
     return df
 
 

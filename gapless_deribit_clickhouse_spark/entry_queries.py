@@ -1,10 +1,9 @@
-"""Driver-facing query registry.
+"""Query registry behind ``__spark_entry__``.
 
-Binds every engine operator (SURVEY.md §2 inventory + the LLM-data-
-pipeline extensions) to the driver's testdata tables, pairing each
+Binds the engine's operators to the testdata tables, pairing each
 Spark DataFrame query with the exact ANSI-SQL DuckDB oracle. The
-registry is assembled from per-area binding modules; each binding
-aliases its output columns identically on both sides.
+registry is the flat concatenation of the per-area binding modules;
+each binding aliases its output columns identically on both sides.
 """
 
 from __future__ import annotations
@@ -29,6 +28,4 @@ def oracle_sql() -> dict[str, str]:
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qs = queries()
-    fn = qs.get(FLAGSHIP) or next(iter(qs.values()))
-    return fn(spark, sf_dir)
+    return queries()[FLAGSHIP](spark, sf_dir)

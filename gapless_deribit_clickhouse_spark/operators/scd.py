@@ -104,8 +104,8 @@ def point_in_time_join(
     are never observable.
 
     Open (current) intervals are closed at the facts' max timestamp —
-    a 1-row scalar broadcast (the bounded-NLJ shape PLANS.md
-    allowlists), so no unbounded interval ever reaches the bucketed
+    a 1-row scalar broadcast (the bounded-NLJ shape
+    tests/test_plan_contracts.py allowlists), so no unbounded interval ever reaches the bucketed
     :func:`~gapless_deribit_clickhouse_spark.operators.range_join.interval_join`
     this delegates to. Cost: one metadata-scale aggregate + the range
     join's one shuffle per side; no fact-fact pairing.

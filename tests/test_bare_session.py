@@ -55,3 +55,18 @@ def test_entry_runs_on_bare_session(bare_spark):
 
     df = entry.entry(bare_spark)
     assert df.count() >= 0
+
+
+def test_load_table_sets_utc_on_a_new_session(spark):
+    """Every load re-asserts the UTC session zone, also for a
+    ``newSession()`` sibling (own SQL conf, shared SparkContext) that
+    loads a table the parent session already loaded."""
+    from gapless_deribit_clickhouse_spark.core.tables import load_table
+
+    load_table(spark, SF_DIR, "events")
+    sibling = spark.newSession()
+    sibling.conf.set("spark.sql.session.timeZone", "America/New_York")
+    df = load_table(sibling, SF_DIR, "events")
+    assert sibling.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert sibling.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert df.sparkSession is sibling

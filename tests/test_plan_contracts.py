@@ -1,14 +1,16 @@
-"""Plan contracts: every registered query must keep the physical-plan
-properties the 100 TB design depends on. PLANS.md documents them; this
-test ENFORCES them, so a refactor that silently introduces a
-nested-loop join or an undeclared Python crossing fails CI.
+"""Plan contracts: every ``__spark_entry__`` query must keep the
+physical-plan properties the design depends on, so a refactor that
+silently introduces a nested-loop join or an undeclared Python
+crossing fails CI.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from gapless_deribit_clickhouse_spark.bindings import ALL_BINDINGS
+import __spark_entry__ as entry
+
+QUERIES = entry.queries()
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -58,24 +60,14 @@ ALLOWED_PYTHON = REQUIRED_PYTHON | {"dup_clusters", "frequent_tokens"}
 #   scans the (small, broadcast) query set; the scale paths
 #   (ivf_topk, embedding_near_dup, minhash_lsh_pairs) must NOT NLJ
 #   since round 3's banded-LSH equi-join rewrite
-# - q22_dormant_customers: 1-row global-average scalar broadcast
-# - value_histogram: 1-row min/max-bounds scalar broadcast
-# - q11_important_stock: 1-row avg-part-value scalar broadcast
 # - lm_score: 1-row vocabulary-size scalar broadcast
 # - quality_gate: lm_score's vocabulary scalar + the 1-row
 #   median-ppl percentile scalar
-# - scan_keyset: 1-row pagination-cursor broadcast (LIMIT 1 by
-#   construction — the keyset predicate references the cursor's
-#   (ts, event_id) on every row, the textbook scalar-broadcast shape)
 ALLOWED_NLJ = {
     "tfidf_top_terms",
     "cosine_topk",
-    "q22_dormant_customers",
-    "value_histogram",
-    "q11_important_stock",
     "lm_score",
     "quality_gate",
-    "scan_keyset",
     "frequent_tokens",  # 1-row total-count scalar broadcast
     "pit_enrich",  # 1-row horizon (max fact ts) scalar broadcast that
     # closes the SCD2 history's open intervals before the bucketed
@@ -96,7 +88,12 @@ def _plan(fn, spark) -> str:
     return fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.parametrize("name,fn", [(n, f) for n, f, _ in ALL_BINDINGS])
+def test_allow_lists_name_registry_keys():
+    for allowed in (REQUIRED_PYTHON, ALLOWED_PYTHON, ALLOWED_NLJ):
+        assert allowed <= set(QUERIES), sorted(allowed - set(QUERIES))
+
+
+@pytest.mark.parametrize("name,fn", list(QUERIES.items()))
 def test_no_nested_loop_or_cartesian(spark, name, fn):
     plan = _plan(fn, spark)
     if name not in ALLOWED_NLJ:
@@ -104,7 +101,7 @@ def test_no_nested_loop_or_cartesian(spark, name, fn):
     assert "CartesianProduct" not in plan, name
 
 
-@pytest.mark.parametrize("name,fn", [(n, f) for n, f, _ in ALL_BINDINGS])
+@pytest.mark.parametrize("name,fn", list(QUERIES.items()))
 def test_python_only_at_declared_edges(spark, name, fn):
     plan = _plan(fn, spark)
     crossings = sum(
@@ -125,10 +122,7 @@ def test_simhash_has_no_post_checkpoint_exchange(spark):
     shuffle over the candidate set fails here, not in a bench diff."""
     import re
 
-    from gapless_deribit_clickhouse_spark.bindings import ALL_BINDINGS
-
-    fn = next(f for n, f, _ in ALL_BINDINGS if n == "simhash_near_pairs")
-    plan = _plan(fn, spark)
+    plan = _plan(QUERIES["simhash_near_pairs"], spark)
     exchanges = len(re.findall(r"\bExchange\b", plan)) - len(
         re.findall(r"ReusedExchange", plan)
     )
