@@ -1,10 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query-registry contract.
 
 ``entry(spark)`` runs the flagship query at sf0.001; ``queries()``
-exposes every implemented operator from SURVEY.md §2 as
-``(spark, sf_dir) -> DataFrame``; ``oracle_sql()`` gives the DuckDB
-equivalent per key. Column names are aliased identically on both
-sides (the driver sorts columns by name before value-hashing).
+exposes every bound operator as ``(spark, sf_dir) -> DataFrame``;
+``oracle_sql()`` gives the DuckDB equivalent per key. Column names
+are aliased identically on both sides, so a compare can sort columns
+by name before comparing values (tests/test_registry_oracle.py).
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from gapless_deribit_clickhouse_spark import entry_queries
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
+    """Flagship query on /root/testdata/sf0.001; must return rows."""
     return entry_queries.flagship(spark, "/root/testdata/sf0.001")
 
 

@@ -13,20 +13,20 @@ Layout
 core/        SparkSession factory + table registration
 schema/      declarative schema SSoT -> StructType / DDL / contracts
 functions/   column-level helpers (conditional aggs, time buckets,
-             instrument parsing, Black-Scholes, text hashing)
+             instrument parsing, Black-Scholes)
 operators/   generic engine operators (dedup, top-k, OHLC resample,
              conditional pivot, rolling windows, gap analysis,
              broadcast enrichment, as-of join)
 features/    the reference's domain feature surface (contract
              selection, spot enrichment, moneyness, PCR, term
              structure, DTE buckets, IV percentile, Greeks, EGARCH)
-pipelines/   large-scale training-data ops (dedup exact/minhash/
-             simhash/ngram/embedding, ANN search, text stats,
-             multimodal columns)
 sources/     batch ingestion (paginated collector emulation,
              continuity validation, idempotent sinks, checkpoints)
 streaming/   Structured Streaming ingestion (watermark + dedup)
+sinks/       serving-layer connectors
 validation/  data-quality metrics, gap reports, reporter
+bindings/    operators bound to the testdata tables, each with its
+             DuckDB oracle (the ``__spark_entry__`` registry)
 """
 
 from gapless_deribit_clickhouse_spark.exceptions import (
@@ -41,157 +41,97 @@ from gapless_deribit_clickhouse_spark.exceptions import (
 __version__ = "0.1.0"
 
 
+# Lazy re-exports: public name -> submodule that defines it.
+_HOME = {
+    "fetch_trades": "api", "describe": "api",
+    "collect_trades": "sources", "CheckpointStore": "sources",
+    "validate_page_continuity": "sources",
+    "parse_instrument": "functions.instrument",
+    "is_valid_instrument": "functions.instrument",
+    "quality_metrics": "validation", "coverage_by_group": "validation",
+    "gap_analysis": "validation",
+    "format_validation_report": "validation",
+    "build_validation_report": "validation",
+    "print_validation_summary": "validation",
+    "load_schema": "schema", "validate_table": "schema",
+    "write_bucketed": "schema",
+    "get_spark": "core.session",
+    "load_table": "core.tables",
+    "load_tables": "core.tables",
+    "register_views": "core.tables",
+    # feature surface (reference features/__init__.py:61-88)
+    "FeatureConfig": "features", "get_preset": "features",
+    "DEFAULT": "features", "CONSERVATIVE": "features",
+    "HIGH_FREQUENCY": "features",
+    "resample_iv": "features", "resample_by_dte_bucket": "features",
+    "iv_percentile": "features", "iv_rank": "features",
+    "term_structure": "features", "term_structure_slope": "features",
+    "term_structure_ratio": "features",
+    "pcr_by_tenor": "features", "pcr_aggregate": "features",
+    "dte_bucket_agg": "features", "dte_distribution": "features",
+    "fit_egarch": "features", "auto_select_egarch": "features",
+    "forecast_volatility": "features", "iv_model_spread": "features",
+    "egarch_params_by_group": "features",
+    "select_contracts": "features", "get_contract_stats": "features", "front_month": "features",
+    "atm_filter": "features", "liquidity_filter": "features",
+    "enrich_with_spot": "features", "spot_coverage": "features",
+    "ensure_spot_dictionary": "features",
+    "aggregate_by_moneyness": "features",
+    "compute_smile_metrics": "features",
+    "moneyness_bucket_col": "features",
+    "with_greeks": "functions.blackscholes",
+    "portfolio_greeks": "functions.blackscholes",
+    "greeks_by_bucket": "functions.blackscholes",
+    "format_instrument_col": "functions.instrument",
+    "format_instrument": "functions.instrument",
+    "compact_table": "operators.dedup",
+    "interval_join": "operators.range_join",
+    "sessionize": "operators.sessionize",
+    "session_stats": "operators.sessionize",
+    "streaming_sessionize": "operators.sessionize",
+    "salted_agg": "operators.skew",
+    "topn_per_group": "operators.topk",
+    "weighted_median_per_group": "operators.weighted",
+    "partial_rollup": "operators.merge_rollup",
+    "merge_rollup": "operators.merge_rollup",
+    "finalize_rollup": "operators.merge_rollup",
+    "window_funnel": "operators.funnel",
+    "sequence_count": "operators.funnel",
+    "fill_time_gaps": "operators.gapfill",
+    "retention": "operators.funnel",
+    "ServingConnector": "sinks.connector",
+    "ParquetServingConnector": "sinks.connector",
+    "ClickHouseHTTPConnector": "sinks.connector",
+    "ClickHouseConnectorConfig": "sinks.connector",
+    "write_stream_to_connector": "sinks.connector",
+    "write_jsonl_shards": "sinks.connector",
+}
+# reference-name aliases (reference __init__.py:42-65 /
+# features/__init__.py:61-88): a reference user's import keeps working
+_ALIASES = {
+    "calculate_greeks": "with_greeks",
+    "calculate_portfolio_greeks": "portfolio_greeks",
+    "aggregate_greeks_by_bucket": "greeks_by_bucket",
+    "get_quality_metrics": "quality_metrics",
+    "get_gap_analysis": "gap_analysis",
+    "get_coverage_stats": "coverage_by_group",
+    "validate_schema_version": "validate_table",
+    "build_contract_selection_query": "select_contracts",
+    "build_spot_enriched_query": "enrich_with_spot",
+    "build_moneyness_aggregation_query": "aggregate_by_moneyness",
+}
+
+
 def __getattr__(name: str):
     """Lazy re-exports of the reference's public API (§2.11 parity:
     reference __init__.py:42-65) — deferred so importing the package
     does not import pyspark submodules eagerly."""
     from importlib import import_module
 
-    home = {
-        "fetch_trades": "api", "describe": "api",
-        "collect_trades": "sources", "CheckpointStore": "sources",
-        "validate_page_continuity": "sources",
-        "parse_instrument": "functions.instrument",
-        "is_valid_instrument": "functions.instrument",
-        "quality_metrics": "validation", "coverage_by_group": "validation",
-        "gap_analysis": "validation",
-        "format_validation_report": "validation",
-        "build_validation_report": "validation",
-        "print_validation_summary": "validation",
-        "load_schema": "schema", "validate_table": "schema",
-        "write_bucketed": "schema",
-        "get_spark": "core.session",
-        "load_table": "core.tables",
-        "load_tables": "core.tables",
-        "register_views": "core.tables",
-        # feature surface (reference features/__init__.py:61-88)
-        "FeatureConfig": "features", "get_preset": "features",
-        "DEFAULT": "features", "CONSERVATIVE": "features",
-        "HIGH_FREQUENCY": "features",
-        "resample_iv": "features", "resample_by_dte_bucket": "features",
-        "iv_percentile": "features", "iv_rank": "features",
-        "term_structure": "features", "term_structure_slope": "features",
-        "term_structure_ratio": "features",
-        "pcr_by_tenor": "features", "pcr_aggregate": "features",
-        "dte_bucket_agg": "features", "dte_distribution": "features",
-        "fit_egarch": "features", "auto_select_egarch": "features",
-        "forecast_volatility": "features", "iv_model_spread": "features",
-        "egarch_params_by_group": "features",
-        "select_contracts": "features", "get_contract_stats": "features", "front_month": "features",
-        "atm_filter": "features", "liquidity_filter": "features",
-        "enrich_with_spot": "features", "spot_coverage": "features",
-        "ensure_spot_dictionary": "features",
-        "aggregate_by_moneyness": "features",
-        "compute_smile_metrics": "features",
-        "moneyness_bucket_col": "features",
-        "with_greeks": "functions.blackscholes",
-        "portfolio_greeks": "functions.blackscholes",
-        "greeks_by_bucket": "functions.blackscholes",
-        "format_instrument_col": "functions.instrument",
-        "format_instrument": "functions.instrument",
-        # large-scale training-data pipeline tier
-        "exact_dedup": "pipelines.text_dedup",
-        "ngram_jaccard_pairs": "pipelines.text_dedup",
-        "minhash_lsh_pairs": "pipelines.text_dedup",
-        "near_dedup_corpus": "pipelines.text_dedup",
-        "simhash_near_pairs": "pipelines.text_dedup",
-        "cosine_topk": "pipelines.embeddings",
-        "ivf_topk": "pipelines.embeddings",
-        "embedding_near_dup_pairs": "pipelines.embeddings",
-        "quality_score": "pipelines.text_stats",
-        "lang_id": "pipelines.text_stats",
-        "token_count": "pipelines.text_stats",
-        "bpe_ish_token_count": "pipelines.text_stats",
-        "fingerprint": "pipelines.text_stats",
-        "bigram_lm_score": "pipelines.text_stats",
-        "token_topk": "pipelines.text_stats",
-        "tfidf_top_terms": "pipelines.text_stats",
-        "curate_corpus": "pipelines.curation",
-        "quality_gate": "pipelines.curation",
-        "build_training_set": "pipelines.curation",
-        "contamination_check": "pipelines.curation",
-        "repetition_stats": "pipelines.text_stats",
-        "corpus_profile": "pipelines.text_stats",
-        "sample_n_per_group": "pipelines.sampling",
-        "hash_sample": "pipelines.sampling",
-        "stratified_hash_sample": "pipelines.sampling",
-        "weighted_sample_per_group": "pipelines.sampling",
-        "split_assign": "pipelines.sampling",
-        "split_thresholds": "pipelines.sampling",
-        "read_jsonl_corpus": "sources.corpus_reader",
-        "write_corpus_shards": "sources.corpus_reader",
-        "interdoc_repetition": "pipelines.text_dedup",
-        "incremental_dedup": "pipelines.text_dedup",
-        "project_embeddings": "pipelines.embeddings",
-        "connected_components": "operators.connected_components",
-        "dedup_clusters": "operators.connected_components",
-        "compact_table": "operators.dedup",
-        "interval_join": "operators.range_join",
-        "sessionize": "operators.sessionize",
-        "session_stats": "operators.sessionize",
-        "streaming_sessionize": "operators.sessionize",
-        "salted_agg": "operators.skew",
-        "topn_per_group": "operators.topk",
-        "weighted_median_per_group": "operators.weighted",
-        "partial_rollup": "operators.merge_rollup",
-        "merge_rollup": "operators.merge_rollup",
-        "finalize_rollup": "operators.merge_rollup",
-        "window_funnel": "operators.funnel",
-        "sequence_count": "operators.funnel",
-        "fill_time_gaps": "operators.gapfill",
-        "retention": "operators.funnel",
-        "ServingConnector": "sinks.connector",
-        "ParquetServingConnector": "sinks.connector",
-        "ClickHouseHTTPConnector": "sinks.connector",
-        "ClickHouseConnectorConfig": "sinks.connector",
-        "write_stream_to_connector": "sinks.connector",
-        "write_jsonl_shards": "sinks.connector",
-        "lsh_params": "pipelines.embeddings",
-        "minhash_params": "pipelines.text_dedup",
-        "decode_image": "pipelines.multimodal",
-        "encode_png": "pipelines.multimodal",
-        "image_feature_extract": "pipelines.multimodal",
-        "synthetic_images": "pipelines.multimodal",
-        "decode_audio": "pipelines.multimodal",
-        "encode_wav": "pipelines.multimodal",
-        "audio_feature_extract": "pipelines.multimodal",
-        "encode_framepack": "pipelines.multimodal",
-        "decode_framepack": "pipelines.multimodal",
-        "video_frame_features": "pipelines.multimodal",
-        "pack_sequences": "pipelines.packing",
-        "pack_stats": "pipelines.packing",
-        "chunk_documents": "pipelines.packing",
-        "redact_pii": "pipelines.scrub",
-        "pii_counts": "pipelines.scrub",
-        "scrub_documents": "pipelines.scrub",
-        "mixture_sample": "pipelines.sampling",
-        "mixture_thresholds": "pipelines.sampling",
-        "hashed_linear_score": "pipelines.text_stats",
-        "kmeans_fit": "pipelines.clustering",
-        "kmeans_assign": "pipelines.clustering",
-        "semantic_dedup": "pipelines.clustering",
-        "ivf_kmeans_topk": "pipelines.clustering",
-        "diverse_sample": "pipelines.clustering",
-        "knn_self_join": "pipelines.clustering",
-    }
-    # reference-name aliases (reference __init__.py:42-65 /
-    # features/__init__.py:61-88): a reference user's import keeps working
-    aliases = {
-        "calculate_greeks": "with_greeks",
-        "calculate_portfolio_greeks": "portfolio_greeks",
-        "aggregate_greeks_by_bucket": "greeks_by_bucket",
-        "get_quality_metrics": "quality_metrics",
-        "get_gap_analysis": "gap_analysis",
-        "get_coverage_stats": "coverage_by_group",
-        "validate_schema_version": "validate_table",
-        "build_contract_selection_query": "select_contracts",
-        "build_spot_enriched_query": "enrich_with_spot",
-        "build_moneyness_aggregation_query": "aggregate_by_moneyness",
-    }
-    name = aliases.get(name, name)
-    if name in home:
+    name = _ALIASES.get(name, name)
+    if name in _HOME:
         return getattr(
-            import_module(f"gapless_deribit_clickhouse_spark.{home[name]}"), name
+            import_module(f"gapless_deribit_clickhouse_spark.{_HOME[name]}"), name
         )
     if name == "features":
         return import_module("gapless_deribit_clickhouse_spark.features")
@@ -255,37 +195,13 @@ __all__ = [
     "with_greeks", "portfolio_greeks", "greeks_by_bucket",
     "format_instrument_col",
     "format_instrument",
-    # large-scale training-data pipeline tier (lazy)
-    "exact_dedup", "ngram_jaccard_pairs", "minhash_lsh_pairs",
-    "simhash_near_pairs",
-    "cosine_topk", "ivf_topk", "embedding_near_dup_pairs",
-    "quality_score", "lang_id", "token_count", "bpe_ish_token_count",
-    "fingerprint", "bigram_lm_score", "token_topk", "tfidf_top_terms", "curate_corpus",
-    "quality_gate",
-    "contamination_check", "repetition_stats", "corpus_profile", "sample_n_per_group",
-    "hash_sample", "stratified_hash_sample", "weighted_sample_per_group",
-    "split_assign",
-    "split_thresholds", "interdoc_repetition", "incremental_dedup",
-    "project_embeddings",
-    "read_jsonl_corpus", "write_corpus_shards",
-    "connected_components", "dedup_clusters", "compact_table", "interval_join",
+    # generic operators (lazy)
+    "compact_table", "interval_join",
     "sessionize", "session_stats", "streaming_sessionize",
     "salted_agg", "topn_per_group", "weighted_median_per_group",
     "partial_rollup", "merge_rollup",
     "finalize_rollup", "window_funnel", "sequence_count", "retention",
     "fill_time_gaps",
-    "lsh_params", "minhash_params",
-    "decode_image", "encode_png", "image_feature_extract",
-    "synthetic_images",
-    "decode_audio", "encode_wav", "audio_feature_extract",
-    "encode_framepack", "decode_framepack", "video_frame_features",
-    "pack_sequences", "pack_stats", "chunk_documents",
-    "build_training_set",
-    "redact_pii", "pii_counts", "scrub_documents",
-    "mixture_sample", "mixture_thresholds", "near_dedup_corpus",
-    "kmeans_fit", "kmeans_assign", "semantic_dedup",
-    "ivf_kmeans_topk", "diverse_sample", "knn_self_join",
-    "hashed_linear_score",
     # serving-layer connector seam (lazy)
     "ServingConnector", "ParquetServingConnector",
     "ClickHouseHTTPConnector", "ClickHouseConnectorConfig",

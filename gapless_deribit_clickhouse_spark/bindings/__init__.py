@@ -14,11 +14,9 @@ from gapless_deribit_clickhouse_spark.bindings import (
     core_ops,
     extra_ops,
     features_ops,
-    llm_ops,
     mining_ops,
     olap_ops,
     series_ops,
-    sketch_ops,
 )
 
 ALL_BINDINGS = [
@@ -31,8 +29,6 @@ ALL_BINDINGS = [
         olap_ops,
         series_ops,
         mining_ops,
-        llm_ops,
-        sketch_ops,
     )
     for b in mod.BINDINGS
 ]

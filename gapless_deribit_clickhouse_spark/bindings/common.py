@@ -1,6 +1,6 @@
 """Shared binding helpers: the deterministic options-trades view.
 
-The driver's correctness gate runs over its own testdata tables, so
+The query registry runs over the generic testdata tables, so
 the domain operators (moneyness, PCR, term structure, ...) are
 exercised on a trades-shaped view DERIVED from ``events`` with pure
 deterministic arithmetic — the same expressions evaluated by Spark

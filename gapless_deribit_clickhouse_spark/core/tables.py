@@ -1,11 +1,11 @@
 """Test-data table registration.
 
-The driver provides TPC-H-ish parquet tables plus ``events`` (an event
-stream), ``documents`` (text corpus) and ``embeddings`` (vectors) at
-``/root/testdata/sf*/``. Every engine query addresses them as temp
-views so the same code runs over any scale factor directory — and, on
-a real deployment, over a catalog table instead (swap ``load_tables``
-for ``spark.table``).
+The testdata directories ``/root/testdata/sf*/`` hold TPC-H-ish
+parquet tables plus ``events`` (an event stream), ``documents`` (text
+corpus) and ``embeddings`` (vectors). Every engine query addresses
+them as temp views so the same code runs over any scale factor
+directory — and, on a real deployment, over a catalog table instead
+(swap ``load_tables`` for ``spark.table``).
 """
 
 from __future__ import annotations

@@ -21,6 +21,16 @@ def test_all_exports_resolve():
         assert getattr(pkg, name) is not None, name
 
 
+def test_all_matches_lazy_map_and_aliases():
+    """``__all__`` and the lazy re-export map are kept by hand: every
+    lazy name and alias is advertised, and every advertised name is
+    either lazy, an alias or defined eagerly in the package."""
+    eager = {n for n in pkg.__all__ if n in vars(pkg)}
+    assert set(pkg.__all__) - eager == set(pkg._HOME) | set(pkg._ALIASES)
+    assert not eager & (set(pkg._HOME) | set(pkg._ALIASES))
+    assert set(pkg._ALIASES.values()) <= set(pkg._HOME)
+
+
 def test_reference_name_aliases():
     """A reference user's imports keep working (reference __init__.py:42-65)."""
     assert pkg.calculate_greeks is pkg.with_greeks
@@ -38,7 +48,7 @@ def test_probe_shape():
     d = pkg.describe()
     assert d["execution"] == "pyspark"
     caps = pkg.get_capabilities()
-    assert "fetch_trades" in caps and "minhash_lsh" in caps
+    assert "fetch_trades" in caps
     assert "parquet" in pkg.get_data_sources()
 
 

@@ -25,6 +25,32 @@ SF_DIR_FOR = {"term_structure": "/root/testdata/sf0.01"}
 QUERIES = entry.queries()
 ORACLES = entry.oracle_sql()
 
+# the paper's pipeline (features, analytics, Greeks, EGARCH, dedup,
+# OHLC, instrument parsing) ...
+PAPER_ENTRIES = {
+    "moneyness_pivot", "feature_pipeline", "moneyness_long", "pcr_by_tenor",
+    "pcr_aggregate", "term_structure", "dte_bucket_agg", "dte_distribution",
+    "front_month_select", "contract_chain_select", "enrich_with_spot",
+    "quality_metrics", "coverage_by_underlying", "gap_analysis",
+    "greeks", "rolling_percentile", "rolling_minmax_rank",
+    "resample_by_dte_bucket", "dedup_latest", "ohlc_15m", "instrument_parse",
+    "portfolio_greeks", "greeks_by_bucket", "smile_metrics", "spot_coverage",
+    "egarch_params", "egarch_inputs", "egarch_forecast_path", "egarch_loglik",
+    "egarch_nm_step",
+}
+# ... and the generic operators, which stay bound while their
+# operators stay in the package
+OPERATOR_ENTRIES = {
+    "scan_topn", "top1_min_value", "limit_by_topn", "sessionize",
+    "interval_join_sessions", "overlap_hot_hours", "asof_join_spot",
+    "asof_join_forward", "asof_join_nearest", "ohlc_15m_gapless",
+    "ohlc_gapless_interp", "window_funnel", "sequence_count", "retention",
+    "snapshot_diff", "attribution_first_touch", "attribution_last_touch",
+    "mergeable_rollup", "weighted_median", "drawdown_stats",
+    "realized_vol_daily", "ewma_by_user", "value_autocorr",
+    "collapsing_merge", "scd2_history", "pit_enrich", "event_cooccurrence",
+}
+
 
 @pytest.fixture(scope="module")
 def duck():
@@ -53,6 +79,11 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
         elif pd.api.types.is_integer_dtype(df[c]):
             df[c] = df[c].astype("int64")
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def test_registry_is_exactly_the_bound_operators():
+    assert len(PAPER_ENTRIES) == 30 and len(OPERATOR_ENTRIES) == 27
+    assert set(QUERIES) == PAPER_ENTRIES | OPERATOR_ENTRIES
 
 
 def test_every_oracle_names_a_query():
