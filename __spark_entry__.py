@@ -17,7 +17,7 @@ from gapless_deribit_clickhouse_spark import entry_queries
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; must return rows."""
+    """Flagship query on the sf0.001 testdata; must return rows."""
     return entry_queries.flagship(spark, "/root/testdata/sf0.001")
 
 

@@ -13,13 +13,16 @@ Layout
 core/        SparkSession factory + table registration
 schema/      declarative schema SSoT -> StructType / DDL / contracts
 functions/   column-level helpers (conditional aggs, time buckets,
-             instrument parsing, Black-Scholes)
+             instrument parsing, Black-Scholes, text hashing)
 operators/   generic engine operators (dedup, top-k, OHLC resample,
              conditional pivot, rolling windows, gap analysis,
              broadcast enrichment, as-of join)
 features/    the reference's domain feature surface (contract
              selection, spot enrichment, moneyness, PCR, term
              structure, DTE buckets, IV percentile, Greeks, EGARCH)
+pipelines/   large-scale training-data ops (dedup exact/minhash/
+             simhash/ngram/embedding, ANN search, text stats,
+             multimodal columns)
 sources/     batch ingestion (paginated collector emulation,
              continuity validation, idempotent sinks, checkpoints)
 streaming/   Structured Streaming ingestion (watermark + dedup)
@@ -84,6 +87,42 @@ _HOME = {
     "greeks_by_bucket": "functions.blackscholes",
     "format_instrument_col": "functions.instrument",
     "format_instrument": "functions.instrument",
+    # large-scale training-data pipeline tier
+    "exact_dedup": "pipelines.text_dedup",
+    "ngram_jaccard_pairs": "pipelines.text_dedup",
+    "minhash_lsh_pairs": "pipelines.text_dedup",
+    "near_dedup_corpus": "pipelines.text_dedup",
+    "simhash_near_pairs": "pipelines.text_dedup",
+    "cosine_topk": "pipelines.embeddings",
+    "ivf_topk": "pipelines.embeddings",
+    "embedding_near_dup_pairs": "pipelines.embeddings",
+    "quality_score": "pipelines.text_stats",
+    "lang_id": "pipelines.text_stats",
+    "token_count": "pipelines.text_stats",
+    "bpe_ish_token_count": "pipelines.text_stats",
+    "fingerprint": "pipelines.text_stats",
+    "bigram_lm_score": "pipelines.text_stats",
+    "token_topk": "pipelines.text_stats",
+    "tfidf_top_terms": "pipelines.text_stats",
+    "curate_corpus": "pipelines.curation",
+    "quality_gate": "pipelines.curation",
+    "build_training_set": "pipelines.curation",
+    "contamination_check": "pipelines.curation",
+    "repetition_stats": "pipelines.text_stats",
+    "corpus_profile": "pipelines.text_stats",
+    "sample_n_per_group": "pipelines.sampling",
+    "hash_sample": "pipelines.sampling",
+    "stratified_hash_sample": "pipelines.sampling",
+    "weighted_sample_per_group": "pipelines.sampling",
+    "split_assign": "pipelines.sampling",
+    "split_thresholds": "pipelines.sampling",
+    "read_jsonl_corpus": "sources.corpus_reader",
+    "write_corpus_shards": "sources.corpus_reader",
+    "interdoc_repetition": "pipelines.text_dedup",
+    "incremental_dedup": "pipelines.text_dedup",
+    "project_embeddings": "pipelines.embeddings",
+    "connected_components": "operators.connected_components",
+    "dedup_clusters": "operators.connected_components",
     "compact_table": "operators.dedup",
     "interval_join": "operators.range_join",
     "sessionize": "operators.sessionize",
@@ -105,6 +144,33 @@ _HOME = {
     "ClickHouseConnectorConfig": "sinks.connector",
     "write_stream_to_connector": "sinks.connector",
     "write_jsonl_shards": "sinks.connector",
+    "lsh_params": "pipelines.embeddings",
+    "minhash_params": "pipelines.text_dedup",
+    "decode_image": "pipelines.multimodal",
+    "encode_png": "pipelines.multimodal",
+    "image_feature_extract": "pipelines.multimodal",
+    "synthetic_images": "pipelines.multimodal",
+    "decode_audio": "pipelines.multimodal",
+    "encode_wav": "pipelines.multimodal",
+    "audio_feature_extract": "pipelines.multimodal",
+    "encode_framepack": "pipelines.multimodal",
+    "decode_framepack": "pipelines.multimodal",
+    "video_frame_features": "pipelines.multimodal",
+    "pack_sequences": "pipelines.packing",
+    "pack_stats": "pipelines.packing",
+    "chunk_documents": "pipelines.packing",
+    "redact_pii": "pipelines.scrub",
+    "pii_counts": "pipelines.scrub",
+    "scrub_documents": "pipelines.scrub",
+    "mixture_sample": "pipelines.sampling",
+    "mixture_thresholds": "pipelines.sampling",
+    "hashed_linear_score": "pipelines.text_stats",
+    "kmeans_fit": "pipelines.clustering",
+    "kmeans_assign": "pipelines.clustering",
+    "semantic_dedup": "pipelines.clustering",
+    "ivf_kmeans_topk": "pipelines.clustering",
+    "diverse_sample": "pipelines.clustering",
+    "knn_self_join": "pipelines.clustering",
 }
 # reference-name aliases (reference __init__.py:42-65 /
 # features/__init__.py:61-88): a reference user's import keeps working
@@ -195,13 +261,37 @@ __all__ = [
     "with_greeks", "portfolio_greeks", "greeks_by_bucket",
     "format_instrument_col",
     "format_instrument",
-    # generic operators (lazy)
-    "compact_table", "interval_join",
+    # large-scale training-data pipeline tier (lazy)
+    "exact_dedup", "ngram_jaccard_pairs", "minhash_lsh_pairs",
+    "simhash_near_pairs",
+    "cosine_topk", "ivf_topk", "embedding_near_dup_pairs",
+    "quality_score", "lang_id", "token_count", "bpe_ish_token_count",
+    "fingerprint", "bigram_lm_score", "token_topk", "tfidf_top_terms", "curate_corpus",
+    "quality_gate",
+    "contamination_check", "repetition_stats", "corpus_profile", "sample_n_per_group",
+    "hash_sample", "stratified_hash_sample", "weighted_sample_per_group",
+    "split_assign",
+    "split_thresholds", "interdoc_repetition", "incremental_dedup",
+    "project_embeddings",
+    "read_jsonl_corpus", "write_corpus_shards",
+    "connected_components", "dedup_clusters", "compact_table", "interval_join",
     "sessionize", "session_stats", "streaming_sessionize",
     "salted_agg", "topn_per_group", "weighted_median_per_group",
     "partial_rollup", "merge_rollup",
     "finalize_rollup", "window_funnel", "sequence_count", "retention",
     "fill_time_gaps",
+    "lsh_params", "minhash_params",
+    "decode_image", "encode_png", "image_feature_extract",
+    "synthetic_images",
+    "decode_audio", "encode_wav", "audio_feature_extract",
+    "encode_framepack", "decode_framepack", "video_frame_features",
+    "pack_sequences", "pack_stats", "chunk_documents",
+    "build_training_set",
+    "redact_pii", "pii_counts", "scrub_documents",
+    "mixture_sample", "mixture_thresholds", "near_dedup_corpus",
+    "kmeans_fit", "kmeans_assign", "semantic_dedup",
+    "ivf_kmeans_topk", "diverse_sample", "knn_self_join",
+    "hashed_linear_score",
     # serving-layer connector seam (lazy)
     "ServingConnector", "ParquetServingConnector",
     "ClickHouseHTTPConnector", "ClickHouseConnectorConfig",

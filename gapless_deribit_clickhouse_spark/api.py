@@ -107,6 +107,11 @@ def describe() -> dict:
             ],
             "validation": ["quality_metrics", "coverage_by_group", "gap_analysis"],
             "ingest": ["paginated_backfill", "structured_streaming"],
+            "pipelines": [
+                "exact_dedup", "minhash_lsh", "simhash", "ngram_jaccard",
+                "cosine_topk", "ivf_topk", "embedding_near_dup",
+                "lang_id", "quality_score", "token_count", "fingerprint",
+            ],
         },
         "data_sources": ["parquet", "parquet_stream"],
     }

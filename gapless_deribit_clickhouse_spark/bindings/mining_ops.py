@@ -1,16 +1,17 @@
-"""Mining-tier bindings: co-occurrence association analysis and
-first/last-touch attribution.
+"""Mining-tier bindings: corpus span-dedup TRANSFORM and
+co-occurrence association analysis.
 
+- segment_dedup: C4-style duplicated-span removal over documents —
+  the transform counterpart to the substring_dup_fraction metric
+  (keeps the canonical first occurrence of every 10-token segment,
+  reassembles survivors).
 - event_cooccurrence: market-basket association over (user, event
   type) — exact integer supports, Jaccard and lift as final double
   divisions.
-- attribution_{last,first}_touch: each purchase credited to its
-  latest view/click within a lookback, or to the first touch of its
-  episode.
 
-All carry full DuckDB oracles; all intermediate values are exact
-(integer counts), so only the final divisions are floats and the 6dp
-compare has no rank/threshold hazards.
+Both carry full DuckDB oracles; all intermediate values are exact
+(string equality / integer counts), so only the final divisions are
+floats and the 6dp compare has no rank/threshold hazards.
 """
 
 from __future__ import annotations
@@ -22,6 +23,45 @@ from gapless_deribit_clickhouse_spark.core.tables import load_table
 from gapless_deribit_clickhouse_spark.operators.cooccurrence import (
     cooccurrence_stats,
 )
+from gapless_deribit_clickhouse_spark.pipelines.text_dedup import segment_dedup
+
+_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+
+
+def segment_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return segment_dedup(load_table(spark, sf_dir, "documents"), seg_tokens=10)
+
+
+# The oracle mirrors the engine's segmentation exactly: 1-based
+# inclusive DuckDB list slices toks[i*10+1 : i*10+10] == Spark
+# slice(toks, i*10+1, 10); canonical survivor = lowest (doc_id,
+# seg_idx) via row_number; reassembly is an ordered string_agg.
+SEGMENT_DEDUP_SQL = f"""
+WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS toks FROM documents),
+tt AS (SELECT doc_id, toks, len(toks) AS n FROM t),
+segs AS (
+  SELECT doc_id,
+         unnest(range(0, (n - 1) // 10 + 1)) AS i,
+         toks, n
+  FROM tt),
+s AS (
+  SELECT doc_id, CAST(i AS INT) AS seg_idx,
+         array_to_string(toks[i * 10 + 1 : i * 10 + 10], ' ') AS seg
+  FROM segs),
+k AS (
+  SELECT doc_id, seg_idx, seg,
+         row_number() OVER (PARTITION BY seg ORDER BY doc_id, seg_idx) AS rn
+  FROM s),
+agg AS (
+  SELECT doc_id, count(*) AS n_kept,
+         string_agg(seg, ' ' ORDER BY seg_idx) AS dedup_text
+  FROM k WHERE rn = 1 GROUP BY doc_id)
+SELECT tt.doc_id,
+       CAST((tt.n - 1) // 10 + 1 AS INT) AS n_segments,
+       coalesce(agg.n_kept, 0) AS n_kept,
+       coalesce(agg.dedup_text, '') AS dedup_text
+FROM tt LEFT JOIN agg USING (doc_id)
+"""
 
 
 def event_cooccurrence_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,7 +162,10 @@ FROM c WHERE event_type = 'purchase'
 """
 
 
-BINDINGS = [
+BINDINGS: list = []
+
+LATE_BINDINGS = [
+    ("segment_dedup", segment_dedup_q, SEGMENT_DEDUP_SQL),
     ("event_cooccurrence", event_cooccurrence_q, EVENT_COOCCURRENCE_SQL),
     ("attribution_last_touch", attribution_q, ATTRIBUTION_SQL),
     ("attribution_first_touch", attribution_first_q, ATTRIBUTION_FIRST_SQL),

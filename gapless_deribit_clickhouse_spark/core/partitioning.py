@@ -13,6 +13,36 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+
+def spread_expansion(df: DataFrame, multiplier: int = 1) -> DataFrame:
+    """Unconditional round-robin repartition for stages whose OUTPUT
+    explodes past their input (in-bucket pair generation, window
+    explodes). AQE sizes a post-shuffle stage by the exchange's input
+    bytes, so an expansion stage gets coalesced to a handful of tasks
+    no matter how much work it emits (guide §2.5). Unlike
+    :func:`ensure_parallelism` this never inspects ``df.rdd`` — on a
+    post-shuffle plan that inspection would force the upstream query
+    stages to execute during CONSTRUCTION under AQE. The cost is one
+    exchange of the (narrow) pre-expansion rows.
+
+    The target is a FLOOR of executor-core count and the session's
+    configured shuffle parallelism (ADVICE r12): pinning to
+    ``defaultParallelism`` alone could repartition a wider input DOWN
+    on a cluster whose shuffle partitioning exceeds its core count,
+    shrinking parallelism and fattening partitions. Locally both
+    values are the core count, so the bench shape is unchanged."""
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    try:
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        shuffle_parts = 0
+    target = max(sc.defaultParallelism * multiplier, shuffle_parts)
+    if target <= 0:
+        return df
+    return df.repartition(target)
+
+
 # analyzed-plan node names through which ``df.rdd`` stays a pure
 # metadata conversion: no exchange can appear below them, so AQE has
 # no query stage to materialize at construction time. Anything else

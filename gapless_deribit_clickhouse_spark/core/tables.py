@@ -1,6 +1,6 @@
 """Test-data table registration.
 
-The testdata directories ``/root/testdata/sf*/`` hold TPC-H-ish
+The testdata directories (``sf*/``, see ``DEFAULT_SF_DIR``) hold TPC-H-ish
 parquet tables plus ``events`` (an event stream), ``documents`` (text
 corpus) and ``embeddings`` (vectors). Every engine query addresses
 them as temp views so the same code runs over any scale factor

@@ -2,8 +2,9 @@
 
 Binds the engine's operators to the testdata tables, pairing each
 Spark DataFrame query with the exact ANSI-SQL DuckDB oracle. The
-registry is the flat concatenation of the per-area binding modules;
-each binding aliases its output columns identically on both sides.
+registry is assembled from per-area binding modules (ordered in
+``bindings/__init__.py``); each binding aliases its output columns
+identically on both sides.
 """
 
 from __future__ import annotations

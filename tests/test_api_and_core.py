@@ -518,59 +518,3 @@ def test_snapshot_diff_change_types_and_null_safety(spark):
 
     with _pytest.raises(ValueError):
         snapshot_diff(old, new, keys=["k"], compare_cols=["nope"])
-
-
-def test_sessionize_gap_splits(spark):
-    import datetime as dt
-
-    from gapless_deribit_clickhouse_spark.operators.sessionize import (
-        session_stats,
-        sessionize,
-    )
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        # user 1: two sessions (40-min gap), user 2: one session
-        (1, base), (1, base + dt.timedelta(minutes=10)),
-        (1, base + dt.timedelta(minutes=50)),
-        (2, base), (2, base + dt.timedelta(minutes=29)),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    s = sessionize(ev, gap_seconds=1800).toPandas()
-    u1 = s[s.user_id == 1].sort_values("ts")
-    assert u1.session_seq.tolist() == [1, 1, 2]
-    stats = session_stats(ev, gap_seconds=1800).toPandas()
-    assert len(stats) == 3
-    u2 = stats[(stats.user_id == 2)]
-    assert u2.n_events.tolist() == [2] and u2.duration_s.tolist() == [29 * 60.0]
-
-
-def test_salted_agg_matches_plain_groupby(spark):
-    from gapless_deribit_clickhouse_spark.operators.skew import salted_agg
-
-    # heavily skewed: key 'hot' has 10k rows, others 10
-    rows = [("hot", i % 7, float(i)) for i in range(10_000)] + [
-        (f"k{j}", j, float(j)) for j in range(10)
-    ]
-    df = spark.createDataFrame(rows, "k string, v long, x double").repartition(16)
-    got = (
-        salted_agg(
-            df, ["k"],
-            {"total": ("sum", "x"), "n": ("count", "v"),
-             "lo": ("min", "x"), "hi": ("max", "x")},
-        )
-        .toPandas().sort_values("k").reset_index(drop=True)
-    )
-    want = (
-        df.groupBy("k")
-        .agg(
-            F.sum("x").alias("total"), F.count("v").alias("n"),
-            F.min("x").alias("lo"), F.max("x").alias("hi"),
-        )
-        .toPandas().sort_values("k").reset_index(drop=True)
-    )
-    assert got.equals(want)
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        salted_agg(df, ["k"], {"bad": ("avg", "x")})

@@ -19,6 +19,8 @@ import pathlib
 REPO = pathlib.Path(__file__).resolve().parent.parent
 SCANNED = [
     REPO / "gapless_deribit_clickhouse_spark",
+    REPO / "tools",
+    REPO / "bench.py",
     REPO / "__spark_entry__.py",
 ]
 

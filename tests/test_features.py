@@ -379,3 +379,15 @@ def test_rolling_percentile_numeric_epoch_and_ties(spark):
         .toPandas().sort_values(["ts", "v"]).reset_index(drop=True)
     )
     assert np.allclose(a.pct_rank, b.pct_rank, equal_nan=True)
+
+
+def test_connected_components_raises_without_convergence(spark):
+    from gapless_deribit_clickhouse_spark.operators.connected_components import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, local_threshold=0, max_iter=0)

@@ -530,6 +530,74 @@ def test_streaming_enrich_spot_stream_static_parity(spark, trades_df, spot_pdf, 
     pd.testing.assert_frame_equal(got, want)
 
 
+def test_stream_dedup_ingest_cross_batch(spark, tmp_path):
+    """Streaming corpus ingest against the persisted dedup index:
+    batch 1's survivors are appended to the index before batch 2 runs,
+    so a batch-2 near-duplicate of a batch-1 document is dropped —
+    cross-batch dedup with zero corpus text touched per batch."""
+    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
+        build_dedup_index,
+    )
+    from gapless_deribit_clickhouse_spark.streaming.corpus_ingest import (
+        stream_dedup_ingest,
+    )
+
+    def sent(tag: str) -> str:
+        return " ".join(f"{tag}tok{j}" for j in range(12))
+
+    corpus = spark.createDataFrame(
+        [(i, sent(f"corp{i}")) for i in range(5)], ["doc_id", "text"]
+    )
+    idx = str(tmp_path / "idx")
+    build_dedup_index(corpus, idx, threshold=0.8)
+
+    # two source files -> two serial micro-batches (maxFilesPerTrigger=1)
+    src = str(tmp_path / "src")
+    b1 = [(100, sent("newA")), (101, sent("corp2"))]           # 101 = corpus dup
+    b2 = [(200, sent("newA") + " tail"), (201, sent("newB"))]  # 200 = near-dup of 100
+    spark.createDataFrame(b1, ["doc_id", "text"]).coalesce(1).write.parquet(
+        src + "/f1"
+    )
+    spark.createDataFrame(b2, ["doc_id", "text"]).coalesce(1).write.parquet(
+        src + "/f2"
+    )
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+    )
+    out = str(tmp_path / "out")
+    q = stream_dedup_ingest(
+        stream, idx, out, str(tmp_path / "ckpt"), trigger_once=True
+    )
+    q.awaitTermination(120)
+
+    landed = spark.read.parquet(out).toPandas()
+    assert set(landed.doc_id) == {100, 201}
+    # exactly one copy each, in distinct batch partitions
+    assert landed.doc_id.nunique() == len(landed) == 2
+    # the index grew by the survivors: re-streaming the same data in
+    # a fresh query drops everything (every doc now indexed)
+    stream2 = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+    )
+    out2 = str(tmp_path / "out2")
+    q2 = stream_dedup_ingest(
+        stream2, idx, out2, str(tmp_path / "ckpt2"), trigger_once=True
+    )
+    q2.awaitTermination(120)
+    import os
+
+    survivors2 = (
+        spark.read.parquet(out2).toPandas()
+        if any(f.endswith(".parquet") for _r, _d, fs in os.walk(out2) for f in fs)
+        else []
+    )
+    assert len(survivors2) == 0
+
+
 def test_streaming_mergeable_rollup_state_versions(spark, tmp_path):
     """Materialized-view loop: per-batch partial rollup merged into a
     versioned state table. The newest finalized version must equal the

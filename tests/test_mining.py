@@ -1,5 +1,5 @@
-"""Planted-value tests for the mining tier: cooccurrence_stats
-(association mining)."""
+"""Planted-value tests for the mining tier: segment_dedup (span
+removal) and cooccurrence_stats (association mining)."""
 
 from __future__ import annotations
 
@@ -8,6 +8,50 @@ import pytest
 from gapless_deribit_clickhouse_spark.operators.cooccurrence import (
     cooccurrence_stats,
 )
+from gapless_deribit_clickhouse_spark.pipelines.text_dedup import segment_dedup
+
+BOILER = "one two three four"  # 4-token boilerplate segment
+
+
+def test_segment_dedup_removes_later_occurrences(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, f"{BOILER} alpha beta"),  # canonical: segs [boiler, 'alpha beta']
+            (2, f"{BOILER} gamma delta"),  # boiler dropped, tail kept
+            (3, BOILER),  # fully duplicated -> empty output text
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        r["doc_id"]: r
+        for r in segment_dedup(docs, seg_tokens=4).collect()
+    }
+    assert got[1]["n_segments"] == 2 and got[1]["n_kept"] == 2
+    assert got[1]["dedup_text"] == f"{BOILER} alpha beta"
+    assert got[2]["n_segments"] == 2 and got[2]["n_kept"] == 1
+    assert got[2]["dedup_text"] == "gamma delta"
+    assert got[3]["n_segments"] == 1 and got[3]["n_kept"] == 0
+    assert got[3]["dedup_text"] == ""
+
+
+def test_segment_dedup_within_doc_repeat(spark):
+    # the SAME segment twice inside one doc: second copy is cut
+    docs = spark.createDataFrame(
+        [(7, f"{BOILER} {BOILER}")], "doc_id long, text string"
+    )
+    row = segment_dedup(docs, seg_tokens=4).collect()[0]
+    assert row["n_segments"] == 2
+    assert row["n_kept"] == 1
+    assert row["dedup_text"] == BOILER
+
+
+def test_segment_dedup_tail_shorter_than_segment(spark):
+    docs = spark.createDataFrame(
+        [(1, "a b c d e")], "doc_id long, text string"
+    )
+    row = segment_dedup(docs, seg_tokens=4).collect()[0]
+    assert row["n_segments"] == 2  # 'a b c d' + tail 'e'
+    assert row["dedup_text"] == "a b c d e"
 
 
 def test_cooccurrence_counts_and_ratios(spark):

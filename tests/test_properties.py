@@ -67,6 +67,38 @@ def test_arbitrary_text_never_crashes_validator(s):
     assert is_valid_instrument(s) in (True, False)
 
 
+def test_gram_array_matches_python_reference(spark):
+    """Pin the zip-shifted-slices n-gram shape against a trivial
+    Python implementation across awkward lengths (empty, < n, == n)."""
+    from pyspark.sql import functions as F
+
+    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
+        gram_array,
+        normalized_text,
+    )
+
+    texts = [
+        "", "one", "one two", "one two three", "one two three four",
+        "a a a a a", "  spaced   out  tokens   here ", "x " * 40,
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
+    for n in (2, 3, 5):
+        got = {
+            r["i"]: r["g"]
+            for r in df.select(
+                "i", gram_array(F.split(normalized_text(F.col("text")), " "), n).alias("g")
+            ).collect()
+        }
+        for i, t in enumerate(texts):
+            toks = " ".join(t.lower().split()).split(" ")
+            want = (
+                [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
+                if len(toks) >= n
+                else [" ".join(toks)]
+            )
+            assert got[i] == want, (n, t, got[i], want)
+
+
 def _sorted_rows(df):
     # floats rounded: parallel SUM order legitimately perturbs the
     # last bit; open/high/low/close/winner picks must be EXACT
@@ -108,3 +140,120 @@ def test_dedup_resample_top1_deterministic_under_repartition(spark, trades_df):
         a = _sorted_rows(build(noisy.repartition(1)))
         b = _sorted_rows(build(noisy.repartition(17, "option_type")))
         assert a == b
+
+
+@given(
+    h=st.integers(1, 12),
+    w=st.integers(1, 12),
+    c=st.sampled_from([1, 2, 3, 4]),
+    seed=st.integers(0, 2**31 - 1),
+)
+@settings(max_examples=40, deadline=None)
+def test_png_roundtrip_property(h, w, c, seed):
+    """encode_png ∘ decode_image == identity for every 8-bit shape."""
+    import numpy as np
+
+    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
+        decode_image,
+        encode_png,
+    )
+
+    arr = np.random.default_rng(seed).integers(0, 256, size=(h, w, c)).astype("uint8")
+    out = decode_image(encode_png(arr))
+    assert out.shape == arr.shape and (out == arr).all()
+
+
+@given(
+    n=st.integers(1, 400),
+    channels=st.sampled_from([1, 2]),
+    rate=st.sampled_from([8000, 16000, 44100]),
+    seed=st.integers(0, 2**31 - 1),
+)
+@settings(max_examples=40, deadline=None)
+def test_wav_roundtrip_property(n, channels, rate, seed):
+    """encode_wav ∘ decode_audio preserves shape, rate and values to
+    16-bit quantization error."""
+    import numpy as np
+
+    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
+        decode_audio,
+        encode_wav,
+    )
+
+    a = np.random.default_rng(seed).uniform(-1, 1, size=(n, channels))
+    out, got_rate = decode_audio(encode_wav(a, rate))
+    assert got_rate == rate and out.shape == a.shape
+    assert np.allclose(out, a, atol=0.51 / 32767)
+
+
+@given(
+    n=st.integers(2, 10**9),
+    threshold=st.floats(0.5, 0.99),
+    recall=st.floats(0.5, 0.99),
+)
+@settings(max_examples=200, deadline=None)
+def test_lsh_params_always_meets_recall_within_budget(n, threshold, recall):
+    """For any corpus size/threshold/recall target: the derived config
+    respects the bit budget, and (unless clipped to the b=4 floor)
+    analytically clears the recall target."""
+    import math
+
+    from gapless_deribit_clickhouse_spark.pipelines.embeddings import lsh_params
+
+    n_bits, b = lsh_params(n, threshold=threshold, target_recall=recall)
+    assert 4 <= b <= 16 and n_bits % b == 0 and n_bits <= 512
+    p = 1.0 - math.acos(threshold) / math.pi
+    achieved = 1.0 - (1.0 - p**b) ** (n_bits // b)
+    if b > 4 or n_bits > 4:  # not clipped by the floor/budget corner
+        assert achieved >= recall - 1e-9
+
+
+@given(
+    threshold=st.floats(0.2, 0.95),
+    recall=st.floats(0.5, 0.99),
+)
+@settings(max_examples=200, deadline=None)
+def test_minhash_params_always_meets_recall_within_budget(threshold, recall):
+    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import minhash_params
+
+    num_hashes, bands = minhash_params(threshold, target_recall=recall)
+    r = num_hashes // bands
+    assert num_hashes <= 256 and num_hashes % bands == 0 and r >= 1
+    achieved = 1.0 - (1.0 - threshold**r) ** bands
+    assert achieved >= recall - 1e-9
+
+
+@given(
+    n_tokens=st.integers(0, 120),
+    max_tokens=st.integers(2, 40),
+    overlap_frac=st.floats(0.0, 0.9),
+)
+@settings(max_examples=40, deadline=None)
+def test_chunk_documents_matches_python_reference(
+    spark, n_tokens, max_tokens, overlap_frac
+):
+    """chunk_documents vs a direct Python reference chunker on random
+    shapes: same chunk count, same windows, full coverage."""
+    from gapless_deribit_clickhouse_spark.pipelines.packing import chunk_documents
+
+    overlap = min(int(max_tokens * overlap_frac), max_tokens - 1)
+    stride = max_tokens - overlap
+    toks = [f"t{i}" for i in range(n_tokens)]
+    df = spark.createDataFrame([(1, " ".join(toks))], "doc_id long, text string")
+    got = (
+        chunk_documents(df, max_tokens=max_tokens, overlap=overlap)
+        .toPandas()
+        .sort_values("chunk_idx")
+    )
+    # python reference: windows every `stride` until the tail is covered
+    if n_tokens <= max_tokens:
+        want = [toks[0:max_tokens]]
+    else:
+        import math
+
+        nc = 1 + math.ceil((n_tokens - max_tokens) / stride)
+        want = [toks[i * stride : i * stride + max_tokens] for i in range(nc)]
+    assert list(got.chunk_idx) == list(range(len(want)))
+    for c, w in zip(got.chunk_text, want):
+        assert c.split() == w
+    assert (got.doc_n_tokens == n_tokens).all()

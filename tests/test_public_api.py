@@ -48,7 +48,7 @@ def test_probe_shape():
     d = pkg.describe()
     assert d["execution"] == "pyspark"
     caps = pkg.get_capabilities()
-    assert "fetch_trades" in caps
+    assert "fetch_trades" in caps and "minhash_lsh" in caps
     assert "parquet" in pkg.get_data_sources()
 
 

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.operators.sketches import frequent_keys_exact
 
+SF_DIR = "/root/testdata/sf0.001"
+
 
 def _zipf_rows():
     # planted Zipf-ish stream: key_i appears ~1000/i times; heavy head,
@@ -89,6 +91,21 @@ def test_hll_merge_tracks_exact_at_real_cardinality(spark):
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
     ).collect()[0]["est"]
     assert abs(est - 80000) <= 0.05 * 80000
+
+
+def test_sketch_bindings_flags_hold(spark):
+    """The error-contract booleans the oracles pin as TRUE are actually
+    computed, not constants: both sketch bindings must produce all-true
+    flags on the test tables."""
+    from gapless_deribit_clickhouse_spark.bindings.sketch_ops import (
+        approx_distinct_rollup,
+        quantile_sketch_rollup,
+    )
+
+    for row in approx_distinct_rollup(spark, SF_DIR).collect():
+        assert row["hllpp_ok"] and row["merge_ok"], row
+    for row in quantile_sketch_rollup(spark, SF_DIR).collect():
+        assert row["sketch_p50_ok"] and row["sketch_p90_ok"], row
 
 
 def test_frequent_keys_null_keys_excluded_from_total(spark):

@@ -1,8 +1,9 @@
 """Semantics tests for the series tier: drawdown / realized vol /
 EWMA (features/timeseries.py), CollapsingMergeTree parity
-(operators/dedup.collapse_by_sign), SCD2 history (operators/scd.py)
-and autocorrelation — hand-built inputs with hand-computed expected
-values; the DuckDB value oracles live in bindings/series_ops.py."""
+(operators/dedup.collapse_by_sign), SCD2 history (operators/scd.py),
+temperature sampling, and substring duplication coverage — hand-built
+inputs with hand-computed expected values; the DuckDB value oracles
+live in bindings/series_ops.py."""
 
 from __future__ import annotations
 
@@ -21,6 +22,13 @@ from gapless_deribit_clickhouse_spark.operators.dedup import collapse_by_sign
 from gapless_deribit_clickhouse_spark.operators.scd import (
     point_in_time_join,
     scd2_history,
+)
+from gapless_deribit_clickhouse_spark.pipelines.sampling import (
+    temperature_sample,
+    temperature_thresholds,
+)
+from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
+    substring_dup_fraction,
 )
 
 
@@ -189,6 +197,54 @@ def test_point_in_time_join_half_open(spark):
     assert out == {0: "A", 1: "A", 2: "B", 3: "B"}
     # each fact matches exactly one version — no interval overlap
     assert point_in_time_join(facts, hist, "ts", ["key"]).count() == 4
+
+
+def test_temperature_thresholds_integer_math():
+    # counts 100 and 25: isqrt 10 and 5, S=15; target 62
+    th = temperature_thresholds({"a": 100, "b": 25}, 62)
+    assert th == {"a": 62 * 10_000 * 10 // (15 * 100), "b": 62 * 10_000 * 5 // (15 * 25)}
+    # small domain never oversampled past rate 1
+    th = temperature_thresholds({"a": 10_000, "b": 4}, 9_000)
+    assert th["b"] == 10_000
+    assert temperature_thresholds({"a": 0}, 10) == {"a": 0}
+
+
+def test_temperature_sample_rebalances(spark):
+    rows = [(i, "big") for i in range(900)] + [(i + 900, "small") for i in range(100)]
+    df = spark.createDataFrame(rows, "doc_id long, source string")
+    out = temperature_sample(df, "doc_id", "source", 1, 2).groupBy("source").count()
+    got = {r["source"]: r["count"] for r in out.collect()}
+    # temperature-2: small keeps a ~3x higher RATE than big (sqrt(900/100))
+    rate_big, rate_small = got.get("big", 0) / 900, got.get("small", 0) / 100
+    assert rate_small > 2.0 * rate_big
+    # and membership is deterministic
+    again = temperature_sample(df, "doc_id", "source", 1, 2).groupBy("source").count()
+    assert {r["source"]: r["count"] for r in again.collect()} == got
+
+
+def test_substring_dup_fraction(spark):
+    shared = "alpha bravo charlie delta echo foxtrot golf hotel"  # 8 tokens
+    rows = [
+        (0, shared + " unique zero tail"),
+        (1, "one head " + shared),
+        (2, "entirely different words with no overlap at all"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: r for r in substring_dup_fraction(df, window=8).collect()}
+    # docs 0/1 share exactly the one 8-token window; it covers 8 of 11
+    # (doc 0) and the last 8 of 10 (doc 1) token positions
+    assert out[0]["n_tokens"] == 11 and out[0]["n_dup_positions"] == 8
+    assert out[0]["dup_fraction"] == pytest.approx(8 / 11)
+    assert out[1]["n_tokens"] == 10 and out[1]["n_dup_positions"] == 8
+    assert out[2]["n_dup_positions"] == 0 and out[2]["dup_fraction"] == 0.0
+
+
+def test_substring_dup_short_docs_whole_text(spark):
+    rows = [(0, "tiny doc"), (1, "tiny doc"), (2, "tiny other")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: r for r in substring_dup_fraction(df, window=8).collect()}
+    assert out[0]["dup_fraction"] == 1.0 and out[1]["dup_fraction"] == 1.0
+    assert out[2]["dup_fraction"] == 0.0
 
 
 def test_autocorr_planted_series(spark):
