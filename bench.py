@@ -1079,7 +1079,6 @@ def _wait_for_quiet(
     threshold_5m: float = LOAD_THRESHOLD_5M,
     max_wait: float = 600.0,
     poll: float = 15.0,
-    notify_stream=None,
 ) -> dict[str, float]:
     """Bounded quiet-box gate (VERDICT r8 next #2): the official
     BENCH_rN was a high-load sidecar divert two rounds running (r7
@@ -1119,12 +1118,6 @@ def _wait_for_quiet(
                         "max_wait_sec": max_wait,
                     }
                 ),
-                # default stdout: in bench's own flow fd 2 is already
-                # redirected to the log file by the time the gate can
-                # fire. Callers whose stdout IS the artifact (e.g.
-                # tools/scale_probe.py writing SCALING.md) pass their
-                # own stream so the notice can't land in the artifact.
-                file=notify_stream if notify_stream is not None else sys.stdout,
                 flush=True,
             )
             notified = True

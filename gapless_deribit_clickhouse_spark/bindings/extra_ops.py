@@ -149,7 +149,7 @@ FROM pivoted
 # --- A16: spot coverage rates after enrichment ---
 def spot_coverage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = enrich_with_spot(trades_view(spark, sf_dir), spot_view(spark, sf_dir))
-    return spot_coverage(enriched, index_price_col="index_price")
+    return spot_coverage(enriched)
 
 
 SPOT_COVERAGE_SQL = f"""

@@ -29,55 +29,37 @@ from gapless_deribit_clickhouse_spark.operators.topk import top1_per_group
 STRATEGIES = ("all", "front_month", "front_month_atm", "front_month_atm_liquid")
 
 
-def front_month(
-    df: DataFrame,
-    ts_col: str = "timestamp",
-    expiry_col: str = "expiry",
-    underlying_col: str = "underlying",
-    id_col: str = "trade_id",
-    config: FeatureConfig = DEFAULT,
-) -> DataFrame:
+def front_month(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
     """Per (window, underlying) keep the whole row of the trade with
     minimum DTE (reference contract_selector.py:34-62), deterministic
     via id tiebreak."""
     payload = [c for c in df.columns]
-    dte = dte_days(F.col(ts_col), F.col(expiry_col)).alias("__dte")
+    dte = dte_days(F.col("timestamp"), F.col("expiry")).alias("__dte")
     with_bucket = df.withColumn(
-        "__w", time_bucket(F.col(ts_col), config.resample_seconds)
+        "__w", time_bucket(F.col("timestamp"), config.resample_seconds)
     ).withColumn("__dte", dte)
     out = top1_per_group(
         with_bucket,
-        group_cols=["__w", underlying_col],
-        order_col=F.struct(F.col("__dte"), F.col(id_col)),
-        payload_cols=[c for c in payload if c != underlying_col],
+        group_cols=["__w", "underlying"],
+        order_col=F.struct(F.col("__dte"), F.col("trade_id")),
+        payload_cols=[c for c in payload if c != "underlying"],
     )
     return out.drop("__w")
 
 
-def atm_filter(
-    df: DataFrame,
-    strike_col: str = "strike",
-    spot_col: str = "index_price",
-    config: FeatureConfig = DEFAULT,
-) -> DataFrame:
+def atm_filter(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
     """strike/spot within ±atm_width (reference contract_selector.py:64-72)."""
-    ratio = F.col(strike_col) / F.col(spot_col)
+    ratio = F.col("strike") / F.col("index_price")
     return df.filter(ratio.between(1 - config.atm_width, 1 + config.atm_width))
 
 
-def liquidity_filter(
-    df: DataFrame,
-    ts_col: str = "timestamp",
-    instrument_col: str = "instrument_name",
-    amount_col: str = "amount",
-    config: FeatureConfig = DEFAULT,
-) -> DataFrame:
+def liquidity_filter(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
     """Keep rows of (instrument, day) groups whose daily volume >=
     min_volume (reference contract_selector.py:74-93) — window sum
     instead of the reference's self-join."""
-    w = Window.partitionBy(F.col(instrument_col), F.to_date(F.col(ts_col)))
+    w = Window.partitionBy(F.col("instrument_name"), F.to_date(F.col("timestamp")))
     return (
-        df.withColumn("__daily_volume", F.sum(amount_col).over(w))
+        df.withColumn("__daily_volume", F.sum("amount").over(w))
         .filter(F.col("__daily_volume") >= config.min_volume)
         .drop("__daily_volume")
     )
@@ -87,36 +69,27 @@ def select_contracts(
     df: DataFrame,
     strategy: str = "front_month_atm_liquid",
     config: FeatureConfig = DEFAULT,
-    **cols: str,
 ) -> DataFrame:
     """Strategy dispatcher (reference contract_selector.py:117-191)."""
     if strategy not in STRATEGIES:
         raise QueryError(f"unknown strategy {strategy!r}; options: {STRATEGIES}")
     out = df
     if strategy != "all":
-        out = front_month(out, config=config, **_pick(cols, "ts_col", "expiry_col", "underlying_col", "id_col"))
+        out = front_month(out, config=config)
     if strategy in ("front_month_atm", "front_month_atm_liquid"):
-        out = atm_filter(out, config=config, **_pick(cols, "strike_col", "spot_col"))
+        out = atm_filter(out, config=config)
     if strategy == "front_month_atm_liquid":
-        out = liquidity_filter(out, config=config, **_pick(cols, "ts_col", "instrument_col", "amount_col"))
+        out = liquidity_filter(out, config=config)
     return out
 
 
-def _pick(d: dict[str, str], *keys: str) -> dict[str, str]:
-    return {k: d[k] for k in keys if k in d}
-
-
-def get_contract_stats(
-    df: DataFrame,
-    config: FeatureConfig = DEFAULT,
-    **cols: str,
-) -> dict[str, int]:
+def get_contract_stats(df: DataFrame, config: FeatureConfig = DEFAULT) -> dict[str, int]:
     """Row count per selection strategy (reference
     contract_selector.py:263-302, ``get_contract_stats``) — shows the
     funnel effect of each filter stage. Four counts over the same
     (already filtered/pruned) input; each count is a partial-agg +
     single-row exchange, so the dominant cost is the shared scan."""
     return {
-        strategy: select_contracts(df, strategy=strategy, config=config, **cols).count()
+        strategy: select_contracts(df, strategy=strategy, config=config).count()
         for strategy in STRATEGIES
     }

@@ -29,56 +29,42 @@ def dte_bucket_col(dte: Column, config: FeatureConfig = DEFAULT) -> Column:
     return expr.otherwise(F.lit(None))
 
 
-def dte_bucket_agg(
-    df: DataFrame,
-    ts_col: str = "timestamp",
-    expiry_col: str = "expiry",
-    iv_col: str = "iv",
-    amount_col: str = "amount",
-    price_col: str = "price",
-    config: FeatureConfig = DEFAULT,
-) -> DataFrame:
+def dte_bucket_agg(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
     """Per (window, dte_bucket): iv mean/std, volume sum/count, price
     mean (reference dte_buckets.py:27-129) — long format, one pass."""
-    dte = dte_days(F.col(ts_col), F.col(expiry_col))
+    dte = dte_days(F.col("timestamp"), F.col("expiry"))
     return (
         df.withColumn("__bucket", dte_bucket_col(dte, config))
         .filter(F.col("__bucket").isNotNull())
         .groupBy(
-            time_bucket(F.col(ts_col), config.resample_seconds).alias("ts"),
+            time_bucket(F.col("timestamp"), config.resample_seconds).alias("ts"),
             F.col("__bucket").alias("dte_bucket"),
         )
         .agg(
-            F.avg(iv_col).alias("iv_mean"),
-            F.stddev_pop(iv_col).alias("iv_std"),
-            F.sum(amount_col).alias("volume_sum"),
+            F.avg("iv").alias("iv_mean"),
+            F.stddev_pop("iv").alias("iv_std"),
+            F.sum("amount").alias("volume_sum"),
             F.count(F.lit(1)).alias("trade_count"),
-            F.avg(price_col).alias("price_mean"),
+            F.avg("price").alias("price_mean"),
         )
     )
 
 
-def dte_distribution(
-    df: DataFrame,
-    ts_col: str = "timestamp",
-    expiry_col: str = "expiry",
-    amount_col: str = "amount",
-    config: FeatureConfig = DEFAULT,
-) -> DataFrame:
+def dte_distribution(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
     """Per-bucket share of each window's total volume, in percent
     (reference dte_buckets.py:132-198). The % normalization is a
     window-sum over the aggregate output (rows = windows × buckets),
     not a re-scan."""
     agg = (
         df.withColumn(
-            "__bucket", dte_bucket_col(dte_days(F.col(ts_col), F.col(expiry_col)), config)
+            "__bucket", dte_bucket_col(dte_days(F.col("timestamp"), F.col("expiry")), config)
         )
         .filter(F.col("__bucket").isNotNull())
         .groupBy(
-            time_bucket(F.col(ts_col), config.resample_seconds).alias("ts"),
+            time_bucket(F.col("timestamp"), config.resample_seconds).alias("ts"),
             F.col("__bucket").alias("dte_bucket"),
         )
-        .agg(F.sum(amount_col).alias("volume_sum"))
+        .agg(F.sum("amount").alias("volume_sum"))
     )
     total = Window.partitionBy("ts")
     return agg.select(

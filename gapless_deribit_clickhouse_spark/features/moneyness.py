@@ -49,11 +49,6 @@ def moneyness_bucket_col(
 
 def aggregate_by_moneyness(
     df: DataFrame,
-    ts_col: str = "timestamp",
-    iv_col: str = "iv",
-    amount_col: str = "amount",
-    option_type_col: str = "option_type",
-    moneyness_col: str = "moneyness",
     pivot: bool = True,
     config: FeatureConfig = DEFAULT,
 ) -> DataFrame:
@@ -65,25 +60,25 @@ def aggregate_by_moneyness(
     ``pivot=True`` -> wide single-pass pivot + smile metrics with
     ``HAVING atm_count > 0`` — reference moneyness.py:70-133.
     """
-    valid = df.filter((F.col(moneyness_col) > 0) & (F.col(iv_col) > 0))
-    bucket = moneyness_bucket_col(F.col(moneyness_col), config)
-    ts = time_bucket(F.col(ts_col), config.resample_seconds).alias("ts")
+    valid = df.filter((F.col("moneyness") > 0) & (F.col("iv") > 0))
+    bucket = moneyness_bucket_col(F.col("moneyness"), config)
+    ts = time_bucket(F.col("timestamp"), config.resample_seconds).alias("ts")
 
     if not pivot:
         return (
             valid.groupBy(ts, bucket.alias("moneyness_bucket"))
             .agg(
-                F.avg(iv_col).alias("avg_iv"),
-                F.stddev_pop(iv_col).alias("std_iv"),
+                F.avg("iv").alias("avg_iv"),
+                F.stddev_pop("iv").alias("std_iv"),
                 F.count(F.lit(1)).alias("trade_count"),
-                F.sum(amount_col).alias("total_volume"),
-                count_if(F.col(option_type_col) == "C").alias("call_count"),
-                count_if(F.col(option_type_col) == "P").alias("put_count"),
+                F.sum("amount").alias("total_volume"),
+                count_if(F.col("option_type") == "C").alias("call_count"),
+                count_if(F.col("option_type") == "P").alias("put_count"),
             )
         )
 
     b = valid.withColumn("__bucket", bucket)
-    iv, amt = F.col(iv_col), F.col(amount_col)
+    iv, amt = F.col("iv"), F.col("amount")
     aggs = []
     for name in MONEYNESS_BUCKETS:
         cond = F.col("__bucket") == name

@@ -22,12 +22,12 @@ from gapless_deribit_clickhouse_spark.functions.conditional import (
 from gapless_deribit_clickhouse_spark.functions.timeutils import dte_days, time_bucket
 
 
-def _pcr_aggs(option_type_col: str, amount_col: str, method: str):
-    is_put = F.col(option_type_col) == "P"
-    is_call = F.col(option_type_col) == "C"
+def _pcr_aggs(method: str):
+    is_put = F.col("option_type") == "P"
+    is_call = F.col("option_type") == "C"
     if method == "volume":
-        put = sum_if(is_put, F.col(amount_col))
-        call = sum_if(is_call, F.col(amount_col))
+        put = sum_if(is_put, F.col("amount"))
+        call = sum_if(is_call, F.col("amount"))
     elif method == "count":
         put = count_if(is_put).cast("double")
         call = count_if(is_call).cast("double")
@@ -42,23 +42,19 @@ def _pcr_aggs(option_type_col: str, amount_col: str, method: str):
 
 def pcr_by_tenor(
     df: DataFrame,
-    ts_col: str = "timestamp",
-    expiry_col: str = "expiry",
-    option_type_col: str = "option_type",
-    amount_col: str = "amount",
     method: str = "volume",
     config: FeatureConfig = DEFAULT,
 ) -> DataFrame:
     """Per (window, dte_bucket): put volume, call volume, pcr
     (reference pcr.py:26-124). PCR is null when the call side is 0."""
-    dte = dte_days(F.col(ts_col), F.col(expiry_col))
-    put, call = _pcr_aggs(option_type_col, amount_col, method)
+    dte = dte_days(F.col("timestamp"), F.col("expiry"))
+    put, call = _pcr_aggs(method)
     return (
         df.filter(dte <= config.exclude_leaps_dte)
         .withColumn("__bucket", dte_bucket_col(dte, config))
         .filter(F.col("__bucket").isNotNull())
         .groupBy(
-            time_bucket(F.col(ts_col), config.resample_seconds).alias("ts"),
+            time_bucket(F.col("timestamp"), config.resample_seconds).alias("ts"),
             F.col("__bucket").alias("dte_bucket"),
         )
         .agg(put, call)
@@ -74,19 +70,15 @@ def pcr_by_tenor(
 
 def pcr_aggregate(
     df: DataFrame,
-    ts_col: str = "timestamp",
-    expiry_col: str = "expiry",
-    option_type_col: str = "option_type",
-    amount_col: str = "amount",
     method: str = "volume",
     config: FeatureConfig = DEFAULT,
 ) -> DataFrame:
     """All-tenor PCR per window (reference pcr.py:127-180)."""
-    dte = dte_days(F.col(ts_col), F.col(expiry_col))
-    put, call = _pcr_aggs(option_type_col, amount_col, method)
+    dte = dte_days(F.col("timestamp"), F.col("expiry"))
+    put, call = _pcr_aggs(method)
     return (
         df.filter(dte <= config.exclude_leaps_dte)
-        .groupBy(time_bucket(F.col(ts_col), config.resample_seconds).alias("ts"))
+        .groupBy(time_bucket(F.col("timestamp"), config.resample_seconds).alias("ts"))
         .agg(put, call)
         .select(
             "ts",

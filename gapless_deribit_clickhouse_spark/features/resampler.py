@@ -46,26 +46,10 @@ def resample_iv(
     )
 
 
-def resample_by_dte_bucket(
-    df: DataFrame,
-    ts_col: str = "timestamp",
-    expiry_col: str = "expiry",
-    iv_col: str = "iv",
-    amount_col: str = "amount",
-    id_col: str = "trade_id",
-    config: FeatureConfig = DEFAULT,
-) -> DataFrame:
+def resample_by_dte_bucket(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
     """Per-DTE-bucket OHLC bars in one pass (long format keyed by
     ``dte_bucket`` instead of the reference's dict of frames)."""
     with_bucket = df.withColumn(
-        "dte_bucket", dte_bucket_col(dte_days(F.col(ts_col), F.col(expiry_col)), config)
+        "dte_bucket", dte_bucket_col(dte_days(F.col("timestamp"), F.col("expiry")), config)
     ).filter(F.col("dte_bucket").isNotNull())
-    return resample_iv(
-        with_bucket,
-        ts_col=ts_col,
-        iv_col=iv_col,
-        amount_col=amount_col,
-        id_col=id_col,
-        keys=("dte_bucket",),
-        config=config,
-    )
+    return resample_iv(with_bucket, keys=("dte_bucket",), config=config)

@@ -36,13 +36,6 @@ def symbol_col(underlying):  # Column -> Column
 def enrich_with_spot(
     trades: DataFrame,
     spot: DataFrame,
-    ts_col: str = "timestamp",
-    underlying_col: str = "underlying",
-    index_price_col: str = "index_price",
-    strike_col: str = "strike",
-    spot_symbol_col: str = "symbol",
-    spot_ts_col: str = "timestamp",
-    spot_close_col: str = "close",
     config: FeatureConfig = DEFAULT,
 ) -> DataFrame:
     """Left-join trades to the spot dimension on (symbol, 15-min
@@ -54,10 +47,10 @@ def enrich_with_spot(
     """
     dim = (
         spot.select(
-            F.col(spot_symbol_col).alias("__sym"),
-            time_bucket(F.col(spot_ts_col), config.resample_seconds).alias("__w"),
-            F.col(spot_close_col).alias("binance_spot"),
-            F.col(spot_ts_col).alias("__sts"),
+            F.col("symbol").alias("__sym"),
+            time_bucket(F.col("timestamp"), config.resample_seconds).alias("__w"),
+            F.col("close").alias("binance_spot"),
+            F.col("timestamp").alias("__sts"),
         )
         .groupBy("__sym", "__w")
         .agg(F.max_by("binance_spot", F.col("__sts")).alias("binance_spot"))
@@ -80,15 +73,15 @@ def enrich_with_spot(
         )
     joined = trades.select(
         "*",
-        symbol_col(F.col(underlying_col)).alias("__sym"),
-        time_bucket(F.col(ts_col), config.resample_seconds).alias("__w"),
+        symbol_col(F.col("underlying")).alias("__sym"),
+        time_bucket(F.col("timestamp"), config.resample_seconds).alias("__w"),
     )
     out = joined.join(F.broadcast(dim), on=["__sym", "__w"], how="left")
-    spot_price = F.coalesce(F.col(index_price_col), F.col("binance_spot"))
+    spot_price = F.coalesce(F.col("index_price"), F.col("binance_spot"))
     return out.select(
         *[c for c in out.columns if c not in ("__sym", "__w")],
         spot_price.alias("spot_price"),
-        (F.col(strike_col) / spot_price).alias("moneyness"),
+        (F.col("strike") / spot_price).alias("moneyness"),
     )
 
 
@@ -118,16 +111,14 @@ def ensure_spot_dictionary(
     return False
 
 
-def spot_coverage(
-    enriched: DataFrame, index_price_col: str = "index_price"
-) -> DataFrame:
+def spot_coverage(enriched: DataFrame) -> DataFrame:
     """Coverage-rate diagnostics after enrichment (reference
     spot_provider.py:313-364): index-price rate, fallback rate, total
     coalesce rate — one aggregate pass."""
     n = F.count(F.lit(1))
-    has_idx = F.count(F.when(F.col(index_price_col).isNotNull(), F.lit(1)))
+    has_idx = F.count(F.when(F.col("index_price").isNotNull(), F.lit(1)))
     has_fb = F.count(
-        F.when(F.col(index_price_col).isNull() & F.col("binance_spot").isNotNull(), F.lit(1))
+        F.when(F.col("index_price").isNull() & F.col("binance_spot").isNotNull(), F.lit(1))
     )
     has_spot = F.count(F.when(F.col("spot_price").isNotNull(), F.lit(1)))
     return enriched.agg(

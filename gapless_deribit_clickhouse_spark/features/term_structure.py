@@ -19,21 +19,15 @@ from gapless_deribit_clickhouse_spark.functions.conditional import avg_if, safe_
 from gapless_deribit_clickhouse_spark.functions.timeutils import dte_days, time_bucket
 
 
-def term_structure(
-    df: DataFrame,
-    ts_col: str = "timestamp",
-    expiry_col: str = "expiry",
-    iv_col: str = "iv",
-    config: FeatureConfig = DEFAULT,
-) -> DataFrame:
+def term_structure(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
     """Per window: near/far mean IV, slope (near − far), ratio
     (near / nullif(far, 0)); windows lacking either leg are dropped
     (the reference's dropna after alignment, term_structure.py:93-94)."""
-    dte = dte_days(F.col(ts_col), F.col(expiry_col))
-    iv = F.col(iv_col)
+    dte = dte_days(F.col("timestamp"), F.col("expiry"))
+    iv = F.col("iv")
     out = (
         df.filter(iv > 0)
-        .groupBy(time_bucket(F.col(ts_col), config.resample_seconds).alias("ts"))
+        .groupBy(time_bucket(F.col("timestamp"), config.resample_seconds).alias("ts"))
         .agg(
             avg_if(dte <= config.near_dte_max, iv).alias("near_iv"),
             avg_if(dte >= config.far_dte_min, iv).alias("far_iv"),
@@ -49,9 +43,9 @@ def term_structure(
     )
 
 
-def term_structure_slope(df: DataFrame, **kw) -> DataFrame:
-    return term_structure(df, **kw).select("ts", "near_iv", "far_iv", "ts_slope")
+def term_structure_slope(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
+    return term_structure(df, config).select("ts", "near_iv", "far_iv", "ts_slope")
 
 
-def term_structure_ratio(df: DataFrame, **kw) -> DataFrame:
-    return term_structure(df, **kw).select("ts", "near_iv", "far_iv", "ts_ratio")
+def term_structure_ratio(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
+    return term_structure(df, config).select("ts", "near_iv", "far_iv", "ts_ratio")

@@ -16,7 +16,7 @@ oracle, so both engines evaluate the identical IEEE-754 formula.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.features.config import DEFAULT_RISK_FREE_RATE
@@ -103,26 +103,6 @@ def greeks_sql_exprs(
         "theta": guard(theta),
         "adjusted_delta": guard(adjusted_delta),
     }
-
-
-def _norm_pdf(x: Column) -> Column:
-    return F.lit(float(INV_SQRT_2PI)) * F.exp(-(x * x) / 2.0)
-
-
-def _norm_cdf(x: Column) -> Column:
-    """Abramowitz–Stegun 26.2.17 as Columns, operation-for-operation
-    the same IEEE-754 sequence as NORM_CDF_SQL (the DuckDB oracle
-    evaluates the SQL text; both produce bit-identical doubles)."""
-
-    def pos(y: Column) -> Column:
-        t = F.lit(1.0) / (F.lit(1.0) + F.lit(0.2316419) * y)
-        poly = (
-            (((F.lit(1.330274429) * t - F.lit(1.821255978)) * t + F.lit(1.781477937)) * t
-             - F.lit(0.356563782)) * t + F.lit(0.319381530)
-        ) * t
-        return F.lit(1.0) - _norm_pdf(y) * poly
-
-    return F.when(x >= 0, pos(x)).otherwise(F.lit(1.0) - pos(-x))
 
 
 def with_greeks(

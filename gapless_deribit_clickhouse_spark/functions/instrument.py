@@ -123,8 +123,8 @@ def parse_instrument_cols(name: Column) -> dict[str, Column]:
     }
 
 
-def with_parsed_instrument(df: DataFrame, name_col: str = "instrument_name") -> DataFrame:
-    cols = parse_instrument_cols(F.col(name_col))
+def with_parsed_instrument(df: DataFrame) -> DataFrame:
+    cols = parse_instrument_cols(F.col("instrument_name"))
     for cname, col in cols.items():
         df = df.withColumn(cname, col)
     return df

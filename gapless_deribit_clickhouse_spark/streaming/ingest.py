@@ -20,6 +20,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from gapless_deribit_clickhouse_spark.sinks.connector import (
+    ParquetServingConnector,
+    write_stream_to_connector,
+)
+
 
 def read_trade_stream(
     spark: SparkSession, input_path: str, schema: T.StructType
@@ -265,23 +270,11 @@ def write_stream_idempotent(
     checkpoint_path: str,
     trigger_once: bool = True,
 ) -> StreamingQuery:
-    """Exactly-once sink: ``foreachBatch`` writes each micro-batch into
-    its own ``batch_id`` partition with dynamic partition overwrite —
-    a replayed epoch overwrites itself instead of appending twice
-    (the Delta txnAppId/txnVersion pattern on plain parquet)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_path)
-        )
-
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_path
+    """Exactly-once sink: a ``ParquetServingConnector`` writes each
+    micro-batch into its own ``batch_id`` partition with dynamic
+    partition overwrite — a replayed epoch overwrites itself instead of
+    appending twice (the Delta txnAppId/txnVersion pattern on plain
+    parquet)."""
+    return write_stream_to_connector(
+        stream, ParquetServingConnector(output_path), checkpoint_path, trigger_once
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -63,20 +63,14 @@ def quality_metrics(
     return df.agg(*aggs)
 
 
-def coverage_by_group(
-    df: DataFrame,
-    group_col: str = "underlying",
-    id_col: str = "trade_id",
-    distinct_col: str = "instrument_name",
-    ts_col: str = "timestamp",
-) -> DataFrame:
-    """Per-group coverage stats (reference data_quality.py:69-81)."""
-    return df.groupBy(group_col).agg(
+def coverage_by_group(df: DataFrame) -> DataFrame:
+    """Per-underlying coverage stats (reference data_quality.py:69-81)."""
+    return df.groupBy("underlying").agg(
         F.count(F.lit(1)).alias("total_rows"),
-        F.countDistinct(F.col(id_col)).alias("unique_ids"),
-        F.countDistinct(F.col(distinct_col)).alias("unique_instruments"),
-        F.min(ts_col).alias("min_ts"),
-        F.max(ts_col).alias("max_ts"),
+        F.countDistinct(F.col("trade_id")).alias("unique_ids"),
+        F.countDistinct(F.col("instrument_name")).alias("unique_instruments"),
+        F.min("timestamp").alias("min_ts"),
+        F.max("timestamp").alias("max_ts"),
     )
 
 

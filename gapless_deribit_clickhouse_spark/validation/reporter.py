@@ -87,9 +87,6 @@ def build_validation_report(
     spark: SparkSession,
     df: DataFrame,
     layout: TableSchema | None = None,
-    ts_col: str = "timestamp",
-    id_col: str = "trade_id",
-    null_rate_cols: tuple[str, ...] = ("iv", "index_price"),
     gap_threshold_hours: float = 1.0,
     mode: str = "[spark-local]",
 ) -> str:
@@ -101,12 +98,10 @@ def build_validation_report(
     from gapless_deribit_clickhouse_spark.schema.drift import validate_table
 
     drifts = validate_table(spark, layout, df=df) if layout is not None else []
-    qrow = quality_metrics(
-        df, id_col=id_col, ts_col=ts_col, null_rate_cols=null_rate_cols
-    ).first()
+    qrow = quality_metrics(df).first()
     gaps = [
         r.asDict()
-        for r in gap_analysis(df, ts_col=ts_col, threshold_hours=gap_threshold_hours)
+        for r in gap_analysis(df, threshold_hours=gap_threshold_hours)
         .limit(MAX_GAPS_SHOWN)
         .collect()
     ]

@@ -100,8 +100,8 @@ def test_embeddings_within_fit_sample_assumption():
     embeddings corpus stays at or under 65,536 rows. Pin that
     assumption for every sf the compares run at, like the dim=64 pin
     above: a regenerated larger corpus must fail HERE, not as an
-    inscrutable centroid mismatch. sf0.1 is included (ADVICE r10):
-    oracle_check's docstring recommends it for determinism probes, so
+    inscrutable centroid mismatch. sf0.1 is included (ADVICE r10): it
+    is the largest testdata scale a registry compare can be run at, so
     the assumption must hold there too."""
     import duckdb as _duck
 

@@ -21,6 +21,8 @@ from gapless_deribit_clickhouse_spark.features import (
     resample_iv,
     select_contracts,
     term_structure,
+    term_structure_ratio,
+    term_structure_slope,
     with_greeks,
 )
 from gapless_deribit_clickhouse_spark.features.moneyness import moneyness_bucket_col
@@ -68,6 +70,22 @@ def test_term_structure_slope_bounds(multi_dte_trades):
     assert (out.ts_slope.abs() <= 0.50).all()  # reference :397-434
     # near (short DTE) has higher IV by construction of the fixture
     assert (out.near_iv > out.far_iv).mean() > 0.9
+
+
+def test_term_structure_slope_and_ratio_match_term_structure(multi_dte_trades):
+    from gapless_deribit_clickhouse_spark.features.config import FeatureConfig
+
+    cfg = FeatureConfig(resample_seconds=1800)
+    full = term_structure(multi_dte_trades, config=cfg).toPandas()
+    assert len(full) > 0
+    for fn, col in ((term_structure_slope, "ts_slope"), (term_structure_ratio, "ts_ratio")):
+        got = fn(multi_dte_trades, cfg).toPandas()
+        cols = ["ts", "near_iv", "far_iv", col]
+        assert list(got.columns) == cols
+        pd.testing.assert_frame_equal(
+            got.sort_values("ts").reset_index(drop=True),
+            full[cols].sort_values("ts").reset_index(drop=True),
+        )
 
 
 def test_dte_buckets_all_populated(multi_dte_trades):
