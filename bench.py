@@ -396,138 +396,6 @@ HEADLINE = [
     "multimodal_features",
 ]
 
-# timed write-path entries appended after all read queries (their
-# names in the final "queries" dict carry a write_ prefix so r2/r3
-# cross-round totals stay comparable query-by-query)
-WRITE_BENCHES = ["write_bucketed", "write_compact"]
-
-# queries that did not exist in earlier rounds — listed in the sidecar
-# so a cross-round TOTAL delta decomposes into new coverage vs real
-# regressions (r3 -> r4 adds the write path + 12 new operators; r5
-# adds: the flagship's oracle-checked chunk projection, which re-runs
-# the curate->dedup->chunk prefix, so ~training_set-sized; the
-# standalone near-dedup filter, which re-runs the exact tier + LSH +
-# connected components over documents and costs a few seconds itself;
-# four sub-second TPC-H join shapes (semi/outer/decorrelated-scalar/
-# anti); two sub-second curation maps, split_assign and
-# interdoc_repetition; and incremental_dedup, which is multi-second by
-# construction — it re-runs the within-batch exact+LSH+CC chain AND
-# corpus-wide signature/band passes. Every second these ten add to
-# the r4->r5 TOTAL is new coverage, not regression)
-NEW_IN_R5 = [
-    "training_set_chunks",
-    "near_dedup_docs",
-    "q4_order_priority",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q22_dormant_customers",
-    "split_assign",
-    "interdoc_repetition",
-    "incremental_dedup",
-    "embedding_project",
-    "window_funnel",
-    "retention",
-    "q6_forecast_revenue",
-    "ohlc_15m_gapless",
-    "value_histogram",
-    # second r5 session: the TPC-H completion set (ten shapes), the
-    # OLAP/behavioral parity set, and three curation ops — every
-    # second these add to the r4->r5 TOTAL is new coverage
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_late_line_priority",
-    "q15_top_supplier",
-    "q16_parts_supplier_count",
-    "q20_part_promotion",
-    "q21_waiting_supplier",
-    "limit_by_topn",
-    "volume_rollup",
-    "value_percentiles",
-    "mergeable_rollup",
-    "twap_vwap",
-    "user_journey_path",
-    "sequence_count",
-    "lm_score",
-    "weighted_sample",
-    "ohlc_gapless_interp",
-    "user_set_ops",
-    "event_value_pivot",
-    "weighted_median",
-    "full_outer_reconcile",
-    "quality_gate",
-]
-# r6 adds one new timed binding: keyset pagination (sub-second scan
-# shape). The r5->r6 TOTAL otherwise compares like-for-like; the asof
-# rework and the streaming-shutdown changes alter existing entries'
-# times, not the entry set.
-NEW_IN_R6 = ["scan_keyset"]
-# r7 adds seven timed bindings: the two extra as-of directions
-# (forward re-runs the backward plan on mirrored time; nearest was two
-# passes in r7, fused to one union shuffle in r8), the
-# deterministic epoch-shuffle global rank, the interval-interval
-# overlap join, the CDC snapshot diff, the cumulative-unique growth
-# curve, and the oracled EGARCH forecast-path recursion. Every second
-# these add to the r6->r7 TOTAL is new coverage, not regression; the
-# r7 reworks that change EXISTING entries' times (multi-resolution
-# pit_enrich, the training_set curated-subset checkpoint) both made
-# their entries faster.
-NEW_IN_R7 = [
-    "asof_join_forward",
-    "asof_join_nearest",
-    "epoch_shuffle",
-    "overlap_hot_hours",
-    "snapshot_diff",
-    "cumulative_unique_users",
-    "egarch_forecast_path",
-]
-# r8 adds two timed bindings: the oracled single Lloyd's iteration
-# (assign map + metadata-scale (cluster, dim) reduction) and the
-# asymmetric containment-pairs dedup (the jaccard core with the
-# min-size formula). The r7->r8 TOTAL otherwise compares
-# like-for-like; the r8 reworks that change EXISTING entries' times
-# (fused nearest as-of, single-hash LSH tier) make their entries
-# faster.
-NEW_IN_R8 = ["kmeans_assign_step", "containment_pairs"]
-# r9 adds one timed binding: the EGARCH negative log-likelihood at
-# fixed literal params (the optimizer's objective function under a
-# full WITH RECURSIVE oracle — one applyInPandas crossing per group
-# over the oracle-checked input series). The r8->r9 TOTAL otherwise
-# compares like-for-like; the r9 gapfill mirror-sort rework changes
-# EXISTING entries' times (ohlc_gapless_interp ~1.9x faster).
-NEW_IN_R9 = ["egarch_loglik"]
-# r10 adds one timed binding: the oracled single Nelder-Mead iteration
-# at a literal simplex (stable sort + centroid + three probe-point
-# likelihood recursions + acceptance rule — the egarch_params
-# optimizer's loop body under a full DuckDB oracle). The r9->r10 TOTAL
-# otherwise compares like-for-like, EXCEPT three existing entries
-# changed work (ADVICE r10): egarch_loglik now evaluates two parameter
-# points per group (the smooth recursion plus the stationarity-guard
-# branch) in the same single Arrow crossing; semantic_dedup's binding
-# threshold moved 0.97 -> 0.35 (different prune candidate-set and
-# kept-set sizes); and sequence_packing / training_set switched the
-# FFD shard hash xxhash64 -> md5 (per-row md5 is costlier and the
-# shard repartition distributes differently) so both engines split
-# shards identically for the new full oracle.
-NEW_IN_R10 = ["egarch_nm_step"]
-NEW_IN_R4 = WRITE_BENCHES + [
-    "mixture_sample",
-    "semantic_dedup",
-    "sequence_packing",
-    "video_decode_features",
-    "pii_scrub",
-    "classifier_score",
-    "q5_local_supplier_volume",
-    "doc_chunks",
-    "ivf_kmeans_topk",
-    "diverse_sample",
-    "q14_promo_revenue",
-    "q19_discounted_revenue",
-    "training_set",
-]
-
 
 def _producer_stamp() -> dict:
     """Which code produced this artifact (ADVICE r11): the repo HEAD at
@@ -1479,13 +1347,6 @@ def main() -> None:
             "clean_tail": err_clean,
             "tail": err_tail,
         },
-        "new_in_r4": NEW_IN_R4,
-        "new_in_r5": NEW_IN_R5,
-        "new_in_r6": NEW_IN_R6,
-        "new_in_r7": NEW_IN_R7,
-        "new_in_r8": NEW_IN_R8,
-        "new_in_r9": NEW_IN_R9,
-        "new_in_r10": NEW_IN_R10,
     }
     here = os.path.dirname(os.path.abspath(__file__))
     out_dir = os.environ.get("SPARK_GRAFT_BENCH_OUT", here)
@@ -1510,13 +1371,6 @@ def main() -> None:
                 "streaming": streaming,
                 "sketch": sketch,
                 "indexed_dedup": indexed_dedup,
-                "new_in_r4": NEW_IN_R4,
-                "new_in_r5": NEW_IN_R5,
-                "new_in_r6": NEW_IN_R6,
-                "new_in_r7": NEW_IN_R7,
-                "new_in_r8": NEW_IN_R8,
-                "new_in_r9": NEW_IN_R9,
-                "new_in_r10": NEW_IN_R10,
             }
         ),
         flush=True,

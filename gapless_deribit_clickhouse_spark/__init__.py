@@ -226,80 +226,8 @@ __all__ = [
     "InstrumentParseError",
     "InsufficientDataError",
     "__version__",
-    "fetch_trades",
-    "describe",
     "get_capabilities",
     "get_data_sources",
-    "collect_trades",
-    "CheckpointStore",
-    "validate_page_continuity",
-    "parse_instrument",
-    "is_valid_instrument",
-    "quality_metrics",
-    "coverage_by_group",
-    "gap_analysis",
-    "format_validation_report",
-    "build_validation_report",
-    "print_validation_summary",
-    "load_schema", "write_bucketed",
-    "validate_table",
-    "get_spark", "load_table", "load_tables", "register_views",
-    # feature surface (lazy)
-    "FeatureConfig", "get_preset", "DEFAULT", "CONSERVATIVE",
-    "HIGH_FREQUENCY",
-    "resample_iv", "resample_by_dte_bucket",
-    "iv_percentile", "iv_rank",
-    "term_structure", "term_structure_slope", "term_structure_ratio",
-    "pcr_by_tenor", "pcr_aggregate",
-    "dte_bucket_agg", "dte_distribution",
-    "fit_egarch", "auto_select_egarch", "forecast_volatility",
-    "iv_model_spread", "egarch_params_by_group",
-    "select_contracts", "get_contract_stats", "front_month", "atm_filter", "liquidity_filter",
-    "enrich_with_spot", "spot_coverage", "ensure_spot_dictionary",
-    "aggregate_by_moneyness", "compute_smile_metrics",
-    "moneyness_bucket_col",
-    "with_greeks", "portfolio_greeks", "greeks_by_bucket",
-    "format_instrument_col",
-    "format_instrument",
-    # large-scale training-data pipeline tier (lazy)
-    "exact_dedup", "ngram_jaccard_pairs", "minhash_lsh_pairs",
-    "simhash_near_pairs",
-    "cosine_topk", "ivf_topk", "embedding_near_dup_pairs",
-    "quality_score", "lang_id", "token_count", "bpe_ish_token_count",
-    "fingerprint", "bigram_lm_score", "token_topk", "tfidf_top_terms", "curate_corpus",
-    "quality_gate",
-    "contamination_check", "repetition_stats", "corpus_profile", "sample_n_per_group",
-    "hash_sample", "stratified_hash_sample", "weighted_sample_per_group",
-    "split_assign",
-    "split_thresholds", "interdoc_repetition", "incremental_dedup",
-    "project_embeddings",
-    "read_jsonl_corpus", "write_corpus_shards",
-    "connected_components", "dedup_clusters", "compact_table", "interval_join",
-    "sessionize", "session_stats", "streaming_sessionize",
-    "salted_agg", "topn_per_group", "weighted_median_per_group",
-    "partial_rollup", "merge_rollup",
-    "finalize_rollup", "window_funnel", "sequence_count", "retention",
-    "fill_time_gaps",
-    "lsh_params", "minhash_params",
-    "decode_image", "encode_png", "image_feature_extract",
-    "synthetic_images",
-    "decode_audio", "encode_wav", "audio_feature_extract",
-    "encode_framepack", "decode_framepack", "video_frame_features",
-    "pack_sequences", "pack_stats", "chunk_documents",
-    "build_training_set",
-    "redact_pii", "pii_counts", "scrub_documents",
-    "mixture_sample", "mixture_thresholds", "near_dedup_corpus",
-    "kmeans_fit", "kmeans_assign", "semantic_dedup",
-    "ivf_kmeans_topk", "diverse_sample", "knn_self_join",
-    "hashed_linear_score",
-    # serving-layer connector seam (lazy)
-    "ServingConnector", "ParquetServingConnector",
-    "ClickHouseHTTPConnector", "ClickHouseConnectorConfig",
-    "write_stream_to_connector", "write_jsonl_shards",
-    # reference-name aliases
-    "calculate_greeks", "calculate_portfolio_greeks",
-    "aggregate_greeks_by_bucket", "get_quality_metrics",
-    "get_gap_analysis", "get_coverage_stats", "validate_schema_version",
-    "build_contract_selection_query", "build_spot_enriched_query",
-    "build_moneyness_aggregation_query",
+    *_HOME,
+    *_ALIASES,
 ]

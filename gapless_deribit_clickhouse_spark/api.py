@@ -13,7 +13,9 @@ pruning on ``underlying``/month).
 
 from __future__ import annotations
 
+import re
 from datetime import datetime, timedelta
+from functools import cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -22,8 +24,23 @@ from gapless_deribit_clickhouse_spark.exceptions import QueryError
 from gapless_deribit_clickhouse_spark.operators.dedup import dedup_latest
 
 
+_ISO_DATE = re.compile(r"\d{4}-\d{2}-\d{2}")
+
+
+@cache
+def _option_types() -> tuple[str, ...]:
+    """The ``option_type`` enum of the ``options_trades`` schema."""
+    from gapless_deribit_clickhouse_spark.schema.loader import load_schema
+
+    return load_schema("options_trades").column("option_type").enum
+
+
 def _validate_fetch_params(
-    start: str | None, end: str | None, limit: int | None
+    start: str | None,
+    end: str | None,
+    limit: int | None,
+    option_type: str | None,
+    expiry: str | None,
 ) -> None:
     """Fail-fast parameter contract (reference api.py:29-64)."""
     if start is None and end is None and limit is None:
@@ -35,6 +52,24 @@ def _validate_fetch_params(
         raise QueryError("limit must be positive")
     if start and end and _parse_ts(start) > _parse_ts(end):
         raise QueryError("start must be <= end")
+    if option_type is not None and option_type not in _option_types():
+        raise QueryError(
+            f"option_type must be one of {_option_types()}, got {option_type!r}"
+        )
+    if expiry is not None and not _is_iso_date(expiry):
+        raise QueryError(f"expiry must be a YYYY-MM-DD date, got {expiry!r}")
+
+
+def _is_iso_date(value: str) -> bool:
+    """A real calendar day written ``YYYY-MM-DD`` (strptime alone also
+    takes ``2024-1-5``)."""
+    if not isinstance(value, str) or not _ISO_DATE.fullmatch(value):
+        return False
+    try:
+        datetime.strptime(value, "%Y-%m-%d")
+    except ValueError:
+        return False
+    return True
 
 
 def _parse_ts(value: str, end_side: bool = False) -> datetime:
@@ -67,7 +102,7 @@ def fetch_trades(
     """Point/range query with the reference's exact predicate set
     (F1-F4, W5, O1). ``use_final`` toggles dedup-at-read (FINAL
     parity, reference api.py:121-124)."""
-    _validate_fetch_params(start, end, limit)
+    _validate_fetch_params(start, end, limit, option_type, expiry)
     df = trades
     if use_final:
         df = dedup_latest(df, keys=["trade_id"], version_cols=["timestamp"])

@@ -3,7 +3,7 @@
 Each binding module exposes ``BINDINGS: list[tuple[name, fn, sql]]``
 where ``fn(spark, sf_dir) -> DataFrame`` and ``sql`` is the DuckDB
 oracle (or ``None`` for non-SQL-expressible operators -> rows-only
-check).
+check). ``ALL_BINDINGS`` concatenates them in ``_MODULES`` order.
 """
 
 from __future__ import annotations
@@ -33,188 +33,7 @@ _MODULES = (
     series_ops,
     mining_ops,
 )
-ALL_BINDINGS = []
-for _mod in _MODULES:
-    ALL_BINDINGS.extend(_mod.BINDINGS)
-# LATE_BINDINGS land after every module's BINDINGS: past the driver's
-# stable first-50 window, where the CI past-window oracle compare
-# value-checks them (tests/test_demoted_bindings_oracle.py).
-for _mod in _MODULES:
-    ALL_BINDINGS.extend(getattr(_mod, "LATE_BINDINGS", []))
-
-# The driver's CORRECTNESS harness checks the first CHECKED_WINDOW
-# registry entries (single source of truth — the registry layout test
-# and the CI past-window oracle compare both import this).
-CHECKED_WINDOW = 50
-
-# Demote near-duplicate variants (each shares its operator
-# with a sibling binding that stays in the window) to the tail so
-# every *distinct* operator — including the LLM-tier text/ANN
-# bindings — lands inside the checked window.
-_DEMOTED = (
-    "moneyness_long",  # sibling: moneyness_pivot (same bucket agg)
-    "smile_metrics",  # sibling: moneyness_pivot (same pivot + extra cols)
-    "pcr_aggregate",  # sibling: pcr_by_tenor (same conditional sums)
-    "resample_by_dte_bucket",  # sibling: ohlc_15m + dte_bucket_agg
-    "greeks_by_bucket",  # sibling: greeks + portfolio_greeks
-    "token_topk",  # sibling: tfidf_top_terms (same explode+group+top-k)
-    "dte_distribution",  # siblings: dte_bucket_agg (same single-pass
-    # bucket agg) + contract_chain_select (same window-share op)
-    "multimodal_features",  # sibling: image_decode_features (same
-    # mapInPandas blob-feature shape; the window slot now exercises
-    # the REAL decode kernel with a value-level oracle)
-    "audio_decode_features",  # sibling: image_decode_features (same
-    # real-decode mapInPandas shape, audio kernel; CI value-oracle)
-    "pii_scrub",  # sibling: text_quality (same map-only regex/column
-    # projection over documents; CI value-oracle)
-    "hash_sample",  # sibling: mixture_sample (same md5-bucket filter
-    # core; mixture adds the in-plan recipe->threshold derivation, so
-    # the window slot exercises strictly more logic; CI value-oracle)
-    "video_decode_features",  # sibling: image_decode_features (same
-    # real-decode mapInPandas shape, framepack/PNG kernel; CI
-    # value-oracle via lossless-PNG mean-pixel identity)
-    "q5_local_supplier_volume",  # siblings: q3_shipping_priority /
-    # q10_returned_revenue (same broadcast-dim + fact-shuffle join-agg
-    # family; Q5 adds the dimension-chain collapse; CI value-oracle)
-    "q14_promo_revenue",  # siblings: q1_pricing_summary (conditional
-    # agg) + q3 (join-agg); CI value-oracle
-    "q19_discounted_revenue",  # siblings: q3/q10 (join-agg family;
-    # Q19 adds the OR-of-ANDs cross-side predicate); CI value-oracle
-    # --- round-6 rotation (VERDICT r5 #7): two near-duplicates out,
-    # two operator families the window never exercised in ---
-    "sample_per_group",  # sibling: mixture_sample (same md5-hash
-    # stable-sampling core; mixture adds the in-plan recipe->threshold
-    # derivation); CI value-oracle
-    "doc_fingerprint",  # siblings: dedup_exact (same normalized-text
-    # digest core) + tfidf_top_terms (same normalized tokenization
-    # algebra over documents); CI value-oracle
-    # --- round-7 rotation (VERDICT r6 #7): two near-duplicates out,
-    # two operator families the window never exercised in ---
-    "repetition_stats",  # siblings: interdoc_repetition (CI — same
-    # intra/inter n-gram repetition algebra) + corpus_profile (same
-    # per-doc ratio aggregation shape over documents)
-    "token_counts",  # siblings: tfidf_top_terms + text_quality (same
-    # normalized tokenization algebra over documents)
-    # --- round-8 rotation (VERDICT r7 #6): two near-duplicates out,
-    # two operator families the window never exercised in ---
-    "rolling_minmax_rank",  # sibling: rolling_percentile (same
-    # rolling-range-frame rank family over one (key, order) exchange;
-    # percentile is the strictly-harder cumulative form)
-    "ngram_jaccard_pairs",  # sibling: minhash_lsh_pairs (its
-    # verification stage computes the SAME exact n-gram Jaccard on
-    # candidate pairs, over the same shingle algebra; dedup_exact
-    # covers the normalization core)
-    # --- round-9 rotation (VERDICT r8 #4): two near-duplicates out,
-    # two operator families the window never exercised in ---
-    "front_month_select",  # sibling: contract_chain_select (composes
-    # the same min_by(struct) front-contract pick inside its chain;
-    # top1_min_value covers the bare argMin shape); CI value-oracle
-    "q10_returned_revenue",  # sibling: q3_shipping_priority (same
-    # broadcast-dim + fact-shuffle join-agg family, same filter->join
-    # ->group->topN plan shape); CI value-oracle
-    # --- round-10 rotation (VERDICT r9 #3): two near-duplicates out,
-    # two operator families the window never exercised in ---
-    "top1_min_value",  # sibling: contract_chain_select (composes the
-    # same min_by(struct) argMin pick inside its chain); the bare
-    # grouped form stays value-checked by front_month_select's CI
-    # oracle; CI value-oracle
-    "cosine_topk",  # siblings: ivf_topk (its probe stage computes the
-    # SAME brute-force cosine top-k within the selected cells — the
-    # strictly-harder composed form) + embedding_near_dup (same
-    # pairwise-cosine algebra, threshold-join form); CI value-oracle
-    # --- round-11 rotation (VERDICT r10 #3): promote the flagship ---
-    "curate_corpus",  # sibling: training_set (composes the SAME
-    # curation gate as its first stage, then near-dedup + chunk +
-    # pack on top — the strictly-harder end-to-end form, fully
-    # oracled in r10); CI value-oracle
-    "egarch_loglik",  # sibling: egarch_nm_step (evaluates the SAME
-    # grouped EGARCH negative log-likelihood at FOUR simplex/probe
-    # points inside one Nelder-Mead iteration, plus sort/centroid/
-    # acceptance — the strictly-harder composed form, fully oracled
-    # in r10); CI value-oracle
-    # --- round-12 rotation (VERDICT r11 #2): the last two oracled
-    # heavyweights that never had a driver row move in ---
-    "kmeans_assign_step",  # sibling: semantic_dedup (composes the SAME
-    # broadcast-centroid Lloyd's step — assign map + per-cluster
-    # partial-sum reduction — EIGHT times inside its spherical k-means
-    # fit, then prunes per cluster: the strictly-harder composed form,
-    # fully oracled via 8 unrolled CTE iterations since r10); CI
-    # value-oracle
-    "dedup_exact",  # sibling: training_set (its curation gate computes
-    # the SAME min-id-over-md5(normalized_text) exact-duplicate winner
-    # rule — curation.py:curate_corpus is_canonical — and its
-    # near-dedup stage anti-joins on the same digest: the
-    # strictly-harder composed form); doc_fingerprint's CI oracle also
-    # pins the bare digest core; CI value-oracle
-)
-
-# Promoted INTO the checked window at rotation (placed in the last
-# window slots so the untouched entries keep their positions and
-# CORRECTNESS diffs stay line-stable across rounds):
-# - r6: ohlc_gapless_interp (gapfill + linear interpolation — WITH
-#   FILL INTERPOLATE) and q21_waiting_supplier (decorrelated EXISTS /
-#   NOT EXISTS over a per-order aggregate — the hardest TPC-H shape)
-# - r7: bm25_topk (distributed Okapi BM25 — the retrieval family the
-#   window never exercised) and attribution_first_touch (episode-reset
-#   window carry); both carried CI value-oracles before promotion
-# - r8: snapshot_diff (CDC full-outer fingerprint diff — the only
-#   full-outer family the window never exercised) and
-#   overlap_hot_hours (interval-interval overlap join with the
-#   exactly-once bucket-grid guard); both carried CI value-oracles
-#   before promotion
-# - r9: kmeans_assign_step (the only oracled iterative-ML step family
-#   — one full Lloyd's iteration, assign map + metadata-scale
-#   (cluster, dim) reduction) and containment_pairs (asymmetric
-#   containment dedup — min-size denominator, not Jaccard); both
-#   carried CI value-oracles before promotion
-# - r10: egarch_loglik (the EGARCH objective function under a WITH
-#   RECURSIVE oracle, new in r9 and never driver-checked; now also
-#   pins the stationarity-guard branch via a second param point) and
-#   window_funnel (ClickHouse windowFunnel parity — ordered
-#   sequence-matching within a sliding event-time window, a family
-#   the window never exercised); both carried CI value-oracles before
-#   promotion
-# - r11 (VERDICT r10 #3): training_set (the flagship curate ->
-#   near-dedup -> chunk -> pack composition, fully oracled end to end
-#   in r10 but never driver-checked) and egarch_nm_step (one full
-#   Nelder-Mead iteration at a literal simplex under a keyed WITH
-#   RECURSIVE oracle, r10-new). egarch_loglik rotates OUT to the
-#   demoted tail (nm_step evaluates the same objective at four probe
-#   points — the strictly-harder composed form) alongside
-#   curate_corpus (training_set composes the same curation gate);
-#   both keep their CI value-oracles.
-# - r12 (VERDICT r11 #2): the last two never-driver-checked oracled
-#   heavyweights move in — semantic_dedup (SemDeDup: 8-iteration
-#   spherical k-means fit + per-cluster greedy cosine prune, full
-#   cross-engine oracle since r10) and sequence_packing (first-fit-
-#   decreasing under a token budget as a keyed FFD recursion oracle,
-#   full oracle since r10). kmeans_assign_step rotates OUT
-#   (semantic_dedup composes the same Lloyd step eight times) and
-#   dedup_exact rotates OUT (training_set composes the same
-#   min-id-per-digest winner rule in its curation gate); both keep
-#   their CI value-oracles in the tail.
-_PROMOTED = (
-    "ohlc_gapless_interp",
-    "q21_waiting_supplier",
-    "bm25_topk",
-    "attribution_first_touch",
-    "snapshot_diff",
-    "overlap_hot_hours",
-    "containment_pairs",
-    "window_funnel",
-    "training_set",
-    "egarch_nm_step",
-    "semantic_dedup",
-    "sequence_packing",
-)
-
-_dem = [b for b in ALL_BINDINGS if b[0] in _DEMOTED]
-_prom = [b for b in ALL_BINDINGS if b[0] in _PROMOTED]
-_rest = [
-    b for b in ALL_BINDINGS if b[0] not in _DEMOTED and b[0] not in _PROMOTED
-]
-_cut = CHECKED_WINDOW - len(_prom)
-ALL_BINDINGS = _rest[:_cut] + _prom + _rest[_cut:] + _dem
+ALL_BINDINGS = [b for _mod in _MODULES for b in _mod.BINDINGS]
 
 _names = [n for n, _f, _s in ALL_BINDINGS]
 assert len(_names) == len(set(_names)), "duplicate binding names"

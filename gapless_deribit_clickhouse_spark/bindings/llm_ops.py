@@ -1394,7 +1394,6 @@ def sequence_packing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_stats(packed, max_tokens=_PACK_BUDGET)
 
 
-
 def _sequence_packing_oracle_sql() -> str:
     """items = BPE-ish token counts + the hash_u32 md5 shard split,
     then the shared FFD recursion, then the pack_stats rollup."""
@@ -1427,7 +1426,7 @@ FROM per_pack
 SEQUENCE_PACKING_SQL = _sequence_packing_oracle_sql()
 
 
-# --- PII scrubbing (pure regex column algebra, CI-oracle demoted) ---
+# --- PII scrubbing (pure regex column algebra) ---
 def pii_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gapless_deribit_clickhouse_spark.pipelines.scrub import scrub_documents
 
@@ -1460,52 +1459,6 @@ def _pii_scrub_sql() -> str:
 
 
 PII_SCRUB_SQL = _pii_scrub_sql()
-
-
-BINDINGS = [
-    ("tfidf_top_terms", tfidf_q, TFIDF_SQL),
-    ("repetition_stats", repetition_q, REPETITION_SQL),
-    ("contamination", contamination_q, CONTAMINATION_SQL),
-    ("corpus_profile", corpus_profile_q, CORPUS_PROFILE_SQL),
-    ("curate_corpus", curate_q, CURATE_SQL),
-    ("dup_clusters", dup_clusters_q, DUP_CLUSTERS_SQL),
-    ("hash_sample", hash_sample_q, HASH_SAMPLE_SQL),
-    ("mixture_sample", mixture_sample_q, MIXTURE_SAMPLE_SQL),
-    ("sample_per_group", sample_per_group_q, SAMPLE_PER_GROUP_SQL),
-    ("token_topk", token_topk_q, TOKEN_TOPK_SQL),
-    ("dedup_exact", dedup_exact_q, DEDUP_EXACT_SQL),
-    ("ngram_jaccard_pairs", ngram_jaccard_q, NGRAM_JACCARD_SQL),
-    ("minhash_lsh_pairs", minhash_lsh_q, MINHASH_LSH_SQL),
-    ("simhash_near_pairs", simhash_q, SIMHASH_SQL),
-    ("cosine_topk", cosine_topk_q, COSINE_TOPK_SQL),
-    ("embedding_near_dup", emb_near_dup_q, EMB_NEAR_DUP_SQL),
-    ("ivf_topk", ivf_topk_q, IVF_TOPK_SQL),
-    ("text_quality", quality_q, QUALITY_SQL),
-    ("lang_id", lang_id_q, LANG_ID_SQL),
-    ("doc_fingerprint", fingerprint_q, FINGERPRINT_SQL),
-    ("token_counts", token_counts_q, TOKEN_COUNTS_SQL),
-    ("pii_scrub", pii_scrub_q, PII_SCRUB_SQL),
-    # iterative operators, ALL fully value-oracled since r10 (the
-    # fixed iteration budgets make them SQL-expressible: unrolled
-    # Lloyd CTEs + keyed recursions); value-level behavior is ALSO
-    # pinned in tests/test_clustering.py and tests/test_packing.py.
-    # egarch_params (extra_ops) is the one remaining rows-only binding.
-    ("semantic_dedup", semantic_dedup_q, SEMANTIC_DEDUP_SQL),
-    ("sequence_packing", sequence_packing_q, SEQUENCE_PACKING_SQL),
-    ("ivf_kmeans_topk", ivf_kmeans_topk_q, IVF_KMEANS_TOPK_SQL),
-    ("diverse_sample", diverse_sample_q, DIVERSE_SAMPLE_SQL),
-    ("training_set", training_set_q, TRAINING_SET_SQL),
-    # NOT rows-only: full oracles, value-checked by the CI past-window
-    # compare (the driver's 50-entry window is already full)
-    ("classifier_score", classifier_score_q, CLASSIFIER_SQL),
-    ("doc_chunks", doc_chunks_q, DOC_CHUNKS_SQL),
-    # the flagship's chunk projection with a FULL composed oracle
-    # (curate -> LSH near-dedup -> components -> chunk); the pack tier
-    # is pinned by the SQL invariant test in tests/test_packing.py
-    ("training_set_chunks", training_set_chunks_q, TRAINING_SET_CHUNKS_SQL),
-    # the one-call near-dedup filter, oracle-checked standalone
-    ("near_dedup_docs", near_dedup_docs_q, NEAR_DEDUP_DOCS_SQL),
-]
 
 
 # --- leakage-safe deterministic split assignment ---
@@ -1658,8 +1611,6 @@ WHERE d.doc_id NOT IN (SELECT doc_id FROM crosslosers)
 INCREMENTAL_DEDUP_SQL = _incremental_dedup_sql(_DEDUP_THRESHOLD)
 
 
-# Round-5 curation additions, registered past the driver's stable
-# first-50 window (same CI value-check path as every tail binding)
 # --- JL random-projection dimensionality reduction ---
 _PROJECT_OUT_DIM = 8
 
@@ -2015,21 +1966,6 @@ SELECT query_id, vec_id, n_systems, rrf_score, rank FROM r WHERE rank <= 10
 """
 
 
-LATE_BINDINGS = [
-    ("split_assign", split_assign_q, SPLIT_ASSIGN_SQL),
-    ("interdoc_repetition", interdoc_repetition_q, INTERDOC_REPETITION_SQL),
-    ("incremental_dedup", incremental_dedup_q, INCREMENTAL_DEDUP_SQL),
-    ("embedding_project", embedding_project_q, EMBEDDING_PROJECT_SQL),
-    ("lm_score", lm_score_q, LM_SCORE_SQL),
-    ("weighted_sample", weighted_sample_q, WEIGHTED_SAMPLE_SQL),
-    ("quality_gate", quality_gate_q, QUALITY_GATE_SQL),
-    ("bm25_topk", bm25_topk_q, BM25_TOPK_SQL),
-    ("hybrid_rrf", hybrid_rrf_q, HYBRID_RRF_SQL),
-    ("embedding_quantize", embedding_quantize_q, EMBEDDING_QUANTIZE_SQL),
-    ("quantized_topk", quantized_topk_q, QUANTIZED_TOPK_SQL),
-]
-
-
 # --- deterministic epoch shuffle (exact distributed global rank) ---
 def epoch_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Epoch-1 training order of the documents table: every doc's
@@ -2054,8 +1990,6 @@ SELECT doc_id,
        ) - 1 AS BIGINT) AS epoch_rank
 FROM documents
 """
-
-LATE_BINDINGS.append(("epoch_shuffle", epoch_shuffle_q, EPOCH_SHUFFLE_SQL))
 
 
 # --- one oracled Lloyd's k-means iteration (VERDICT r7 #4) ---
@@ -2151,10 +2085,6 @@ FROM sums s JOIN nrm n USING (cluster_id)
 ORDER BY cluster_id, dim
 """
 
-LATE_BINDINGS.append(
-    ("kmeans_assign_step", kmeans_assign_step_q, KMEANS_ASSIGN_STEP_SQL)
-)
-
 
 # --- asymmetric near-containment pairs (round 8) ---
 def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2186,6 +2116,60 @@ FROM j JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
 WHERE inter / least(sa.c, sb.c) >= 0.9
 """
 
-LATE_BINDINGS.append(
-    ("containment_pairs", containment_pairs_q, CONTAINMENT_PAIRS_SQL)
-)
+
+BINDINGS = [
+    ("tfidf_top_terms", tfidf_q, TFIDF_SQL),
+    ("repetition_stats", repetition_q, REPETITION_SQL),
+    ("contamination", contamination_q, CONTAMINATION_SQL),
+    ("corpus_profile", corpus_profile_q, CORPUS_PROFILE_SQL),
+    ("curate_corpus", curate_q, CURATE_SQL),
+    ("dup_clusters", dup_clusters_q, DUP_CLUSTERS_SQL),
+    ("hash_sample", hash_sample_q, HASH_SAMPLE_SQL),
+    ("mixture_sample", mixture_sample_q, MIXTURE_SAMPLE_SQL),
+    ("sample_per_group", sample_per_group_q, SAMPLE_PER_GROUP_SQL),
+    ("token_topk", token_topk_q, TOKEN_TOPK_SQL),
+    ("dedup_exact", dedup_exact_q, DEDUP_EXACT_SQL),
+    ("ngram_jaccard_pairs", ngram_jaccard_q, NGRAM_JACCARD_SQL),
+    ("minhash_lsh_pairs", minhash_lsh_q, MINHASH_LSH_SQL),
+    ("simhash_near_pairs", simhash_q, SIMHASH_SQL),
+    ("cosine_topk", cosine_topk_q, COSINE_TOPK_SQL),
+    ("embedding_near_dup", emb_near_dup_q, EMB_NEAR_DUP_SQL),
+    ("ivf_topk", ivf_topk_q, IVF_TOPK_SQL),
+    ("text_quality", quality_q, QUALITY_SQL),
+    ("lang_id", lang_id_q, LANG_ID_SQL),
+    ("doc_fingerprint", fingerprint_q, FINGERPRINT_SQL),
+    ("token_counts", token_counts_q, TOKEN_COUNTS_SQL),
+    ("pii_scrub", pii_scrub_q, PII_SCRUB_SQL),
+    # iterative operators, ALL fully value-oracled since r10 (the
+    # fixed iteration budgets make them SQL-expressible: unrolled
+    # Lloyd CTEs + keyed recursions); value-level behavior is ALSO
+    # pinned in tests/test_clustering.py and tests/test_packing.py.
+    # egarch_params (extra_ops) is the one remaining rows-only binding.
+    ("semantic_dedup", semantic_dedup_q, SEMANTIC_DEDUP_SQL),
+    ("sequence_packing", sequence_packing_q, SEQUENCE_PACKING_SQL),
+    ("ivf_kmeans_topk", ivf_kmeans_topk_q, IVF_KMEANS_TOPK_SQL),
+    ("diverse_sample", diverse_sample_q, DIVERSE_SAMPLE_SQL),
+    ("training_set", training_set_q, TRAINING_SET_SQL),
+    ("classifier_score", classifier_score_q, CLASSIFIER_SQL),
+    ("doc_chunks", doc_chunks_q, DOC_CHUNKS_SQL),
+    # the flagship's chunk projection with a FULL composed oracle
+    # (curate -> LSH near-dedup -> components -> chunk); the pack tier
+    # is pinned by the SQL invariant test in tests/test_packing.py
+    ("training_set_chunks", training_set_chunks_q, TRAINING_SET_CHUNKS_SQL),
+    # the one-call near-dedup filter, oracle-checked standalone
+    ("near_dedup_docs", near_dedup_docs_q, NEAR_DEDUP_DOCS_SQL),
+    ("split_assign", split_assign_q, SPLIT_ASSIGN_SQL),
+    ("interdoc_repetition", interdoc_repetition_q, INTERDOC_REPETITION_SQL),
+    ("incremental_dedup", incremental_dedup_q, INCREMENTAL_DEDUP_SQL),
+    ("embedding_project", embedding_project_q, EMBEDDING_PROJECT_SQL),
+    ("lm_score", lm_score_q, LM_SCORE_SQL),
+    ("weighted_sample", weighted_sample_q, WEIGHTED_SAMPLE_SQL),
+    ("quality_gate", quality_gate_q, QUALITY_GATE_SQL),
+    ("bm25_topk", bm25_topk_q, BM25_TOPK_SQL),
+    ("hybrid_rrf", hybrid_rrf_q, HYBRID_RRF_SQL),
+    ("embedding_quantize", embedding_quantize_q, EMBEDDING_QUANTIZE_SQL),
+    ("quantized_topk", quantized_topk_q, QUANTIZED_TOPK_SQL),
+    ("epoch_shuffle", epoch_shuffle_q, EPOCH_SHUFFLE_SQL),
+    ("kmeans_assign_step", kmeans_assign_step_q, KMEANS_ASSIGN_STEP_SQL),
+    ("containment_pairs", containment_pairs_q, CONTAINMENT_PAIRS_SQL),
+]

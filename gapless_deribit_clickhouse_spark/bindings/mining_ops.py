@@ -162,9 +162,7 @@ FROM c WHERE event_type = 'purchase'
 """
 
 
-BINDINGS: list = []
-
-LATE_BINDINGS = [
+BINDINGS = [
     ("segment_dedup", segment_dedup_q, SEGMENT_DEDUP_SQL),
     ("event_cooccurrence", event_cooccurrence_q, EVENT_COOCCURRENCE_SQL),
     ("attribution_last_touch", attribution_q, ATTRIBUTION_SQL),

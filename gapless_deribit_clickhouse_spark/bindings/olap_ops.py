@@ -6,8 +6,7 @@ users lean on three aggregation idioms the SURVEY §2 inventory covers
 only partially: ``LIMIT n BY group`` (per-group top-n with rank),
 ``GROUP BY ... WITH ROLLUP`` (subtotal grouping sets in one pass),
 and ``quantile``/``median`` families.  Each gets a Spark-first
-binding with a full DuckDB oracle.  All three land in LATE_BINDINGS
-(past the driver's first-50 window) and are value-checked in CI by
+binding with a full DuckDB oracle, value-checked in CI by
 tests/test_demoted_bindings_oracle.py.
 """
 
@@ -481,22 +480,6 @@ ORDER BY day
 """
 
 
-BINDINGS: list = []
-
-LATE_BINDINGS = [
-    ("limit_by_topn", limit_by_topn, LIMIT_BY_SQL),
-    ("volume_rollup", volume_rollup, ROLLUP_SQL),
-    ("value_percentiles", value_percentiles, PERCENTILES_SQL),
-    ("mergeable_rollup", mergeable_rollup, MERGEABLE_ROLLUP_SQL),
-    ("twap_vwap", twap_vwap, TWAP_VWAP_SQL),
-    ("user_journey_path", user_journey_path, USER_JOURNEY_SQL),
-    ("user_set_ops", user_set_ops, USER_SET_OPS_SQL),
-    ("event_value_pivot", event_value_pivot, EVENT_VALUE_PIVOT_SQL),
-    ("weighted_median", weighted_median, WEIGHTED_MEDIAN_SQL),
-    ("full_outer_reconcile", full_outer_reconcile, FULL_OUTER_SQL),
-]
-
-
 # --- snapshot diff: row-level CDC between two table versions ---
 def snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level change capture between two deterministic snapshots of
@@ -549,8 +532,6 @@ d AS (
 SELECT * FROM d WHERE change_type IS NOT NULL
 """
 
-LATE_BINDINGS.append(("snapshot_diff", snapshot_diff_q, SNAPSHOT_DIFF_SQL))
-
 
 # --- cumulative distinct users (growth curve) ---
 def cumulative_unique_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,7 +570,19 @@ SELECT hour, new_users,
 FROM hourly ORDER BY hour
 """
 
-LATE_BINDINGS.append(
+
+BINDINGS = [
+    ("limit_by_topn", limit_by_topn, LIMIT_BY_SQL),
+    ("volume_rollup", volume_rollup, ROLLUP_SQL),
+    ("value_percentiles", value_percentiles, PERCENTILES_SQL),
+    ("mergeable_rollup", mergeable_rollup, MERGEABLE_ROLLUP_SQL),
+    ("twap_vwap", twap_vwap, TWAP_VWAP_SQL),
+    ("user_journey_path", user_journey_path, USER_JOURNEY_SQL),
+    ("user_set_ops", user_set_ops, USER_SET_OPS_SQL),
+    ("event_value_pivot", event_value_pivot, EVENT_VALUE_PIVOT_SQL),
+    ("weighted_median", weighted_median, WEIGHTED_MEDIAN_SQL),
+    ("full_outer_reconcile", full_outer_reconcile, FULL_OUTER_SQL),
+    ("snapshot_diff", snapshot_diff_q, SNAPSHOT_DIFF_SQL),
     ("cumulative_unique_users", cumulative_unique_users_q,
-     CUMULATIVE_UNIQUE_USERS_SQL)
-)
+     CUMULATIVE_UNIQUE_USERS_SQL),
+]

@@ -157,9 +157,7 @@ ORDER BY event_type
 """
 
 
-BINDINGS: list = []
-
-LATE_BINDINGS = [
+BINDINGS = [
     ("frequent_tokens", frequent_tokens, FREQUENT_TOKENS_SQL),
     ("approx_distinct_rollup", approx_distinct_rollup, APPROX_DISTINCT_SQL),
     ("quantile_sketch_rollup", quantile_sketch_rollup, QUANTILE_SKETCH_SQL),

@@ -15,8 +15,7 @@ count-distinct, nested semi chain, EXISTS / NOT-EXISTS self
 correlation — is preserved exactly, which is what matters for
 coverage and for the 100 TB plan audit.
 
-Every binding here lands in LATE_BINDINGS (past the driver's first-50
-window) and is value-checked in CI by
+Every binding here is value-checked in CI by
 tests/test_demoted_bindings_oracle.py.
 """
 
@@ -640,9 +639,7 @@ LIMIT 100
 """
 
 
-BINDINGS: list = []
-
-LATE_BINDINGS = [
+BINDINGS = [
     ("q2_min_cost_supplier", q2_min_cost_supplier, Q2_SQL),
     ("q7_volume_shipping", q7_volume_shipping, Q7_SQL),
     ("q8_market_share", q8_market_share, Q8_SQL),

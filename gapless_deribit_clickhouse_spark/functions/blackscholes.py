@@ -201,27 +201,19 @@ def portfolio_greeks(
     df_with_greeks: DataFrame,
     amount_col: str = "amount",
     spot_col: str = "spot_price",
-    approx_median: bool = False,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Position-weighted portfolio Greeks + dollar Greeks via median
     spot (reference greeks.py:173-238, np.median). Exact interpolated
-    percentile by default (matches the reference); set
-    ``approx_median=True`` at 100 TB — the exact percentile needs a
-    per-group sort, percentile_approx is a single-pass sketch."""
+    percentile (matches the reference)."""
     amt = F.col(amount_col)
-    median = (
-        F.percentile_approx(F.col(spot_col), 0.5)
-        if approx_median
-        else F.percentile(F.col(spot_col), F.lit(0.5))
-    )
     grouped = df_with_greeks.groupBy(*group_cols) if group_cols else df_with_greeks
     return grouped.agg(
         F.sum(F.col("adjusted_delta") * amt).alias("portfolio_delta"),
         F.sum(F.col("gamma") * amt).alias("portfolio_gamma"),
         F.sum(F.col("vega") * amt).alias("portfolio_vega"),
         F.sum(F.col("theta") * amt).alias("portfolio_theta"),
-        median.alias("median_spot"),
+        F.percentile(F.col(spot_col), F.lit(0.5)).alias("median_spot"),
     )
 
 

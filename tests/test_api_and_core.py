@@ -38,6 +38,12 @@ def test_fetch_requires_a_bound(trades_df):
         fetch_trades(trades_df, limit=0)
     with pytest.raises(QueryError):
         fetch_trades(trades_df, start="2024-12-02", end="2024-12-01")
+    # outside the contract: fail at call time, not as an empty result
+    # or a cast error when the plan runs
+    with pytest.raises(QueryError):
+        fetch_trades(trades_df, option_type="call", limit=1)
+    with pytest.raises(QueryError):
+        fetch_trades(trades_df, expiry="27DEC24", limit=1)
 
 
 def test_fetch_desc_order_and_limit(trades_df):

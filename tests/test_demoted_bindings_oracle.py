@@ -1,11 +1,8 @@
-"""Oracle checks for the bindings demoted past the driver's first-50
-correctness window.
+"""Oracle checks for every registry entry that has an oracle.
 
-The external harness verifies only the first 50 registry entries; the
-demoted near-duplicate variants would otherwise lose ALL value-level
-verification (their own oracle SQL included). This pins them in CI at
-sf0.001 with the same compare the harness applies: row count, column
-set, and values.
+Each ``ALL_BINDINGS`` entry with DuckDB oracle SQL is compared against
+it at sf0.001: row count, column set, and values. Only the rows-only
+``egarch_params`` has no oracle.
 
 Also pins the one coupling the LSH oracles can't check themselves:
 the DuckDB CTEs embed a dim=64 projection matrix at import time, so
@@ -20,11 +17,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from gapless_deribit_clickhouse_spark.bindings import (
-    ALL_BINDINGS,
-    CHECKED_WINDOW,
-    _DEMOTED,
-)
+from gapless_deribit_clickhouse_spark.bindings import ALL_BINDINGS
 from gapless_deribit_clickhouse_spark.core.tables import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -50,22 +43,17 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-# every binding past the driver's 50-entry window that HAS an oracle:
-# the demoted near-duplicate variants plus tail-appended distinct
-# operators (e.g. classifier_score) — all get the driver's compare
-# here since the driver itself never reaches them
-_DEMOTED_BINDINGS = [
-    b for b in ALL_BINDINGS[CHECKED_WINDOW:] if b[2] is not None
-]
+_ORACLE_BINDINGS = [b for b in ALL_BINDINGS if b[2] is not None]
 
 
 def test_all_demoted_have_oracles():
-    with_sql = {n for n, _f, s in ALL_BINDINGS if s is not None}
-    assert set(_DEMOTED) <= with_sql, "demoted variants must keep their oracle"
+    # an oracle dropped by mistake would silently shrink the sweep below
+    without_sql = [n for n, _f, s in ALL_BINDINGS if s is None]
+    assert without_sql == ["egarch_params"], without_sql
 
 
 @pytest.mark.parametrize(
-    "name,fn,sql", _DEMOTED_BINDINGS, ids=[b[0] for b in _DEMOTED_BINDINGS]
+    "name,fn,sql", _ORACLE_BINDINGS, ids=[b[0] for b in _ORACLE_BINDINGS]
 )
 def test_demoted_binding_matches_oracle(spark, duck, name, fn, sql):
     got = _normalize(fn(spark, SF_DIR).toPandas())

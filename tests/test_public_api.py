@@ -22,9 +22,10 @@ def test_all_exports_resolve():
 
 
 def test_all_matches_lazy_map_and_aliases():
-    """``__all__`` and the lazy re-export map are kept by hand: every
-    lazy name and alias is advertised, and every advertised name is
-    either lazy, an alias or defined eagerly in the package."""
+    """``__all__`` is built from the eager names, the lazy re-export
+    map and the aliases: every lazy name and alias is advertised, and
+    every advertised name is either lazy, an alias or defined eagerly
+    in the package."""
     eager = {n for n in pkg.__all__ if n in vars(pkg)}
     assert set(pkg.__all__) - eager == set(pkg._HOME) | set(pkg._ALIASES)
     assert not eager & (set(pkg._HOME) | set(pkg._ALIASES))

@@ -1,12 +1,14 @@
 """Registry oracle for the paper's pipeline and the generic operators.
 
-Each of these ``__spark_entry__`` entries is checked in CI, including
-the ones inside the checked window that the demoted-bindings test
-leaves to the external harness. An entry with an ``oracle_sql()``
-query must equal its DuckDB oracle over the same testdata (row count,
-column set and values, after sorting columns and rows); an empty
-result on either side fails, since an empty compare proves nothing.
-An entry without an oracle must return at least one row.
+Each of these ``__spark_entry__`` entries is checked in CI. An entry
+with an ``oracle_sql()`` query must equal its DuckDB oracle over the
+same testdata (row count, column set and values, after sorting
+columns and rows); an empty result on either side fails, since an
+empty compare proves nothing. An entry without an oracle must return
+at least one row. tests/test_demoted_bindings_oracle.py compares every
+registry entry with an oracle at sf0.001 as well; this file adds the
+non-empty check, the larger testdata some entries need and the
+rows-only check.
 """
 
 from __future__ import annotations
