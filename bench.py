@@ -765,7 +765,6 @@ def _streaming_bench(
             return (
                 streaming_ohlc(
                     rate_trades(),
-                    value_col="iv",
                     keys=("underlying",),
                     window="1 minute",
                     watermark_delay="10 seconds",
@@ -778,9 +777,7 @@ def _streaming_bench(
 
         def make_dedup():
             return (
-                dedup_stream(
-                    rate_trades(), ts_col="timestamp", watermark_delay="10 seconds"
-                )
+                dedup_stream(rate_trades(), watermark_delay="10 seconds")
                 .writeStream.format("noop")
                 .option("checkpointLocation", _ckpt())
                 .outputMode("append")
@@ -858,9 +855,7 @@ def _streaming_bench(
             )
             return (
                 stream_stream_enrich(
-                    trades, spots,
-                    on="underlying", trade_ts="ts", spot_ts="spot_ts",
-                    tolerance="1 second", watermark="10 seconds",
+                    trades, spots, tolerance="1 second", watermark="10 seconds",
                 )
                 .writeStream.format("noop")
                 .option("checkpointLocation", _ckpt())

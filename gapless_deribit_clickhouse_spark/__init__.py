@@ -116,8 +116,6 @@ _HOME = {
     "weighted_sample_per_group": "pipelines.sampling",
     "split_assign": "pipelines.sampling",
     "split_thresholds": "pipelines.sampling",
-    "read_jsonl_corpus": "sources.corpus_reader",
-    "write_corpus_shards": "sources.corpus_reader",
     "interdoc_repetition": "pipelines.text_dedup",
     "incremental_dedup": "pipelines.text_dedup",
     "project_embeddings": "pipelines.embeddings",
@@ -128,7 +126,6 @@ _HOME = {
     "sessionize": "operators.sessionize",
     "session_stats": "operators.sessionize",
     "streaming_sessionize": "operators.sessionize",
-    "salted_agg": "operators.skew",
     "topn_per_group": "operators.topk",
     "weighted_median_per_group": "operators.weighted",
     "partial_rollup": "operators.merge_rollup",
@@ -143,7 +140,6 @@ _HOME = {
     "ClickHouseHTTPConnector": "sinks.connector",
     "ClickHouseConnectorConfig": "sinks.connector",
     "write_stream_to_connector": "sinks.connector",
-    "write_jsonl_shards": "sinks.connector",
     "lsh_params": "pipelines.embeddings",
     "minhash_params": "pipelines.text_dedup",
     "decode_image": "pipelines.multimodal",
@@ -159,9 +155,6 @@ _HOME = {
     "pack_sequences": "pipelines.packing",
     "pack_stats": "pipelines.packing",
     "chunk_documents": "pipelines.packing",
-    "redact_pii": "pipelines.scrub",
-    "pii_counts": "pipelines.scrub",
-    "scrub_documents": "pipelines.scrub",
     "mixture_sample": "pipelines.sampling",
     "mixture_thresholds": "pipelines.sampling",
     "hashed_linear_score": "pipelines.text_stats",

@@ -29,12 +29,6 @@ def greeks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # parallel: single-split scan + heavy CDF trees (optimization r12)
         trades_view(spark, sf_dir, parallel=True),
         spot_col="index_price",
-        strike_col="strike",
-        ts_col="timestamp",
-        expiry_col="expiry",
-        iv_col="iv",
-        price_col="price",
-        option_type_col="option_type",
     )
     return out.select(
         "trade_id", "option_type", "strike", "iv", "t_years",
@@ -44,14 +38,7 @@ def greeks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _greeks_oracle() -> str:
     t_years = f'((epoch(CAST(expiry AS TIMESTAMP)) - epoch("timestamp")) / {YEAR_SECONDS!r})'
-    exprs = greeks_sql_exprs(
-        spot="index_price",
-        strike="strike",
-        t_years="t_years",
-        iv="iv",
-        price="price",
-        option_type="option_type",
-    )
+    exprs = greeks_sql_exprs(spot="index_price")
     greek_cols = ",\n       ".join(f"{sql} AS {name}" for name, sql in exprs.items())
     return f"""
 WITH trades AS ({TRADES_CTE}),

@@ -49,12 +49,6 @@ def _greeked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_greeks(
         trades_view(spark, sf_dir, parallel=True),
         spot_col="index_price",
-        strike_col="strike",
-        ts_col="timestamp",
-        expiry_col="expiry",
-        iv_col="iv",
-        price_col="price",
-        option_type_col="option_type",
     )
 
 
@@ -68,10 +62,7 @@ base AS (
 
 
 def _greek_cols_sql() -> str:
-    exprs = greeks_sql_exprs(
-        spot="index_price", strike="strike", t_years="t_years",
-        iv="iv", price="price", option_type="option_type",
-    )
+    exprs = greeks_sql_exprs(spot="index_price")
     return ",\n       ".join(f"{sql} AS {name}" for name, sql in exprs.items())
 
 
@@ -79,7 +70,6 @@ def _greek_cols_sql() -> str:
 def portfolio_greeks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return portfolio_greeks(
         _greeked(spark, sf_dir),
-        amount_col="amount",
         spot_col="index_price",
         group_cols=("underlying",),
     ).withColumnRenamed("underlying", "grp")
@@ -185,9 +175,7 @@ def egarch_params_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     series = series.withColumn(
         "ts", F.timestamp_seconds(F.row_number().over(w).cast("long") * 3600)
     )
-    return egarch_params_by_group(
-        series, keys=["event_type"], ts_col="ts", value_col="v"
-    )
+    return egarch_params_by_group(series, keys=["event_type"], value_col="v")
 
 
 # --- EGARCH input series: the SQL-expressible half of the fit ---
@@ -523,7 +511,7 @@ def sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gapless_deribit_clickhouse_spark.operators.sessionize import session_stats
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    return session_stats(ev, user_col="user_id", ts_col="ts", gap_seconds=1800)
+    return session_stats(ev)
 
 
 SESSIONIZE_SQL = """
@@ -554,9 +542,9 @@ def interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gapless_deribit_clickhouse_spark.operators.sessionize import session_stats
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    sess = session_stats(
-        ev.select("user_id", "ts"), user_col="user_id", ts_col="ts", gap_seconds=1800
-    ).select("user_id", "session_seq", "session_start", "session_end")
+    sess = session_stats(ev.select("user_id", "ts")).select(
+        "user_id", "session_seq", "session_start", "session_end"
+    )
     out = interval_join(
         ev, sess, "ts", "session_start", "session_end",
         on=["user_id"], bucket_seconds=1800,
@@ -820,7 +808,6 @@ def egarch_loglik_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         inputs,
         keys=["event_type"],
         order_col="idx",
-        value_col="r100",
         param_sets={
             "smooth": (_LL_MU, _LL_OMEGA, _LL_ALPHA, _LL_GAMMA, _LL_BETA),
             "guard": (_LL_MU, _LL_OMEGA, _LL_ALPHA, _LL_GAMMA, _LL_BETA_GUARD),
@@ -917,7 +904,6 @@ def egarch_nm_step_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         inputs,
         keys=["event_type"],
         order_col="idx",
-        value_col="r100",
         simplex=_NM_SIMPLEX,
     ).orderBy("event_type")
 
@@ -1168,7 +1154,7 @@ def overlap_hot_hours_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("hour_end", F.col("hour_start") + F.expr("INTERVAL 3599 SECONDS"))
         .drop("__avg_he")
     )
-    sess = session_stats(ev, user_col="user_id", ts_col="ts", gap_seconds=1800)
+    sess = session_stats(ev)
     return overlap_join(
         sess, hot,
         "session_start", "session_end", "hour_start", "hour_end",

@@ -320,7 +320,7 @@ GROUP BY underlying
 # --- W1/O3: gap analysis (lead window + top-N) ---
 def gap_analysis_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return gap_analysis(ev, ts_col="ts", group_cols=("event_type",), threshold_hours=0.5, top_n=100)
+    return gap_analysis(ev, ts_col="ts", group_cols=("event_type",), threshold_hours=0.5)
 
 
 GAP_ANALYSIS_SQL = """

@@ -235,10 +235,12 @@ def emb_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_near_dup_pairs(_emb(spark, sf_dir), threshold=0.35)
 
 
-def _lsh_band_ctes(band_bits: int, dim: int = 64) -> str:
+def _lsh_band_ctes(band_bits: int) -> str:
     """CTE fragment replicating pipelines/embeddings.band_hashes in
-    DuckDB: same seeded projection matrix (literals round-trip
-    exactly through repr), same sign rule, same band packing."""
+    DuckDB for the testdata's 64-dim embeddings: same seeded projection
+    matrix (literals round-trip exactly through repr), same sign rule,
+    same band packing."""
+    dim = 64
     from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
         DEFAULT_N_BITS,
         random_projections,
@@ -720,8 +722,8 @@ WHERE m.n_matched >= 1
 # --- hashed linear classifier (quality-filter inference) ---
 # Deterministic stand-in weight vector (md5-derived, environment-
 # independent) — the single source of truth for BOTH the Spark plan
-# literal and the DuckDB oracle literal, the same sharing pattern as
-# PII_PATTERNS. Real use loads trained logistic-regression weights.
+# literal and the DuckDB oracle literal. Real use loads trained
+# logistic-regression weights.
 import hashlib as _hashlib
 
 _CLF_BUCKETS = 256
@@ -1426,41 +1428,6 @@ FROM per_pack
 SEQUENCE_PACKING_SQL = _sequence_packing_oracle_sql()
 
 
-# --- PII scrubbing (pure regex column algebra) ---
-def pii_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.scrub import scrub_documents
-
-    return scrub_documents(load_table(spark, sf_dir, "documents"))
-
-
-def _pii_scrub_sql() -> str:
-    """Oracle generated from the SAME PII_PATTERNS list the Spark side
-    applies (single source of truth — a pattern edit cannot desync the
-    two engines). Patterns stay within the Java-regex/RE2 common
-    subset; DuckDB needs the 'g' flag to match Spark's replace-all."""
-    from gapless_deribit_clickhouse_spark.pipelines.scrub import PII_PATTERNS
-
-    clean = "text"
-    for _name, pattern, repl in PII_PATTERNS:
-        p = pattern.replace("'", "''")
-        clean = f"regexp_replace({clean}, '{p}', '{repl}', 'g')"
-    counts = ", ".join(
-        f"coalesce(len(regexp_extract_all(text, '{pattern}')), 0) AS n_{name}"
-        for name, pattern, _repl in PII_PATTERNS
-    )
-    total = " + ".join(
-        f"coalesce(len(regexp_extract_all(text, '{pattern}')), 0)"
-        for _name, pattern, _repl in PII_PATTERNS
-    )
-    return (
-        f"SELECT doc_id, {clean} AS clean_text, {counts}, "
-        f"{total} AS n_pii_total FROM documents"
-    )
-
-
-PII_SCRUB_SQL = _pii_scrub_sql()
-
-
 # --- leakage-safe deterministic split assignment ---
 _SPLIT_WEIGHTS = [("train", 0.9), ("val", 0.05), ("test", 0.05)]
 
@@ -1773,8 +1740,10 @@ def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(_docs(spark, sf_dir), _BM25_QUERIES, k=10)
 
 
-def _bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
+def _bm25_sql() -> str:
     from gapless_deribit_clickhouse_spark.pipelines.retrieval import tokenize_query
+
+    k, k1, b = 10, 1.2, 0.75  # bm25_q's k and bm25_topk's default k1, b
 
     values = ", ".join(
         f"('{qid}', '{tok}')"
@@ -2139,7 +2108,6 @@ BINDINGS = [
     ("lang_id", lang_id_q, LANG_ID_SQL),
     ("doc_fingerprint", fingerprint_q, FINGERPRINT_SQL),
     ("token_counts", token_counts_q, TOKEN_COUNTS_SQL),
-    ("pii_scrub", pii_scrub_q, PII_SCRUB_SQL),
     # iterative operators, ALL fully value-oracled since r10 (the
     # fixed iteration budgets make them SQL-expressible: unrolled
     # Lloyd CTEs + keyed recursions); value-level behavior is ALSO

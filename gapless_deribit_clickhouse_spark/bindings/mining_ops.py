@@ -94,10 +94,7 @@ def attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         attribution_last_touch,
     )
 
-    return attribution_last_touch(
-        ensure_parallelism(load_table(spark, sf_dir, "events")),
-        lookback_s=3600.0,
-    )
+    return attribution_last_touch(ensure_parallelism(load_table(spark, sf_dir, "events")))
 
 
 # Verbatim transliteration: same ROWS frame, same ignore-nulls carry

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_expansion(df: DataFrame, multiplier: int = 1) -> DataFrame:
+def spread_expansion(df: DataFrame) -> DataFrame:
     """Unconditional round-robin repartition for stages whose OUTPUT
     explodes past their input (in-bucket pair generation, window
     explodes). AQE sizes a post-shuffle stage by the exchange's input
@@ -37,10 +37,7 @@ def spread_expansion(df: DataFrame, multiplier: int = 1) -> DataFrame:
         shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         shuffle_parts = 0
-    target = max(sc.defaultParallelism * multiplier, shuffle_parts)
-    if target <= 0:
-        return df
-    return df.repartition(target)
+    return df.repartition(max(sc.defaultParallelism, shuffle_parts))
 
 
 # analyzed-plan node names through which ``df.rdd`` stays a pure
@@ -63,18 +60,19 @@ _SCAN_SHAPED_NODES = frozenset(
 )
 
 
-def _scan_shaped(df: DataFrame, max_nodes: int = 32) -> bool:
+def _scan_shaped(df: DataFrame) -> bool:
     """True iff the analyzed plan is a narrow chain over a leaf — the
     only shape where ``df.rdd.getNumPartitions()`` is guaranteed
-    job-free under AQE. Bounded py4j walk, no execution (ADVICE r12:
-    exported operators may receive arbitrary post-shuffle frames)."""
+    job-free under AQE. Py4j walk bounded at 32 nodes, no execution
+    (ADVICE r12: exported operators may receive arbitrary post-shuffle
+    frames)."""
     try:
         stack = [df._jdf.queryExecution().analyzed()]
         seen = 0
         while stack:
             node = stack.pop()
             seen += 1
-            if seen > max_nodes:
+            if seen > 32:
                 return False
             if node.getClass().getSimpleName() not in _SCAN_SHAPED_NODES:
                 return False
@@ -85,16 +83,15 @@ def _scan_shaped(df: DataFrame, max_nodes: int = 32) -> bool:
         return False
 
 
-def ensure_parallelism(df: DataFrame, multiplier: int = 1) -> DataFrame:
-    """Round-robin repartition up to ``defaultParallelism * multiplier``
-    iff the plan currently has fewer partitions; metadata-only check,
-    no job is triggered. On inputs that are not scan-shaped the check
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition up to ``defaultParallelism`` iff the
+    plan currently has fewer partitions; metadata-only check, no job is
+    triggered. On inputs that are not scan-shaped the check
     itself would execute upstream query stages under AQE, so the
     helper is a no-op there — such plans are post-shuffle and already
     carry the session's shuffle parallelism."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * multiplier
-    if target <= 0 or not _scan_shaped(df):
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if not _scan_shaped(df):
         return df
     if df.rdd.getNumPartitions() >= target:
         return df

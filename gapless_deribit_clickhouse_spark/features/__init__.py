@@ -48,11 +48,6 @@ from gapless_deribit_clickhouse_spark.features.term_structure import (
     term_structure_ratio,
     term_structure_slope,
 )
-from gapless_deribit_clickhouse_spark.functions.blackscholes import (
-    greeks_by_bucket,
-    portfolio_greeks,
-    with_greeks,
-)
 
 __all__ = [
     "CONSERVATIVE", "DEFAULT", "HIGH_FREQUENCY", "FeatureConfig", "get_preset",
@@ -68,3 +63,16 @@ __all__ = [
     "term_structure", "term_structure_ratio", "term_structure_slope",
     "greeks_by_bucket", "portfolio_greeks", "with_greeks",
 ]
+
+# The Greeks live in functions.blackscholes, which imports
+# features.config: re-exporting them lazily keeps that import acyclic,
+# so either package can be imported first.
+_GREEKS = ("greeks_by_bucket", "portfolio_greeks", "with_greeks")
+
+
+def __getattr__(name: str):
+    if name in _GREEKS:
+        from gapless_deribit_clickhouse_spark.functions import blackscholes
+
+        return getattr(blackscholes, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -3,7 +3,7 @@
 Semantics carried over from the reference's ``FeatureConfig``
 (``/root/reference/src/gapless_deribit_clickhouse/features/config.py:30-135``):
 resample frequency, ATM width, liquidity minimum, DTE buckets,
-moneyness thresholds, EGARCH guards, and the three presets.
+moneyness thresholds, Greeks discounting, and the three presets.
 """
 
 from __future__ import annotations
@@ -47,8 +47,6 @@ class FeatureConfig:
     far_dte_min: int = 60  # term-structure far leg (term_structure.py:72)
     exclude_leaps_dte: int = 365  # PCR excludes LEAPS (config.py:96-104)
     iv_lookback_days: int = 90  # rolling percentile window (config.py:70)
-    egarch_min_obs: int = 100  # egarch.py:33,85-89
-    egarch_max_unique_intervals: int = 3  # regularity guard (egarch.py:92-101)
     risk_free_rate: float = DEFAULT_RISK_FREE_RATE  # greeks discounting (config.py:63)
     year_seconds: float = 365.25 * 24 * 3600.0  # T in years (greeks.py:40)
 
@@ -85,15 +83,13 @@ def bucket_label(lo: int, hi: int) -> str:
     return f"dte_{lo}_{hi}"
 
 
-def dte_bucket_case_sql(
-    dte_expr: str, buckets: tuple[tuple[int, int], ...] = DEFAULT_DTE_BUCKETS
-) -> str:
-    """ANSI-SQL CASE labelling ``dte_expr`` with the configured bucket
+def dte_bucket_case_sql(dte_expr: str) -> str:
+    """ANSI-SQL CASE labelling ``dte_expr`` with the default bucket
     set. The binding oracles use this so the DuckDB side is generated
     from the SAME bucket list the Spark combinators read — a config
     change cannot silently diverge the two."""
     whens = "\n     ".join(
         f"WHEN {dte_expr} BETWEEN {lo} AND {hi} THEN '{bucket_label(lo, hi)}'"
-        for lo, hi in buckets
+        for lo, hi in DEFAULT_DTE_BUCKETS
     )
     return f"CASE {whens}\n     ELSE NULL END"

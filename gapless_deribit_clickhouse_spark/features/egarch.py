@@ -53,13 +53,13 @@ class EgarchResult:
     n_obs: int
 
 
-def _check_regular(ts: pd.Series, max_unique: int = MAX_UNIQUE_INTERVALS) -> None:
+def _check_regular(ts: pd.Series) -> None:
     diffs = pd.Series(ts).sort_values().diff().dropna()
     uniq = diffs.unique()
-    if len(uniq) > max_unique:
+    if len(uniq) > MAX_UNIQUE_INTERVALS:
         raise ConfigurationError(
             f"series is irregular: {len(uniq)} unique sampling intervals "
-            f"(max {max_unique}); resample first"
+            f"(max {MAX_UNIQUE_INTERVALS}); resample first"
         )
 
 
@@ -123,7 +123,7 @@ def build_initial_simplex(x0) -> list[list[float]]:
     return sim
 
 
-def _nelder_mead(f, x0: np.ndarray, max_iter: int = 2000, tol: float = 1e-8) -> np.ndarray:
+def _nelder_mead(f, x0: np.ndarray, max_iter: int = 2000) -> np.ndarray:
     """Deterministic Nelder-Mead (standard reflect/expand/contract/
     shrink coefficients)."""
     sim = np.array(build_initial_simplex(x0))
@@ -131,7 +131,7 @@ def _nelder_mead(f, x0: np.ndarray, max_iter: int = 2000, tol: float = 1e-8) -> 
     for _ in range(max_iter):
         order = np.argsort(fval, kind="stable")
         sim, fval = sim[order], fval[order]
-        if abs(fval[-1] - fval[0]) < tol:
+        if abs(fval[-1] - fval[0]) < 1e-8:
             break
         centroid = sim[:-1].mean(axis=0)
         xr = centroid + (centroid - sim[-1])
@@ -161,17 +161,16 @@ def fit_egarch(
     ts: pd.Series | None = None,
     p: int = 1,
     q: int = 1,
-    min_obs: int = MIN_OBS,
 ) -> EgarchResult:
     """Fit EGARCH(p,q) on log-returns (×100, std-rescaled) of a
-    REGULAR series. Raises InsufficientDataError below ``min_obs`` and
+    REGULAR series. Raises InsufficientDataError below ``MIN_OBS`` and
     ConfigurationError on irregular grids — the reference's guards."""
     if p not in (1, 2) or q not in (1, 2):
         raise ConfigurationError("p and q must be in {1, 2}")
     vals = pd.Series(series).dropna().astype(float)
-    if len(vals) < min_obs:
+    if len(vals) < MIN_OBS:
         raise InsufficientDataError(
-            f"need >= {min_obs} observations, got {len(vals)}"
+            f"need >= {MIN_OBS} observations, got {len(vals)}"
         )
     if ts is not None:
         _check_regular(pd.Series(ts).iloc[-len(vals):])
@@ -247,24 +246,18 @@ def fit_egarch(
     )
 
 
-def auto_select_egarch(
-    series: pd.Series,
-    ts: pd.Series | None = None,
-    criterion: str = "aic",
-    grid: tuple[tuple[int, int], ...] = ((1, 1), (1, 2), (2, 1), (2, 2)),
-) -> EgarchResult:
-    """Grid search over (p, q) by AIC/BIC (reference egarch.py:133-208)."""
-    if criterion not in ("aic", "bic"):
-        raise ConfigurationError("criterion must be 'aic' or 'bic'")
+def auto_select_egarch(series: pd.Series, ts: pd.Series | None = None) -> EgarchResult:
+    """Grid search over (p, q) in {1, 2}² by AIC (reference
+    egarch.py:133-208)."""
     best: EgarchResult | None = None
-    for p, q in grid:
+    for p, q in ((1, 1), (1, 2), (2, 1), (2, 2)):
         try:
             res = fit_egarch(series, ts, p=p, q=q)
         except (InsufficientDataError, ConfigurationError):
             raise
         except Exception:  # noqa: BLE001 — a non-converged cell is skipped
             continue
-        if best is None or getattr(res, criterion) < getattr(best, criterion):
+        if best is None or res.aic < best.aic:
             best = res
     if best is None:
         raise InsufficientDataError("no EGARCH fit converged")
@@ -350,7 +343,6 @@ def nelder_mead_step_by_group(
     df,
     keys,
     order_col="ts",
-    value_col="r100",
     simplex=None,
     p=1,
     q=1,
@@ -410,7 +402,7 @@ def nelder_mead_step_by_group(
 
     def step_one(pdf: pd.DataFrame) -> pd.DataFrame:
         base = {k: pdf[k].iloc[0] for k in keys}
-        r = pdf.sort_values(order_col)[value_col].to_numpy()
+        r = pdf.sort_values(order_col)["r100"].to_numpy()
         fval = np.array([_neg_loglik(v, r, p, q) for v in sim0])
         order = np.argsort(fval, kind="stable")
         sim, fv = sim0[order], fval[order]
@@ -458,7 +450,7 @@ def iv_model_spread(iv: pd.Series, result: EgarchResult) -> pd.Series:
     return aligned_iv - model
 
 
-def egarch_params_by_group(df, keys, ts_col="ts", value_col="iv_close", p=1, q=1):
+def egarch_params_by_group(df, keys, value_col="iv_close", p=1, q=1):
     """Distributed per-group fit via applyInPandas: one row per group
     with params + fit stats; groups failing the guards yield an
     ``error`` string instead of aborting the job."""
@@ -474,8 +466,8 @@ def egarch_params_by_group(df, keys, ts_col="ts", value_col="iv_close", p=1, q=1
     def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
         base = {k: pdf[k].iloc[0] for k in keys}
         try:
-            pdf = pdf.sort_values(ts_col)
-            res = fit_egarch(pdf[value_col], pdf[ts_col], p=p, q=q)
+            pdf = pdf.sort_values("ts")
+            res = fit_egarch(pdf[value_col], pdf["ts"], p=p, q=q)
             row = base | {
                 "mu": res.params["mu"],
                 "omega": res.params["omega"],
@@ -505,7 +497,6 @@ def loglik_by_group(
     df,
     keys,
     order_col="ts",
-    value_col="r100",
     theta=(0.0, -0.1, 0.15, -0.05, 0.92),
     p=1,
     q=1,
@@ -553,7 +544,7 @@ def loglik_by_group(
     def eval_one(pdf: pd.DataFrame) -> pd.DataFrame:
         base = {k: pdf[k].iloc[0] for k in keys}
         pdf = pdf.sort_values(order_col)
-        r = pdf[value_col].to_numpy()
+        r = pdf["r100"].to_numpy()
         if sets is None:
             nll = _neg_loglik(theta_arr, r, p, q)
             rows = [base | {"neg_loglik": float(nll), "n_obs": len(pdf)}]

@@ -21,25 +21,25 @@ from gapless_deribit_clickhouse_spark.operators.rolling import (
 )
 
 
-def _default_min_periods(lookback_days: int, sample_seconds: int) -> int:
-    return max(1, (lookback_days * 86400 // sample_seconds) // 2)
+def _default_min_periods(lookback_days: int) -> int:
+    """Half the nominal number of 15-minute bars in the lookback."""
+    return max(1, (lookback_days * 86400 // 900) // 2)
 
 
 def iv_percentile(
     df: DataFrame,
     ts_col: str = "ts",
-    iv_col: str = "iv_close",
     keys: Sequence[str] = (),
     lookback_days: int = DEFAULT.iv_lookback_days,
-    sample_seconds: int = 900,
     min_periods: int | None = None,
 ) -> DataFrame:
-    """Percent of trailing-window IV values <= current, ×100 ∈ [0,100]."""
-    mp = min_periods if min_periods is not None else _default_min_periods(lookback_days, sample_seconds)
+    """Percent of trailing-window ``iv_close`` values <= current, ×100
+    ∈ [0,100]."""
+    mp = min_periods if min_periods is not None else _default_min_periods(lookback_days)
     return rolling_percentile_rank(
         df,
         ts_col=ts_col,
-        value_col=iv_col,
+        value_col="iv_close",
         keys=keys,
         lookback_seconds=lookback_days * 86400,
         min_periods=mp,
@@ -49,21 +49,17 @@ def iv_percentile(
 
 def iv_rank(
     df: DataFrame,
-    ts_col: str = "ts",
-    iv_col: str = "iv_close",
-    keys: Sequence[str] = (),
     lookback_days: int = DEFAULT.iv_lookback_days,
-    sample_seconds: int = 900,
     min_periods: int | None = None,
 ) -> DataFrame:
-    """(iv − rolling_min)/(rolling_max − rolling_min) × 100; null on a
-    degenerate window."""
-    mp = min_periods if min_periods is not None else _default_min_periods(lookback_days, sample_seconds)
+    """(iv − rolling_min)/(rolling_max − rolling_min) × 100 over the
+    ``iv_close`` series in ``ts`` order; null on a degenerate window."""
+    mp = min_periods if min_periods is not None else _default_min_periods(lookback_days)
     return rolling_minmax_rank(
         df,
-        ts_col=ts_col,
-        value_col=iv_col,
-        keys=keys,
+        ts_col="ts",
+        value_col="iv_close",
+        keys=(),
         lookback_seconds=lookback_days * 86400,
         min_periods=mp,
         out_col="iv_rank",

@@ -24,24 +24,21 @@ from gapless_deribit_clickhouse_spark.operators.resample import ohlc_resample
 
 def resample_iv(
     df: DataFrame,
-    ts_col: str = "timestamp",
-    iv_col: str = "iv",
-    amount_col: str = "amount",
-    id_col: str = "trade_id",
     keys: tuple[str, ...] = (),
     config: FeatureConfig = DEFAULT,
 ) -> DataFrame:
-    """15-min IV bars: iv_open/high/low/close + volume + n_obs; empty
-    bars dropped, null IVs dropped pre-resample (reference
-    resampler.py:77)."""
+    """15-min IV bars of the trades' ``iv``: iv_open/high/low/close +
+    ``amount`` volume + n_obs, ties at equal ``timestamp`` broken by
+    ``trade_id``; empty bars dropped, null IVs dropped pre-resample
+    (reference resampler.py:77)."""
     return ohlc_resample(
         df,
-        ts_col=ts_col,
-        value_col=iv_col,
-        volume_col=amount_col,
+        ts_col="timestamp",
+        value_col="iv",
+        volume_col="amount",
         step_seconds=config.resample_seconds,
         keys=keys,
-        tiebreak_col=id_col,
+        tiebreak_col="trade_id",
         prefix="iv_",
     )
 

@@ -89,20 +89,19 @@ def ensure_spot_dictionary(
     spark,
     table: str = "ohlcv",
     path: str | None = None,
-    auto_create: bool = True,
 ) -> bool:
     """Reference-parity capability probe (infrastructure.py:40-103 +
     spot_provider.py:294-310): the reference maintains a ClickHouse
     hash dictionary for spot lookups and auto-creates it when absent.
     Spark's equivalent of the dictionary is simply the broadcast
     dimension, so "ensuring" it means: the spot table is registered in
-    the catalog (registering it from ``path`` when ``auto_create``).
+    the catalog (registering it from ``path`` when given).
     Returns True iff the dimension is queryable; callers that get
     False fall back to index_price-only enrichment — the same dual
     path the reference exposes via ``use_dict``."""
     if spark.catalog.tableExists(table):
         return True
-    if path is not None and auto_create:
+    if path is not None:
         try:
             spark.read.parquet(path).createOrReplaceTempView(table)
             return True

@@ -149,9 +149,8 @@ def autocorr_by_key(
     key_cols: Sequence[str],
     order_cols: Sequence[str],
     value_col: str,
-    lag: int = 1,
 ) -> DataFrame:
-    """Lag-``lag`` sample autocorrelation of the per-key ordered value
+    """Lag-1 sample autocorrelation of the per-key ordered value
     series — the serial-dependence screen a volatility desk runs
     before fitting anything autoregressive (the EGARCH tier's input
     diagnostic; reference `features/egarch.py` consumes exactly this
@@ -172,7 +171,7 @@ def autocorr_by_key(
     # covar_samp would each see different row subsets when value_col
     # contains NULLs, diverging from the oracle corr's pairwise
     # deletion — all three moments must see the same pairs)
-    pairs = df.withColumn("__prev", F.lag(value_col, lag).over(w)).filter(
+    pairs = df.withColumn("__prev", F.lag(value_col).over(w)).filter(
         F.col("__prev").isNotNull() & F.col(value_col).isNotNull()
     )
     cov = F.covar_samp(value_col, "__prev")

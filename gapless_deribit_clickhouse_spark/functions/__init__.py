@@ -1,9 +1,6 @@
 from gapless_deribit_clickhouse_spark.functions.conditional import (
-    agg_if,
     avg_if,
     count_if,
-    max_if,
-    min_if,
     nullif_zero,
     safe_div,
     stddev_pop_if,
@@ -12,20 +9,15 @@ from gapless_deribit_clickhouse_spark.functions.conditional import (
 from gapless_deribit_clickhouse_spark.functions.timeutils import (
     dte_days,
     time_bucket,
-    to_epoch_seconds,
 )
 
 __all__ = [
-    "agg_if",
     "avg_if",
     "count_if",
-    "max_if",
-    "min_if",
     "nullif_zero",
     "safe_div",
     "stddev_pop_if",
     "sum_if",
     "dte_days",
     "time_bucket",
-    "to_epoch_seconds",
 ]

@@ -19,7 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gapless_deribit_clickhouse_spark.features.config import DEFAULT_RISK_FREE_RATE
+from gapless_deribit_clickhouse_spark.features.config import (
+    DEFAULT,
+    DEFAULT_RISK_FREE_RATE,
+    FeatureConfig,
+)
 
 INV_SQRT_2PI = "0.3989422804014327"  # 1/sqrt(2*pi)
 
@@ -52,22 +56,17 @@ def norm_pdf_sql(x: str) -> str:
     return NORM_PDF_SQL.replace("{x}", f"({x})")
 
 
-def greeks_sql_exprs(
-    spot: str = "spot_price",
-    strike: str = "strike",
-    t_years: str = "t_years",
-    iv: str = "iv",
-    price: str = "price",
-    option_type: str = "option_type",
-    rate: float = DEFAULT_RISK_FREE_RATE,
-) -> dict[str, str]:
-    """SQL expression per greek, parameterized by input column names.
+def greeks_sql_exprs(spot: str = "spot_price") -> dict[str, str]:
+    """SQL expression per greek over the ``strike``, ``t_years``,
+    ``iv``, ``price`` and ``option_type`` columns and the ``spot``
+    column, at the default risk-free rate.
 
     ``t_years`` must already be the year fraction (seconds/31557600).
     All outputs are NULL when the validity mask fails (reference
     greeks.py:121-126).
     """
-    r = repr(float(rate))
+    strike, t_years, iv, price, option_type = "strike", "t_years", "iv", "price", "option_type"
+    r = repr(float(DEFAULT_RISK_FREE_RATE))
     mask = f"({t_years} > 0 AND {iv} > 0 AND {spot} > 0 AND {strike} > 0)"
     sqrt_t = f"sqrt({t_years})"
     d1 = (
@@ -108,17 +107,14 @@ def greeks_sql_exprs(
 def with_greeks(
     df: DataFrame,
     spot_col: str = "spot_price",
-    strike_col: str = "strike",
-    ts_col: str = "timestamp",
-    expiry_col: str = "expiry",
-    iv_col: str = "iv",
-    price_col: str = "price",
-    option_type_col: str = "option_type",
-    rate: float = DEFAULT_RISK_FREE_RATE,
-    year_seconds: float = 365.25 * 24 * 3600.0,
+    config: FeatureConfig = DEFAULT,
 ) -> DataFrame:
     """Append delta/gamma/vega/theta/adjusted_delta columns — all
-    whole-stage-codegen, no Python in the hot path.
+    whole-stage-codegen, no Python in the hot path. Reads the
+    ``options_trades`` columns (``strike``, ``timestamp``, ``expiry``,
+    ``iv``, ``price``, ``option_type``) plus ``spot_col``; discounts at
+    ``config.risk_free_rate`` and measures time to expiry in years of
+    ``config.year_seconds``.
 
     d1/d2/N(d1)/N(d2)/φ(d1) are staged as intermediate columns:
     inlining them per greek (as one giant SQL string would) makes the
@@ -151,8 +147,8 @@ def with_greeks(
             f"with_greeks: input already carries column(s) {clash}; "
             "drop or rename them before enriching"
         )
-    spot, strike, iv = f"`{spot_col}`", f"`{strike_col}`", f"`{iv_col}`"
-    r = repr(float(rate))
+    spot, strike, iv = f"`{spot_col}`", "`strike`", "`iv`"
+    r = repr(float(config.risk_free_rate))
     t = "t_years"
     mask = f"({t} > 0 AND {iv} > 0 AND {spot} > 0 AND {strike} > 0)"
     sqrt_t = f"sqrt({t})"
@@ -163,7 +159,7 @@ def with_greeks(
         f"((ln({spot} / {strike}) + ({r} + ({iv} * {iv}) / 2.0) * {t})"
         f" / ({iv} * {sqrt_t}))"
     )
-    is_call = f"(lower(`{option_type_col}`) IN ('c', 'call'))"
+    is_call = "(lower(`option_type`) IN ('c', 'call'))"
     disc = f"exp(-({r}) * {t})"
     delta = f"(CASE WHEN {is_call} THEN __nd1 ELSE __nd1 - 1.0 END)"
     gamma = f"(__pdf_d1 / ({spot} * {iv} * {sqrt_t}))"
@@ -173,15 +169,15 @@ def with_greeks(
         f"((CASE WHEN {is_call} THEN {theta_core} - {r} * {strike} * {disc} * __nd2"
         f" ELSE {theta_core} + {r} * {strike} * {disc} * __nmd2 END) / 365.25)"
     )
-    adjusted_delta = f"({delta} - `{price_col}` / {spot})"
+    adjusted_delta = f"({delta} - `price` / {spot})"
 
     def guard(expr: str) -> str:
         return f"(CASE WHEN {mask} THEN {expr} ELSE CAST(NULL AS DOUBLE) END)"
 
     out = df.selectExpr(
         "*",
-        f"((CAST(CAST(`{expiry_col}` AS TIMESTAMP) AS DOUBLE)"
-        f" - CAST(`{ts_col}` AS DOUBLE)) / {year_seconds!r}) AS t_years",
+        "((CAST(CAST(`expiry` AS TIMESTAMP) AS DOUBLE)"
+        f" - CAST(`timestamp` AS DOUBLE)) / {float(config.year_seconds)!r}) AS t_years",
         f"(CASE WHEN {mask} THEN {d1} END) AS __d1",
         f"(__d1 - {iv} * {sqrt_t}) AS __d2",
         f"{norm_pdf_sql('__d1')} AS __pdf_d1",
@@ -199,14 +195,13 @@ def with_greeks(
 
 def portfolio_greeks(
     df_with_greeks: DataFrame,
-    amount_col: str = "amount",
     spot_col: str = "spot_price",
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Position-weighted portfolio Greeks + dollar Greeks via median
+    """``amount``-weighted portfolio Greeks + dollar Greeks via median
     spot (reference greeks.py:173-238, np.median). Exact interpolated
     percentile (matches the reference)."""
-    amt = F.col(amount_col)
+    amt = F.col("amount")
     grouped = df_with_greeks.groupBy(*group_cols) if group_cols else df_with_greeks
     return grouped.agg(
         F.sum(F.col("adjusted_delta") * amt).alias("portfolio_delta"),

@@ -15,15 +15,8 @@ output names match the DuckDB oracle exactly.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def agg_if(fn: Callable[[Column], Column], cond: Column, col: Column) -> Column:
-    """``fn(when(cond, col))`` — the generic *If combinator."""
-    return fn(F.when(cond, col))
 
 
 def sum_if(cond: Column, col: Column) -> Column:
@@ -32,14 +25,6 @@ def sum_if(cond: Column, col: Column) -> Column:
 
 def avg_if(cond: Column, col: Column) -> Column:
     return F.avg(F.when(cond, col))
-
-
-def min_if(cond: Column, col: Column) -> Column:
-    return F.min(F.when(cond, col))
-
-
-def max_if(cond: Column, col: Column) -> Column:
-    return F.max(F.when(cond, col))
 
 
 def count_if(cond: Column) -> Column:

@@ -17,11 +17,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def to_epoch_seconds(ts: Column) -> Column:
-    """Timestamp -> epoch seconds (long, truncates sub-second)."""
-    return ts.cast("long")
-
-
 def time_bucket(ts: Column, step_seconds: int = 900) -> Column:
     """Floor ``ts`` to a ``step_seconds`` grid; returns a timestamp.
 

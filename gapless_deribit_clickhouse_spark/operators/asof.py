@@ -44,6 +44,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from gapless_deribit_clickhouse_spark.core.barrier import BARRIER_STORAGE
 
+# matched right values come out as ``<value_col>_asof``
+_SUFFIX = "_asof"
+
 
 def _tag_sides(
     left: DataFrame,
@@ -52,7 +55,6 @@ def _tag_sides(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    suffix: str,
     bucket_of,
 ) -> tuple[DataFrame, DataFrame]:
     """Union-ready tagged sides, shared by the directional and nearest
@@ -79,7 +81,7 @@ def _tag_sides(
         F.lit(0).alias("__side"),
         F.struct(
             F.col(right_ts).cast("double").alias("__rts"),
-            *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
+            *[F.col(c).alias(f"{c}{_SUFFIX}") for c in value_cols],
         ).alias("__payload"),
         F.lit(None).cast(row_t).alias("__row"),
         bucket_of(F.col(right_ts)).alias("__bucket"),
@@ -104,13 +106,13 @@ def asof_join(
     right_ts: str = "timestamp",
     value_cols: list[str] | None = None,
     tolerance_seconds: float | None = None,
-    suffix: str = "_asof",
     bucket_seconds: float = 86400.0,
     single_pass: bool = True,
     direction: str = "backward",
 ) -> DataFrame:
     """As-of join (pandas ``merge_asof`` / DuckDB ``ASOF JOIN``
-    semantics): every left row, plus ``value_cols`` from the latest
+    semantics): every left row, plus ``value_cols`` (as
+    ``<value_col>_asof``) from the latest
     right row with ``right_ts <= left_ts`` on the same key (NULLs when
     none exists or it is older than ``tolerance_seconds``).
 
@@ -155,16 +157,16 @@ def asof_join(
     if direction == "nearest":
         return _asof_nearest(
             left, right, on, left_ts, right_ts, value_cols,
-            tolerance_seconds, suffix, bucket_seconds, single_pass,
+            tolerance_seconds, bucket_seconds, single_pass,
         )
-    out_names = [f"{c}{suffix}" for c in value_cols]
+    out_names = [f"{c}{_SUFFIX}" for c in value_cols]
     step = float(bucket_seconds)
     # forward is backward on mirrored time: ordering value, buckets,
     # and the staleness age all carry this one sign
     sign = 1.0 if direction == "backward" else -1.0
 
     l_tag, r_tag = _tag_sides(
-        left, right, on, left_ts, right_ts, value_cols, suffix,
+        left, right, on, left_ts, right_ts, value_cols,
         lambda ts: F.floor(ts.cast("double") * sign / step).cast("long"),
     )
 
@@ -253,7 +255,6 @@ def _asof_nearest(
     right_ts: str,
     value_cols: list[str],
     tolerance_seconds: float | None,
-    suffix: str,
     bucket_seconds: float,
     single_pass: bool,
 ) -> DataFrame:
@@ -280,10 +281,10 @@ def _asof_nearest(
     equal timestamps; the tie then resolves backward at age 0, same
     row either way.
     """
-    out_names = [f"{c}{suffix}" for c in value_cols]
+    out_names = [f"{c}{_SUFFIX}" for c in value_cols]
     step = float(bucket_seconds)
     l_tag, r_tag = _tag_sides(
-        left, right, on, left_ts, right_ts, value_cols, suffix,
+        left, right, on, left_ts, right_ts, value_cols,
         lambda ts: F.floor(ts.cast("double") / step).cast("long"),
     )
 

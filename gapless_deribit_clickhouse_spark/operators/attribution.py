@@ -16,25 +16,20 @@ Spark streams it without buffering the frame.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# the events-table contract: a touch is a view or click, a conversion
+# a purchase; (ts, event_id) is unique per user, so the running frame
+# has no peer ambiguity
+_ORDER = ("ts", "event_id")
+_TOUCH_TYPES = ("view", "click")
+_CONVERT = "purchase"
 
-def attribution_last_touch(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_cols: Sequence[str] = ("ts", "event_id"),
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    convert_type: str = "purchase",
-    touch_types: Sequence[str] = ("view", "click"),
-    lookback_s: float = 3600.0,
-) -> DataFrame:
+
+def attribution_last_touch(df: DataFrame) -> DataFrame:
     """For every conversion event, the most recent PRECEDING touch by
-    the same user, provided it happened within ``lookback_s`` seconds;
+    the same ``user_id``, provided it happened within an hour;
     conversions with no in-window touch keep NULL attribution columns
     (they still appear — unattributed conversions are the metric's
     denominator).
@@ -43,30 +38,28 @@ def attribution_last_touch(
     ignore-nulls ``last`` columns over the SAME window: they are null
     on exactly the same rows, so all three resolve to the same touch
     row — no struct crosses the engine boundary, which keeps the
-    DuckDB oracle a verbatim transliteration. The ordering
-    ``order_cols`` must be unique per user (ts + event id) so the
-    running frame has no peer ambiguity.
+    DuckDB oracle a verbatim transliteration.
     """
     w = (
-        Window.partitionBy(user_col)
-        .orderBy(*order_cols)
+        Window.partitionBy("user_id")
+        .orderBy(*_ORDER)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    is_touch = F.col(type_col).isin(*touch_types)
-    t_ts = F.last(F.when(is_touch, F.col(ts_col)), ignorenulls=True).over(w)
-    t_id = F.last(F.when(is_touch, F.col(id_col)), ignorenulls=True).over(w)
-    t_ty = F.last(F.when(is_touch, F.col(type_col)), ignorenulls=True).over(w)
-    age = F.col(ts_col).cast("double") - F.col("__t_ts").cast("double")
-    within = age <= F.lit(float(lookback_s))
+    is_touch = F.col("event_type").isin(*_TOUCH_TYPES)
+    t_ts = F.last(F.when(is_touch, F.col("ts")), ignorenulls=True).over(w)
+    t_id = F.last(F.when(is_touch, F.col("event_id")), ignorenulls=True).over(w)
+    t_ty = F.last(F.when(is_touch, F.col("event_type")), ignorenulls=True).over(w)
+    age = F.col("ts").cast("double") - F.col("__t_ts").cast("double")
+    within = age <= F.lit(3600.0)
     return (
         df.withColumn("__t_ts", t_ts)
         .withColumn("__t_id", t_id)
         .withColumn("__t_ty", t_ty)
-        .filter(F.col(type_col) == convert_type)
+        .filter(F.col("event_type") == _CONVERT)
         .select(
-            F.col(id_col),
-            F.col(user_col),
-            F.col(ts_col),
+            F.col("event_id"),
+            F.col("user_id"),
+            F.col("ts"),
             F.when(within, F.col("__t_id")).alias("touch_event_id"),
             F.when(within, F.col("__t_ty")).alias("touch_type"),
             F.when(within, age).alias("touch_age_s"),
@@ -74,16 +67,7 @@ def attribution_last_touch(
     )
 
 
-def attribution_first_touch(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_cols: Sequence[str] = ("ts", "event_id"),
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    convert_type: str = "purchase",
-    touch_types: Sequence[str] = ("view", "click"),
-) -> DataFrame:
+def attribution_first_touch(df: DataFrame) -> DataFrame:
     """First-touch credit with EPISODE RESET: each user's stream is
     segmented into episodes ending at a conversion (a running count of
     PRIOR conversions is the episode id), and the conversion is
@@ -97,36 +81,36 @@ def attribution_first_touch(
     frame buffering); the running conversion count ends at 1 PRECEDING
     (the conversion row itself belongs to the episode it closes).
     """
-    w = Window.partitionBy(user_col).orderBy(*order_cols)
+    w = Window.partitionBy("user_id").orderBy(*_ORDER)
     prior_conv = F.coalesce(
-        F.sum((F.col(type_col) == convert_type).cast("long")).over(
+        F.sum((F.col("event_type") == _CONVERT).cast("long")).over(
             w.rowsBetween(Window.unboundedPreceding, -1)
         ),
         F.lit(0),
     )
     seg = df.withColumn("__ep", prior_conv)
     we = (
-        Window.partitionBy(user_col, "__ep")
-        .orderBy(*order_cols)
+        Window.partitionBy("user_id", "__ep")
+        .orderBy(*_ORDER)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    is_touch = F.col(type_col).isin(*touch_types)
-    f_ts = F.first(F.when(is_touch, F.col(ts_col)), ignorenulls=True).over(we)
-    f_id = F.first(F.when(is_touch, F.col(id_col)), ignorenulls=True).over(we)
-    f_ty = F.first(F.when(is_touch, F.col(type_col)), ignorenulls=True).over(we)
+    is_touch = F.col("event_type").isin(*_TOUCH_TYPES)
+    f_ts = F.first(F.when(is_touch, F.col("ts")), ignorenulls=True).over(we)
+    f_id = F.first(F.when(is_touch, F.col("event_id")), ignorenulls=True).over(we)
+    f_ty = F.first(F.when(is_touch, F.col("event_type")), ignorenulls=True).over(we)
     return (
         seg.withColumn("__f_ts", f_ts)
         .withColumn("__f_id", f_id)
         .withColumn("__f_ty", f_ty)
-        .filter(F.col(type_col) == convert_type)
+        .filter(F.col("event_type") == _CONVERT)
         .select(
-            F.col(id_col),
-            F.col(user_col),
-            F.col(ts_col),
+            F.col("event_id"),
+            F.col("user_id"),
+            F.col("ts"),
             F.col("__f_id").alias("touch_event_id"),
             F.col("__f_ty").alias("touch_type"),
             (
-                F.col(ts_col).cast("double") - F.col("__f_ts").cast("double")
+                F.col("ts").cast("double") - F.col("__f_ts").cast("double")
             ).alias("touch_age_s"),
         )
     )

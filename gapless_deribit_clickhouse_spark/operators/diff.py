@@ -29,12 +29,11 @@ def snapshot_diff(
     new: DataFrame,
     keys: list[str],
     compare_cols: list[str] | None = None,
-    change_col: str = "change_type",
 ) -> DataFrame:
     """One row per key whose state differs between ``old`` and ``new``:
     ``insert`` (key only in new), ``delete`` (key only in old),
     ``update`` (in both, any compared column differs — NULL-safe).
-    Output: the key columns, ``change_col``, and every compared column
+    Output: the key columns, ``change_type``, and every compared column
     twice under ``old_`` / ``new_`` prefixes (NULLs on the absent
     side). Unchanged keys are filtered out.
 
@@ -83,11 +82,11 @@ def snapshot_diff(
         .when(F.col("__fp_old") != F.col("__fp_new"), F.lit("update"))
     )
     return (
-        joined.withColumn(change_col, change)
-        .filter(F.col(change_col).isNotNull())
+        joined.withColumn("change_type", change)
+        .filter(F.col("change_type").isNotNull())
         .select(
             *keys,
-            change_col,
+            "change_type",
             *[f"old_{c}" for c in cols],
             *[f"new_{c}" for c in cols],
         )

@@ -37,8 +37,6 @@ def window_funnel(
     df: DataFrame,
     steps: list[Column],
     window: str = "24 hours",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Max funnel level per user (ClickHouse ``windowFunnel`` parity).
 
@@ -49,7 +47,8 @@ def window_funnel(
     every condition it matches, so an event matching steps 1 AND 2
     reaches level 2 there but only level 1 here — with mutually
     exclusive conditions (the common event_type case) the two agree
-    exactly. Returns (user_col, funnel_level) for every user with at
+    exactly. Events carry ``user_id`` and ``ts``. Returns
+    (user_id, funnel_level) for every user with at
     least one matching event — level 0 means the user fired later
     steps but never step 1. A chain must have non-decreasing event
     times and fit entirely inside ``window`` of its first event
@@ -65,12 +64,12 @@ def window_funnel(
         tag = F.when(cond, F.lit(i)) if tag is None else tag.when(cond, F.lit(i))
     evs = (
         df.select(
-            F.col(user_col),
-            F.unix_micros(F.col(ts_col)).alias("t"),
+            F.col("user_id"),
+            F.unix_micros(F.col("ts")).alias("t"),
             tag.alias("s"),
         )
         .filter(F.col("s").isNotNull())
-        .groupBy(user_col)
+        .groupBy("user_id")
         # sort_array on (t, s) structs: ties process lower steps first,
         # so an equal-time step-(k) event can extend a chain through an
         # equal-time step-(k-1) event deterministically
@@ -99,13 +98,12 @@ def window_funnel(
     # reached level is simply the count of non-null chain starts
     state = F.aggregate(F.col("evs"), init, update)
     level = F.size(F.filter(state, lambda x: x.isNotNull()))
-    return evs.select(F.col(user_col), level.alias("funnel_level"))
+    return evs.select(F.col("user_id"), level.alias("funnel_level"))
 
 
 def retention(
     df: DataFrame,
     conds: list[Column],
-    user_col: str = "user_id",
 ) -> DataFrame:
     """ClickHouse ``retention`` parity: per user, flag r1 = condition
     1 ever fired, and r_k (k>1) = condition 1 AND condition k both
@@ -118,8 +116,8 @@ def retention(
         F.max(F.when(c, F.lit(1)).otherwise(F.lit(0))).alias(f"__c{i}")
         for i, c in enumerate(conds, start=1)
     ]
-    per_user = df.groupBy(user_col).agg(*aggs)
-    out_cols = [F.col(user_col), F.col("__c1").alias("r1")]
+    per_user = df.groupBy("user_id").agg(*aggs)
+    out_cols = [F.col("user_id"), F.col("__c1").alias("r1")]
     for i in range(2, len(conds) + 1):
         out_cols.append((F.col("__c1") * F.col(f"__c{i}")).alias(f"r{i}"))
     return per_user.select(*out_cols)
@@ -150,8 +148,6 @@ def sequence_count(
     df: DataFrame,
     first: Column,
     then: Column,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """ClickHouse ``sequenceCount('(?1).*(?2)')`` parity: per user,
     the number of NON-OVERLAPPING "first ... then" occurrences under
@@ -176,14 +172,14 @@ def sequence_count(
 
     tag = F.when(first, F.lit(1)).when(then, F.lit(2))
     evs = df.select(
-        F.col(user_col),
-        F.unix_micros(F.col(ts_col)).alias("t"),
+        F.col("user_id"),
+        F.unix_micros(F.col("ts")).alias("t"),
         tag.alias("s"),
     ).filter(F.col("s").isNotNull())
-    w = Window.partitionBy(user_col).orderBy("t", "s")
+    w = Window.partitionBy("user_id").orderBy("t", "s")
     hit = (F.col("s") == 2) & (F.lag("s").over(w) == 1)
     return (
         evs.withColumn("hit", hit)
-        .groupBy(user_col)
+        .groupBy("user_id")
         .agg(F.sum(F.when(F.col("hit"), 1).otherwise(0)).alias("sequence_count"))
     )

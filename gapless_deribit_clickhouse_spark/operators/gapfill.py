@@ -31,7 +31,6 @@ def fill_time_gaps(
     step_seconds: int,
     keys: list[str] | tuple[str, ...] = (),
     fill_cols: list[str] | tuple[str, ...] = (),
-    gap_col: str = "is_gap",
     interpolate_cols: list[str] | tuple[str, ...] = (),
 ) -> DataFrame:
     """Densify a bucket-aligned time series to its regular grid.
@@ -39,10 +38,10 @@ def fill_time_gaps(
     ``df`` must hold at most one row per (keys, ``ts_col``) with
     ``ts_col`` already truncated to the grid (e.g. a resampler
     output). Emits one row per grid step from each key's min to max
-    bucket: observed rows keep their values VERBATIM (``gap_col`` = 0;
+    bucket: observed rows keep their values VERBATIM (``is_gap`` = 0;
     a legitimately-NULL observed value stays NULL — ClickHouse WITH
     FILL only populates the rows it inserts); inserted rows carry
-    NULLs (``gap_col`` = 1) except ``fill_cols``, which are
+    NULLs (``is_gap`` = 1) except ``fill_cols``, which are
     forward-filled from the most recent non-null observation (an
     inserted row before a key's first observation cannot exist —
     grids start AT the first observation), and ``interpolate_cols``,
@@ -80,7 +79,7 @@ def fill_time_gaps(
     )
     marked = df.withColumn("__present", F.lit(1))
     out = scaffold.join(marked, [*keys, ts_col], "left").withColumn(
-        gap_col,
+        "is_gap",
         F.when(F.col("__present").isNull(), F.lit(1)).otherwise(F.lit(0)),
     )
     if fill_cols or interpolate_cols:
@@ -98,7 +97,7 @@ def fill_time_gaps(
             # last non-null observation.
             out = out.withColumn(
                 c,
-                F.when(F.col(gap_col) == 0, F.col(c)).otherwise(
+                F.when(F.col("is_gap") == 0, F.col(c)).otherwise(
                     F.last(c, ignorenulls=True).over(w_prev)
                 ),
             )
@@ -135,7 +134,7 @@ def fill_time_gaps(
                 frac = (t - prev_t) / (next_t - prev_t)
                 out = out.withColumn(
                     c,
-                    F.when(F.col(gap_col) == 0, F.col(c)).otherwise(
+                    F.when(F.col("is_gap") == 0, F.col(c)).otherwise(
                         prev_v + (next_v - prev_v) * frac
                     ),
                 )

@@ -135,7 +135,6 @@ def rolling_percentile_rank_join(
     keys: Sequence[str],
     lookback_seconds: int,
     min_periods: int = 1,
-    out_col: str = "pct_rank",
 ) -> DataFrame:
     """Declarative twin of ``rolling_percentile_rank``: range self-join
     + conditional count. Used as the oracle shape and for plans where
@@ -158,9 +157,9 @@ def rolling_percentile_rank_join(
     return (
         joined.groupBy(*group_cols)
         .agg(
-            F.when(cnt >= min_periods, 100.0 * leq / cnt).alias(out_col),
+            F.when(cnt >= min_periods, 100.0 * leq / cnt).alias("pct_rank"),
         )
-        .toDF(*df.columns, out_col)
+        .toDF(*df.columns, "pct_rank")
         .drop("__rowtag")
     )
 

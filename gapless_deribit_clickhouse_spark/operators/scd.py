@@ -58,9 +58,7 @@ def scd2_history(
     )
 
 
-def _auto_bucket_seconds(
-    closed_history: DataFrame, valid_from: str, end_col: str
-) -> int:
+def _auto_bucket_seconds(closed_history: DataFrame) -> int:
     """Bucket width for the interval join, derived from the MEASURED
     median validity span (VERDICT r6 #4): a fixed width decouples from
     the data — versions much shorter than the bucket pile every
@@ -78,8 +76,8 @@ def _auto_bucket_seconds(
     reverse)."""
     row = closed_history.agg(
         F.expr(
-            f"approx_percentile(unix_timestamp({end_col}) - "
-            f"unix_timestamp({valid_from}), 0.5)"
+            "approx_percentile(unix_timestamp(__end) - "
+            "unix_timestamp(valid_from), 0.5)"
         ).alias("m")
     ).collect()[0]
     med = row["m"] if row["m"] is not None and row["m"] > 0 else 86400
@@ -92,16 +90,12 @@ def point_in_time_join(
     history: DataFrame,
     ts_col: str,
     keys: Sequence[str],
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    bucket_seconds: int | str = "auto",
-    how: str = "inner",
 ) -> DataFrame:
-    """Leakage-free fact enrichment against an SCD2 history: each fact
-    joins the dimension version valid AT its event time — half-open
-    ``[valid_from, valid_to)`` semantics, so a fact stamped exactly at
-    a change instant sees the NEW version, and zero-duration versions
-    are never observable.
+    """Leakage-free fact enrichment (inner join) against an SCD2
+    history: each fact joins the dimension version valid AT its event
+    time — half-open ``[valid_from, valid_to)`` semantics, so a fact
+    stamped exactly at a change instant sees the NEW version, and
+    zero-duration versions are never observable.
 
     Open (current) intervals are closed at the facts' max timestamp —
     a 1-row scalar broadcast (the bounded-NLJ shape
@@ -110,9 +104,9 @@ def point_in_time_join(
     this delegates to. Cost: one metadata-scale aggregate + the range
     join's one shuffle per side; no fact-fact pairing.
 
-    ``bucket_seconds="auto"`` (default) sizes the join's BASE bucket
-    width from the measured median validity span (power-of-two-rounded;
-    see :func:`_auto_bucket_seconds`) — any width is CORRECT, this
+    The join's BASE bucket width is sized from the measured median
+    validity span (power-of-two-rounded; see
+    :func:`_auto_bucket_seconds`) — any width is CORRECT, this
     bounds the per-bucket candidate fan-out as history density grows.
     The join itself runs the range join in ``multi_resolution`` mode:
     SCD2 histories are exactly the span-skewed shape it exists for
@@ -123,9 +117,7 @@ def point_in_time_join(
     and drops to ~linear with levels. The closed history gets a lazy
     ``localCheckpoint`` barrier first so the SCD2 window chain computes
     once (the median probe and the range join's distinct-level pass
-    both read the materialized rows). Pass an int to pin the base
-    width and skip the median probe (the barrier stays — the
-    multi-resolution join reads the history twice).
+    both read the materialized rows).
     """
     from gapless_deribit_clickhouse_spark.operators.range_join import interval_join
 
@@ -135,23 +127,20 @@ def point_in_time_join(
         .withColumn(
             "__end",
             F.coalesce(
-                F.col(valid_to) - F.expr("INTERVAL 1 MICROSECOND"),
+                F.col("valid_to") - F.expr("INTERVAL 1 MICROSECOND"),
                 F.col("__horizon"),
             ),
         )
         .drop("__horizon")
     )
     closed = closed.localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-    if bucket_seconds == "auto":
-        bucket_seconds = _auto_bucket_seconds(closed, valid_from, "__end")
     return interval_join(
         facts,
         closed,
         ts_col,
-        valid_from,
+        "valid_from",
         "__end",
         on=list(keys),
-        bucket_seconds=int(bucket_seconds),
-        how=how,
+        bucket_seconds=_auto_bucket_seconds(closed),
         multi_resolution=True,
     ).drop("__end")

@@ -42,25 +42,21 @@ def sessionize(
     return df.withColumn("session_seq", F.sum(is_new).over(running))
 
 
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """One row per (user, session): start/end, event count, duration.
+def session_stats(df: DataFrame) -> DataFrame:
+    """One row per (``user_id``, session) of ``ts`` events split at
+    30-minute gaps: start/end, event count, duration.
     Reuses the sessionize shuffle — grouping keys are a superset of
     the window partition key."""
-    s = sessionize(df, user_col, ts_col, gap_seconds)
+    s = sessionize(df, "user_id", "ts", 1800)
     return (
-        s.groupBy(user_col, "session_seq")
+        s.groupBy("user_id", "session_seq")
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
             (
-                F.max(F.col(ts_col).cast("double"))
-                - F.min(F.col(ts_col).cast("double"))
+                F.max(F.col("ts").cast("double"))
+                - F.min(F.col("ts").cast("double"))
             ).alias("duration_s"),
         )
     )
@@ -68,8 +64,6 @@ def session_stats(
 
 def streaming_sessionize(
     stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap: str = "30 minutes",
     watermark_delay: str = "10 minutes",
 ) -> DataFrame:
@@ -77,11 +71,11 @@ def streaming_sessionize(
     watermark-bounded state (a session closes — and emits — once the
     watermark passes its end + gap)."""
     return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("sw"), F.col(user_col))
+        stream.withWatermark("ts", watermark_delay)
+        .groupBy(F.session_window(F.col("ts"), gap).alias("sw"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            user_col,
+            "user_id",
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             "n_events",

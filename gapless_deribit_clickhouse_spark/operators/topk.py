@@ -51,10 +51,9 @@ def topn_per_group(
     group_cols: Sequence[Column | str],
     order: Sequence[Column],
     n: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
     """ClickHouse ``LIMIT n BY group`` parity: the first ``n`` rows per
-    group under ``order``, with their 1-based rank in ``rank_col``.
+    group under ``order``, with their 1-based rank in ``rn``.
 
     Make ``order`` end in a unique tiebreak or the selection is
     nondeterministic under shuffle.  Physical plan: one shuffle on the
@@ -70,6 +69,6 @@ def topn_per_group(
 
     w = Window.partitionBy(*group_cols).orderBy(*order)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= n)
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
     )

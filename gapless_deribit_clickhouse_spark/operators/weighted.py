@@ -21,7 +21,6 @@ def weighted_median_per_group(
     group_cols: Sequence[str],
     value_col: str,
     weight_col: str,
-    out_col: str = "weighted_median",
 ) -> DataFrame:
     """Per group, the smallest value whose cumulative weight reaches
     half the group total (the weighted median), plus the total
@@ -47,7 +46,7 @@ def weighted_median_per_group(
         .filter(2 * F.col("__cum") >= F.col("__total"))
         .groupBy(*gc)
         .agg(
-            F.min(value_col).alias(out_col),
+            F.min(value_col).alias("weighted_median"),
             F.min("__total").cast("bigint").alias("total_weight"),
         )
     )

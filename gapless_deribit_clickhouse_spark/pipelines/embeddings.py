@@ -39,13 +39,6 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    # try_divide: a zero-norm vector yields NULL (dropped by every
-    # downstream threshold/ordering) instead of an ANSI-mode
-    # DIVIDE_BY_ZERO error — and matches the Arrow stages' null mask
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -727,7 +720,7 @@ def quantize_embeddings(
     and engine-portable: max is order-invariant, and round-half-up on
     identical doubles agrees across engines). A zero/empty vector has
     no scale — ``scale`` and ``qvec`` are NULL, the same
-    absent-not-zero convention as ``cosine``'s try_divide. Output:
+    absent-not-zero convention as the cosine paths' try_divide. Output:
     ``id_col``, ``scale``, ``qvec`` (array<tinyint>), ``n_dims``,
     ``max_abs_err`` (max |x - q*scale|, <= scale/2 by construction).
 

@@ -91,10 +91,9 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    format: str = "parquet",
 ) -> None:
-    """Write a bucketed (hash-clustered) catalog table — Spark's
+    """Write (overwrite) a bucketed, hash-clustered parquet catalog
+    table — Spark's
     pre-shuffled layout for co-located joins and aggregations, the
     analogue of the reference's ORDER-BY-keyed MergeTree locality
     (``options_trades.yaml:30``).
@@ -119,7 +118,7 @@ def write_bucketed(
     # content is identical; only file count/parallelism change.
     clustered = df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
     writer = (
-        clustered.write.format(format).mode(mode).bucketBy(num_buckets, *bucket_cols)
+        clustered.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

@@ -84,13 +84,8 @@ class TableSchema:
     def column_names(self) -> tuple[str, ...]:
         return tuple(c.name for c in self.columns)
 
-    def to_struct_type(self, include_partition_derived: bool = False) -> T.StructType:
-        fields = [c.to_field() for c in self.columns]
-        if include_partition_derived:
-            for p in self.partition_by:
-                if p not in self.column_names:
-                    fields.append(T.StructField(p, T.StringType(), nullable=False))
-        return T.StructType(fields)
+    def to_struct_type(self) -> T.StructType:
+        return T.StructType([c.to_field() for c in self.columns])
 
 
 def _parse_column(name: str, spec: dict, required: set[str]) -> ColumnSpec:

@@ -7,7 +7,6 @@ from gapless_deribit_clickhouse_spark.sinks.connector import (
     ClickHouseHTTPConnector,
     ParquetServingConnector,
     ServingConnector,
-    write_jsonl_shards,
     write_stream_to_connector,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "ClickHouseHTTPConnector",
     "ParquetServingConnector",
     "ServingConnector",
-    "write_jsonl_shards",
     "write_stream_to_connector",
 ]

@@ -282,59 +282,18 @@ def rows_to_jsoneachrow(rows: Iterable, cols: list[str]) -> bytes:
     return ("\n".join(out) + "\n").encode() if out else b""
 
 
-def write_jsonl_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    rows_per_shard: int = 100_000,
-    compression: str = "gzip",
-) -> dict:
-    """Training-data delivery: export a frame as N sharded JSONL files
-    with DETERMINISTIC shard membership and line order.
-
-    Shard = ``xxhash64(id) % n_shards`` (the same engine-independent
-    bucketing the samplers use), so re-running the export on the same
-    input reproduces byte-identical shards regardless of upstream
-    partitioning — downstream training jobs can cache/diff by shard.
-    One shuffle keyed by shard, rows sorted by id within each, one
-    file per ``shard=N`` directory. Shard count is ceil(rows /
-    rows_per_shard): sizing is by row count, the knob training loaders
-    actually consume."""
-    if rows_per_shard <= 0:
-        raise ValueError(f"rows_per_shard must be positive, got {rows_per_shard}")
-    n = df.count()
-    n_shards = max(1, -(-n // rows_per_shard))
-    out = df.withColumn(
-        "shard",
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_shards)),
-    )
-    (
-        out.repartition(n_shards, "shard")
-        # sort by (shard, id): the dynamic-partition writer requires
-        # data ordered by its partition columns and would insert its
-        # own UNSTABLE sort by shard alone, destroying the id order;
-        # providing a prefix-satisfying order makes it skip that sort
-        .sortWithinPartitions("shard", id_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .option("compression", compression)
-        .json(path)
-    )
-    return {"n_rows": n, "n_shards": n_shards}
-
-
 def write_stream_to_connector(
     stream: DataFrame,
     connector: ServingConnector,
     checkpoint_path: str,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
-    """Structured Streaming -> serving layer: ``foreachBatch`` hands
-    each epoch to the connector; the connector's batch_id idempotency +
-    the checkpoint's epoch tracking give end-to-end exactly-once."""
-    writer = stream.writeStream.foreachBatch(connector.write_batch).option(
-        "checkpointLocation", checkpoint_path
+    """Structured Streaming -> serving layer, run once over the
+    available input: ``foreachBatch`` hands each epoch to the
+    connector; the connector's batch_id idempotency + the checkpoint's
+    epoch tracking give end-to-end exactly-once."""
+    return (
+        stream.writeStream.foreachBatch(connector.write_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

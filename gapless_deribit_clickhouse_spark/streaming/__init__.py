@@ -1,6 +1,3 @@
-from gapless_deribit_clickhouse_spark.streaming.corpus_ingest import (
-    stream_dedup_ingest,
-)
 from gapless_deribit_clickhouse_spark.streaming.ingest import (
     dedup_stream,
     streaming_ohlc,
@@ -17,7 +14,6 @@ from gapless_deribit_clickhouse_spark.streaming.materialized import (
 __all__ = [
     "dedup_stream",
     "read_rollup_state",
-    "stream_dedup_ingest",
     "stream_stream_enrich",
     "streaming_mergeable_rollup",
     "streaming_ohlc",

@@ -36,70 +36,60 @@ def read_trade_stream(
     )
 
 
-def dedup_stream(
-    stream: DataFrame,
-    ts_col: str = "timestamp",
-    id_col: str = "trade_id",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Late/duplicate handling: events later than the watermark are
-    dropped; duplicates of an id within the watermark window are
-    dropped exactly-once (state is bounded by the delay).
+def dedup_stream(stream: DataFrame, watermark_delay: str = "10 minutes") -> DataFrame:
+    """Late/duplicate handling on ``timestamp``: events later than the
+    watermark are dropped; duplicates of a ``trade_id`` within the
+    watermark window are dropped exactly-once (state is bounded by the
+    delay).
 
     The survivor is the FIRST-ARRIVING version of an id: a later
     re-delivery with a revised row is dropped. FINAL reads
     (``dedup_latest``) and ``compact_table`` keep the LATEST version,
     the greatest (``timestamp``, ``trade_id``), so a stream's output
     can differ from a compacted table's until it is compacted too."""
-    return stream.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
-        [id_col]
+    return stream.withWatermark("timestamp", watermark_delay).dropDuplicatesWithinWatermark(
+        ["trade_id"]
     )
 
 
 def streaming_ohlc(
     stream: DataFrame,
-    ts_col: str = "timestamp",
-    value_col: str = "iv",
-    amount_col: str = "amount",
     keys: tuple[str, ...] = (),
     window: str = "15 minutes",
     watermark_delay: str | None = "10 minutes",
 ) -> DataFrame:
-    """Streaming 15-min bars: watermarked tumbling-window aggregation
-    (append mode emits a bar once the watermark passes its end).
+    """Streaming 15-min ``iv`` bars with ``amount`` volume over
+    ``timestamp``: watermarked tumbling-window aggregation (append mode
+    emits a bar once the watermark passes its end).
 
     Pass ``watermark_delay=None`` when the input is already
     watermarked (e.g. the output of :func:`dedup_stream`) — Spark
     forbids redefining a watermark between chained stateful
     operators, so the upstream's delay carries through.
     """
-    v = F.col(value_col)
+    v, ts = F.col("iv"), F.col("timestamp")
     if watermark_delay is not None:
-        stream = stream.withWatermark(ts_col, watermark_delay)
+        stream = stream.withWatermark("timestamp", watermark_delay)
     return (
-        stream.groupBy(F.window(F.col(ts_col), window).alias("w"), *keys)
+        stream.groupBy(F.window(ts, window).alias("w"), *keys)
         .agg(
             F.max(v).alias("high"),
             F.min(v).alias("low"),
-            F.min_by(v, F.col(ts_col)).alias("open"),
-            F.max_by(v, F.col(ts_col)).alias("close"),
-            F.sum(amount_col).alias("volume"),
+            F.min_by(v, ts).alias("open"),
+            F.max_by(v, ts).alias("close"),
+            F.sum("amount").alias("volume"),
             F.count(v).alias("n_obs"),
         )
         .select(F.col("w.start").alias("bucket_ts"), *keys, "open", "high", "low", "close", "volume", "n_obs")
     )
 
 
-def streaming_gap_monitor(
-    stream: DataFrame,
-    key_col: str = "underlying",
-    ts_col: str = "timestamp",
-    threshold_hours: float = 1.0,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
+def streaming_gap_monitor(stream: DataFrame) -> DataFrame:
     """Continuous gap detection: the streaming-native form of the
     reference's post-hoc ``lead()`` gap report (data_quality.py:48-66,
-    SURVEY §2.9 'gap monitoring').
+    SURVEY §2.9 'gap monitoring'). Per ``underlying``, every gap of
+    more than one hour between consecutive ``timestamp`` values, under
+    a 10-minute watermark.
 
     A custom stateful operator (``applyInPandasWithState``): per key,
     the state carries the last event time seen across micro-batches;
@@ -113,19 +103,19 @@ def streaming_gap_monitor(
 
     out_schema = T.StructType(
         [
-            T.StructField(key_col, T.StringType()),
+            T.StructField("underlying", T.StringType()),
             T.StructField("gap_start", T.TimestampType()),
             T.StructField("gap_end", T.TimestampType()),
             T.StructField("gap_hours", T.DoubleType()),
         ]
     )
     state_schema = T.StructType([T.StructField("last_ts_us", T.LongType())])
-    threshold_us = int(threshold_hours * 3600 * 1_000_000)
+    threshold_us = 3600 * 1_000_000
 
     def detect(key, pdf_iter, state):
         last_us = state.get[0] if state.exists else None
         ts_us = pd.concat(
-            [pdf[ts_col] for pdf in pdf_iter], ignore_index=True
+            [pdf["timestamp"] for pdf in pdf_iter], ignore_index=True
         ).astype("datetime64[us]").astype("int64").sort_values()
         if ts_us.empty:
             return
@@ -145,7 +135,7 @@ def streaming_gap_monitor(
             e = pd.Series(ends, dtype="int64").astype("datetime64[us]")
             yield pd.DataFrame(
                 {
-                    key_col: key[0],
+                    "underlying": key[0],
                     "gap_start": s,
                     "gap_end": e,
                     "gap_hours": (
@@ -159,8 +149,8 @@ def streaming_gap_monitor(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
+        stream.withWatermark("timestamp", "10 minutes")
+        .groupBy("underlying")
         .applyInPandasWithState(
             detect,
             outputStructType=out_schema,
@@ -171,24 +161,17 @@ def streaming_gap_monitor(
     )
 
 
-def streaming_ewma(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    decay: float = 0.9,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
+def streaming_ewma(stream: DataFrame, watermark_delay: str = "10 minutes") -> DataFrame:
     """Streaming RiskMetrics EWMA — the live sibling of the batch
     :func:`features.timeseries.ewma_by_key` fold, as a custom stateful
-    operator (``applyInPandasWithState``): per key, the state carries
-    ``(ewma, n, last_ts_us)`` across micro-batches; each batch folds
-    its rows in ``(ts)`` order on top of the stored accumulator and
-    emits ONE updated row per key.
+    operator (``applyInPandasWithState``): per ``user_id``, the state
+    carries ``(ewma, n, last_ts_us)`` across micro-batches; each batch
+    folds its ``value`` rows in ``ts`` order on top of the stored
+    accumulator and emits ONE updated row per key.
 
     Semantics match the batch fold exactly: the first observation ever
-    seen seeds the accumulator, then ``s = s * decay + x * (1 -
-    decay)`` left-to-right — so a streaming run over N batches equals
+    seen seeds the accumulator, then ``s = s * 0.9 + x * 0.1``
+    left-to-right — so a streaming run over N batches equals
     one batch run over the concatenation (pinned in pytest).
 
     State is three scalars per key — O(cardinality(key)), not O(rows).
@@ -206,7 +189,7 @@ def streaming_ewma(
     # while the batch sibling ewma_by_key is type-generic)
     out_schema = T.StructType(
         [
-            T.StructField(key_col, stream.schema[key_col].dataType),
+            T.StructField("user_id", stream.schema["user_id"].dataType),
             T.StructField("n_events", T.LongType()),
             T.StructField("n_late", T.LongType()),
             T.StructField("ewma_value", T.DoubleType()),
@@ -219,6 +202,7 @@ def streaming_ewma(
             T.StructField("last_ts_us", T.LongType()),
         ]
     )
+    decay = 0.9
     alpha = 1.0 - decay
 
     def fold(key, pdf_iter, state):
@@ -226,11 +210,9 @@ def streaming_ewma(
         pdf = pd.concat(list(pdf_iter), ignore_index=True)
         if pdf.empty:
             return
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
-        ts_us = (
-            pdf[ts_col].astype("datetime64[us]").astype("int64").to_numpy()
-        )
-        vals = pdf[value_col].astype("float64").to_numpy()
+        pdf = pdf.sort_values("ts", kind="mergesort")
+        ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+        vals = pdf["value"].astype("float64").to_numpy()
         n_late = 0
         for t_us, x in zip(ts_us, vals):
             if last_us is not None and t_us <= last_us:
@@ -242,7 +224,7 @@ def streaming_ewma(
         state.update((ewma, n, last_us if last_us is not None else -1))
         yield pd.DataFrame(
             {
-                key_col: [key[0]],
+                "user_id": [key[0]],
                 "n_events": [n],
                 "n_late": [n_late],
                 "ewma_value": [ewma],
@@ -252,8 +234,8 @@ def streaming_ewma(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
+        stream.withWatermark("ts", watermark_delay)
+        .groupBy("user_id")
         .applyInPandasWithState(
             fold,
             outputStructType=out_schema,
@@ -265,16 +247,11 @@ def streaming_ewma(
 
 
 def write_stream_idempotent(
-    stream: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    trigger_once: bool = True,
+    stream: DataFrame, output_path: str, checkpoint_path: str
 ) -> StreamingQuery:
-    """Exactly-once sink: a ``ParquetServingConnector`` writes each
-    micro-batch into its own ``batch_id`` partition with dynamic
-    partition overwrite — a replayed epoch overwrites itself instead of
-    appending twice (the Delta txnAppId/txnVersion pattern on plain
-    parquet)."""
-    return write_stream_to_connector(
-        stream, ParquetServingConnector(output_path), checkpoint_path, trigger_once
-    )
+    """Exactly-once sink, run once over the available input: a
+    ``ParquetServingConnector`` writes each micro-batch into its own
+    ``batch_id`` partition with dynamic partition overwrite — a
+    replayed epoch overwrites itself instead of appending twice (the
+    Delta txnAppId/txnVersion pattern on plain parquet)."""
+    return write_stream_to_connector(stream, ParquetServingConnector(output_path), checkpoint_path)

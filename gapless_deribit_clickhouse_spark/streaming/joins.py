@@ -15,9 +15,8 @@ Spark semantics that make this safe unattended:
   O(rate x (watermark + tolerance)) per key, never unbounded.
 - The runtime partitions both sides by the equi-join key: each
   executor's symmetric hash join sees only its keys' rows. At 100 TB/
-  day this scales horizontally with `spark.sql.shuffle.partitions`;
-  skewed underlyings shard the same way the batch tier's salted agg
-  does (state keyed by (key, partition)).
+  day this scales horizontally with `spark.sql.shuffle.partitions`
+  (state keyed by (key, partition)).
 - ``how='leftOuter'`` emits unmatched trades with NULL spot columns
   once the watermark proves no matching spot can arrive — the
   streaming equivalent of the batch enrich's coalesce-to-NULL path.
@@ -32,49 +31,39 @@ from pyspark.sql import functions as F
 def stream_stream_enrich(
     trades: DataFrame,
     spots: DataFrame,
-    on: str = "underlying",
-    trade_ts: str = "ts",
-    spot_ts: str = "spot_ts",
     tolerance: str = "60 seconds",
     watermark: str = "2 minutes",
     how: str = "inner",
 ) -> DataFrame:
-    """Join two streams: each trade pairs with every spot quote for
-    the same ``on`` key whose timestamp falls in
-    ``[trade_ts - tolerance, trade_ts]`` (never a FUTURE quote —
+    """Join two streams: each trade (``underlying``, ``ts``) pairs with
+    every spot quote (``underlying``, ``spot_ts``) for the same
+    underlying whose ``spot_ts`` falls in ``[ts - tolerance, ts]`` (never a FUTURE quote —
     leakage-free, like the batch as-of join).
 
     Returns the trade columns plus the spot side's non-key columns and
-    ``spot_age_s`` (trade_ts - spot_ts in fractional seconds). A trade
+    ``spot_age_s`` (ts - spot_ts in fractional seconds). A trade
     may match several quotes inside the tolerance; keep all (quote
     density analysis) or reduce downstream — chained stateful
     aggregation is supported, or land pairs and take the batch-tier
     ``min_by(spot_age_s)`` per trade in ``foreachBatch``.
     """
-    t = trades.withWatermark(trade_ts, watermark)
-    s = spots.withWatermark(spot_ts, watermark).withColumnRenamed(on, "__spot_key")
+    t = trades.withWatermark("ts", watermark)
+    s = spots.withWatermark("spot_ts", watermark).withColumnRenamed("underlying", "__spot_key")
     cond = (
-        (F.col(on) == F.col("__spot_key"))
-        & (F.col(spot_ts) >= F.col(trade_ts) - F.expr(f"INTERVAL {tolerance}"))
-        & (F.col(spot_ts) <= F.col(trade_ts))
+        (F.col("underlying") == F.col("__spot_key"))
+        & (F.col("spot_ts") >= F.col("ts") - F.expr(f"INTERVAL {tolerance}"))
+        & (F.col("spot_ts") <= F.col("ts"))
     )
     joined = t.join(s, cond, how)
-    age = (
-        F.col(trade_ts).cast("double") - F.col(spot_ts).cast("double")
-    ).alias("spot_age_s")
+    age = (F.col("ts").cast("double") - F.col("spot_ts").cast("double")).alias("spot_age_s")
     return joined.drop("__spot_key").withColumn("spot_age_s", age)
 
 
-def stream_static_enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str = "underlying",
-    how: str = "left",
-) -> DataFrame:
-    """Enrich a live stream against a STATIC dimension table — the
-    streaming sibling of the batch broadcast enrich
-    (`features/spot_provider.py` J1/J2): stateless, no watermark, no
-    state store.
+def stream_static_enrich(stream: DataFrame, dim: DataFrame) -> DataFrame:
+    """Left-join a live stream to a STATIC dimension table on
+    ``underlying`` — the streaming sibling of the batch broadcast
+    enrich (`features/spot_provider.py` J1/J2): stateless, no
+    watermark, no state store.
 
     Spark re-binds the static side per micro-batch, so a dimension
     stored as parquet picks up slowly-changing refreshes between
@@ -85,4 +74,4 @@ def stream_static_enrich(
     small side by construction, and no shuffle of the stream ever
     happens — each micro-batch's tasks join locally.
     """
-    return stream.join(F.broadcast(dim), on, how)
+    return stream.join(F.broadcast(dim), "underlying", "left")

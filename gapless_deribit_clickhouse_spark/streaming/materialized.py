@@ -34,6 +34,7 @@ from gapless_deribit_clickhouse_spark.operators.merge_rollup import (
     merge_rollup,
     partial_rollup,
 )
+from gapless_deribit_clickhouse_spark.sinks.connector import ParquetServingConnector
 
 
 def _is_missing_path(exc: Exception) -> bool:
@@ -74,7 +75,10 @@ def rollup_state_sink(
     """Build the foreachBatch sink closure (exposed for direct replay
     testing). The merged state is materialized with an EAGER
     localCheckpoint before writing: its plan reads the state table the
-    write is about to add a partition to."""
+    write is about to add a partition to. Each version is written
+    through ``ParquetServingConnector``, the package's one
+    ``batch_id``-idempotent write."""
+    target = ParquetServingConnector(state_path)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -84,13 +88,7 @@ def rollup_state_sink(
         prev = _latest_version_before(spark, state_path, batch_id)
         states = [part] if prev is None else [prev, part]
         merged = merge_rollup(states, keys).localCheckpoint(eager=True, storageLevel=BARRIER_STORAGE)
-        (
-            merged.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_path)
-        )
+        target.write_batch(merged, batch_id)
 
     return sink
 

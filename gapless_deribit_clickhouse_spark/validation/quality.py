@@ -22,16 +22,11 @@ from pyspark.sql import functions as F
 from gapless_deribit_clickhouse_spark.functions.conditional import count_if
 
 
-def quality_metrics(
-    df: DataFrame,
-    id_col: str = "trade_id",
-    ts_col: str = "timestamp",
-    null_rate_cols: tuple[str, ...] = ("iv", "index_price"),
-    approx_distinct: bool = False,
-) -> DataFrame:
+def quality_metrics(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     """One-row global quality aggregate (reference data_quality.py:30-45):
-    total rows, exact distinct ids, dedup rate, time span, null-or-zero
-    counts per monitored column, rows per hour.
+    total rows, exact distinct ``trade_id``s, dedup rate, ``timestamp``
+    span, null-or-zero rates of ``iv`` and ``index_price``, rows per
+    hour.
 
     ``approx_distinct=True`` swaps exact ``countDistinct`` (which
     inserts an Expand + second shuffle keyed by the id — the one
@@ -41,23 +36,23 @@ def quality_metrics(
     default."""
     n = F.count(F.lit(1))
     uniq = (
-        F.approx_count_distinct(F.col(id_col))
+        F.approx_count_distinct(F.col("trade_id"))
         if approx_distinct
-        else F.countDistinct(F.col(id_col))
+        else F.countDistinct(F.col("trade_id"))
     )
     span_hours = (
-        F.max(ts_col).cast("long") - F.min(ts_col).cast("long")
+        F.max("timestamp").cast("long") - F.min("timestamp").cast("long")
     ).cast("double") / 3600.0
     aggs = [
         n.alias("total_rows"),
         uniq.alias("unique_ids"),
         (uniq.cast("double") / n).alias("dedup_rate"),
-        F.min(ts_col).alias("min_ts"),
-        F.max(ts_col).alias("max_ts"),
+        F.min("timestamp").alias("min_ts"),
+        F.max("timestamp").alias("max_ts"),
         span_hours.alias("span_hours"),
         (n.cast("double") / F.greatest(span_hours, F.lit(1e-9))).alias("rows_per_hour"),
     ]
-    for c in null_rate_cols:
+    for c in ("iv", "index_price"):
         bad = count_if(F.col(c).isNull() | (F.col(c) == 0))
         aggs.append((bad.cast("double") / n).alias(f"{c}_null_or_zero_rate"))
     return df.agg(*aggs)
@@ -79,10 +74,9 @@ def gap_analysis(
     ts_col: str = "timestamp",
     group_cols: tuple[str, ...] = (),
     threshold_hours: float = 1.0,
-    top_n: int = 100,
     bucket_seconds: float = 86400.0,
 ) -> DataFrame:
-    """Top-N inter-row gaps exceeding ``threshold_hours`` (reference
+    """Top-100 inter-row gaps exceeding ``threshold_hours`` (reference
     data_quality.py:48-66): lead(ts) per group, gap in hours, DESC
     limit. Output: group cols + gap_start, gap_end, gap_hours.
 
@@ -118,4 +112,4 @@ def gap_analysis(
         .filter(F.col("gap_hours") > threshold_hours)
         .select(*group_cols, F.col(ts_col).alias("gap_start"), "gap_end", "gap_hours")
     )
-    return out.orderBy(F.col("gap_hours").desc(), F.col("gap_start")).limit(top_n)
+    return out.orderBy(F.col("gap_hours").desc(), F.col("gap_start")).limit(100)

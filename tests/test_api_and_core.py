@@ -46,6 +46,11 @@ def test_fetch_requires_a_bound(trades_df):
         fetch_trades(trades_df, expiry="27DEC24", limit=1)
 
 
+def test_fetch_rejects_unparseable_timestamp(trades_df):
+    with pytest.raises(QueryError, match="unparseable timestamp"):
+        fetch_trades(trades_df, start="yesterday")
+
+
 def test_fetch_desc_order_and_limit(trades_df):
     out = fetch_trades(trades_df, underlying="BTC", limit=10).toPandas()
     assert len(out) == 10
@@ -310,6 +315,13 @@ def test_parse_invalid_inputs():
             parse_instrument(bad)
 
 
+def test_parse_rejects_impossible_date():
+    # well-formed name, real month, but no 31 February
+    assert not is_valid_instrument("BTC-31FEB25-100000-C")
+    with pytest.raises(InstrumentParseError, match="invalid date"):
+        parse_instrument("BTC-31FEB25-100000-C")
+
+
 def test_column_parser_matches_scalar(spark):
     names = ["BTC-27DEC24-100000-C", "ETH-7MAR25-3000-P", "garbage", "BTC-1JAN25-50000-P"]
     df = spark.createDataFrame([(n,) for n in names], "instrument_name string")
@@ -401,9 +413,7 @@ def test_ensure_spot_dictionary_probe(spark, tmp_path):
     assert ensure_spot_dictionary(spark, table="__spot_probe__", path=p)
     assert spark.catalog.tableExists("__spot_probe__")  # now registered
     assert ensure_spot_dictionary(spark, table="__spot_probe__")
-    assert not ensure_spot_dictionary(
-        spark, table="__nope__", path=str(tmp_path / "missing"), auto_create=True
-    )
+    assert not ensure_spot_dictionary(spark, table="__nope__", path=str(tmp_path / "missing"))
     spark.catalog.dropTempView("__spot_probe__")
 
 

@@ -52,7 +52,7 @@ def test_irregular_series_rejected():
 
 def test_auto_select_picks_best():
     s = make_regular_iv_series(n=300)
-    best = auto_select_egarch(s.iv_close, s.ts, criterion="aic")
+    best = auto_select_egarch(s.iv_close, s.ts)
     base = fit_egarch(s.iv_close, s.ts, p=1, q=1)
     assert best.aic <= base.aic + 1e-6
 
@@ -265,7 +265,7 @@ def test_loglik_by_group_matches_kernel(spark):
     got = {
         row["grp"]: row["neg_loglik"]
         for row in loglik_by_group(
-            df, keys=["grp"], order_col="idx", value_col="r100", theta=theta
+            df, keys=["grp"], order_col="idx", theta=theta
         ).collect()
     }
     for g in ("a", "b"):
@@ -292,7 +292,7 @@ def test_loglik_by_group_int_keys(spark):
         rows += [(g, i, float(v)) for i, v in enumerate(r)]
     df = spark.createDataFrame(rows, "grp int, idx int, r100 double")
     out = loglik_by_group(
-        df, keys=["grp"], order_col="idx", value_col="r100", theta=theta
+        df, keys=["grp"], order_col="idx", theta=theta
     )
     assert dict(out.dtypes)["grp"] == "int"
     got = {row["grp"]: row["neg_loglik"] for row in out.collect()}
@@ -312,7 +312,7 @@ def test_egarch_params_by_group_int_keys(spark):
     vals = np.exp(np.cumsum(rng.normal(0, 0.01, 150))) + 1.0
     rows = [(5, i, float(v)) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "grp int, ts int, iv_close double")
-    out = egarch_params_by_group(df, keys=["grp"], ts_col="ts")
+    out = egarch_params_by_group(df, keys=["grp"])
     assert dict(out.dtypes)["grp"] == "int"
     row = out.collect()[0]
     assert row["grp"] == 5 and row["error"] is None
@@ -341,8 +341,7 @@ def test_loglik_by_group_param_sets_and_guard(spark):
             df,
             keys=["grp"],
             order_col="idx",
-            value_col="r100",
-            param_sets={"smooth": smooth, "guard": guard},
+                param_sets={"smooth": smooth, "guard": guard},
         ).collect()
     }
     expected = float(_neg_loglik(np.asarray(smooth), r, 1, 1))
@@ -395,7 +394,7 @@ def test_nelder_mead_step_matches_optimizer_first_iteration(spark):
     rows = [("g", i, float(v)) for i, v in enumerate(r)]
     df = spark.createDataFrame(rows, "grp string, idx int, r100 double")
     got = nelder_mead_step_by_group(
-        df, keys=["grp"], order_col="idx", value_col="r100", simplex=sim0
+        df, keys=["grp"], order_col="idx", simplex=sim0
     ).collect()[0]
 
     assert got["action"] == exp_action
@@ -536,7 +535,7 @@ def test_nelder_mead_loop_equals_chained_oracled_steps(spark):
         order = np.argsort(fval, kind="stable")
         sim = sim[order]
         row = nelder_mead_step_by_group(
-            df, keys=["grp"], order_col="idx", value_col="r100", simplex=sim
+            df, keys=["grp"], order_col="idx", simplex=sim
         ).collect()[0]
         actions.append(row["action"])
         if row["action"] == "shrink":

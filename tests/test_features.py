@@ -25,6 +25,12 @@ from gapless_deribit_clickhouse_spark.features import (
     term_structure_slope,
     with_greeks,
 )
+from gapless_deribit_clickhouse_spark.exceptions import ConfigurationError, QueryError
+from gapless_deribit_clickhouse_spark.features.config import (
+    CONSERVATIVE,
+    FeatureConfig,
+    get_preset,
+)
 from gapless_deribit_clickhouse_spark.features.moneyness import moneyness_bucket_col
 
 
@@ -324,10 +330,12 @@ def test_greeks_invalid_inputs_null(spark):
     assert g.delta.isna().all() and g.gamma.isna().all()
 
 
-def test_feature_config_reference_parity():
+def test_feature_config_reference_parity(spark):
     """Pin the defaults to the reference's FeatureConfig
     (reference features/config.py:63-94): 6-bucket DTE set incl. the
-    split (8,14)/(15,30), 90-day IV lookback, 2% risk-free rate."""
+    split (8,14)/(15,30), 90-day IV lookback, 2% risk-free rate — and
+    check that ``with_greeks`` reads its discount rate and year length
+    from the config it is given."""
     from gapless_deribit_clickhouse_spark.features.config import DEFAULT
 
     assert DEFAULT.dte_buckets == (
@@ -339,16 +347,68 @@ def test_feature_config_reference_parity():
     assert DEFAULT.min_volume == 10.0
     assert DEFAULT.moneyness_thresholds == (0.90, 0.95, 1.05, 1.10)
     assert DEFAULT.near_dte_max == 30 and DEFAULT.far_dte_min == 60
-    # greeks default rate follows the config constant
-    import inspect
+    # one ATM call two weeks from expiry, priced under two configs
+    import math
 
-    from gapless_deribit_clickhouse_spark.functions.blackscholes import (
-        greeks_sql_exprs,
-        with_greeks,
+    df = spark.createDataFrame(
+        [("C", 100000.0, 0.8, 5000.0, 100000.0)],
+        "option_type string, strike double, iv double, price double, spot_price double",
+    ).selectExpr(
+        "*", "TIMESTAMP'2024-06-01 00:00:00' AS timestamp", "DATE'2024-06-15' AS expiry"
     )
 
-    assert inspect.signature(with_greeks).parameters["rate"].default == 0.02
-    assert inspect.signature(greeks_sql_exprs).parameters["rate"].default == 0.02
+    def norm_cdf(x):
+        return 0.5 * (1.0 + math.erf(x / math.sqrt(2.0)))
+
+    custom = FeatureConfig(risk_free_rate=0.10, year_seconds=365.0 * 86400.0)
+    for cfg in (DEFAULT, custom):
+        got = with_greeks(df, config=cfg).first()
+        t = 14 * 86400.0 / cfg.year_seconds
+        r, s, k, iv = cfg.risk_free_rate, 100000.0, 100000.0, 0.8
+        d1 = (math.log(s / k) + (r + iv * iv / 2.0) * t) / (iv * math.sqrt(t))
+        d2 = d1 - iv * math.sqrt(t)
+        pdf_d1 = math.exp(-d1 * d1 / 2.0) / math.sqrt(2.0 * math.pi)
+        theta = (-(s * pdf_d1 * iv) / (2.0 * math.sqrt(t))
+                 - r * k * math.exp(-r * t) * norm_cdf(d2)) / 365.25
+        assert got.t_years == pytest.approx(t, rel=1e-12)
+        assert got.delta == pytest.approx(norm_cdf(d1), abs=1e-6)
+        assert got.theta == pytest.approx(theta, rel=1e-5)
+
+
+def test_feature_config_rejects_invalid_values():
+    with pytest.raises(ConfigurationError, match="resample_seconds"):
+        FeatureConfig(resample_seconds=0)
+    with pytest.raises(ConfigurationError, match="atm_width"):
+        FeatureConfig(atm_width=1.0)
+    with pytest.raises(ConfigurationError, match="moneyness_thresholds"):
+        FeatureConfig(moneyness_thresholds=(1.10, 1.05, 0.95, 0.90))
+
+
+def test_get_preset_unknown_name():
+    assert get_preset("conservative") is CONSERVATIVE
+    with pytest.raises(ConfigurationError, match="unknown preset"):
+        get_preset("aggressive")
+
+
+def test_select_contracts_unknown_strategy(trades_df):
+    with pytest.raises(QueryError, match="unknown strategy"):
+        select_contracts(trades_df, "back_month")
+
+
+def test_pcr_rejects_unknown_method(multi_dte_trades):
+    with pytest.raises(ValueError, match="method"):
+        pcr_by_tenor(multi_dte_trades, method="notional")
+
+
+def test_enrichers_refuse_column_clash(spark, trades_df, spot_pdf):
+    """Both enrichers append columns with ``select("*", ...)``; an input
+    that already carries one of them fails instead of duplicating it."""
+    spot = spark.createDataFrame(spot_pdf)
+    with pytest.raises(ValueError, match="moneyness"):
+        enrich_with_spot(trades_df.withColumn("moneyness", F.lit(1.0)), spot)
+    priced = trades_df.withColumn("spot_price", F.col("index_price"))
+    with pytest.raises(ValueError, match="delta"):
+        with_greeks(priced.withColumn("delta", F.lit(0.0)))
 
 
 def test_rolling_percentile_numeric_epoch_and_ties(spark):

@@ -186,7 +186,7 @@ def test_attribution_last_touch_planted(spark):
     )
     got = {
         r["event_id"]: r
-        for r in attribution_last_touch(ev, lookback_s=3600.0).collect()
+        for r in attribution_last_touch(ev).collect()
     }
     assert set(got) == {12, 21, 31}  # every purchase appears
     assert got[12]["touch_event_id"] == 11

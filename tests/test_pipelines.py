@@ -802,7 +802,7 @@ def test_sessionize_gap_splits(spark):
     s = sessionize(ev, gap_seconds=1800).toPandas()
     u1 = s[s.user_id == 1].sort_values("ts")
     assert u1.session_seq.tolist() == [1, 1, 2]
-    stats = session_stats(ev, gap_seconds=1800).toPandas()
+    stats = session_stats(ev).toPandas()
     assert len(stats) == 3
     u2 = stats[(stats.user_id == 2)]
     assert u2.n_events.tolist() == [2] and u2.duration_s.tolist() == [29 * 60.0]
@@ -978,37 +978,6 @@ def test_contamination_check_flags_overlap(spark):
     # doc 1 has 7 distinct trigrams; 4 appear in the benchmark sentence
     assert row.n_grams == 7 and row.n_matched == 4
     assert abs(row.contamination_frac - 4 / 7) < 1e-12
-
-
-def test_salted_agg_matches_plain_groupby(spark):
-    from gapless_deribit_clickhouse_spark.operators.skew import salted_agg
-
-    # heavily skewed: key 'hot' has 10k rows, others 10
-    rows = [("hot", i % 7, float(i)) for i in range(10_000)] + [
-        (f"k{j}", j, float(j)) for j in range(10)
-    ]
-    df = spark.createDataFrame(rows, "k string, v long, x double").repartition(16)
-    got = (
-        salted_agg(
-            df, ["k"],
-            {"total": ("sum", "x"), "n": ("count", "v"),
-             "lo": ("min", "x"), "hi": ("max", "x")},
-        )
-        .toPandas().sort_values("k").reset_index(drop=True)
-    )
-    want = (
-        df.groupBy("k")
-        .agg(
-            F.sum("x").alias("total"), F.count("v").alias("n"),
-            F.min("x").alias("lo"), F.max("x").alias("hi"),
-        )
-        .toPandas().sort_values("k").reset_index(drop=True)
-    )
-    assert got.equals(want)
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        salted_agg(df, ["k"], {"bad": ("avg", "x")})
 
 
 def test_hashed_linear_score_edges(spark):

@@ -67,6 +67,24 @@ def test_feature_surface_exports():
         assert hasattr(features, name), name
 
 
+def test_blackscholes_imports_before_features():
+    """``functions.blackscholes`` reads ``features.config``, and
+    ``features`` re-exports the Greeks: importing blackscholes first, in
+    a fresh interpreter, must not hit a circular import."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import gapless_deribit_clickhouse_spark.functions.blackscholes as bs\n"
+        "from gapless_deribit_clickhouse_spark import features\n"
+        "assert features.with_greeks is bs.with_greeks\n"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code], check=True, cwd=Path(__file__).resolve().parents[1]
+    )
+
+
 def test_format_validation_report_sections():
     text = format_validation_report(
         drifts=[],

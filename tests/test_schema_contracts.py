@@ -135,6 +135,34 @@ def test_unknown_schema_raises():
         load_schema("nonexistent_table")
 
 
+_COLUMN_A = "properties:\n  a:\n    type: string\n    x-spark: {type: string}\n"
+
+
+@pytest.mark.parametrize(
+    "text,match",
+    [
+        ("type: object\nproperties: [a\n", "invalid YAML"),
+        ("type: object\nproperties: {}\n", "no properties"),
+        ("type: object\n" + _COLUMN_A + "required: [a, b]\n", "required columns not declared"),
+    ],
+    ids=["invalid_yaml", "no_properties", "undeclared_required"],
+)
+def test_malformed_schema_file_raises(tmp_path, text, match):
+    path = tmp_path / "broken.yaml"
+    path.write_text(text)
+    with pytest.raises(SchemaError, match=match):
+        load_schema(path)
+
+
+def test_unknown_spark_type_raises(tmp_path):
+    path = tmp_path / "money.yaml"
+    path.write_text(
+        "type: object\nproperties:\n  a:\n    type: string\n    x-spark: {type: money}\n"
+    )
+    with pytest.raises(SchemaError, match="unknown x-spark type"):
+        load_schema(path).to_struct_type()
+
+
 def test_writer_layout_roundtrip(spark, tmp_path, trades_schema):
     """write_table partitions by (underlying, trade_month) and the
     read-back survives a drift check (partition cols directory-encoded)."""

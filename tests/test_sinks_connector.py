@@ -174,41 +174,6 @@ def test_clickhouse_write_batch_rejects_underivable_partition(spark):
         conn.write_batch(df, batch_id=0)
 
 
-def test_write_jsonl_shards_deterministic(spark, tmp_path):
-    """Sharded JSONL export: row-count sizing, byte-identical shards
-    across runs regardless of input partitioning, gzip files readable
-    back with nothing lost."""
-    import glob
-    import gzip
-
-    from gapless_deribit_clickhouse_spark.sinks import write_jsonl_shards
-
-    df = spark.range(250).select(
-        F.col("id").alias("doc_id"), F.concat(F.lit("t"), F.col("id")).alias("text")
-    )
-    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
-    stats = write_jsonl_shards(df, out_a, "doc_id", rows_per_shard=100)
-    assert stats == {"n_rows": 250, "n_shards": 3}
-    write_jsonl_shards(df.repartition(17), out_b, "doc_id", rows_per_shard=100)
-
-    def shard_bytes(root):
-        shards = {}
-        for f in sorted(glob.glob(f"{root}/shard=*/*.json.gz")):
-            shard = f.split("shard=")[1].split("/")[0]
-            shards.setdefault(shard, b"")
-            with gzip.open(f, "rb") as fh:
-                shards[shard] += fh.read()
-        return shards
-
-    a, b = shard_bytes(out_a), shard_bytes(out_b)
-    assert set(a) == {"0", "1", "2"} and a == b
-    back = spark.read.json(out_a)
-    assert back.count() == 250
-    assert back.select("doc_id").distinct().count() == 250
-    with pytest.raises(ValueError):
-        write_jsonl_shards(df, str(tmp_path / "c"), "doc_id", rows_per_shard=0)
-
-
 def test_write_batch_requires_ensure_table(spark):
     conn = ClickHouseHTTPConnector(transport=lambda u, b, h: 200)
     with pytest.raises(RuntimeError):
