@@ -15,9 +15,9 @@ buried by an async JVM stack trace):
 1. fd 2 is redirected to a log file BEFORE the JVM starts — JVM log
    output physically cannot reach the driver's combined capture; the
    log's tail (and a cleanliness verdict) is preserved in the sidecar.
-2. Streams are stopped gracefully (stop + awaitTermination, explicit
-   scratch checkpoints), logging is quiesced, and ``spark.stop()``
-   completes BEFORE any result line is printed.
+2. Any straggler stream is stopped (stop + awaitTermination),
+   logging is quiesced, and ``spark.stop()`` completes BEFORE any
+   result line is printed.
 3. The headline is duplicated into ``BENCH_HEADLINE.json`` so even a
    mangled capture leaves a recoverable artifact.
 
@@ -44,10 +44,6 @@ Methodology:
   clustered saveAsTable) and ``compact_table`` (ReplacingMergeTree
   OPTIMIZE parity) are timed as first-class headline entries on the
   sf lineitem table — an ETL engine's headline includes the write.
-- Streaming coverage (VERDICT r3 #7): rate-source throughput of
-  ``streaming_sessionize`` (merging session windows),
-  ``streaming_ohlc`` and ``dedup_stream`` (rows/s over a fixed wall
-  window) is reported in the sidecar, not the batch total.
 """
 
 from __future__ import annotations
@@ -542,401 +538,6 @@ def _write_bench_fns(spark, sf_dir: str, scratch: str):
     ]
 
 
-def _sketch_bench(spark, sf_dir: str) -> dict[str, float]:
-    """Exact vs sketch percentiles on the same grouped data: exact
-    ``percentile`` sorts each group; ``approx_percentile`` (accuracy
-    10000) merges t-digest-style partials map-side — the shape that
-    stays bounded when a group is 10^9 rows. Reports min-of-2 wall
-    seconds each and the sketch's worst relative error vs exact."""
-    from pyspark.sql import functions as F
-
-    ev = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        .filter(F.col("value").isNotNull())
-        .select("event_type", "value")
-    )
-    pcts = "array(0.25D, 0.5D, 0.75D, 0.9D)"
-    exact_expr = F.expr(f"percentile(value, {pcts})").alias("p")
-    approx_expr = F.expr(f"approx_percentile(value, {pcts}, 10000)").alias("p")
-
-    def timed(expr) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            ev.groupBy("event_type").agg(expr).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    ev.groupBy("event_type").agg(exact_expr).collect()  # warm exact
-    ev.groupBy("event_type").agg(approx_expr).collect()  # warm approx
-    exact_sec = timed(exact_expr)
-    approx_sec = timed(approx_expr)
-    ex = {r["event_type"]: r["p"] for r in ev.groupBy("event_type").agg(exact_expr).collect()}
-    ap = {r["event_type"]: r["p"] for r in ev.groupBy("event_type").agg(approx_expr).collect()}
-    worst = 0.0
-    for k, evs in ex.items():
-        for a, b in zip(evs, ap[k]):
-            if a:
-                worst = max(worst, abs(a - b) / abs(a))
-    return {
-        "exact_percentile_sec": round(exact_sec, 3),
-        "approx_percentile_sec": round(approx_sec, 3),
-        "worst_rel_err": round(worst, 6),
-    }
-
-
-def _indexed_dedup_bench(spark, sf_dir: str, scratch: str) -> dict[str, float]:
-    """Steady-state dedup evidence (VERDICT r5 #5): the same
-    corpus/batch split as the ``incremental_dedup`` headline entry,
-    but the corpus artifacts are built ONCE (``build_dedup_index``,
-    the amortized one-time cost) and the batch runs
-    ``incremental_dedup_indexed`` against the parquet index — the
-    per-batch number to compare against ``incremental_dedup``'s
-    recompute-everything timing in the headline."""
-    from pyspark.sql import functions as F
-
-    from gapless_deribit_clickhouse_spark.bindings.llm_ops import (
-        _DEDUP_THRESHOLD,
-        _docs,
-    )
-    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
-        build_dedup_index,
-        incremental_dedup_indexed,
-    )
-
-    docs = _docs(spark, sf_dir)
-    corpus = docs.filter(F.col("doc_id") % 5 < 3)
-    batch = docs.filter(F.col("doc_id") % 5 >= 3)
-    idx = os.path.join(scratch, "dedup_index")
-    t0 = time.perf_counter()
-    build_dedup_index(corpus, idx, threshold=_DEDUP_THRESHOLD)
-    build_sec = time.perf_counter() - t0
-
-    def run() -> None:
-        incremental_dedup_indexed(batch, idx).select(
-            "doc_id", "lang", "source"
-        ).write.format("noop").mode("overwrite").save()
-
-    run()  # warm-up, same protocol as the headline queries
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        run()
-        best = min(best, time.perf_counter() - t0)
-    return {
-        "build_index_once_sec": round(build_sec, 3),
-        "indexed_batch_sec": round(best, 3),
-    }
-
-
-def _streaming_bench(
-    spark, seconds: float = 10.0, ckpt_root: str | None = None
-) -> dict[str, object]:
-    """Rate-source throughput of the streaming tier (VERDICT r3 #7).
-
-    An unthrottled-ish rate source (rowsPerSecond set far above what
-    local[32] sustains) feeds each streaming operator into the noop
-    sink for a fixed wall window; reported rows/s is total input rows
-    processed over the window (from StreamingQuery progress), i.e. the
-    operator's sustained micro-batch throughput, not the source cap.
-    """
-    from pyspark.sql import functions as F
-
-    from gapless_deribit_clickhouse_spark.streaming.ingest import (
-        dedup_stream,
-        streaming_ohlc,
-    )
-
-    # deterministic per-query scratch checkpoints (VERDICT r5 #2): the
-    # default engine-managed temp checkpoint is deleted asynchronously
-    # at stop(), which is what raced the ChecksumFs writer in r5; a
-    # fresh named dir per start() keeps shutdown quiet and restartable
-    ckpt_root = ckpt_root or tempfile.mkdtemp(prefix="bench_ckpt_")
-    ckpt_seq = [0]
-
-    def _ckpt() -> str:
-        ckpt_seq[0] += 1
-        return os.path.join(ckpt_root, f"q{ckpt_seq[0]}")
-
-    def rate_trades():
-        raw = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", 5_000_000)
-            .option("numPartitions", 8)
-            .load()
-        )
-        return raw.select(
-            F.col("timestamp"),
-            F.col("value").alias("trade_id"),
-            (F.col("value") % 97).cast("double").alias("iv"),
-            F.lit(1.0).alias("amount"),
-            (F.col("value") % 4).cast("string").alias("underlying"),
-        )
-
-    def _progress_extras(progress) -> dict[str, float]:
-        """Max micro-batch duration + final watermark lag from the
-        query's progress events (VERDICT r4 #7: a latency datum, not
-        just peak rows/s)."""
-        out: dict[str, float] = {}
-        durs = [
-            p.get("durationMs", {}).get("triggerExecution")
-            for p in progress
-            if p.get("durationMs")
-        ]
-        durs = [d for d in durs if d is not None]
-        if durs:
-            out["max_batch_ms"] = float(max(durs))
-        try:
-            from datetime import datetime, timezone
-
-            def _ts(s: str) -> float:
-                return (
-                    datetime.strptime(s, "%Y-%m-%dT%H:%M:%S.%fZ")
-                    .replace(tzinfo=timezone.utc)
-                    .timestamp()
-                )
-
-            last = [
-                p
-                for p in progress
-                if p.get("eventTime", {}).get("watermark", "").startswith("2")
-            ]
-            if last:
-                p = last[-1]
-                out["watermark_lag_ms"] = round(
-                    (_ts(p["timestamp"]) - _ts(p["eventTime"]["watermark"]))
-                    * 1000.0,
-                    0,
-                )
-        except Exception:  # noqa: BLE001 — lag is best-effort telemetry
-            pass
-        return out
-
-    def measure(make_query, window: float | None = None):
-        win = window if window is not None else seconds
-        q = make_query()
-        t0 = time.perf_counter()
-        time.sleep(win)
-        rows = sum(p["numInputRows"] for p in q.recentProgress)
-        # a heavy stateful operator's FIRST micro-batch can outlive the
-        # window (it gulps seconds x rowsPerSecond input) — throughput
-        # 0 is a measurement artifact, not the operator's rate. And a
-        # near-empty batch 0 (rate source warm-up) followed by the
-        # heavy in-flight batch is the same artifact with rows > 0, so
-        # the gate is a minimum-rows floor, not an exact-zero check.
-        # Wait, bounded, until a meaningful batch has landed.
-        floor = 10_000
-        while rows < floor and time.perf_counter() - t0 < 4 * win:
-            time.sleep(win / 4)
-            rows = sum(p["numInputRows"] for p in q.recentProgress)
-        elapsed = time.perf_counter() - t0
-        progress = list(q.recentProgress)
-        # graceful shutdown (VERDICT r5 #2): stop() cancels the
-        # in-flight micro-batch — awaiting termination drains the
-        # checkpoint manager's async writers before the next query
-        # starts, instead of leaving a stack trace racing our stdout.
-        # The cancellation itself is intentional, so its TaskKilled /
-        # write-abort log spray is silenced for the stop's duration
-        # (the stderr-tail cleanliness check in the sidecar would
-        # otherwise cry wolf on every healthy run).
-        sc = spark.sparkContext
-        sc.setLogLevel("OFF")
-        try:
-            q.stop()
-            try:
-                q.awaitTermination(30)
-            except Exception:  # noqa: BLE001 — already stopped/cancelled
-                pass
-        finally:
-            sc.setLogLevel("WARN")
-        return round(rows / elapsed, 0), _progress_extras(progress)
-
-    out: dict[str, object] = {}
-    try:
-        # import inside the guard: a broken streaming module must cost
-        # only the streaming lines, never the finished batch results
-        from gapless_deribit_clickhouse_spark.operators.sessionize import (
-            streaming_sessionize,
-        )
-
-        def make_ohlc():
-            return (
-                streaming_ohlc(
-                    rate_trades(),
-                    keys=("underlying",),
-                    window="1 minute",
-                    watermark_delay="10 seconds",
-                )
-                .writeStream.format("noop")
-                .option("checkpointLocation", _ckpt())
-                .outputMode("append")
-                .start()
-            )
-
-        def make_dedup():
-            return (
-                dedup_stream(rate_trades(), watermark_delay="10 seconds")
-                .writeStream.format("noop")
-                .option("checkpointLocation", _ckpt())
-                .outputMode("append")
-                .start()
-            )
-
-        def make_sessionize():
-            return (
-                streaming_sessionize(
-                    rate_trades().select(
-                        F.col("timestamp").alias("ts"),
-                        F.col("underlying").alias("user_id"),
-                    ),
-                    gap="30 seconds",
-                    watermark_delay="10 seconds",
-                )
-                .writeStream.format("noop")
-                .option("checkpointLocation", _ckpt())
-                .outputMode("append")
-                .start()
-            )
-
-        def make_ewma():
-            from gapless_deribit_clickhouse_spark.streaming.ingest import (
-                streaming_ewma,
-            )
-
-            return (
-                streaming_ewma(
-                    rate_trades().select(
-                        F.col("timestamp").alias("ts"),
-                        (F.col("trade_id") % 4).alias("user_id"),
-                        F.col("iv").alias("value"),
-                    ),
-                    watermark_delay="10 seconds",
-                )
-                .writeStream.format("noop")
-                .option("checkpointLocation", _ckpt())
-                .outputMode("update")
-                .start()
-            )
-
-        def make_stream_stream():
-            from gapless_deribit_clickhouse_spark.streaming.joins import (
-                stream_stream_enrich,
-            )
-
-            # the join pairs every trade with every in-tolerance quote
-            # for its key, so OUTPUT = trade_rate x quote_density x
-            # tolerance — unthrottled feeds make batch 0 emit ~1e10
-            # pairs and outlive any window, and even 10 quotes/s/key
-            # measured a 10x output amplification instead of the join
-            # (20k rows/s). Realistic trade-enrichment shape: ONE
-            # quote per key per second with a 1 s tolerance => ~1
-            # match per trade, so the measured rate prices the
-            # symmetric-hash-join state cycle itself (~110k rows/s
-            # quiet local[32]).
-            def feed(rate, n_parts):
-                return (
-                    spark.readStream.format("rate")
-                    .option("rowsPerSecond", rate)
-                    .option("numPartitions", n_parts)
-                    .load()
-                )
-
-            trades = feed(300_000, 8).select(
-                F.col("timestamp").alias("ts"),
-                (F.col("value") % 4).cast("string").alias("underlying"),
-                (F.col("value") % 97).cast("double").alias("iv"),
-            )
-            spots = feed(4, 1).select(
-                F.col("timestamp").alias("spot_ts"),
-                (F.col("value") % 4).cast("string").alias("underlying"),
-                (F.col("value") % 11).cast("double").alias("spot"),
-            )
-            return (
-                stream_stream_enrich(
-                    trades, spots, tolerance="1 second", watermark="10 seconds",
-                )
-                .writeStream.format("noop")
-                .option("checkpointLocation", _ckpt())
-                .outputMode("append")
-                .start()
-            )
-
-        def make_rollup():
-            from gapless_deribit_clickhouse_spark.streaming.materialized import (
-                streaming_mergeable_rollup,
-            )
-
-            # the rollup sink itself needs no watermark (versioned
-            # state merge handles late rows), but declaring one makes
-            # the progress events carry eventTime.watermark, so the
-            # sustained entry reports the SAME three fields as the
-            # other five stateful operators (VERDICT r7 #7) — the lag
-            # here reads as ingestion lag, not state-eviction lag
-            return streaming_mergeable_rollup(
-                rate_trades()
-                .withWatermark("timestamp", "10 seconds")
-                .select(F.col("timestamp"), F.col("underlying"), F.col("iv")),
-                keys=("underlying",),
-                value_col="iv",
-                state_path=os.path.join(ckpt_root, f"state{ckpt_seq[0]}"),
-                checkpoint_path=_ckpt(),
-                trigger_once=False,
-            )
-
-        out["streaming_ohlc_rows_per_sec"], _ = measure(make_ohlc)
-        # the custom stateful operator (applyInPandasWithState) pays
-        # one Arrow crossing per key-batch; its rate is the honest
-        # cost of the Python-state tier vs the JVM-native ones above
-        out["streaming_ewma_rows_per_sec"], _ = measure(make_ewma)
-        # merging session windows carry the most state machinery; by
-        # now the streaming runtime is warm, so the window measures
-        # sustained micro-batch throughput, not cold-start
-        out["dedup_stream_rows_per_sec"], _ = measure(make_dedup)
-        out["streaming_sessionize_rows_per_sec"], _ = measure(make_sessionize)
-        # sustained-rate runs (VERDICT r4 #7, widened per r5 #6): 30 s
-        # of each STATEFUL operator — the windowed OHLC aggregation,
-        # the watermarked dropDuplicates (whose state store grows with
-        # the dedup key space), and merging session windows — each
-        # reporting rows/s PLUS the latency data the burst benches
-        # lack: max micro-batch duration and the final watermark lag
-        # (event-time watermark vs wall clock; the 10 s configured
-        # delay is its floor)
-        # r7 (VERDICT r6 #6): the round-6 stateful additions get the
-        # same sustained treatment — the watermarked stream-stream
-        # join (symmetric hash state on both sides), the Python-state
-        # EWMA (one Arrow crossing per key-batch), and the versioned
-        # mergeable-rollup materialized view (foreachBatch parquet
-        # state rewrite per micro-batch — its rate prices the full
-        # read-merge-write maintenance cycle, not just the agg).
-        for key, maker in (
-            ("streaming_ohlc_sustained_30s", make_ohlc),
-            ("dedup_stream_sustained_30s", make_dedup),
-            ("streaming_sessionize_sustained_30s", make_sessionize),
-            ("stream_stream_enrich_sustained_30s", make_stream_stream),
-            ("streaming_ewma_sustained_30s", make_ewma),
-            ("mergeable_rollup_sustained_30s", make_rollup),
-        ):
-            # each sustained entry is isolated and retried once: after
-            # ~10 start/stop cycles the py4j callback plumbing can
-            # throw a transient Connection refused on the next
-            # foreachBatch start (seen once on the rollup, the last
-            # entry) — one flaky start must cost one retry, not the
-            # remaining entries
-            for attempt in (1, 2):
-                try:
-                    rate, extras = measure(maker, window=30.0)
-                    out[key] = {"rows_per_sec": rate, **extras}
-                    break
-                except Exception as exc:  # noqa: BLE001
-                    out[key] = {"error": str(exc)[:200]}
-                    time.sleep(5.0)
-    except Exception as exc:  # noqa: BLE001 — never fail the batch bench
-        out["error"] = str(exc)[:200]
-    return out
-
-
 def _wait_for_quiet(
     threshold: float = LOAD_THRESHOLD,
     threshold_5m: float = LOAD_THRESHOLD_5M,
@@ -1276,32 +877,6 @@ def main() -> None:
     cal_last = _calibrate(spark, qs, sf_dir)
     conditions["calibration"] = _calibration_stamp(cal_first, cal_last, sf)
 
-    # sketch tier: value_percentiles' docstring names approx_percentile
-    # as the 100 TB path (map-side-mergeable t-digest analogue of
-    # ClickHouse quantileTDigest); time it against the exact variant on
-    # the same data so the artifact carries the measured trade-off
-    try:
-        sketch = _sketch_bench(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 — never fail the batch bench
-        sketch = {"error": str(exc)[:200]}
-
-    # persisted-index dedup sidecar: compare against the headline's
-    # incremental_dedup (recompute path) to see the steady-state win
-    try:
-        indexed_dedup = _indexed_dedup_bench(spark, sf_dir, scratch)
-    except Exception as exc:  # noqa: BLE001 — never fail the batch bench
-        indexed_dedup = {"error": str(exc)[:200]}
-
-    # guarded at the CALL site too: any failure inside the streaming
-    # tier (including import errors, which the inner try cannot see)
-    # must cost only the streaming lines, never the finished batch run
-    try:
-        streaming = _streaming_bench(
-            spark, ckpt_root=os.path.join(scratch, "ckpt")
-        )
-    except Exception as exc:  # noqa: BLE001 — never fail the batch bench
-        streaming = {"error": str(exc)[:200]}
-
     # full shutdown BEFORE any result is emitted (VERDICT r5 #1): all
     # measurements are in hand, so quiesce logging, stop any straggler
     # stream, stop the JVM, and give its writer threads a beat — after
@@ -1334,9 +909,6 @@ def main() -> None:
             # run instead of trusting an unreproducible historical min
             "stale_flags": _envelope_stale(),
         },
-        "streaming": streaming,
-        "sketch": sketch,
-        "indexed_dedup": indexed_dedup,
         "stderr": {
             "log": stderr_log,
             "clean_tail": err_clean,
@@ -1359,15 +931,7 @@ def main() -> None:
     # line LAST — the driver parses the final line only
     print(json.dumps({"bench_sidecar": "telemetry", "telemetry": telemetry}), flush=True)
     print(
-        json.dumps(
-            {
-                "bench_sidecar": "conditions",
-                "conditions": conditions,
-                "streaming": streaming,
-                "sketch": sketch,
-                "indexed_dedup": indexed_dedup,
-            }
-        ),
+        json.dumps({"bench_sidecar": "conditions", "conditions": conditions}),
         flush=True,
     )
     print(emit_headline(timings, total, sf, conditions, out_dir), flush=True)

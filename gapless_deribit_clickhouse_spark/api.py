@@ -28,14 +28,15 @@ _ISO_DATE = re.compile(r"\d{4}-\d{2}-\d{2}")
 
 
 @cache
-def _option_types() -> tuple[str, ...]:
-    """The ``option_type`` enum of the ``options_trades`` schema."""
+def _enum(column: str) -> tuple[str, ...]:
+    """The enum of an ``options_trades`` schema column."""
     from gapless_deribit_clickhouse_spark.schema.loader import load_schema
 
-    return load_schema("options_trades").column("option_type").enum
+    return load_schema("options_trades").column(column).enum
 
 
 def _validate_fetch_params(
+    underlying: str | None,
     start: str | None,
     end: str | None,
     limit: int | None,
@@ -48,14 +49,17 @@ def _validate_fetch_params(
     for name, v in (("start", start), ("end", end)):
         if v is not None and (not isinstance(v, str) or not v.strip()):
             raise QueryError(f"{name} must be a non-empty string")
-    if limit is not None and limit <= 0:
-        raise QueryError("limit must be positive")
-    if start and end and _parse_ts(start) > _parse_ts(end):
-        raise QueryError("start must be <= end")
-    if option_type is not None and option_type not in _option_types():
-        raise QueryError(
-            f"option_type must be one of {_option_types()}, got {option_type!r}"
-        )
+    if limit is not None and (
+        not isinstance(limit, int) or isinstance(limit, bool) or limit <= 0
+    ):
+        raise QueryError(f"limit must be a positive integer, got {limit!r}")
+    # the filter keeps start <= timestamp < end (a date-only end is the
+    # next midnight), so reject exactly the ranges that hold no instant
+    if start and end and _parse_ts(start) >= _parse_ts(end, end_side=True):
+        raise QueryError("start must be before end")
+    for name, v in (("underlying", underlying), ("option_type", option_type)):
+        if v is not None and v not in _enum(name):
+            raise QueryError(f"{name} must be one of {_enum(name)}, got {v!r}")
     if expiry is not None and not _is_iso_date(expiry):
         raise QueryError(f"expiry must be a YYYY-MM-DD date, got {expiry!r}")
 
@@ -102,7 +106,7 @@ def fetch_trades(
     """Point/range query with the reference's exact predicate set
     (F1-F4, W5, O1). ``use_final`` toggles dedup-at-read (FINAL
     parity, reference api.py:121-124)."""
-    _validate_fetch_params(start, end, limit, option_type, expiry)
+    _validate_fetch_params(underlying, start, end, limit, option_type, expiry)
     df = trades
     if use_final:
         df = dedup_latest(df, keys=["trade_id"], version_cols=["timestamp"])

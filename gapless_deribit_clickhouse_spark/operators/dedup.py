@@ -15,8 +15,12 @@ hatch (`use_final=True` parity). The streaming path's
 ``dropDuplicatesWithinWatermark`` is not this semantics: it keeps the
 first-arriving version of a key, not the latest
 (``streaming/ingest.py:dedup_stream``). The window variant below lets
-AQE handle skew, and because the key usually contains the partition
-column (e.g. ``underlying``) the shuffle is partition-pruned first.
+AQE handle skew. It is not partition-pruned: the ``options_trades``
+dedup key is ``trade_id`` alone (``schema/options_trades.yaml``), so
+the window spans every partition the input holds, and a filter on a
+column outside the key (``underlying``, ``timestamp``) stays above it.
+A re-delivery may also land in a later ``trade_month`` partition than
+the version it replaces.
 """
 
 from __future__ import annotations
@@ -146,10 +150,14 @@ def compact_table(
     Scale design: pass ``only_partitions`` (list of
     ``{partition_col: value}`` selectors, CH ``OPTIMIZE PARTITION``
     parity) to touch only hot partitions — cost is proportional to the
-    partitions rewritten, never the table. The dedup shuffle happens
-    within the selected slice, and when ``keys`` contain the partition
-    columns (they do for ``options_trades``: the ORDER-BY tuple starts
-    with ``underlying``) no row crosses a partition boundary.
+    partitions rewritten, never the table. The dedup runs only within
+    the selected slice: a key whose versions sit both inside and
+    outside it keeps one version in each. For ``options_trades`` that
+    can happen, because the key is ``trade_id`` alone, not a partition
+    column, and a re-delivery with a later ``timestamp`` can cross a
+    ``trade_month`` boundary. A full compaction (no ``only_partitions``)
+    dedups across every partition and swaps out a partition whose rows
+    all lost to winners elsewhere.
     """
     root = Path(path)
     staging = root.with_name(root.name + "__compacting")

@@ -131,10 +131,11 @@ def _normalize_rows(c: np.ndarray) -> np.ndarray:
 # centroids and data rows share the unit-normalization rule
 _normalize_centroids = _normalize_rows
 
+# Lloyd's stops once no centroid moves further than this (L2)
+_TOL = 1e-6
 
-def _local_lloyd(
-    x: np.ndarray, centroids: np.ndarray, max_iter: int, tol: float
-) -> np.ndarray:
+
+def _local_lloyd(x: np.ndarray, centroids: np.ndarray, max_iter: int) -> np.ndarray:
     """Driver-side spherical Lloyd's — same update rule as the
     distributed path (argmax-dot assign, mean, renormalize, emptied
     cluster keeps its centroid), minus the per-iteration job cost."""
@@ -149,7 +150,7 @@ def _local_lloyd(
         new[live] = _normalize_centroids(sums[live])
         shift = float(np.linalg.norm(new - centroids, axis=1).max())
         centroids = new
-        if shift < tol:
+        if shift < _TOL:
             break
     return centroids
 
@@ -161,7 +162,6 @@ def kmeans_fit(
     k: int = 16,
     max_iter: int = 10,
     seed: int = 42,
-    tol: float = 1e-6,
     fit_sample_size: int | None = 65_536,
     dim: int | None = None,
 ) -> np.ndarray:
@@ -170,7 +170,7 @@ def kmeans_fit(
     callers that already probed it pass it through so the usable-row
     filter does not re-probe. ``k`` is capped at the usable row
     count. Stops early when
-    the max centroid movement (L2) drops below ``tol``. An emptied
+    the max centroid movement (L2) drops below ``_TOL``. An emptied
     cluster keeps its previous centroid (never NaN, never respawned —
     deterministic).
 
@@ -205,7 +205,7 @@ def kmeans_fit(
         )
         # the k hash-smallest rows ARE the seed rule's choice
         centroids = x[: min(k, len(x))].copy()
-        return _local_lloyd(x, centroids, max_iter, tol)
+        return _local_lloyd(x, centroids, max_iter)
     centroids = _normalize_centroids(_seed_centroids(usable, k, seed))
     k_eff = centroids.shape[0]
 
@@ -250,7 +250,7 @@ def kmeans_fit(
         new[live] = _normalize_centroids(sums[live])
         shift = float(np.linalg.norm(new - centroids, axis=1).max())
         centroids = new
-        if shift < tol:
+        if shift < _TOL:
             break
     return centroids
 
@@ -302,30 +302,20 @@ def _assign_table(
     return usable.mapInPandas(assign, schema=schema)
 
 
-def kmeans_assign(
-    df: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Assign each row its nearest (cosine) centroid. Output:
-    ``id_col``, ``cluster_id``, ``centroid_sim``. One Arrow/BLAS map
+    ``vec_id``, ``cluster_id``, ``centroid_sim``. One Arrow/BLAS map
     stage, no shuffle. The usable-row filter takes its dimension from
     the CENTROIDS (the contract), not from data probing — a
     deviant-width first row can neither mislead the filter nor add a
     driver job to plan construction."""
     c_bc = np.ascontiguousarray(centroids, dtype=np.float64)
-    usable = _usable_rows(df, id_col, vec_col, dim=c_bc.shape[1])
-    id_t = df.schema[id_col].dataType.simpleString()
-    return _assign_table(usable, c_bc, id_t).withColumnRenamed("__id", id_col)
+    usable = _usable_rows(df, "vec_id", "embedding", dim=c_bc.shape[1])
+    id_t = df.schema["vec_id"].dataType.simpleString()
+    return _assign_table(usable, c_bc, id_t).withColumnRenamed("__id", "vec_id")
 
 
-def lloyd_step(
-    df: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def lloyd_step(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """ONE distributed Lloyd's update step with FIXED centroids,
     exposed long-format so the iteration arithmetic is cross-engine
     value-checkable (VERDICT r7 #4 — the fit loop itself is inherently
@@ -349,8 +339,8 @@ def lloyd_step(
     c_bc = _normalize_centroids(
         np.ascontiguousarray(centroids, dtype=np.float64)
     )
-    usable = _usable_rows(df, id_col, vec_col, dim=c_bc.shape[1])
-    id_t = df.schema[id_col].dataType.simpleString()
+    usable = _usable_rows(df, "vec_id", "embedding", dim=c_bc.shape[1])
+    id_t = df.schema["vec_id"].dataType.simpleString()
     assigned = _assign_table(
         usable, c_bc, id_t, with_vec=True, with_sim=False, with_norm=True
     )
@@ -382,7 +372,6 @@ def semantic_dedup(
     max_iter: int = 8,
     seed: int = 42,
     max_cluster_size: int = 4096,
-    fit_sample_size: int | None = 65_536,
 ) -> DataFrame:
     """SemDeDup: per-cluster greedy semantic near-duplicate pruning.
 
@@ -409,7 +398,7 @@ def semantic_dedup(
     usable = _usable_rows(df, id_col, vec_col, dim=dim)
     centroids = kmeans_fit(
         df, id_col=id_col, vec_col=vec_col, k=k, max_iter=max_iter,
-        seed=seed, fit_sample_size=fit_sample_size, dim=dim,
+        seed=seed, dim=dim,
     )
     c_bc = np.ascontiguousarray(centroids, dtype=np.float64)
     id_t = df.schema[id_col].dataType.simpleString()
@@ -483,18 +472,15 @@ def semantic_dedup(
 def diverse_sample(
     df: DataFrame,
     n_per_cluster: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 16,
     max_iter: int = 8,
     seed: int = 42,
-    fit_sample_size: int | None = 65_536,
 ) -> DataFrame:
     """Semantic-diversity sampling: cluster the corpus, then take a
     deterministic fixed-size sample from EVERY cluster — the
     cluster-balanced eval-set / inspection-set builder (uniform hash
     sampling over-represents dense regions; per-cluster quotas cover
-    the modes). Output: ``id_col``, ``cluster_id``, ``centroid_sim``.
+    the modes). Output: ``vec_id``, ``cluster_id``, ``centroid_sim``.
 
     Composition of tested parts: ``kmeans_fit`` (sample-fit) +
     ``kmeans_assign`` (map-only) + ``sample_n_per_group``'s two-level
@@ -505,13 +491,10 @@ def diverse_sample(
         sample_n_per_group,
     )
 
-    centroids = kmeans_fit(
-        df, id_col=id_col, vec_col=vec_col, k=k, max_iter=max_iter,
-        seed=seed, fit_sample_size=fit_sample_size,
-    )
-    assigned = kmeans_assign(df, centroids, id_col=id_col, vec_col=vec_col)
+    centroids = kmeans_fit(df, k=k, max_iter=max_iter, seed=seed)
+    assigned = kmeans_assign(df, centroids)
     return sample_n_per_group(
-        assigned, group_col="cluster_id", n=n_per_cluster, key_col=id_col
+        assigned, group_col="cluster_id", n=n_per_cluster, key_col="vec_id"
     )
 
 
@@ -521,13 +504,8 @@ def ivf_kmeans_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     max_iter: int = 8,
     seed: int = 42,
-    fit_sample_size: int | None = 65_536,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """True IVF (inverted-file) approximate top-k with LEARNED
@@ -559,15 +537,12 @@ def ivf_kmeans_topk(
 
     from gapless_deribit_clickhouse_spark.pipelines.embeddings import dot
 
-    centroids = kmeans_fit(
-        corpus, id_col=id_col, vec_col=vec_col, k=n_centroids,
-        max_iter=max_iter, seed=seed, fit_sample_size=fit_sample_size,
-    )
+    centroids = kmeans_fit(corpus, k=n_centroids, max_iter=max_iter, seed=seed)
     c_bc = np.ascontiguousarray(centroids, dtype=np.float64)
-    id_t = corpus.schema[id_col].dataType.simpleString()
+    id_t = corpus.schema["vec_id"].dataType.simpleString()
     # corpus filter keyed to the FITTED dimension (the contract), so
     # the inverted lists cannot silently follow a deviant-width row
-    usable = _usable_rows(corpus, id_col, vec_col, dim=c_bc.shape[1])
+    usable = _usable_rows(corpus, "vec_id", "embedding", dim=c_bc.shape[1])
 
     # corpus norm is computed ONCE per vector inside the assign stage
     # (__n), never per candidate pair — the same below-the-join norm
@@ -584,7 +559,7 @@ def ivf_kmeans_topk(
     # matching _usable_rows' corpus-side guard.
     nprobe = min(nprobe, c_bc.shape[0])
     dim = c_bc.shape[1]
-    q_t = queries.schema[query_id_col].dataType.simpleString()
+    q_t = queries.schema["query_id"].dataType.simpleString()
 
     def expand_probes(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -592,52 +567,52 @@ def ivf_kmeans_topk(
                 continue
             keep = [
                 i
-                for i, raw in enumerate(pdf[query_vec_col])
+                for i, raw in enumerate(pdf["query_vec"])
                 if raw is not None and len(raw) == dim
             ]
             if not keep:
                 continue
             mat = np.stack(
-                [np.asarray(pdf[query_vec_col].iloc[i], dtype=np.float64) for i in keep]
+                [np.asarray(pdf["query_vec"].iloc[i], dtype=np.float64) for i in keep]
             )
             nrms = np.linalg.norm(mat, axis=1)
             ok = nrms > 0
             if not ok.any():
                 continue
             mat = mat[ok] / nrms[ok][:, None]
-            ids = pdf[query_id_col].iloc[keep].to_numpy()[ok]
+            ids = pdf["query_id"].iloc[keep].to_numpy()[ok]
             # one batch matmul, then per-row nprobe selection
             order = np.argsort(-(mat @ c_bc.T), axis=1, kind="stable")[:, :nprobe]
             yield pd.DataFrame(
                 {
-                    query_id_col: np.repeat(ids, nprobe),
+                    "query_id": np.repeat(ids, nprobe),
                     "cluster_id": order.reshape(-1).astype("int32"),
                     "__qv": [row.tolist() for row in np.repeat(mat, nprobe, axis=0)],
                 }
             )
 
-    probes = queries.select(query_id_col, query_vec_col).mapInPandas(
+    probes = queries.select("query_id", "query_vec").mapInPandas(
         expand_probes,
-        schema=f"{query_id_col} {q_t}, cluster_id int, __qv array<double>",
+        schema=f"query_id {q_t}, cluster_id int, __qv array<double>",
     )
 
     scored = (
         lists.join(F.broadcast(probes) if broadcast_queries else probes, "cluster_id")
         .select(
-            F.col(query_id_col),
-            F.col("__id").alias(id_col),
+            F.col("query_id"),
+            F.col("__id").alias("vec_id"),
             F.try_divide(dot(F.col("__v"), F.col("__qv")), F.col("__n")).alias(
                 "cosine_sim"
             ),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine_sim")
+        .select("query_id", "vec_id", "rank", "cosine_sim")
     )
 
 
@@ -646,11 +621,7 @@ def knn_self_join(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 8,
     seed: int = 42,
-    fit_sample_size: int | None = 65_536,
 ) -> DataFrame:
     """Approximate kNN GRAPH of the corpus against itself — the
     semantic-graph primitive (dedup-cluster seeding, diversity graphs,
@@ -676,21 +647,20 @@ def knn_self_join(
     from pyspark.sql import Window
 
     queries = corpus.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     raw = ivf_kmeans_topk(
         corpus, queries, k=k + 1, n_centroids=n_centroids, nprobe=nprobe,
-        id_col=id_col, vec_col=vec_col, max_iter=max_iter, seed=seed,
-        fit_sample_size=fit_sample_size, broadcast_queries=False,
+        seed=seed, broadcast_queries=False,
     )
-    survivors = raw.filter(F.col("query_id") != F.col(id_col))
+    survivors = raw.filter(F.col("query_id") != F.col("vec_id"))
     # re-rank over the k+1-minus-self survivors: tiny (n*(k+1) rows),
     # keyed by the same query_id the top-k window already used
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col)
+        F.col("cosine_sim").desc(), F.col("vec_id")
     )
     return (
         survivors.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank", "cosine_sim")
+        .select("query_id", "vec_id", "rank", "cosine_sim")
     )

@@ -31,8 +31,6 @@ from gapless_deribit_clickhouse_spark.pipelines.text_stats import (
 
 def curate_corpus(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     lang: str = "en",
     min_quality: float = 0.5,
     min_tokens: int = 5,
@@ -41,33 +39,29 @@ def curate_corpus(
     """Documents that survive the full curation gauntlet, with their
     audit columns (predicted language, token count, quality score).
     Winner of each exact-duplicate group = min id."""
-    raw = F.col(text_col)
+    raw = F.col("text")
     q = quality_exprs(raw)
     _, pred = lang_exprs(raw)
     w = Window.partitionBy(F.md5(normalized_text(raw)))
     base = ensure_parallelism(df).select(
-        F.col(id_col),
+        F.col("doc_id"),
         pred.alias("lang_pred"),
         q["n_tokens"].alias("n_tokens"),
         q["quality_score"].alias("quality_score"),
-        (F.min(id_col).over(w) == F.col(id_col)).alias("is_canonical"),
+        (F.min("doc_id").over(w) == F.col("doc_id")).alias("is_canonical"),
     )
     return base.filter(
         F.col("is_canonical")
         & (F.col("lang_pred") == lang)
         & (F.col("quality_score") >= min_quality)
         & F.col("n_tokens").between(min_tokens, max_tokens)
-    ).select(id_col, "lang_pred", "n_tokens", "quality_score")
+    ).select("doc_id", "lang_pred", "n_tokens", "quality_score")
 
 
 def contamination_check(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    min_overlap: int = 1,
 ) -> DataFrame:
     """Train/test contamination scan: training documents that share
     word ``n``-grams with a held-out benchmark set. Returns one row per
@@ -81,13 +75,13 @@ def contamination_check(
     a broadcast hash join — the 100-TB side is never shuffled for the
     match. Per-doc totals (``n_grams``) are computed row-wise *before*
     the explode, so the only aggregation shuffle carries matched grams
-    (a trickle). ``min_overlap`` keeps clean docs out of the output —
+    (a trickle). Clean docs (no matched n-gram) are not in the output —
     the result is a blocklist, joined back or anti-joined by the
     caller.
     """
     bench_grams = (
         benchmark.select(
-            F.explode(shingles(F.col(bench_text_col), n)).alias("gram")
+            F.explode(shingles(F.col("text"), n)).alias("gram")
         ).distinct()
     )
     # materialize the gram array once per row (a projection boundary),
@@ -101,16 +95,16 @@ def contamination_check(
     # dropped by the inner broadcast join on `gram` — output identical.
     doc_grams = (
         ensure_parallelism(docs)
-        .select(F.col(id_col), shingles(F.col(text_col), n).alias("__grams"))
+        .select(F.col("doc_id"), shingles(F.col("text"), n).alias("__grams"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size("__grams").alias("n_grams"),
             F.explode_outer("__grams").alias("gram"),
         )
     )
     matched = doc_grams.join(F.broadcast(bench_grams), "gram")
     return (
-        matched.groupBy(id_col)
+        matched.groupBy("doc_id")
         # shingles() output is already distinct per doc, so count(*)
         # counts distinct matched grams
         .agg(
@@ -120,21 +114,18 @@ def contamination_check(
         .withColumn(
             "contamination_frac", F.col("n_matched").cast("double") / F.col("n_grams")
         )
-        .filter(F.col("n_matched") >= min_overlap)
+        .filter(F.col("n_matched") >= 1)
     )
 
 
 def build_training_set(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     lang: str = "en",
     min_quality: float = 0.5,
     dedup_threshold: float = 0.8,
     max_tokens: int = 2048,
     overlap: int = 64,
     num_shards: int = 64,
-    shard_hash: str = "md5",
 ) -> DataFrame:
     """The end-to-end training-set assembly flagship — the LLM-side
     analog of the analytics tier's ``feature_pipeline``: quality
@@ -171,16 +162,11 @@ def build_training_set(
     # localCheckpoint barrier the whole quality gauntlet (two text
     # scans + score joins) executes once per consumer (VERDICT r6 #3)
     survivors = df.join(
-        curate_corpus(
-            df, text_col=text_col, id_col=id_col,
-            lang=lang, min_quality=min_quality,
-        ).select(id_col),
-        id_col,
+        curate_corpus(df, lang=lang, min_quality=min_quality).select("doc_id"),
+        "doc_id",
         "semi",
     ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-    deduped = near_dedup_corpus(
-        survivors, text_col=text_col, id_col=id_col, threshold=dedup_threshold
-    )
+    deduped = near_dedup_corpus(survivors, threshold=dedup_threshold)
     # chunks feed BOTH the packer and the final text join; the lazy
     # localCheckpoint cuts the lineage so the curate->dedup->chunk
     # prefix executes once, not once per consumer (the
@@ -196,29 +182,22 @@ def build_training_set(
     # explode at core count and leaves 32 checkpoint blocks for the
     # downstream consumers.
     chunks = chunk_documents(
-        spread_expansion(deduped), id_col=id_col, text_col=text_col,
-        max_tokens=max_tokens, overlap=overlap,
+        spread_expansion(deduped), max_tokens=max_tokens, overlap=overlap,
     ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     packed = pack_sequences(
         chunks, id_col="chunk_uid", text_col="chunk_text",
         max_tokens=max_tokens, num_shards=num_shards,
-        shard_hash=shard_hash,
     )
     return packed.join(
-        chunks.select("chunk_uid", id_col, "chunk_idx", "chunk_text"),
+        chunks.select("chunk_uid", "doc_id", "chunk_idx", "chunk_text"),
         "chunk_uid",
     ).select(
-        "chunk_uid", id_col, "chunk_idx", "chunk_text",
+        "chunk_uid", "doc_id", "chunk_idx", "chunk_text",
         "pack_id", "pack_pos", "n_tokens", "oversized",
     )
 
 
-def quality_gate(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.5,
-) -> DataFrame:
+def quality_gate(df: DataFrame, min_quality: float = 0.5) -> DataFrame:
     """The FineWeb/CCNet-style two-signal quality gate: keep documents
     whose heuristic quality score clears ``min_quality`` AND whose
     corpus-LM perplexity is at-or-below the corpus MEDIAN — the
@@ -243,11 +222,11 @@ def quality_gate(
     # computed twice, once SERIALLY below the exchange (the filter)
     # and once above it (the projection). The checkpointed frame is
     # two columns per doc, metadata-scale.
-    q = quality_score(df, text_col=text_col, id_col=id_col).select(
-        id_col, "quality_score"
+    q = quality_score(df).select(
+        "doc_id", "quality_score"
     ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-    lm = bigram_lm_score(df, text_col=text_col, id_col=id_col).select(
-        id_col, "ppl"
+    lm = bigram_lm_score(df).select(
+        "doc_id", "ppl"
     # the median scalar and the join side must read the SAME
     # materialized ppl values: re-executing the lm plan would both
     # double its cost and re-merge avg partials in a different order,
@@ -255,11 +234,11 @@ def quality_gate(
     ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     med = lm.agg(F.expr("percentile(ppl, 0.5D)").alias("median_ppl"))
     return (
-        q.join(lm, id_col)
+        q.join(lm, "doc_id")
         .crossJoin(F.broadcast(med))
         .filter(
             (F.col("quality_score") >= F.lit(min_quality))
             & (F.col("ppl") <= F.col("median_ppl"))
         )
-        .select(id_col, "quality_score", "ppl")
+        .select("doc_id", "quality_score", "ppl")
     )

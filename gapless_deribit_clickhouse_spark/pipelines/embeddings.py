@@ -39,15 +39,7 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact brute-force top-k neighbors per query.
 
     Cross-join (broadcast queries) -> cosine -> per-query top-k via
@@ -58,31 +50,31 @@ def cosine_topk(
     # norms below the join: computed once per vector, not once per
     # (query, vector) pair — the join sides are projection barriers,
     # so CollapseProject cannot inline the norm into the pair loop
-    qv = F.col(query_vec_col).cast("array<double>")
+    qv = F.col("query_vec").cast("array<double>")
     q = F.broadcast(
         queries.select(
-            query_id_col, qv.alias("__qv"), l2_norm(qv).alias("__qn")
+            "query_id", qv.alias("__qv"), l2_norm(qv).alias("__qn")
         )
     )
-    cv = F.col(vec_col).cast("array<double>")
+    cv = F.col("embedding").cast("array<double>")
     scored = (
-        corpus.select(id_col, cv.alias("__v"), l2_norm(cv).alias("__n"))
+        corpus.select("vec_id", cv.alias("__v"), l2_norm(cv).alias("__n"))
         .crossJoin(q)
         .select(
-            F.col(query_id_col),
-            F.col(id_col),
+            F.col("query_id"),
+            F.col("vec_id"),
             F.try_divide(
                 dot(F.col("__v"), F.col("__qv")), F.col("__n") * F.col("__qn")
             ).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine_sim")
+        .select("query_id", "vec_id", "rank", "cosine_sim")
     )
 
 
@@ -101,7 +93,6 @@ def lsh_params(
     corpus_size: int,
     threshold: float = 0.95,
     target_recall: float = 0.9,
-    max_bits: int = 512,
 ) -> tuple[int, int]:
     """Derive ``(n_bits, band_bits)`` from an estimated corpus size —
     the growth rule VERDICT r3 #3 asked to turn from doc into code.
@@ -114,8 +105,8 @@ def lsh_params(
       expected random collisions per bucket stay ~O(1) as the corpus
       grows, so no bucket's self-join population scales with n.
     - ``bands``: smallest ``B`` with recall >= ``target_recall`` at
-      ``threshold``. If ``B*b`` would exceed ``max_bits`` (signature
-      cost ceiling), ``b`` steps down — wider buckets, fewer bands.
+      ``threshold``. If ``B*b`` would exceed 512 bits (signature cost
+      ceiling), ``b`` steps down — wider buckets, fewer bands.
 
     Returns ``(n_bits, band_bits)`` with ``n_bits = B * band_bits``.
     """
@@ -129,7 +120,7 @@ def lsh_params(
             n_bands = 1
         else:
             n_bands = max(1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pb)))
-        if n_bands * b <= max_bits or b <= 4:
+        if n_bands * b <= 512 or b <= 4:
             return (n_bands * b, b)
         b -= 1
 
@@ -159,21 +150,19 @@ def _proj_dot(vec: Column, weights: list[float]) -> Column:
 
 def project_embeddings(
     df: DataFrame,
-    vec_col: str = "embedding",
     out_dim: int = 16,
-    seed: int = DEFAULT_LSH_SEED,
-    out_col: str = "projected",
     normalize: bool = False,
 ) -> DataFrame:
-    """Johnson-Lindenstrauss random projection: reduce ``vec_col`` to
-    ``out_dim`` components against a seeded Gaussian matrix — the
+    """Johnson-Lindenstrauss random projection: reduce ``embedding`` to
+    ``out_dim`` components (column ``projected``) against a Gaussian
+    matrix seeded with ``DEFAULT_LSH_SEED`` — the
     standard pre-ANN compaction step (project, then index/search in
     the low dimension; JL guarantees pairwise distances distort by
     ~1/sqrt(out_dim)).
 
     Data-independent and reproducible like the SRP hyperplanes it
     reuses (``random_projections``): any engine regenerates the
-    identical matrix from (dim, out_dim, seed), so the DuckDB oracle
+    identical matrix from (dim, out_dim), so the DuckDB oracle
     re-derives the same literal matrix — no trained state. Pure
     Column algebra (one ``aggregate`` fold per output component over
     the literal row): zero shuffles, zero Python, evaluates inside
@@ -187,13 +176,13 @@ def project_embeddings(
     NULL rather than dividing by zero) — at O(out_dim^2 * dim) per
     row, see the inline note; prefer normalize=False and a downstream
     normalization for wide corpora."""
-    dim = _vec_dim(df, vec_col)
+    dim = _vec_dim(df, "embedding")
     if dim is None:
         return df.withColumn(
-            out_col, F.lit(None).cast(T.ArrayType(T.DoubleType()))
+            "projected", F.lit(None).cast(T.ArrayType(T.DoubleType()))
         )
-    proj = random_projections(dim, out_dim, seed)
-    vec = F.col(vec_col)
+    proj = random_projections(dim, out_dim)
+    vec = F.col("embedding")
     # ONE parsed SQL expression instead of out_dim Column-API folds
     # (optimization r12): _proj_dot builds ~(dim+5) py4j Column calls
     # per hyperplane — out_dim x dim round trips dominated this
@@ -203,7 +192,7 @@ def project_embeddings(
     def dot_sql(row: list[float]) -> str:
         w = ", ".join(f"{float(x)!r}D" for x in row)
         return (
-            f"aggregate(zip_with(`{vec_col}`, array({w}), (x, y) -> x * y), "
+            f"aggregate(zip_with(`embedding`, array({w}), (x, y) -> x * y), "
             "0.0D, (acc, x) -> acc + x)"
         )
 
@@ -220,7 +209,7 @@ def project_embeddings(
         nrm = l2_norm(out)
         out = F.when(nrm > 0, F.transform(out, lambda x: x / nrm))
     out = F.when(vec.isNotNull() & (F.size(vec) == dim), out)
-    return df.withColumn(out_col, out)
+    return df.withColumn("projected", out)
 
 
 def band_hashes(
@@ -312,20 +301,14 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    n_bits: int | None = DEFAULT_N_BITS,
-    band_bits: int | None = DEFAULT_BAND_BITS,
-    seed: int = DEFAULT_LSH_SEED,
     multiprobe: int = 0,
     use_arrow: bool = True,
-    corpus_size: int | None = None,
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: candidates are corpus vectors
     sharing >= 1 (band, hash) key with the query; exact cosine rerank
-    picks top-k among candidates.
+    picks top-k among candidates. The index is ``DEFAULT_N_BITS`` sign
+    bits in ``DEFAULT_BAND_BITS``-bit bands, seeded with
+    ``DEFAULT_LSH_SEED``.
 
     ``multiprobe`` adds query-directed probes (Lv et al., VLDB'07):
     per band, also probe the hashes obtained by flipping each of the
@@ -334,77 +317,68 @@ def ivf_topk(
     corpus index; probes multiply only the (tiny, broadcast) query
     side. Recall is pinned vs ``cosine_topk`` in
     tests/test_pipelines.py.
-
-    ``n_bits=None`` auto-sizes the index via :func:`lsh_params` from
-    ``corpus_size`` (counted once if not supplied) at a moderate
-    similarity target (0.7 — top-k wants OR-amplified recall for
-    non-duplicate neighbors, not just near-dups).
     """
-    dim = _vec_dim(corpus, vec_col)
+    dim = _vec_dim(corpus, "embedding")
     if dim is None:  # empty corpus -> empty result, not a failure
-        id_t = corpus.schema[id_col].dataType.simpleString()
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
+        id_t = corpus.schema["vec_id"].dataType.simpleString()
+        qid_t = queries.schema["query_id"].dataType.simpleString()
         return corpus.sparkSession.createDataFrame(
-            [], f"{query_id_col} {qid_t}, {id_col} {id_t}, rank int, cosine_sim double"
+            [], f"query_id {qid_t}, vec_id {id_t}, rank int, cosine_sim double"
         )
-    if n_bits is None or band_bits is None:
-        n = corpus_size if corpus_size is not None else corpus.count()
-        auto_bits, auto_band = lsh_params(n, threshold=0.7)
-        n_bits = auto_bits if n_bits is None else n_bits
-        band_bits = auto_band if band_bits is None else band_bits
-    proj = random_projections(dim, n_bits, seed)
-    cv = F.col(vec_col).cast("array<double>")
-    corpus_bands = lsh_band_table(corpus, id_col, vec_col, proj, band_bits, use_arrow)
+    band_bits = DEFAULT_BAND_BITS
+    proj = random_projections(dim, DEFAULT_N_BITS)
+    cv = F.col("embedding").cast("array<double>")
+    corpus_bands = lsh_band_table(corpus, "vec_id", "embedding", proj, band_bits, use_arrow)
 
-    queries = queries.filter(F.col(query_vec_col).isNotNull())
-    qv = F.col(query_vec_col).cast("array<double>")
+    queries = queries.filter(F.col("query_vec").isNotNull())
+    qv = F.col("query_vec").cast("array<double>")
     probe_fn = _query_probe_table_arrow if use_arrow else _query_probe_table
     q_probes = probe_fn(
-        queries, query_id_col, query_vec_col, proj, band_bits, multiprobe
+        queries, "query_id", "query_vec", proj, band_bits, multiprobe
     )
 
     cand = (
         corpus_bands.join(F.broadcast(q_probes), on=["band", "h"])
-        .select(F.col(query_id_col), F.col("id").alias(id_col))
+        .select(F.col("query_id"), F.col("id").alias("vec_id"))
         .distinct()
     )
     if use_arrow:
-        qid_t = queries.schema[query_id_col].dataType.simpleString()
-        id_t = corpus.schema[id_col].dataType.simpleString()
+        qid_t = queries.schema["query_id"].dataType.simpleString()
+        id_t = corpus.schema["vec_id"].dataType.simpleString()
         with_vecs = cand.join(
-            corpus.select(id_col, cv.alias("__v")), on=id_col
+            corpus.select("vec_id", cv.alias("__v")), on="vec_id"
         ).join(
-            F.broadcast(queries.select(query_id_col, qv.alias("__qv"))),
-            on=query_id_col,
+            F.broadcast(queries.select("query_id", qv.alias("__qv"))),
+            on="query_id",
         )
         scored = _cosine_score_arrow(
             with_vecs,
             "__v",
             "__qv",
-            [query_id_col, id_col],
-            f"{query_id_col} {qid_t}, {id_col} {id_t}, cosine_sim double",
+            ["query_id", "vec_id"],
+            f"query_id {qid_t}, vec_id {id_t}, cosine_sim double",
         )
     else:
-        c = corpus.select(id_col, cv.alias("__v"), l2_norm(cv).alias("__n"))
-        q = queries.select(query_id_col, qv.alias("__qv"), l2_norm(qv).alias("__qn"))
+        c = corpus.select("vec_id", cv.alias("__v"), l2_norm(cv).alias("__n"))
+        q = queries.select("query_id", qv.alias("__qv"), l2_norm(qv).alias("__qn"))
         scored = (
-            cand.join(c, on=id_col)
-            .join(F.broadcast(q), on=query_id_col)
+            cand.join(c, on="vec_id")
+            .join(F.broadcast(q), on="query_id")
             .select(
-                F.col(query_id_col),
-                F.col(id_col),
+                F.col("query_id"),
+                F.col("vec_id"),
                 F.try_divide(
                     dot(F.col("__v"), F.col("__qv")), F.col("__n") * F.col("__qn")
                 ).alias("cosine_sim"),
             )
         )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "cosine_sim")
+        .select("query_id", "vec_id", "rank", "cosine_sim")
     )
 
 
@@ -564,12 +538,9 @@ def _query_probe_table(
 
 def embedding_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_bits: int | None = DEFAULT_N_BITS,
     band_bits: int | None = NEAR_DUP_BAND_BITS,
-    seed: int = DEFAULT_LSH_SEED,
     use_arrow: bool = True,
     corpus_size: int | None = None,
 ) -> DataFrame:
@@ -594,9 +565,9 @@ def embedding_near_dup_pairs(
     path: band_bits grows ~log2(corpus), so per-bucket population
     stays O(1) and the verify stage absorbs a bounded candidate
     floor."""
-    dim = _vec_dim(df, vec_col)
+    dim = _vec_dim(df, "embedding")
     if dim is None:  # empty corpus -> empty result, not a failure
-        id_t = df.schema[id_col].dataType.simpleString()
+        id_t = df.schema["vec_id"].dataType.simpleString()
         return df.sparkSession.createDataFrame(
             [], f"id_a {id_t}, id_b {id_t}, cosine_sim double"
         )
@@ -605,9 +576,9 @@ def embedding_near_dup_pairs(
         auto_bits, auto_band = lsh_params(n, threshold=threshold)
         n_bits = auto_bits if n_bits is None else n_bits
         band_bits = auto_band if band_bits is None else band_bits
-    proj = random_projections(dim, n_bits, seed)
-    cv = F.col(vec_col).cast("array<double>")
-    bands = lsh_band_table(df, id_col, vec_col, proj, band_bits, use_arrow)
+    proj = random_projections(dim, n_bits)
+    cv = F.col("embedding").cast("array<double>")
+    bands = lsh_band_table(df, "vec_id", "embedding", proj, band_bits, use_arrow)
     cand = (
         bands.alias("x")
         .join(bands.alias("y"), on=["band", "h"])
@@ -616,10 +587,10 @@ def embedding_near_dup_pairs(
         .distinct()
     )
     if use_arrow:
-        id_t = df.schema[id_col].dataType.simpleString()
+        id_t = df.schema["vec_id"].dataType.simpleString()
         with_vecs = cand.join(
-            df.select(F.col(id_col).alias("id_a"), cv.alias("va")), on="id_a"
-        ).join(df.select(F.col(id_col).alias("id_b"), cv.alias("vb")), on="id_b")
+            df.select(F.col("vec_id").alias("id_a"), cv.alias("va")), on="id_a"
+        ).join(df.select(F.col("vec_id").alias("id_b"), cv.alias("vb")), on="id_b")
         pairs = _cosine_score_arrow(
             with_vecs,
             "va",
@@ -629,7 +600,7 @@ def embedding_near_dup_pairs(
         )
     else:
         c = df.select(
-            F.col(id_col).alias("id"),
+            F.col("vec_id").alias("id"),
             cv.alias("v"),
             l2_norm(cv).alias("n"),  # once per vector, not per pair
         )
@@ -657,8 +628,6 @@ def cosine_topk_pandas(
     corpus: DataFrame,
     query_vecs: list[tuple[int, list[float]]],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Arrow/numpy brute-force variant: queries as a broadcast numpy
     matrix, corpus streamed through mapInPandas — the high-throughput
@@ -674,7 +643,7 @@ def cosine_topk_pandas(
     def score(it):
         qids_b, qmat_b, qnorm_b = bc.value
         for pdf in it:
-            mat = np.array(pdf[vec_col].tolist(), dtype="float64")
+            mat = np.array(pdf["embedding"].tolist(), dtype="float64")
             norms = np.linalg.norm(mat, axis=1)
             denom = np.outer(norms, qnorm_b)
             # zero-norm mask: NaN would sort ABOVE every real cosine in
@@ -687,20 +656,20 @@ def cosine_topk_pandas(
                 out = pd.DataFrame(
                     {
                         "query_id": qid,
-                        id_col: pdf[id_col].to_numpy(),
+                        "vec_id": pdf["vec_id"].to_numpy(),
                         "cosine_sim": col,
                     }
                 )
                 yield out
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema=f"query_id long, {id_col} long, cosine_sim double"
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
+        score, schema="query_id long, vec_id long, cosine_sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank", "cosine_sim")
+        .select("query_id", "vec_id", "rank", "cosine_sim")
     )
 
 
@@ -766,15 +735,7 @@ def quantize_embeddings(
     )
 
 
-def quantized_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
+def quantized_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Brute-force top-k over the INT8-QUANTIZED vectors — the
     memory-bandwidth-bound scale path: per-vector scales cancel inside
     cosine (cos(s_a*qa, s_b*qb) = cos(qa, qb)), so scoring is pure
@@ -790,11 +751,9 @@ def quantized_cosine_topk(
     broadcast than float32 (8x vs float64).
     """
     qs = quantize_embeddings(
-        queries, id_col=query_id_col, vec_col=query_vec_col
+        queries, id_col="query_id", vec_col="query_vec"
     ).filter(F.col("scale").isNotNull())
-    cs = quantize_embeddings(corpus, id_col=id_col, vec_col=vec_col).filter(
-        F.col("scale").isNotNull()
-    )
+    cs = quantize_embeddings(corpus).filter(F.col("scale").isNotNull())
 
     def _norm2(q: Column) -> Column:
         return F.aggregate(
@@ -805,7 +764,7 @@ def quantized_cosine_topk(
 
     q = F.broadcast(
         qs.select(
-            query_id_col,
+            "query_id",
             F.col("qvec").alias("__qq"),
             _norm2(F.col("qvec")).alias("__qn2"),
         )
@@ -819,12 +778,12 @@ def quantized_cosine_topk(
     )
     scored = (
         cs.select(
-            id_col, F.col("qvec").alias("__cq"), _norm2(F.col("qvec")).alias("__cn2")
+            "vec_id", F.col("qvec").alias("__cq"), _norm2(F.col("qvec")).alias("__cn2")
         )
         .crossJoin(q)
         .select(
-            query_id_col,
-            id_col,
+            "query_id",
+            "vec_id",
             (
                 idot.cast("double")
                 / (
@@ -834,8 +793,8 @@ def quantized_cosine_topk(
             ).alias("qcos_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("qcos_sim"), F.col(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("qcos_sim"), F.col("vec_id")
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k

@@ -40,13 +40,13 @@ IMAGE_FEATURE_SCHEMA = (
 )
 
 
-def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
+def synthetic_media(spark, n: int = 64) -> DataFrame:
     """Deterministic fake blobs for exercising the plumbing."""
     import hashlib
 
     rows = []
     for i in range(n):
-        h = hashlib.md5(f"{seed}:{i}".encode()).digest()
+        h = hashlib.md5(f"42:{i}".encode()).digest()
         payload = (h * 64)[: 512 + (i % 7) * 128]
         rows.append(
             (i, ["image", "audio", "video"][i % 3], "application/octet-stream",
@@ -55,12 +55,12 @@ def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
-def synthetic_images(spark, n: int = 32, size: int = 16, seed: int = 42) -> DataFrame:
+def synthetic_images(spark, n: int = 32, size: int = 16) -> DataFrame:
     """Deterministic REAL-decodable PNG blobs in MEDIA_SCHEMA — unlike
     :func:`synthetic_media`'s opaque bytes, these roundtrip through
     :func:`decode_image`, so the decode kernel is exercised end-to-end
     with no imaging dependency."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     rows = []
     for i in range(n):
         h, w = size + (i % 3), size + (i % 5)
@@ -328,7 +328,7 @@ def _blob_feature_rows(
     return media.select("media_id", "payload").mapInPandas(kernel, schema=schema)
 
 
-def audio_feature_extract(media: DataFrame, batch_limit: int = 256) -> DataFrame:
+def audio_feature_extract(media: DataFrame) -> DataFrame:
     """REAL audio decode + features over ``mapInPandas``: duration,
     RMS level, zero-crossing rate (the cheap voiced/unvoiced signal
     proxy) per blob, with per-blob error isolation like the image
@@ -355,7 +355,7 @@ def audio_feature_extract(media: DataFrame, batch_limit: int = 256) -> DataFrame
             )
         ]
 
-    return _blob_feature_rows(media, per_row, AUDIO_DECODE_SCHEMA, batch_limit)
+    return _blob_feature_rows(media, per_row, AUDIO_DECODE_SCHEMA, 256)
 
 
 def encode_framepack(frames: list["np.ndarray"], fps: float = 10.0) -> bytes:
@@ -398,9 +398,7 @@ VIDEO_DECODE_SCHEMA = (
 )
 
 
-def video_frame_features(
-    media: DataFrame, every_n: int = 1, batch_limit: int = 64
-) -> DataFrame:
+def video_frame_features(media: DataFrame, every_n: int = 1) -> DataFrame:
     """REAL per-frame decode over ``mapInPandas``: each framepack blob
     explodes into one row per sampled frame (every ``every_n``-th) with
     shape + mean pixel — the row-explosion shape
@@ -418,7 +416,7 @@ def video_frame_features(
             for i in range(0, len(frames), max(every_n, 1))
         ]
 
-    return _blob_feature_rows(media, per_row, VIDEO_DECODE_SCHEMA, batch_limit)
+    return _blob_feature_rows(media, per_row, VIDEO_DECODE_SCHEMA, 64)
 
 
 IMAGE_DECODE_SCHEMA = (
@@ -427,9 +425,7 @@ IMAGE_DECODE_SCHEMA = (
 )
 
 
-def image_feature_extract(
-    media: DataFrame, dim: int = 8, batch_limit: int = 256
-) -> DataFrame:
+def image_feature_extract(media: DataFrame, dim: int = 8) -> DataFrame:
     """REAL decode + feature extraction over ``mapInPandas``: each blob
     is decoded via :func:`decode_image` and reduced to (shape, mean
     pixel, ``dim``-bin pixel histogram). Decode failures (unsupported
@@ -455,12 +451,10 @@ def image_feature_extract(
             )
         ]
 
-    return _blob_feature_rows(media, per_row, IMAGE_DECODE_SCHEMA, batch_limit)
+    return _blob_feature_rows(media, per_row, IMAGE_DECODE_SCHEMA, 256)
 
 
-def fake_feature_extract(
-    media: DataFrame, dim: int = 8, batch_limit: int = 256
-) -> DataFrame:
+def fake_feature_extract(media: DataFrame, dim: int = 8) -> DataFrame:
     """``mapInPandas`` feature extraction with a deterministic fake
     'decoder': byte-histogram moments as the feature vector. The real
     implementation swaps the kernel body, nothing else."""
@@ -469,8 +463,8 @@ def fake_feature_extract(
         import hashlib
 
         for pdf in batches:
-            for start in range(0, len(pdf), batch_limit):
-                chunk = pdf.iloc[start : start + batch_limit]
+            for start in range(0, len(pdf), 256):
+                chunk = pdf.iloc[start : start + 256]
                 feats, shas, means, sizes = [], [], [], []
                 for payload in chunk["payload"]:
                     b = np.frombuffer(bytes(payload), dtype=np.uint8)

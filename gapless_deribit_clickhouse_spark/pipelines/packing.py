@@ -100,7 +100,6 @@ def pack_sequences(
     token_col: str | None = None,
     max_tokens: int = 2048,
     num_shards: int = 64,
-    shard_hash: str = "md5",
 ) -> DataFrame:
     """Assign each document a ``pack_id`` / ``pack_pos`` under a
     ``max_tokens`` budget.
@@ -115,32 +114,19 @@ def pack_sequences(
     budget — its own CLOSED pack, caller decides chunking; no other
     doc ever joins it).
 
-    ``shard_hash``: the shard-assignment hash family, same convention
-    as the dedup tier's ``base_hash`` — ``md5`` (default,
-    ``sampling.hash_u32``: the repo's one canonical md5-bucket
-    derivation, bit-reproducible in the DuckDB oracles) or
-    ``xxhash64`` (the codegen'd scale path; no cross-engine twin).
-    Sharding is load balancing only — both are uniform — so the
-    choice changes WHICH pack a doc lands in but none of the packing
-    invariants (r10: the binding's oracle unrolls the FFD walk, which
-    requires reproducing the shard split engine-side). VERSION NOTE:
-    the default was xxhash64 through r9 — pack ids from earlier
-    versions differ for the same corpus; re-pack rather than mixing
-    outputs across versions. The determinism contract (same corpus ->
-    byte-identical packs across runs/partitionings) is per-version
-    and unchanged.
+    Shards are assigned by ``sampling.hash_u32`` of the id (the
+    repo's one canonical md5-bucket derivation, bit-reproducible in
+    the DuckDB oracles: the binding's oracle unrolls the FFD walk,
+    which requires reproducing the shard split engine-side).
+    Sharding is load balancing only; the same corpus yields
+    byte-identical packs across runs and partitionings.
     """
     from gapless_deribit_clickhouse_spark.pipelines.sampling import hash_u32
 
     if max_tokens <= 0:
         raise ValueError(f"max_tokens must be positive, got {max_tokens}")
-    if shard_hash == "md5":
-        # hash_u32 is non-negative, so % == pmod
-        shard = (hash_u32(F.col(id_col)) % num_shards).cast("long")
-    elif shard_hash == "xxhash64":
-        shard = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(num_shards))
-    else:
-        raise ValueError(f"shard_hash must be md5|xxhash64, got {shard_hash!r}")
+    # hash_u32 is non-negative, so % == pmod
+    shard = (hash_u32(F.col(id_col)) % num_shards).cast("long")
     tokens: Column = (
         F.col(token_col).cast("long")
         if token_col
@@ -229,8 +215,6 @@ def pack_stats(packed: DataFrame, max_tokens: int) -> DataFrame:
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_tokens: int = 256,
     overlap: int = 32,
 ) -> DataFrame:
@@ -238,12 +222,12 @@ def chunk_documents(
     context-window preparation step between curation and packing:
     ``max_tokens``-token windows advancing by ``max_tokens - overlap``
     (the classic sliding chunker; the overlap preserves boundary
-    context for training). Output one row per chunk: ``id_col``,
+    context for training). Output one row per chunk: ``doc_id``,
     ``chunk_idx``, ``chunk_uid`` (globally unique
     ``"{len(id)}:{id}:{idx}"`` — the length prefix makes the encoding
-    injective even when a string ``id_col`` itself contains ``":"``,
+    injective even when a string ``doc_id`` itself contains ``":"``,
     so distinct (doc, chunk) pairs can never collide; the key
-    downstream stages need, since ``id_col`` repeats per chunk),
+    downstream stages need, since ``doc_id`` repeats per chunk),
     ``chunk_text``, ``doc_n_tokens`` (WHOLE-DOC whitespace-token
     count — deliberately NOT named ``n_tokens``, which downstream
     packing uses for its per-chunk BPE-ish count), ``n_chunks``.
@@ -268,7 +252,7 @@ def chunk_documents(
 
     toks = F.coalesce(
         F.filter(
-            F.split(normalized_text(F.col(text_col)), " "),
+            F.split(normalized_text(F.col("text")), " "),
             lambda t: F.length(t) > 0,
         ),
         F.array().cast("array<string>"),
@@ -285,22 +269,22 @@ def chunk_documents(
             " ", F.slice(F.col("__toks"), i * stride + 1, max_tokens)
         ),
     )
-    id_str = F.col(id_col).cast("string")
+    id_str = F.col("doc_id").cast("string")
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             toks.alias("__toks"),
             nt.cast("bigint").alias("doc_n_tokens"),
             nc.alias("n_chunks"),
         )
         .select(
-            id_col,
+            "doc_id",
             "doc_n_tokens",
             "n_chunks",
             F.posexplode(chunks).alias("chunk_idx", "chunk_text"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             # unique per chunk — the id to pack on:
             # pack_sequences(chunks, id_col="chunk_uid",

@@ -52,7 +52,6 @@ from gapless_deribit_clickhouse_spark.pipelines.text_stats import token_count
 def rrf_fuse(
     rankings: list[DataFrame],
     on: tuple[str, ...] = ("query_id", "vec_id"),
-    rank_col: str = "rank",
     c: int = 60,
     k: int = 10,
 ) -> DataFrame:
@@ -74,7 +73,7 @@ def rrf_fuse(
     sides = [
         r.select(
             *keys,
-            (F.lit(1.0) / (F.lit(float(c)) + F.col(rank_col))).alias(f"__c{i}"),
+            (F.lit(1.0) / (F.lit(float(c)) + F.col("rank"))).alias(f"__c{i}"),
         )
         for i, r in enumerate(rankings)
     ]
@@ -107,17 +106,14 @@ def bm25_topk(
     docs: DataFrame,
     queries: Mapping[str, str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Top-``k`` documents per query by Okapi BM25.
+    """Top-``k`` documents per query by Okapi BM25 (k1 = 1.2,
+    b = 0.75).
 
     ``queries`` maps query_id -> query text (tokenized with the same
     normalization as the corpus; duplicate query terms count once, the
     common bag-of-words simplification). Returns
-    (query_id, ``id_col``, n_terms, score, rank) — only documents
+    (query_id, doc_id, n_terms, score, rank) — only documents
     matching at least one query term appear, so a query with no
     corpus hits contributes zero rows.
     """
@@ -141,8 +137,9 @@ def bm25_topk(
         )
     )
 
-    t = normalized_text(F.col(text_col))
-    dl = token_count(F.col(text_col))
+    k1, b = 1.2, 0.75
+    t = normalized_text(F.col("text"))
+    dl = token_count(F.col("text"))
     # project the token array ONCE, then size/explode the projected
     # attribute — referencing the raw expression in both places would
     # re-run the normalization regex per use (the chunk_documents
@@ -158,9 +155,9 @@ def bm25_topk(
     # inference, and the null token it emits for an empty doc fails
     # the existing length(token) > 0 filter — output identical.
     toks = (
-        ensure_parallelism(docs).select(F.col(id_col), F.split(t, " ").alias("__arr"))
+        ensure_parallelism(docs).select(F.col("doc_id"), F.split(t, " ").alias("__arr"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size("__arr").alias("dl"),
             F.explode_outer("__arr").alias("token"),
         )
@@ -168,7 +165,7 @@ def bm25_topk(
     )
     # term frequencies; dl is constant per doc so max() carries it
     # through the same exchange — no doc-length join
-    tf = toks.groupBy(id_col, "token").agg(
+    tf = toks.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
     )
     stats = docs.agg(
@@ -189,11 +186,11 @@ def bm25_topk(
     )
     term_score = idf * ((tfd * F.lit(k1 + 1.0)) / norm)
 
-    per_doc = scored.groupBy("query_id", id_col).agg(
+    per_doc = scored.groupBy("query_id", "doc_id").agg(
         F.count(F.lit(1)).alias("n_terms"),
         F.round(F.sum(term_score), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("doc_id"))
     return per_doc.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )

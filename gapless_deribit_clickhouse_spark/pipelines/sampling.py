@@ -87,18 +87,14 @@ def sample_n_per_group(
     )
 
 
-def mixture_thresholds(
-    counts: dict[str, int],
-    parts: dict[str, int],
-    buckets: int = BUCKETS,
-) -> dict[str, int]:
+def mixture_thresholds(counts: dict[str, int], parts: dict[str, int]) -> dict[str, int]:
     """Per-domain integer bucket thresholds realizing a target mixture.
 
     ``parts`` gives the target mixture as integer proportions (e.g.
     ``{"web": 5, "code": 2, "wiki": 1}`` = 5:2:1); ``counts`` the
     available rows per domain. The sample is the LARGEST total N such
     that no domain is oversampled (rate <= 1): N = min_d(c_d * P / p_d),
-    then threshold_d = floor(p_d * N * buckets / (P * c_d)).
+    then threshold_d = floor(p_d * N * BUCKETS / (P * c_d)).
 
     All arithmetic is exact integer math (Python bigints here, HUGEINT
     in the DuckDB oracle), so engine and oracle agree bit-for-bit —
@@ -112,7 +108,7 @@ def mixture_thresholds(
     total_parts = sum(parts.values())
     n = min(counts.get(d, 0) * total_parts // p for d, p in parts.items())
     return {
-        d: min(buckets, p * n * buckets // (total_parts * counts[d]))
+        d: min(BUCKETS, p * n * BUCKETS // (total_parts * counts[d]))
         if counts.get(d, 0) > 0
         else 0
         for d, p in parts.items()
@@ -124,7 +120,6 @@ def mixture_sample(
     key_col: str,
     domain_col: str,
     parts: dict[str, int],
-    salt: str = "",
 ) -> DataFrame:
     """Deterministically resample to a target domain mixture — the
     pretraining mixture-building step (a DoReMi/Pile-style weighted
@@ -157,18 +152,15 @@ def mixture_sample(
             else threshold_col.when(cond, F.lit(t))
         )
     threshold_col = threshold_col.otherwise(F.lit(0))
-    return df.filter(hash_bucket(F.col(key_col), salt) < threshold_col)
+    return df.filter(hash_bucket(F.col(key_col)) < threshold_col)
 
 
-def split_thresholds(
-    weights: list[tuple[str, float]],
-    buckets: int = BUCKETS,
-) -> list[tuple[str, int]]:
+def split_thresholds(weights: list[tuple[str, float]]) -> list[tuple[str, int]]:
     """Cumulative integer bucket thresholds for ``split_assign``, in
     EXACT arithmetic: each weight is converted to an exact rational
     via its decimal string (``Fraction(str(w))`` — so 0.9 means the
     decimal 0.9, not the nearest float), normalized, and floored onto
-    ``buckets``. The last split takes everything past the previous
+    ``BUCKETS``. The last split takes everything past the previous
     threshold (no entry). One shared derivation for the engine
     when-chain AND any generated oracle SQL — float rounding never
     decides a membership boundary. Raises if a positive-weight split
@@ -188,19 +180,19 @@ def split_thresholds(
     prev = 0
     for name, f in fracs[:-1]:
         cum += f
-        t = floor(cum / total * buckets)
+        t = floor(cum / total * BUCKETS)
         if f > 0 and t <= prev:
             raise ValueError(
                 f"split {name!r}: weight {f} yields an empty bucket range "
-                f"at {buckets} buckets"
+                f"at {BUCKETS} buckets"
             )
         out.append((name, t))
         prev = t
     last_name, last_f = fracs[-1]
-    if last_f > 0 and prev >= buckets:
+    if last_f > 0 and prev >= BUCKETS:
         raise ValueError(
             f"split {last_name!r}: weight {last_f} yields an empty bucket range "
-            f"at {buckets} buckets"
+            f"at {BUCKETS} buckets"
         )
     return out
 
@@ -210,7 +202,6 @@ def split_assign(
     key_col: str,
     weights: list[tuple[str, float]] | None = None,
     salt: str = "split",
-    out_col: str = "split",
 ) -> DataFrame:
     """Leakage-safe deterministic train/val/test assignment: one
     ``split`` label per row from a salted md5 bucket of ``key_col``.
@@ -236,7 +227,7 @@ def split_assign(
         cond = b < F.lit(threshold)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     expr = expr.otherwise(F.lit(weights[-1][0]))
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_hash_sample(
@@ -245,7 +236,6 @@ def stratified_hash_sample(
     stratum_col: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    salt: str = "",
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the downsample-the-
     majority-class shape (e.g. per-language or per-source quotas in a
@@ -260,7 +250,7 @@ def stratified_hash_sample(
         if threshold is not None
         else F.lit(int(default_rate * BUCKETS))
     )
-    return df.filter(hash_bucket(F.col(key_col), salt) < threshold)
+    return df.filter(hash_bucket(F.col(key_col)) < threshold)
 
 
 def weighted_sample_per_group(
@@ -299,11 +289,7 @@ def weighted_sample_per_group(
     )
 
 
-def temperature_thresholds(
-    counts: dict[str, int],
-    target_total: int,
-    buckets: int = BUCKETS,
-) -> dict[str, int]:
+def temperature_thresholds(counts: dict[str, int], target_total: int) -> dict[str, int]:
     """Per-domain integer thresholds for temperature-2 (alpha = 1/2)
     domain rebalancing: sampling weight q_d proportional to
     sqrt(count_d) — the standard multilingual-pretraining smoothing
@@ -323,7 +309,7 @@ def temperature_thresholds(
     if s == 0:
         return {d: 0 for d in counts}
     return {
-        d: min(buckets, target_total * buckets * isq[d] // (s * counts[d]))
+        d: min(BUCKETS, target_total * BUCKETS * isq[d] // (s * counts[d]))
         if d in isq
         else 0
         for d in counts
@@ -378,7 +364,6 @@ def epoch_shuffle(
     epoch: int = 0,
     salt: str = "shuffle",
     shards: int = 256,
-    rank_col: str = "epoch_rank",
 ) -> DataFrame:
     """Deterministic global training order for one epoch: every row
     gets its exact 0-based position in the corpus ordered by
@@ -398,7 +383,7 @@ def epoch_shuffle(
     per-shard ``row_number`` (a partitioned window, never global)
     plus the shard's offset — cumulative counts over a ``shards``-row
     aggregate, broadcast back. Cost: one map-side-combined count
-    aggregate + one data shuffle on the shard id. ``rank_col`` is
+    aggregate + one data shuffle on the shard id. ``epoch_rank`` is
     independent of ``shards``, which only tunes parallelism.
 
     Writing the epoch in order is then
@@ -433,6 +418,6 @@ def epoch_shuffle(
     )
     return (
         d.join(F.broadcast(offsets), "__s")
-        .withColumn(rank_col, (F.col("__off") + rank_in_shard - 1).cast("long"))
+        .withColumn("epoch_rank", (F.col("__off") + rank_in_shard - 1).cast("long"))
         .drop("__h", "__s", "__off")
     )

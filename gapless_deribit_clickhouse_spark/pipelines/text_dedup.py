@@ -4,11 +4,9 @@ Scale design (the whole point — these run over billions of docs):
 
 - exact_dedup: hash-groupBy on a text digest. One shuffle on the
   digest (uniform key -> no skew); keeps min doc_id per group.
-- ngram_jaccard_pairs: shingle -> explode -> equi-join on the shingle,
+- ngram_jaccard_pairs: shingle -> explode -> bucket by the shingle,
   count co-occurrences, normalize by set sizes. Never all-pairs: the
-  join key is the shingle, and frequent shingles can be capped
-  (``max_shingle_freq``) like stop-word removal in published
-  dedup pipelines.
+  bucket key is the shingle.
 - minhash_lsh_pairs: k md5-derived min-hashes -> b bands of r rows ->
   band-hash bucket join -> candidate pairs -> exact Jaccard verify.
   Shuffle is on band buckets — the standard sub-quadratic LSH shape.
@@ -41,19 +39,13 @@ def normalized_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def exact_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep: str = "min",
-) -> DataFrame:
-    """One row per distinct normalized text: the min (or max) id wins.
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """One row per distinct normalized text: the min ``doc_id`` wins.
     Adds ``dup_count`` (group size)."""
-    digest = F.md5(normalized_text(F.col(text_col)))
-    keeper = F.min(id_col) if keep == "min" else F.max(id_col)
+    digest = F.md5(normalized_text(F.col("text")))
     return (
         df.groupBy(digest.alias("text_hash"))
-        .agg(keeper.alias(id_col), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
@@ -88,13 +80,7 @@ def shingles(col: Column, n: int = 3) -> Column:
     return F.array_distinct(gram_array(toks, n))
 
 
-def _shingle_pair_intersections(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    max_shingle_freq: int | None,
-) -> DataFrame:
+def _shingle_pair_intersections(df: DataFrame, n: int) -> DataFrame:
     """(id_a < id_b, sz_a, sz_b, inter) for every doc pair sharing at
     least one word n-gram — the exact-intersection core both
     :func:`ngram_jaccard_pairs` (symmetric overlap) and
@@ -105,7 +91,7 @@ def _shingle_pair_intersections(
     # the shingle, not the string — ~4x less shuffle volume, and both
     # join sides share one identical exchange (Spark ReusedExchange).
     arr = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("__arr")
+        F.col("doc_id").alias("id"), shingles(F.col("text"), n).alias("__arr")
     )
     sh = arr.select(
         "id",
@@ -116,12 +102,8 @@ def _shingle_pair_intersections(
     # ordered in-bucket pairs, count pair occurrences. A self-join
     # would scan+shingle+explode the corpus twice (no ReusedExchange
     # across aliased subtrees); this shape computes it once and
-    # shuffles twice total. The posting-list cap (``max_shingle_freq``)
-    # becomes a free ``size(ds) <= cap`` filter — the standard
-    # stop-shingle skew guard: an f-doc bucket emits f(f-1)/2 pairs.
+    # shuffles twice total. An f-doc bucket emits f(f-1)/2 pairs.
     ds = sh.groupBy("shingle").agg(F.collect_list(F.struct("id", "sz")).alias("ds"))
-    if max_shingle_freq is not None:
-        ds = ds.filter(F.size("ds") <= max_shingle_freq)
     # The in-bucket pair EXPLOSION below emits ~4x its input bytes
     # (f(f-1)/2 pairs per f-doc bucket), but AQE sizes the post-agg
     # stage by the exchange's INPUT bytes and coalesces it to a
@@ -153,19 +135,15 @@ def _shingle_pair_intersections(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """All pairs with exact n-gram Jaccard >= threshold.
 
-    |A∩B| via shingle equi-join; |A∪B| = |A|+|B|−|A∩B|. Output:
-    id_a < id_b, jaccard. ``max_shingle_freq`` drops shingles shared
-    by more than that many docs (stop-shingle skew guard at scale).
+    |A∩B| via shingle buckets; |A∪B| = |A|+|B|−|A∩B|. Output:
+    id_a < id_b, jaccard.
     """
-    out = _shingle_pair_intersections(df, text_col, id_col, n, max_shingle_freq)
+    out = _shingle_pair_intersections(df, n)
     return (
         out.withColumn(
             "jaccard",
@@ -178,11 +156,8 @@ def ngram_jaccard_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.9,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Asymmetric near-containment pairs: |A∩B| / min(|A|, |B|) >=
     ``threshold`` over word n-gram shingle sets — the duplication
@@ -195,13 +170,13 @@ def containment_pairs(
 
     Scale design: the SAME single-scan shingle-bucket intersection
     core as :func:`ngram_jaccard_pairs` (one corpus shingle pass, two
-    shuffles, posting-list cap as the skew guard) — containment is a
-    formula on (inter, sz_a, sz_b), not a new join. This is the exact
+    shuffles) — containment is a formula on (inter, sz_a, sz_b), not a
+    new join. This is the exact
     tier; a banded-LSH candidate stage does NOT drop in here because
     MinHash collision probability estimates Jaccard, which is
     precisely the measure containment disagrees with on the pairs
     this operator exists for."""
-    out = _shingle_pair_intersections(df, text_col, id_col, n, max_shingle_freq)
+    out = _shingle_pair_intersections(df, n)
     return (
         out.withColumn(
             "containment",
@@ -223,15 +198,9 @@ def containment_pairs(
     )
 
 
-def interdoc_repetition(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    min_docs: int = 5,
-) -> DataFrame:
+def interdoc_repetition(df: DataFrame, min_docs: int = 5) -> DataFrame:
     """Per-document inter-document repetition score: the fraction of a
-    document's distinct word n-grams that also appear in at least
+    document's distinct word 3-grams that also appear in at least
     ``min_docs`` documents (RefinedWeb/C4-style duplicated-n-gram
     fraction — the doc-level boilerplate signal that catches template
     pages and mirror spam, complementing ``repetition_stats``' INTRA-
@@ -255,7 +224,7 @@ def interdoc_repetition(
     from pyspark.sql import Window
 
     arr = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc_id"), shingles(F.col(text_col), n).alias("__arr")
+        F.col("doc_id"), shingles(F.col("text")).alias("__arr")
     )
     sh = arr.select(
         "doc_id",
@@ -292,13 +261,13 @@ def _md5_hash64(col: Column, seed: int) -> Column:
 MINHASH_PRIME = 2147483647  # 2^31 - 1; (p-1)^2 fits in int64
 
 
-def minhash_affine_params(num_hashes: int, seed: int = 12345) -> list[tuple[int, int]]:
+def minhash_affine_params(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the universal hash family
     ``h_i(x) = (a_i * x + b_i) mod p`` — the same scheme as Spark ML's
     MinHashLSH. Shared by the Spark operator and the DuckDB oracle."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(12345)
     return [
         (rng.randrange(1, MINHASH_PRIME), rng.randrange(0, MINHASH_PRIME))
         for _ in range(num_hashes)
@@ -307,8 +276,6 @@ def minhash_affine_params(num_hashes: int, seed: int = 12345) -> list[tuple[int,
 
 def minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     num_hashes: int = 32,
     base_hash: str = "md5",
@@ -330,13 +297,11 @@ def minhash_signatures(
     hex digest + parse, engine-internal only. Near-dup quality is
     equivalent (both are uniform over the shingle set); signatures are
     NOT comparable across the two modes."""
-    harr = _hashed_shingles(df, text_col, id_col, n, base_hash)
+    harr = _hashed_shingles(df, n, base_hash)
     return _signatures_from_hashed(harr, num_hashes)
 
 
-def _hashed_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int, base_hash: str
-) -> DataFrame:
+def _hashed_shingles(df: DataFrame, n: int, base_hash: str) -> DataFrame:
     """(id, __harr): the hashed-shingle array — the ONE
     tokenize+shingle+hash pass both the signature minima and the
     exact-Jaccard verification derive from. Values are UNREDUCED
@@ -350,7 +315,7 @@ def _hashed_shingles(
     the comparison set (the same collision tolerance the 64-bit
     ``_hashed_sets`` verify arrays always had)."""
     arr = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("__arr")
+        F.col("doc_id").alias("id"), shingles(F.col("text"), n).alias("__arr")
     )
     if base_hash == "md5":
         base = (
@@ -391,11 +356,7 @@ def _signatures_from_hashed(harr: DataFrame, num_hashes: int) -> DataFrame:
     return harr.select("id", F.expr(sig).alias("signature"))
 
 
-def minhash_params(
-    threshold: float,
-    target_recall: float = 0.9,
-    max_hashes: int = 256,
-) -> tuple[int, int]:
+def minhash_params(threshold: float, target_recall: float = 0.9) -> tuple[int, int]:
     """Derive ``(num_hashes, bands)`` for banded MinHash-LSH from the
     Jaccard threshold — the companion of ``embeddings.lsh_params``.
 
@@ -403,7 +364,7 @@ def minhash_params(
     ``B`` bands give recall ``1 − (1 − s**r)**B``. Larger ``r`` is more
     selective (random low-similarity pairs collide at ``s_low**r``),
     so we pick the LARGEST ``r`` whose band count for the recall
-    target still fits the ``max_hashes`` signature budget. Unlike
+    target still fits a 256-hash signature budget. Unlike
     sign-LSH, bucket count here is the full hash space, so corpus size
     does not enter — selectivity is governed by ``r`` alone.
     """
@@ -414,22 +375,19 @@ def minhash_params(
     for r in range(1, 17):
         sr = s**r
         b = max(1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - sr)))
-        if r * b <= max_hashes:
+        if r * b <= 256:
             best = (r, b)
     r, b = best
     return (r * b, b)
 
 
-def _hashed_sets(
-    df: DataFrame, text_col: str, id_col: str, n: int, out_id: str, out_set: str
-) -> DataFrame:
+def _hashed_sets(df: DataFrame, n: int, out_id: str, out_set: str) -> DataFrame:
     """(id, hashed-shingle array) projection — the exact-Jaccard
-    verification input shared by minhash_lsh_pairs and
-    incremental_dedup."""
+    verification input of the persisted dedup index."""
     return ensure_parallelism(df).select(
-        F.col(id_col).alias(out_id),
+        F.col("doc_id").alias(out_id),
         F.array_distinct(
-            F.transform(shingles(F.col(text_col), n), lambda s: F.xxhash64(s))
+            F.transform(shingles(F.col("text"), n), lambda s: F.xxhash64(s))
         ).alias(out_set),
     )
 
@@ -452,8 +410,6 @@ def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     num_hashes: int | None = 32,
     bands: int | None = 8,
@@ -481,7 +437,7 @@ def minhash_lsh_pairs(
     # lazy localCheckpoint barrier Catalyst executes the projection
     # once per consumer (VERDICT r7 #3: the re-tokenization between
     # the sig and verify branches was the training_set floor)
-    harr = _hashed_shingles(df, text_col, id_col, n, base_hash).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
+    harr = _hashed_shingles(df, n, base_hash).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     sig = _signatures_from_hashed(harr, num_hashes)
     banded = _banded(sig, num_hashes, bands)
     cand = (
@@ -570,8 +526,6 @@ def simhash64(
 
 def simhash_near_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     base_hash: str = "md5",
 ) -> DataFrame:
@@ -593,7 +547,7 @@ def simhash_near_pairs(
     (the operator's only post-checkpoint exchange); the filter does
     the same dedup with pure column algebra, and at 100 TB removes the
     one stage whose cost grows with the candidate count."""
-    sig = simhash64(df, text_col, id_col, base_hash).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
+    sig = simhash64(df, base_hash=base_hash).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     chunks = F.array(*[
         F.shiftright(F.col("simhash"), c * 15).bitwiseAND(F.lit(0x7FFF)).alias(f"c{c}")
         for c in range(4)
@@ -626,8 +580,6 @@ def simhash_near_pairs(
 
 def near_dedup_corpus(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
     num_hashes: int | None = None,
@@ -644,7 +596,7 @@ def near_dedup_corpus(
     the pair-generating LSH stage never sees them (pair output is
     inherently quadratic in clique size). The canonical survivor of a
     cluster is the minimum id (deterministic, matching
-    ``exact_dedup``'s keep="min").
+    ``exact_dedup``'s winner).
 
     Shuffle budget: ONE semi-join shuffle for the exact tier (keeping
     full rows per distinct text cannot avoid it), the LSH stages on
@@ -662,14 +614,10 @@ def near_dedup_corpus(
         connected_components,
     )
 
-    winners = exact_dedup(df, text_col=text_col, id_col=id_col, keep="min").select(
-        id_col
-    )
-    survivors = df.join(winners, id_col, "semi").localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
+    winners = exact_dedup(df).select("doc_id")
+    survivors = df.join(winners, "doc_id", "semi").localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     pairs = minhash_lsh_pairs(
         survivors,
-        text_col=text_col,
-        id_col=id_col,
         n=n,
         num_hashes=num_hashes,
         bands=bands,
@@ -684,21 +632,15 @@ def near_dedup_corpus(
         # anti join is the identity — skip it (optimization r13)
         return survivors
     losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    return survivors.join(losers, id_col, "left_anti")
+    return survivors.join(losers, "doc_id", "left_anti")
 
 
 def incremental_dedup(
     new_df: DataFrame,
     corpus_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.8,
-    num_hashes: int | None = None,
-    bands: int | None = None,
-    base_hash: str = "md5",
 ) -> DataFrame:
     """Dedup a NEW batch against itself AND an existing corpus,
     without re-clustering the corpus — the steady-state shape of a
@@ -711,7 +653,9 @@ def incremental_dedup(
     exact anti-join against the corpus's normalized-text digests, and
     (3) a banded-LSH candidate join of batch signatures against
     corpus signatures with exact-Jaccard verification — a new doc
-    with jaccard >= threshold against ANY corpus doc is dropped.
+    with jaccard >= threshold against ANY corpus doc is dropped. The
+    signature is auto-sized from ``threshold`` (:func:`minhash_params`)
+    over word 3-gram md5 shingles.
 
     Corpus-side cost is a few NARROW passes (text digest; in-row
     minhash signature + band explosion; shingle arrays for the
@@ -725,10 +669,7 @@ def incremental_dedup(
     ``corpus_df`` for the index-free one-shot case.
     Candidate volume is batch-sized x band-collision rate, so the
     cross join scales with the BATCH, not the corpus."""
-    if num_hashes is None or bands is None:
-        auto_hashes, auto_bands = minhash_params(threshold)
-        num_hashes = auto_hashes if num_hashes is None else num_hashes
-        bands = auto_bands if bands is None else bands
+    num_hashes, bands = minhash_params(threshold)
 
     # Corpus-side hashed shingles FIRST (optimization r13, guide §2.6
     # overlap): the pass is checkpointed and entirely independent of
@@ -739,9 +680,9 @@ def incremental_dedup(
     # the final action. FIFO scheduling back-fills idle cores; if the
     # warm-up fails (or is still running) the main lineage simply
     # computes the missing partitions itself.
-    harr_corp = _hashed_shingles(
-        corpus_df, text_col, id_col, n, base_hash
-    ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
+    harr_corp = _hashed_shingles(corpus_df, 3, "md5").localCheckpoint(
+        eager=False, storageLevel=BARRIER_STORAGE
+    )
 
     def _warm_corpus() -> None:
         try:
@@ -758,7 +699,7 @@ def incremental_dedup(
     # (optimization r13 removed a redundant second block-store write
     # of the full batch text between the two).
     batch = near_dedup_corpus(
-        new_df, text_col, id_col, n, threshold, num_hashes, bands, base_hash
+        new_df, threshold=threshold, num_hashes=num_hashes, bands=bands
     )
 
     # (2) exact tier vs corpus: anti-join on the normalized digest
@@ -767,7 +708,7 @@ def incremental_dedup(
     h = "__h"
     while h in batch.columns:
         h += "_"
-    digest = F.md5(normalized_text(F.col(text_col)))
+    digest = F.md5(normalized_text(F.col("text")))
     corpus_hashes = corpus_df.select(digest.alias(h)).distinct()
     batch = batch.withColumn(h, digest).join(
         corpus_hashes, h, "left_anti"
@@ -784,7 +725,7 @@ def incremental_dedup(
     # executor-local storage of the hashed arrays for half the map
     # passes — the same trade ``survivors`` above already makes for
     # the batch text itself.
-    harr_new = _hashed_shingles(batch, text_col, id_col, n, base_hash).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
+    harr_new = _hashed_shingles(batch, 3, "md5").localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     sig_new = _signatures_from_hashed(harr_new, num_hashes)
     sig_corp = _signatures_from_hashed(harr_corp, num_hashes)
     cand = (
@@ -812,10 +753,10 @@ def incremental_dedup(
     losers = (
         joined.withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= threshold)
-        .select(F.col("new_id").alias(id_col))
+        .select(F.col("new_id").alias("doc_id"))
         .distinct()
     )
-    return batch.join(losers, id_col, "left_anti")
+    return batch.join(losers, "doc_id", "left_anti")
 
 
 # --- persisted dedup index (VERDICT r5 #5) ------------------------------
@@ -840,17 +781,7 @@ def incremental_dedup(
 _INDEX_META_COLS = ("n", "threshold", "num_hashes", "bands", "base_hash")
 
 
-def build_dedup_index(
-    corpus_df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-    num_hashes: int | None = None,
-    bands: int | None = None,
-    base_hash: str = "md5",
-) -> None:
+def build_dedup_index(corpus_df: DataFrame, path: str, threshold: float = 0.8) -> None:
     """Materialize the corpus-side dedup artifacts as parquet under
     ``path`` — one corpus pass now, zero corpus passes per future
     batch. ``incremental_dedup_indexed(batch, spark, path)`` is then
@@ -859,19 +790,16 @@ def build_dedup_index(
 
     Appending a deduped batch to the corpus = appending the SAME three
     projections of the batch's survivors (mode="append"); parquet
-    append is atomic per file, so index growth is a plain ETL step."""
-    if num_hashes is None or bands is None:
-        auto_hashes, auto_bands = minhash_params(threshold)
-        num_hashes = auto_hashes if num_hashes is None else num_hashes
-        bands = auto_bands if bands is None else bands
+    append is atomic per file, so index growth is a plain ETL step. The
+    signature family is :func:`incremental_dedup`'s (3-grams, md5,
+    auto-sized from ``threshold``)."""
+    num_hashes, bands = minhash_params(threshold)
     spark = corpus_df.sparkSession
 
-    _write_index_tables(
-        corpus_df, path, "overwrite", text_col, id_col, n, num_hashes, bands, base_hash
-    )
+    _write_index_tables(corpus_df, path, "overwrite", 3, num_hashes, bands, "md5")
 
     spark.createDataFrame(
-        [(n, float(threshold), int(num_hashes), int(bands), base_hash)],
+        [(3, float(threshold), int(num_hashes), int(bands), "md5")],
         list(_INDEX_META_COLS),
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
@@ -880,8 +808,6 @@ def _write_index_tables(
     df: DataFrame,
     path: str,
     mode: str,
-    text_col: str,
-    id_col: str,
     n: int,
     num_hashes: int,
     bands: int,
@@ -896,7 +822,7 @@ def _write_index_tables(
     # the replay: it re-appends bands/sets (duplicate rows degrade
     # space, not answers — consumers distinct() candidates and losers)
     # and only then commits the digests marker.
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, base_hash)
+    sig = minhash_signatures(df, n, num_hashes, base_hash)
     # partitioned by band: the batch probe joins on (band, band_hash),
     # so partition pruning would let a band-sliced probe read 1/bands
     # of the table; more importantly the layout keeps each band's
@@ -905,22 +831,17 @@ def _write_index_tables(
         f"{path}/bands"
     )
 
-    _hashed_sets(df, text_col, id_col, n, "id", "sset").write.mode(mode).parquet(
+    _hashed_sets(df, n, "id", "sset").write.mode(mode).parquet(
         f"{path}/sets"
     )
 
-    digest = F.md5(normalized_text(F.col(text_col)))
+    digest = F.md5(normalized_text(F.col("text")))
     df.select(digest.alias("digest")).distinct().write.mode(mode).parquet(
         f"{path}/digests"
     )
 
 
-def append_dedup_index(
-    batch_df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
+def append_dedup_index(batch_df: DataFrame, path: str) -> None:
     """Append a (deduplicated) batch's three index projections to an
     existing index — the "plain ETL step" the build docstring promises.
     LSH parameters come from the index's meta table so the appended
@@ -936,8 +857,6 @@ def append_dedup_index(
         batch_df,
         path,
         "append",
-        text_col,
-        id_col,
         int(meta["n"]),
         int(meta["num_hashes"]),
         int(meta["bands"]),
@@ -945,12 +864,7 @@ def append_dedup_index(
     )
 
 
-def incremental_dedup_indexed(
-    new_df: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup_indexed(new_df: DataFrame, index_path: str) -> DataFrame:
     """``incremental_dedup`` against a persisted index instead of the
     corpus itself: same three tiers (within-batch near-dedup, exact
     anti-join, banded-LSH + exact-Jaccard verify), but every
@@ -966,13 +880,13 @@ def incremental_dedup_indexed(
     base_hash = meta["base_hash"]
 
     batch = near_dedup_corpus(
-        new_df, text_col, id_col, n, threshold, num_hashes, bands, base_hash
+        new_df, n, threshold, num_hashes, bands, base_hash
     ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
 
     h = "__h"
     while h in batch.columns:
         h += "_"
-    digest = F.md5(normalized_text(F.col(text_col)))
+    digest = F.md5(normalized_text(F.col("text")))
     corpus_hashes = spark.read.parquet(f"{index_path}/digests").select(
         F.col("digest").alias(h)
     )
@@ -983,7 +897,7 @@ def incremental_dedup_indexed(
         .localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     )
 
-    sig_new = minhash_signatures(batch, text_col, id_col, n, num_hashes, base_hash)
+    sig_new = minhash_signatures(batch, n, num_hashes, base_hash)
     corp_bands = spark.read.parquet(f"{index_path}/bands").select(
         F.col("id").alias("corp_id"), "band", "band_hash"
     )
@@ -998,25 +912,20 @@ def incremental_dedup_indexed(
         F.col("id").alias("corp_id"), F.col("sset").alias("set_b")
     )
     joined = cand.join(
-        _hashed_sets(batch, text_col, id_col, n, "new_id", "set_a"), "new_id"
+        _hashed_sets(batch, n, "new_id", "set_a"), "new_id"
     ).join(corp_sets, "corp_id")
     inter = F.size(F.array_intersect("set_a", "set_b"))
     union = F.size("set_a") + F.size("set_b") - inter
     losers = (
         joined.withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= threshold)
-        .select(F.col("new_id").alias(id_col))
+        .select(F.col("new_id").alias("doc_id"))
         .distinct()
     )
-    return batch.join(losers, id_col, "left_anti")
+    return batch.join(losers, "doc_id", "left_anti")
 
 
-def substring_dup_fraction(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 8,
-) -> DataFrame:
+def substring_dup_fraction(df: DataFrame, window: int = 8) -> DataFrame:
     """Per-document fraction of token POSITIONS covered by a
     ``window``-token substring that also appears verbatim in at least
     one OTHER document — the exact-substring duplication metric of
@@ -1039,7 +948,7 @@ def substring_dup_fraction(
     tokens contribute their whole text as one window, mirroring
     :func:`gram_array`.
     """
-    toks = F.split(normalized_text(F.col(text_col)), " ")
+    toks = F.split(normalized_text(F.col("text")), " ")
     # The barrier sits BEFORE the positional explode (optimization
     # r13, revising r12's post-explode placement that regressed at
     # sf0.1): the heavy tokenize+gram+hash pass still runs exactly
@@ -1052,7 +961,7 @@ def substring_dup_fraction(
     # form 1.12s (and this form is the only one that also feeds
     # per_doc below without a THIRD tokenize pass).
     hbase = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(toks).alias("n_tokens"),
         F.transform(gram_array(toks, window), lambda g: F.xxhash64(g)).alias(
             "__harr"
@@ -1089,7 +998,7 @@ def substring_dup_fraction(
     return (
         per_doc.join(covered, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_tokens",
             F.coalesce("n_dup_positions", F.lit(0)).alias("n_dup_positions"),
             (
@@ -1100,12 +1009,7 @@ def substring_dup_fraction(
     )
 
 
-def segment_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seg_tokens: int = 10,
-) -> DataFrame:
+def segment_dedup(df: DataFrame, seg_tokens: int = 10) -> DataFrame:
     """Corpus-wide duplicated-segment REMOVAL — the transform
     counterpart of :func:`substring_dup_fraction`'s metric, and the
     fixed-span analogue of C4's duplicate-line drop (the corpus here
@@ -1139,8 +1043,8 @@ def segment_dedup(
     segs = (
         ensure_parallelism(df)
         .select(
-            F.col(id_col).alias("id"),
-            F.split(normalized_text(F.col(text_col)), " ").alias("toks"),
+            F.col("doc_id").alias("id"),
+            F.split(normalized_text(F.col("text")), " ").alias("toks"),
         )
         .select("id", "toks", F.size("toks").alias("n_tokens"))
         .select(
@@ -1178,6 +1082,6 @@ def segment_dedup(
             ).alias("dedup_text"),
         )
         .select(
-            F.col("id").alias(id_col), "n_segments", "n_kept", "dedup_text"
+            F.col("id").alias("doc_id"), "n_segments", "n_kept", "dedup_text"
         )
     )

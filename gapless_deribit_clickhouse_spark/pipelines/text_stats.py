@@ -84,17 +84,13 @@ def quality_exprs(raw: Column) -> dict[str, Column]:
     }
 
 
-def quality_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Per-doc quality features + composite score:
     n_chars, n_tokens, mean token length, punctuation ratio, stopword
     ratio, uppercase ratio; score = weighted combination in [0,1]."""
-    exprs = quality_exprs(F.col(text_col))
+    exprs = quality_exprs(F.col("text"))
     return ensure_parallelism(df).select(
-        F.col(id_col), *[c.alias(name) for name, c in exprs.items()]
+        F.col("doc_id"), *[c.alias(name) for name, c in exprs.items()]
     )
 
 
@@ -122,28 +118,19 @@ def lang_exprs(raw: Column) -> tuple[dict[str, Column], Column]:
     return hits, pred
 
 
-def lang_id(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: count function-word hits per language
     profile, argmax wins ('und' = undetermined when all zero).
     Deterministic tie-break by language code order."""
-    hits, pred = lang_exprs(F.col(text_col))
+    hits, pred = lang_exprs(F.col("text"))
     return ensure_parallelism(df).select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[hits[lang].cast("bigint").alias(f"hits_{lang}") for lang in sorted(hits)],
         pred.alias("lang_pred"),
     )
 
 
-def token_topk(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 100,
-) -> DataFrame:
+def token_topk(df: DataFrame, k: int = 100) -> DataFrame:
     """Corpus vocabulary head: top-k tokens by total occurrence count,
     with document frequency — the vocab/stopword-list builder.
 
@@ -155,8 +142,8 @@ def token_topk(
     costs one row per partition in the shuffle, not one per
     occurrence."""
     toks = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("token"),
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(normalized_text(F.col("text")), " ")).alias("token"),
     ).filter(F.length("token") > 0)
     return (
         toks.groupBy("token")
@@ -169,12 +156,7 @@ def token_topk(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k_per_doc: int = 5,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k_per_doc: int = 5) -> DataFrame:
     """Top-k characteristic terms per document by tf·idf
     (tf = raw in-doc count, idf = ln((N+1)/(df+1)) + 1 — the
     smoothed scikit-style variant). The keyword-extraction /
@@ -190,8 +172,8 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     toks = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("token"),
+        F.col("doc_id").alias("doc"),
+        F.explode(F.split(normalized_text(F.col("text")), " ")).alias("token"),
     ).filter(F.length("token") > 0)
     tf = toks.groupBy("doc", "token").agg(F.count(F.lit(1)).alias("tf"))
     # each (doc, token) row is distinct, so rows-per-token IS the
@@ -203,7 +185,7 @@ def tfidf_top_terms(
         tf.withColumn("df", F.count(F.lit(1)).over(dfw))
         .crossJoin(F.broadcast(n_docs))
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             "token",
             F.col("tf").cast("bigint").alias("tf"),
             (
@@ -212,19 +194,17 @@ def tfidf_top_terms(
             ).cast("double").alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("token"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("token"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k_per_doc)
-        .select(id_col, "token", "tf", F.col("rank").cast("bigint").alias("rank"), "tfidf")
+        .select("doc_id", "token", "tf", F.col("rank").cast("bigint").alias("rank"), "tfidf")
     )
 
 
 def corpus_profile(
     df: DataFrame,
     group_col: str = "lang",
-    text_col: str = "text",
-    percentiles: tuple[float, ...] = (0.5, 0.9, 0.99),
     exact: bool = False,
 ) -> DataFrame:
     """Per-group corpus profile: document count, token totals, and
@@ -232,7 +212,7 @@ def corpus_profile(
     deciding curation thresholds (length bands, language mix).
 
     Output: ``<group_col>, n_docs, total_tokens, avg_tokens,
-    p<pct>_tokens...`` (one column per requested percentile).
+    p50_tokens, p90_tokens, p99_tokens``.
 
     Scale design: token counts are row-wise expressions, so the whole
     profile is one partial-agg + tiny exchange on the group key. The
@@ -242,10 +222,10 @@ def corpus_profile(
     validation scale, used by the DuckDB-oracle binding since sketches
     aren't reproducible across engines).
     """
-    toks = token_count(F.col(text_col)).cast("double")
+    toks = token_count(F.col("text")).cast("double")
     pct_fn = F.percentile if exact else F.percentile_approx
     pct_cols = [
-        pct_fn(toks, F.lit(p)).alias(f"p{int(p * 100)}_tokens") for p in percentiles
+        pct_fn(toks, F.lit(p)).alias(f"p{int(p * 100)}_tokens") for p in (0.5, 0.9, 0.99)
     ]
     return df.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -255,12 +235,7 @@ def corpus_profile(
     )
 
 
-def repetition_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
-) -> DataFrame:
+def repetition_stats(df: DataFrame, n: int = 2) -> DataFrame:
     """Gopher-style within-document repetition signals, one row per doc:
 
     - ``n_tokens``          whitespace token count
@@ -281,7 +256,7 @@ def repetition_stats(
     """
     from gapless_deribit_clickhouse_spark.pipelines.text_dedup import gram_array
 
-    toks = F.split(normalized_text(F.col(text_col)), " ")
+    toks = F.split(normalized_text(F.col("text")), " ")
     n_toks = F.size(toks)
     # total (overlapping) n-grams and their distinct count; gram_array
     # keeps the quadratic split-in-lambda re-evaluation out (see its
@@ -308,7 +283,7 @@ def repetition_stats(
     )
     frac = lambda d, t: (t - d).cast("double") / t  # noqa: E731
     return ensure_parallelism(df).select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_toks.cast("bigint").alias("n_tokens"),
         frac(F.size(F.array_distinct(toks)), n_toks).alias("dup_token_frac"),
         frac(F.size(F.array_distinct(grams)), F.size(grams)).alias("dup_ngram_frac"),
@@ -317,17 +292,13 @@ def repetition_stats(
     )
 
 
-def fingerprint(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Order-insensitive document fingerprint: md5 of the sorted
     distinct token set (the classic 'fingerprint' clustering key —
     robust to token reordering/duplication)."""
-    toks = F.array_sort(F.array_distinct(F.split(normalized_text(F.col(text_col)), " ")))
+    toks = F.array_sort(F.array_distinct(F.split(normalized_text(F.col("text")), " ")))
     return ensure_parallelism(df).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(F.concat_ws(" ", toks)).alias("fingerprint"),
         F.size(toks).cast("bigint").alias("n_distinct_tokens"),
     )
@@ -337,14 +308,12 @@ def hashed_linear_score(
     df: DataFrame,
     weights: list[float],
     bias: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    score_col: str = "clf_score",
 ) -> DataFrame:
     """Fasttext-style hashed linear classifier inference, fused into
     the scan as pure column algebra: each token hashes into a bucket
     of the ``weights`` vector (hashing trick), the document logit is
-    bias + mean bucket weight, and the score is its sigmoid.
+    bias + mean bucket weight, and the score (``clf_score``) is its
+    sigmoid.
 
     The scale story is the point: classifier inference over 100 TB is
     a zero-shuffle, zero-UDF map — the weight vector is a plan
@@ -372,7 +341,7 @@ def hashed_linear_score(
     # as chunk_documents)
     toks = F.coalesce(
         F.filter(
-            F.split(normalized_text(F.col(text_col)), " "),
+            F.split(normalized_text(F.col("text")), " "),
             lambda t: F.length(t) > 0,
         ),
         F.array().cast("array<string>"),
@@ -384,20 +353,15 @@ def hashed_linear_score(
         F.aggregate(tok_w, F.lit(0.0), lambda a, x: a + x) / F.size(tok_w)
     ).otherwise(F.lit(0.0))
     return ensure_parallelism(df).select(
-        F.col(id_col),
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias(score_col),
+        F.col("doc_id"),
+        (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("clf_score"),
         # corrupt (null-text) rows score the prior with count 0 — they
         # don't poison downstream filters
         F.size(toks).cast("bigint").alias("n_tokens"),
     )
 
 
-def bigram_lm_score(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: float = 0.5,
-) -> DataFrame:
+def bigram_lm_score(docs: DataFrame, k: float = 0.5) -> DataFrame:
     """CCNet-style corpus language-model quality scoring: fit an
     add-k-smoothed bigram model ON the corpus, then score every
     document by mean token log-probability and perplexity (low ppl =
@@ -426,7 +390,7 @@ def bigram_lm_score(
     bigram evidence and are excluded (count them upstream via
     ``token_count`` if coverage accounting needs them).
     """
-    t = normalized_text(F.col(text_col))
+    t = normalized_text(F.col("text"))
     toks = F.split(t, " ")
     n = F.size(toks)
     pairs = (
@@ -443,7 +407,7 @@ def bigram_lm_score(
         # rows), so the pairs output is identical without them.
         ensure_parallelism(docs)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.arrays_zip(
                     F.slice(toks, 1, n - 1).alias("w1"),
@@ -451,7 +415,7 @@ def bigram_lm_score(
                 )
             ).alias("pr"),
         )
-        .select(id_col, F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
+        .select("doc_id", F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
         # pairs feed FOUR consumers (c2, c1, vocab, and the final
         # join); the lazy localCheckpoint cuts the lineage so the
         # tokenize+explode prefix scans the corpus once, not once per
@@ -468,7 +432,7 @@ def bigram_lm_score(
         pairs.join(c2, ["w1", "w2"])
         .join(c1, ["w1"])
         .crossJoin(F.broadcast(vocab))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.avg(logp).alias("avg_logp"),

@@ -44,6 +44,11 @@ def test_fetch_requires_a_bound(trades_df):
         fetch_trades(trades_df, option_type="call", limit=1)
     with pytest.raises(QueryError):
         fetch_trades(trades_df, expiry="27DEC24", limit=1)
+    with pytest.raises(QueryError):
+        fetch_trades(trades_df, underlying="btc", limit=1)
+    for bad_limit in (2.5, True, "5", -1):
+        with pytest.raises(QueryError):
+            fetch_trades(trades_df, limit=bad_limit)
 
 
 def test_fetch_rejects_unparseable_timestamp(trades_df):
@@ -62,6 +67,11 @@ def test_fetch_day_inclusive_end(trades_df):
     # date-only end expands to next midnight (reference api.py:67-97)
     out = fetch_trades(trades_df, start="2024-12-01", end="2024-12-01")
     assert out.count() == trades_df.count()  # all fixture trades are on 12-01
+    # a same-day start with a time of day is inside that day's range
+    late = fetch_trades(trades_df, start="2024-12-01 11:00:00", end="2024-12-01")
+    want = trades_df.filter(F.col("timestamp") >= dt.datetime(2024, 12, 1, 11)).count()
+    assert 0 < want < trades_df.count()
+    assert late.count() == want
 
 
 def test_fetch_equality_predicates(trades_df):

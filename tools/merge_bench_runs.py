@@ -32,8 +32,8 @@ Merge semantics:
   that WON that entry (carries the winning execution's conditions).
 - ``min_of_runs``: every run's total + conditions, so the merge is
   auditable without the loose files.
-- every other telemetry section (streaming, sketch, envelope, ...)
-  is taken from the LAST run (the freshest producer stamp).
+- every other telemetry section (envelope, stderr, ...) is taken
+  from the LAST run (the freshest producer stamp).
 """
 
 from __future__ import annotations
