@@ -158,12 +158,6 @@ _HOME = {
     "mixture_sample": "pipelines.sampling",
     "mixture_thresholds": "pipelines.sampling",
     "hashed_linear_score": "pipelines.text_stats",
-    "kmeans_fit": "pipelines.clustering",
-    "kmeans_assign": "pipelines.clustering",
-    "semantic_dedup": "pipelines.clustering",
-    "ivf_kmeans_topk": "pipelines.clustering",
-    "diverse_sample": "pipelines.clustering",
-    "knn_self_join": "pipelines.clustering",
 }
 # reference-name aliases (reference __init__.py:42-65 /
 # features/__init__.py:61-88): a reference user's import keeps working

@@ -13,9 +13,12 @@ pruning on ``underlying``/month).
 
 from __future__ import annotations
 
+import math
+import numbers
 import re
 from datetime import datetime, timedelta
 from functools import cache
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -23,16 +26,19 @@ from pyspark.sql import functions as F
 from gapless_deribit_clickhouse_spark.exceptions import QueryError
 from gapless_deribit_clickhouse_spark.operators.dedup import dedup_latest
 
+if TYPE_CHECKING:
+    from gapless_deribit_clickhouse_spark.schema.loader import ColumnSpec
+
 
 _ISO_DATE = re.compile(r"\d{4}-\d{2}-\d{2}")
 
 
 @cache
-def _enum(column: str) -> tuple[str, ...]:
-    """The enum of an ``options_trades`` schema column."""
+def _column(name: str) -> ColumnSpec:
+    """A column spec of the ``options_trades`` schema."""
     from gapless_deribit_clickhouse_spark.schema.loader import load_schema
 
-    return load_schema("options_trades").column(column).enum
+    return load_schema("options_trades").column(name)
 
 
 def _validate_fetch_params(
@@ -42,6 +48,7 @@ def _validate_fetch_params(
     limit: int | None,
     option_type: str | None,
     expiry: str | None,
+    strike: float | None,
 ) -> None:
     """Fail-fast parameter contract (reference api.py:29-64)."""
     if start is None and end is None and limit is None:
@@ -58,10 +65,19 @@ def _validate_fetch_params(
     if start and end and _parse_ts(start) >= _parse_ts(end, end_side=True):
         raise QueryError("start must be before end")
     for name, v in (("underlying", underlying), ("option_type", option_type)):
-        if v is not None and v not in _enum(name):
-            raise QueryError(f"{name} must be one of {_enum(name)}, got {v!r}")
+        enum = _column(name).enum
+        if v is not None and v not in enum:
+            raise QueryError(f"{name} must be one of {enum}, got {v!r}")
     if expiry is not None and not _is_iso_date(expiry):
         raise QueryError(f"expiry must be a YYYY-MM-DD date, got {expiry!r}")
+    lo = _column("strike").minimum
+    if strike is not None and not (
+        isinstance(strike, numbers.Real)
+        and not isinstance(strike, bool)
+        and math.isfinite(strike)
+        and strike >= lo
+    ):
+        raise QueryError(f"strike must be a finite number >= {lo}, got {strike!r}")
 
 
 def _is_iso_date(value: str) -> bool:
@@ -106,7 +122,7 @@ def fetch_trades(
     """Point/range query with the reference's exact predicate set
     (F1-F4, W5, O1). ``use_final`` toggles dedup-at-read (FINAL
     parity, reference api.py:121-124)."""
-    _validate_fetch_params(underlying, start, end, limit, option_type, expiry)
+    _validate_fetch_params(underlying, start, end, limit, option_type, expiry, strike)
     df = trades
     if use_final:
         df = dedup_latest(df, keys=["trade_id"], version_cols=["timestamp"])

@@ -802,281 +802,6 @@ FROM ex
 """
 
 
-# --- clustering tier shared parameters: every binding below fits the
-# SAME spherical k-means (k=8, seed=42, max_iter=8, tol=1e-6), and
-# every oracle reads THESE constants — edit them here and the engine
-# call sites and the generated SQL move together (r10 self-review:
-# literals at the call sites silently desync engine and oracle) ---
-_SD_K, _SD_THR, _SD_ITER, _SD_TOL, _SD_SEED = 8, 0.35, 8, 1e-6, 42
-_EMB_DIM = 64  # testdata embedding width (pinned by tests/test_demoted_bindings_oracle.py)
-_SD_MAX_CLUSTER = 4096  # semantic_dedup's max_cluster_size default
-_DS_N = 20  # diverse_sample binding: n_per_cluster
-_IVF_K, _IVF_NPROBE, _IVF_NQ = 10, 4, 20  # ivf_kmeans_topk binding params
-
-
-def ivf_kmeans_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """True IVF with learned k-means centroids (nprobe=4 of 8 lists)
-    over the embeddings table; queries = first 20 vectors. FULL
-    cross-engine value oracle since r10 (was rows-only): the shared
-    unrolled-Lloyd fit chain plus inverted lists, the per-query
-    nprobe probe expansion, and the top-k window (IVF_KMEANS_TOPK_SQL);
-    recall >= 0.8 vs brute force and determinism additionally pinned
-    in tests/test_clustering.py."""
-    from gapless_deribit_clickhouse_spark.pipelines.clustering import (
-        ivf_kmeans_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _IVF_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return ivf_kmeans_topk(
-        emb, queries, k=_IVF_K, n_centroids=_SD_K, nprobe=_IVF_NPROBE,
-        max_iter=_SD_ITER, seed=_SD_SEED,
-    )
-
-
-def diverse_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-balanced sampling: 20 vectors from each of 8 semantic
-    clusters. FULL cross-engine value oracle since r10 (was
-    rows-only): the shared unrolled-Lloyd fit chain plus the
-    md5-smallest-n-per-cluster sample rule (DIVERSE_SAMPLE_SQL);
-    coverage, balance-under-skew and partition-determinism
-    additionally pinned in tests/test_clustering.py."""
-    from gapless_deribit_clickhouse_spark.pipelines.clustering import (
-        diverse_sample,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return diverse_sample(
-        emb, n_per_cluster=_DS_N, k=_SD_K, max_iter=_SD_ITER, seed=_SD_SEED
-    )
-
-
-def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over the embeddings table: spherical k-means (k=8,
-    hash-seeded, deterministic) then per-cluster greedy cosine pruning.
-
-    FULL cross-engine value oracle since r10 (was rows-only): the fit
-    loop has a FIXED iteration budget (max_iter=8, tol early-stop), so
-    the DuckDB twin unrolls all 8 Lloyd iterations as chained CTEs
-    with a converged-freeze flag, replays the hash-seeded init, the
-    argmax-cosine assign (tie -> lowest cid), the empty-keeps-old /
-    renormalize update, the md5 chunk rule, and then walks the greedy
-    farthest-first prune as a keyed WITH RECURSIVE carrying the
-    kept-set (ids + unit vectors) in the recursion state. Threshold
-    0.35 (not the paper-typical 0.97) because the synthetic corpus's
-    max pairwise cosine is ~0.51 — at 0.97 the duplicate branch would
-    never fire and the oracle would only check the keep path; 0.35 is
-    the same bar ``embedding_near_dup`` uses, so both prune branches
-    are exercised cross-engine. Paper-threshold behavior on planted
-    near-dups stays pinned in tests/test_clustering.py."""
-    from gapless_deribit_clickhouse_spark.pipelines.clustering import (
-        semantic_dedup,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return semantic_dedup(
-        emb, id_col="vec_id", vec_col="embedding",
-        k=_SD_K, threshold=_SD_THR, max_iter=_SD_ITER, seed=_SD_SEED,
-    )
-
-
-def _sd_iter_ctes(i: int) -> str:
-    """One unrolled Lloyd iteration for the semantic_dedup oracle:
-    assign under c{i-1} (argmax dot, tie -> lowest cid — numpy argmax
-    parity), per-cluster component sums, renormalized update with
-    empty-cluster-keeps-old and zero-norm-divides-by-1 (the
-    ``_normalize_rows`` rule), max-L2 centroid shift, and the
-    converged-freeze flag that mirrors the fit loop's ``break``."""
-    p = i - 1
-    return f"""
-a{i} AS (
-  SELECT vec_id, v, cid FROM (
-    SELECT e.vec_id, e.v, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.c) DESC, c.cid) AS rk
-    FROM e CROSS JOIN c{p} c) WHERE rk = 1),
-s{i} AS (
-  SELECT cid, list(sm ORDER BY dim) AS sv FROM (
-    SELECT cid, dim, sum(x) AS sm FROM (
-      SELECT cid, generate_subscripts(v, 1) AS dim, unnest(v) AS x FROM a{i})
-    GROUP BY cid, dim) GROUP BY cid),
-craw{i} AS (
-  SELECT p.cid,
-         CASE WHEN s.cid IS NULL THEN p.c
-              ELSE list_transform(s.sv, x -> x /
-                (CASE WHEN sqrt(list_dot_product(s.sv, s.sv)) = 0 THEN 1.0
-                      ELSE sqrt(list_dot_product(s.sv, s.sv)) END))
-         END AS c
-  FROM c{p} p LEFT JOIN s{i} s USING (cid)),
-sh{i} AS (
-  SELECT max(sqrt(ss)) AS shift FROM (
-    SELECT n.cid, sum((n.x - o.x) * (n.x - o.x)) AS ss
-    FROM (SELECT cid, generate_subscripts(c,1) AS dim, unnest(c) AS x FROM craw{i}) n
-    JOIN (SELECT cid, generate_subscripts(c,1) AS dim, unnest(c) AS x FROM c{p}) o
-      USING (cid, dim)
-    GROUP BY n.cid)),
-c{i} AS MATERIALIZED (
-  SELECT p.cid, CASE WHEN (SELECT f FROM frz{p}) THEN p.c ELSE n.c END AS c
-  FROM c{p} p JOIN craw{i} n USING (cid)),
-frz{i} AS (
-  SELECT CASE WHEN (SELECT f FROM frz{p}) THEN true
-              ELSE (SELECT shift FROM sh{i}) < {_SD_TOL!r} END AS f)"""
-
-
-def _kmeans_fit_block() -> str:
-    """The shared spherical-k-means fit chain every clustering oracle
-    builds on (semantic_dedup, diverse_sample, ivf_kmeans_topk — all
-    three bindings fit with k=8, seed=42, max_iter=8, tol=1e-6, so the
-    fitted centroids are IDENTICAL and the SQL is one generator):
-    ``e`` (usable rows, unit-normalized), ``c0`` (md5-smallest-K
-    seeds), and the 8 unrolled Lloyd iterations ending at
-    ``c{_SD_ITER}``. Emitted as the leading CTEs of a WITH RECURSIVE
-    statement."""
-    iters = ",".join(_sd_iter_ctes(i) for i in range(1, _SD_ITER + 1))
-    return f"""e AS MATERIALIZED (
-  SELECT vec_id, list_transform(raw, x -> x / nrm) AS v FROM (
-    SELECT vec_id, embedding::DOUBLE[] AS raw,
-           sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-    FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) = {_EMB_DIM})
-  WHERE nrm > 0 AND isfinite(nrm)),
-c0 AS (
-  SELECT CAST(rn - 1 AS INT) AS cid, v AS c FROM (
-    SELECT vec_id, v, row_number() OVER (
-      ORDER BY md5('{_SD_SEED}:' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
-    FROM e) WHERE rn <= {_SD_K}),
-frz0 AS (SELECT false AS f),
-{iters}"""
-
-
-def _semantic_dedup_oracle_sql() -> str:
-    """The composed oracle: usable filter + unit normalization, the
-    md5-smallest-K seed rule, {_SD_ITER} unrolled Lloyd iterations,
-    final assign with centroid_sim, the chunk rule (hash_u32 %
-    nchunks; 1 chunk below the 4096 cap), and the greedy prune as a
-    keyed recursion over scan order (centroid_sim asc, vec_id asc)
-    whose state carries the kept ids + unit vectors; dup_of takes the
-    FIRST max-cosine kept doc (list_position == numpy argmax's
-    first-on-tie). Recursion-fed CTEs are MATERIALIZED — inlined,
-    DuckDB re-evaluates them per recursion iteration."""
-    sims = "list_transform(r.kvs, kv -> list_dot_product(kv, i.v))"
-    is_dup = f"len(r.kids) > 0 AND list_max({sims}) >= {_SD_THR!r}"
-    return f"""
-WITH RECURSIVE {_kmeans_fit_block()},
-fin AS MATERIALIZED (
-  SELECT vec_id, v, cid AS cluster_id, sim AS centroid_sim FROM (
-    SELECT e.vec_id, e.v, c.cid, list_dot_product(e.v, c.c) AS sim,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.c) DESC, c.cid) AS rk
-    FROM e CROSS JOIN c{_SD_ITER} c) WHERE rk = 1),
-sz AS (SELECT cluster_id, count(*) AS s FROM fin GROUP BY cluster_id),
-pr AS MATERIALIZED (
-  SELECT *, row_number() OVER (PARTITION BY cluster_id, chunk
-                               ORDER BY centroid_sim, vec_id) AS idx
-  FROM (
-    SELECT f.vec_id, f.v, f.cluster_id, f.centroid_sim,
-           CASE WHEN z.s <= {_SD_MAX_CLUSTER} THEN 0
-                ELSE CAST(CAST(('0x' || substr(md5(CAST(f.vec_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                     % CAST(ceil(z.s / {0.75 * _SD_MAX_CLUSTER!r}) AS BIGINT) AS INT)
-           END AS chunk
-    FROM fin f JOIN sz z USING (cluster_id))),
-rec(cluster_id, chunk, idx, vec_id, centroid_sim, kept, dup_of, kids, kvs) AS (
-  SELECT cluster_id, chunk, 0, CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-         CAST(NULL AS BOOLEAN), CAST(NULL AS BIGINT),
-         CAST([] AS BIGINT[]), CAST([] AS DOUBLE[][])
-  FROM (SELECT DISTINCT cluster_id, chunk FROM pr)
-  UNION ALL
-  SELECT r.cluster_id, r.chunk, i.idx, i.vec_id, i.centroid_sim,
-         NOT ({is_dup}),
-         CASE WHEN {is_dup}
-              THEN r.kids[list_position({sims}, list_max({sims}))] END,
-         CASE WHEN NOT ({is_dup}) THEN list_append(r.kids, i.vec_id)
-              ELSE r.kids END,
-         CASE WHEN NOT ({is_dup}) THEN list_append(r.kvs, i.v)
-              ELSE r.kvs END
-  FROM rec r JOIN pr i
-    ON i.cluster_id = r.cluster_id AND i.chunk = r.chunk AND i.idx = r.idx + 1)
-SELECT vec_id, CAST(cluster_id AS INT) AS cluster_id, centroid_sim, kept, dup_of
-FROM rec WHERE idx > 0
-"""
-
-
-SEMANTIC_DEDUP_SQL = _semantic_dedup_oracle_sql()
-
-
-def _diverse_sample_oracle_sql() -> str:
-    """diverse_sample = the shared fit chain -> final assign (argmax
-    dot, tie lowest cid, centroid_sim) -> sample_n_per_group's hash
-    rule (the n rows with the smallest md5(vec_id) per cluster, tie by
-    vec_id — the two-level tournament is exact by construction, so the
-    single-window form IS the oracle)."""
-    return f"""
-WITH RECURSIVE {_kmeans_fit_block()},
-fin AS (
-  SELECT vec_id, cid AS cluster_id, sim AS centroid_sim FROM (
-    SELECT e.vec_id, c.cid, list_dot_product(e.v, c.c) AS sim,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.c) DESC, c.cid) AS rk
-    FROM e CROSS JOIN c{_SD_ITER} c) WHERE rk = 1)
-SELECT vec_id, CAST(cluster_id AS INT) AS cluster_id, centroid_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY cluster_id
-    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-  FROM fin) WHERE rn <= {_DS_N}
-"""
-
-
-def _ivf_kmeans_oracle_sql() -> str:
-    """ivf_kmeans_topk = the shared fit chain -> corpus inverted lists
-    (argmax assign) -> per-query nprobe nearest centroids (dot DESC,
-    cid — numpy stable argsort parity) -> exact cosine on the probed
-    lists -> per-query top-k window (cosine DESC, vec_id). Queries are
-    the binding's vec_id < 20 slice under the probe stage's own guard
-    (non-null, contract width, positive norm)."""
-    return f"""
-WITH RECURSIVE {_kmeans_fit_block()},
-lists AS (
-  SELECT vec_id, v, cid AS cluster_id FROM (
-    SELECT e.vec_id, e.v, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.c) DESC, c.cid) AS rk
-    FROM e CROSS JOIN c{_SD_ITER} c) WHERE rk = 1),
-q AS (
-  SELECT vec_id AS query_id, list_transform(raw, x -> x / nrm) AS qv FROM (
-    SELECT vec_id, embedding::DOUBLE[] AS raw,
-           sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-    FROM embeddings
-    WHERE vec_id < {_IVF_NQ} AND embedding IS NOT NULL
-      AND len(embedding) = {_EMB_DIM})
-  -- NOT isnan, not isfinite: the engine's numpy guard (nrms > 0) is
-  -- False for NaN but TRUE for +inf (an inf-norm query normalizes to
-  -- the SAME NaN-bearing vector on BOTH engines: the inf component
-  -- becomes inf/inf = NaN, finite components become 0 — identical,
-  -- so parity holds); DuckDB orders NaN above zero, so nrm > 0 alone
-  -- would keep NaN-norm queries the engine drops
-  WHERE nrm > 0 AND NOT isnan(nrm)),
-probes AS (
-  SELECT query_id, qv, cid AS cluster_id FROM (
-    SELECT q.query_id, q.qv, c.cid,
-           row_number() OVER (PARTITION BY q.query_id
-             ORDER BY list_dot_product(q.qv, c.c) DESC, c.cid) AS rk
-    FROM q CROSS JOIN c{_SD_ITER} c) WHERE rk <= {_IVF_NPROBE}),
-scored AS (
-  SELECT p.query_id, l.vec_id,
-         list_dot_product(l.v, p.qv) AS cosine_sim
-  FROM lists l JOIN probes p USING (cluster_id))
-SELECT query_id, vec_id, CAST(rank AS INT) AS rank, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-    ORDER BY cosine_sim DESC, vec_id) AS rank
-  FROM scored) WHERE rank <= {_IVF_K}
-"""
-
-
-DIVERSE_SAMPLE_SQL = _diverse_sample_oracle_sql()
-IVF_KMEANS_TOPK_SQL = _ivf_kmeans_oracle_sql()
-
-
 def training_set_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-set assembly flagship (curate -> near
     dedup -> chunk -> pack) on the documents table.
@@ -1961,100 +1686,6 @@ FROM documents
 """
 
 
-# --- one oracled Lloyd's k-means iteration (VERDICT r7 #4) ---
-_KM_K, _KM_DIM = 4, 64
-
-
-def kmeans_assign_step_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One Lloyd's update step with fixed centroids — the vectors of
-    the ``_KM_K`` smallest vec_ids, unit-normalized (both engines
-    derive them from the table the same way, so no literal
-    round-tripping). Exercises the REAL shared Arrow assign kernel
-    (``clustering._assign_table``) plus the partial-sum/renormalize
-    update as relational ops; the oracle replays assign + update in
-    pure SQL. With this bound, Lloyd's per-iteration arithmetic is
-    cross-engine checked — only the LOOP (and FFD packing /
-    farthest-point) remains rows-only."""
-    import numpy as np
-
-    from gapless_deribit_clickhouse_spark.pipelines.clustering import (
-        _usable_rows,
-        lloyd_step,
-    )
-
-    emb = _emb(spark, sf_dir)
-    # centroid rows go through the SAME usable filter the oracle's `e`
-    # CTE applies (non-null, contract width, positive finite norm) —
-    # a degenerate vector among the smallest vec_ids must drop out of
-    # the centroid set identically on both engines, not crash np.stack
-    # or desync the cluster-id numbering. Selection is BY RANK (the
-    # first _KM_K usable rows ordered by vec_id), not a literal
-    # `vec_id < K` cutoff, so non-contiguous or non-0-based ids still
-    # yield exactly K centroids (ADVICE r8) — mirrored by the oracle's
-    # row_number() <= K in the `cent` CTE.
-    rows = (
-        _usable_rows(emb, "vec_id", "embedding", dim=_KM_DIM)
-        .orderBy("__id")
-        .limit(_KM_K)
-        .collect()
-    )
-    if len(rows) != _KM_K:
-        raise ValueError(
-            f"kmeans_assign_step: expected {_KM_K} usable centroid rows, "
-            f"got {len(rows)} — embeddings table too small or degenerate"
-        )
-    cents = np.stack([np.asarray(r["__v"], dtype=np.float64) for r in rows])
-    return lloyd_step(emb, cents).orderBy("cluster_id", "dim")
-
-
-# unit-normalization of a double list, shared by both oracle CTEs
-_KM_UNIT = "list_transform({v}, x -> x / sqrt(list_dot_product({v}, {v})))"
-
-KMEANS_ASSIGN_STEP_SQL = f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE embedding IS NOT NULL AND len(embedding) = {_KM_DIM}
-    AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
-    AND isfinite(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))),
-cent AS (
-  -- fail-loud parity with the Spark side's ValueError (ADVICE r9):
-  -- fewer than K usable rows must error here too, not silently run
-  -- with a smaller centroid set than the engine under test refused.
-  -- The guard is a UNION ALL branch (not a per-row CASE) so it fires
-  -- even when e is EMPTY — a per-row expression over zero rows is
-  -- never evaluated (r10 self-review)
-  SELECT CAST(rn - 1 AS INT) AS cid, {_KM_UNIT.format(v='v')} AS c
-  FROM (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-  WHERE rn <= {_KM_K}
-  UNION ALL
-  SELECT CAST(error('kmeans_assign_step: fewer than K usable centroid rows') AS INT),
-         NULL
-  WHERE (SELECT count(*) FROM e) < {_KM_K}),
-sims AS (
-  SELECT e.vec_id, cent.cid,
-         list_dot_product({_KM_UNIT.format(v='e.v')}, cent.c) AS sim
-  FROM e CROSS JOIN cent),
-assign AS (
-  SELECT vec_id, cid,
-         row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rk
-  FROM sims),
-ax AS (
-  SELECT a.cid AS cluster_id,
-         CAST(generate_subscripts(e.v, 1) - 1 AS INT) AS dim,
-         unnest({_KM_UNIT.format(v='e.v')}) AS xn
-  FROM assign a JOIN e USING (vec_id) WHERE a.rk = 1),
-sums AS (
-  SELECT cluster_id, dim, count(*) AS cnt, sum(xn) AS sum_x
-  FROM ax GROUP BY cluster_id, dim),
-nrm AS (
-  SELECT cluster_id, sqrt(sum(sum_x * sum_x)) AS cn
-  FROM sums GROUP BY cluster_id)
-SELECT s.cluster_id, s.dim, s.cnt, s.sum_x, s.sum_x / n.cn AS new_c
-FROM sums s JOIN nrm n USING (cluster_id)
-ORDER BY cluster_id, dim
-"""
-
-
 # --- asymmetric near-containment pairs (round 8) ---
 def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """|A∩B| / min(|A|,|B|) >= 0.9 over trigram shingle sets — the
@@ -2108,15 +1739,11 @@ BINDINGS = [
     ("lang_id", lang_id_q, LANG_ID_SQL),
     ("doc_fingerprint", fingerprint_q, FINGERPRINT_SQL),
     ("token_counts", token_counts_q, TOKEN_COUNTS_SQL),
-    # iterative operators, ALL fully value-oracled since r10 (the
-    # fixed iteration budgets make them SQL-expressible: unrolled
-    # Lloyd CTEs + keyed recursions); value-level behavior is ALSO
-    # pinned in tests/test_clustering.py and tests/test_packing.py.
-    # egarch_params (extra_ops) is the one remaining rows-only binding.
-    ("semantic_dedup", semantic_dedup_q, SEMANTIC_DEDUP_SQL),
+    # iterative operators, fully value-oracled (the fixed budgets make
+    # them SQL-expressible as keyed recursions); value-level behavior
+    # is ALSO pinned in tests/test_packing.py. egarch_params
+    # (extra_ops) is the one remaining rows-only binding.
     ("sequence_packing", sequence_packing_q, SEQUENCE_PACKING_SQL),
-    ("ivf_kmeans_topk", ivf_kmeans_topk_q, IVF_KMEANS_TOPK_SQL),
-    ("diverse_sample", diverse_sample_q, DIVERSE_SAMPLE_SQL),
     ("training_set", training_set_q, TRAINING_SET_SQL),
     ("classifier_score", classifier_score_q, CLASSIFIER_SQL),
     ("doc_chunks", doc_chunks_q, DOC_CHUNKS_SQL),
@@ -2138,6 +1765,5 @@ BINDINGS = [
     ("embedding_quantize", embedding_quantize_q, EMBEDDING_QUANTIZE_SQL),
     ("quantized_topk", quantized_topk_q, QUANTIZED_TOPK_SQL),
     ("epoch_shuffle", epoch_shuffle_q, EPOCH_SHUFFLE_SQL),
-    ("kmeans_assign_step", kmeans_assign_step_q, KMEANS_ASSIGN_STEP_SQL),
     ("containment_pairs", containment_pairs_q, CONTAINMENT_PAIRS_SQL),
 ]

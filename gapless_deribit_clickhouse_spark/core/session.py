@@ -29,7 +29,7 @@ _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # (two hs_err crashes ~663s into r7 bench runs, one of which killed
 # mergeable_rollup_sustained_30s telemetry). Capping the JIT at AVX2
 # never emits the faulting avx3 stubs; the cost on this workload is
-# negligible (arraycopy is not the bottleneck anywhere in PLANS.md).
+# negligible (arraycopy is not the bottleneck of any query plan here).
 # UseAVX is an x86-only HotSpot flag — an unrecognized -XX option
 # aborts JVM startup on aarch64 — so the pin is gated on the machine
 # arch (ADVICE r8).

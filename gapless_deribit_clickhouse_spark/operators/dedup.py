@@ -78,7 +78,7 @@ def _partition_leaves(root: Path, depth: int) -> list[Path]:
 
 def _selected(rel: Path, selectors: Sequence[Mapping[str, str]] | None) -> bool:
     """Whether any selector picks the partition leaf ``rel``."""
-    if not selectors:
+    if selectors is None:
         return True
     values = {}
     for part in rel.parts:
@@ -150,7 +150,8 @@ def compact_table(
     Scale design: pass ``only_partitions`` (list of
     ``{partition_col: value}`` selectors, CH ``OPTIMIZE PARTITION``
     parity) to touch only hot partitions — cost is proportional to the
-    partitions rewritten, never the table. The dedup runs only within
+    partitions rewritten, never the table; an empty list selects no
+    partition and runs only the recovery pass. The dedup runs only within
     the selected slice: a key whose versions sit both inside and
     outside it keeps one version in each. For ``options_trades`` that
     can happen, because the key is ``trade_id`` alone, not a partition
@@ -172,6 +173,8 @@ def compact_table(
                 f"partition_cols {list(partition_cols)}"
             )
     _recover(root, staging, aside, depth)
+    if only_partitions is not None and not only_partitions:
+        return {"rows_before": 0, "rows_after": 0, "removed": 0, "partitions": []}
 
     df = spark.read.parquet(path)
     if only_partitions:

@@ -131,8 +131,8 @@ def build_training_set(
     analog of the analytics tier's ``feature_pipeline``: quality
     gauntlet -> near dedup -> context-window chunking -> token-budget
     packing, each stage the already-tested operator, composed in the
-    order the SCALING.md recipe prescribes (cheap map filters first,
-    exact dedup before any pair generation, chunk before pack).
+    order the standard scale recipe prescribes (cheap map filters
+    first, exact dedup before any pair generation, chunk before pack).
 
     Output: one row per training chunk with its pack assignment —
     ``chunk_uid``, ``doc_id``, ``chunk_idx``, ``chunk_text``,

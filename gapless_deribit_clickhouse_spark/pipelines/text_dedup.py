@@ -591,7 +591,7 @@ def near_dedup_corpus(
     per cluster. Returns the KEPT rows of ``df`` (all original
     columns), i.e. the corpus with exact and near duplicates removed.
 
-    Pipeline order is the standard scale recipe (see SCALING.md):
+    Pipeline order is the standard scale recipe:
     exact dedup FIRST collapses exact-duplicate cliques to one row, so
     the pair-generating LSH stage never sees them (pair output is
     inherently quadratic in clique size). The canonical survivor of a

@@ -54,7 +54,6 @@ def dedup_stream(stream: DataFrame, watermark_delay: str = "10 minutes") -> Data
 
 def streaming_ohlc(
     stream: DataFrame,
-    keys: tuple[str, ...] = (),
     window: str = "15 minutes",
     watermark_delay: str | None = "10 minutes",
 ) -> DataFrame:
@@ -71,7 +70,7 @@ def streaming_ohlc(
     if watermark_delay is not None:
         stream = stream.withWatermark("timestamp", watermark_delay)
     return (
-        stream.groupBy(F.window(ts, window).alias("w"), *keys)
+        stream.groupBy(F.window(ts, window).alias("w"))
         .agg(
             F.max(v).alias("high"),
             F.min(v).alias("low"),
@@ -80,7 +79,7 @@ def streaming_ohlc(
             F.sum("amount").alias("volume"),
             F.count(v).alias("n_obs"),
         )
-        .select(F.col("w.start").alias("bucket_ts"), *keys, "open", "high", "low", "close", "volume", "n_obs")
+        .select(F.col("w.start").alias("bucket_ts"), "open", "high", "low", "close", "volume", "n_obs")
     )
 
 
@@ -161,7 +160,7 @@ def streaming_gap_monitor(stream: DataFrame) -> DataFrame:
     )
 
 
-def streaming_ewma(stream: DataFrame, watermark_delay: str = "10 minutes") -> DataFrame:
+def streaming_ewma(stream: DataFrame) -> DataFrame:
     """Streaming RiskMetrics EWMA — the live sibling of the batch
     :func:`features.timeseries.ewma_by_key` fold, as a custom stateful
     operator (``applyInPandasWithState``): per ``user_id``, the state
@@ -175,7 +174,7 @@ def streaming_ewma(stream: DataFrame, watermark_delay: str = "10 minutes") -> Da
     one batch run over the concatenation (pinned in pytest).
 
     State is three scalars per key — O(cardinality(key)), not O(rows).
-    The watermark drops late rows before they reach the fold: an
+    A 10-minute watermark drops late rows before they reach the fold: an
     out-of-order observation older than the stored high-water mark
     would silently reorder the sequential recurrence, so rows at or
     behind ``last_ts_us`` are skipped and counted in ``n_late`` for
@@ -234,7 +233,7 @@ def streaming_ewma(stream: DataFrame, watermark_delay: str = "10 minutes") -> Da
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        stream.withWatermark("ts", watermark_delay)
+        stream.withWatermark("ts", "10 minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
             fold,

@@ -99,15 +99,15 @@ def streaming_mergeable_rollup(
     value_col: str,
     state_path: str,
     checkpoint_path: str,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
-    """Start the materialized-view maintenance query."""
-    writer = stream.writeStream.foreachBatch(
-        rollup_state_sink(keys, value_col, state_path)
-    ).option("checkpointLocation", checkpoint_path)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    """Start the materialized-view maintenance query over the
+    available input."""
+    return (
+        stream.writeStream.foreachBatch(rollup_state_sink(keys, value_col, state_path))
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def read_rollup_state(spark, state_path: str, keys: Sequence[str]) -> DataFrame:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -49,6 +50,12 @@ def test_fetch_requires_a_bound(trades_df):
     for bad_limit in (2.5, True, "5", -1):
         with pytest.raises(QueryError):
             fetch_trades(trades_df, limit=bad_limit)
+    # strike: a real number (not bool), finite, at least the schema minimum
+    for bad_strike in ("abc", "50000", True, -5.0, float("nan"), float("inf")):
+        with pytest.raises(QueryError):
+            fetch_trades(trades_df, strike=bad_strike, limit=1)
+    for ok_strike in (0, 100000, 100000.0, np.float64(100000.0)):
+        fetch_trades(trades_df, strike=ok_strike, limit=1)
 
 
 def test_fetch_rejects_unparseable_timestamp(trades_df):
@@ -119,6 +126,14 @@ def test_compact_table_partition_selective(spark, tmp_path):
     back = spark.read.parquet(path).toPandas()
     assert len(back) == 4  # 202402 dup untouched
     assert back[back.trade_id == "t1"].price.tolist() == [2.0]
+
+    # an empty selection touches nothing (None means the whole table)
+    stats = compact_table(
+        spark, path, keys=["trade_id"], version_cols=["timestamp"],
+        partition_cols=["trade_month"], only_partitions=[],
+    )
+    assert stats == {"rows_before": 0, "rows_after": 0, "removed": 0, "partitions": []}
+    assert len(spark.read.parquet(path).toPandas()) == 4
 
     stats = compact_table(
         spark, path, keys=["trade_id"], version_cols=["timestamp"],

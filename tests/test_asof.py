@@ -61,8 +61,8 @@ def test_asof_tolerance_nulls_out_stale(spark, spot_pdf):
 
 
 def test_asof_single_shuffle_plan(spark, spot_pdf):
-    """The operator never plans a RANGE join (PLANS.md scale
-    argument), and event-scale data is shuffled exactly ONCE: the
+    """The operator never plans a RANGE join (a range join does not
+    scale), and event-scale data is shuffled exactly ONCE: the
     carry reduction aggregates the fill window's own output, so its
     exchange is a ReusedExchange of the fill shuffle (round 6 — one
     shuffle write, two reads, each input scanned once), and the

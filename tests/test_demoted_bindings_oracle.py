@@ -79,30 +79,3 @@ def test_embedding_width_matches_lsh_oracle_assumption():
         "LSH oracle CTEs are generated for dim=64; regenerate "
         "bindings/llm_ops._lsh_band_ctes for the new width"
     )
-
-
-def test_embeddings_within_fit_sample_assumption():
-    """r10 self-review: the clustering oracles unroll Lloyd over ALL
-    usable rows, while the engine fits on the hash-smallest
-    fit_sample_size=65,536 sample — equivalent ONLY while the
-    embeddings corpus stays at or under 65,536 rows. Pin that
-    assumption for every sf the compares run at, like the dim=64 pin
-    above: a regenerated larger corpus must fail HERE, not as an
-    inscrutable centroid mismatch. sf0.1 is included (ADVICE r10): it
-    is the largest testdata scale a registry compare can be run at, so
-    the assumption must hold there too."""
-    import duckdb as _duck
-
-    for sf_dir in (
-        "/root/testdata/sf0.001",
-        "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1",
-    ):
-        n = _duck.connect().execute(
-            f"SELECT count(*) FROM '{sf_dir}/embeddings.parquet'"
-        ).fetchone()[0]
-        assert n <= 65_536, (
-            f"{sf_dir}: {n} embeddings exceed kmeans_fit's default "
-            "fit_sample_size — the clustering oracles' full-corpus "
-            "Lloyd unroll no longer matches the engine's sample fit"
-        )

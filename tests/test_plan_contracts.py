@@ -1,7 +1,7 @@
 """Plan contracts: every registered query must keep the physical-plan
-properties the 100 TB design depends on. PLANS.md documents them; this
-test ENFORCES them, so a refactor that silently introduces a
-nested-loop join or an undeclared Python crossing fails CI.
+properties the 100 TB design depends on. This test enforces them, so
+a refactor that silently introduces a nested-loop join or an
+undeclared Python crossing fails CI.
 """
 
 from __future__ import annotations
@@ -27,15 +27,10 @@ REQUIRED_PYTHON = {
     "embedding_near_dup",
     "ivf_topk",
     "video_decode_features",  # framepack build + per-frame decode
-    "semantic_dedup",  # k-means assign + per-cluster greedy prune
     "sequence_packing",  # per-shard first-fit-decreasing
-    "ivf_kmeans_topk",  # k-means assign stage keeps raw vectors
     "hybrid_rrf",  # fuses ivf_topk, inheriting its SRP crossings
-    "diverse_sample",  # k-means assign below the group tournament
     "training_set",  # composed flagship: FFD packing crossing
     "training_set_chunks",  # same flagship, pack columns projected out
-    "kmeans_assign_step",  # the shared Arrow assign kernel (update
-    # half is relational; assignment is _assign_table by design)
     "egarch_loglik",  # the exact _neg_loglik sequential kernel the
     # optimizer evaluates, one applyInPandas crossing per group —
     # the crossing IS the thing the DuckDB recursive oracle checks
@@ -48,7 +43,7 @@ REQUIRED_PYTHON = {
 # returned plan may be a LocalTableScan with no visible crossing.
 # frequent_tokens' Misra-Gries mapInPandas pass sits behind its lazy
 # localCheckpoint barrier, so the visible plan shows the checkpoint's
-# RDD scan instead of the crossing (PLANS.md "+2ckpt" scans column).
+# RDD scan instead of the crossing.
 ALLOWED_PYTHON = REQUIRED_PYTHON | {"dup_clusters", "frequent_tokens"}
 
 # BroadcastNestedLoopJoin is allowed ONLY where the build side is
@@ -90,6 +85,14 @@ ALLOWED_NLJ = {
     # hot-hour threshold, the q22 pattern); the overlap join itself is
     # the bucketed hash equi-join
 }
+
+
+def test_allow_lists_name_registry_entries():
+    # a name left behind by a deleted binding would silently exempt any
+    # later binding that reuses it
+    names = {n for n, _f, _s in ALL_BINDINGS}
+    for allowed in (REQUIRED_PYTHON, ALLOWED_PYTHON, ALLOWED_NLJ):
+        assert allowed <= names, sorted(allowed - names)
 
 
 def _plan(fn, spark) -> str:
