@@ -389,7 +389,6 @@ HEADLINE = [
     "lang_id",
     "doc_fingerprint",
     "token_counts",
-    "multimodal_features",
 ]
 
 

@@ -21,8 +21,7 @@ features/    the reference's domain feature surface (contract
              selection, spot enrichment, moneyness, PCR, term
              structure, DTE buckets, IV percentile, Greeks, EGARCH)
 pipelines/   large-scale training-data ops (dedup exact/minhash/
-             simhash/ngram/embedding, ANN search, text stats,
-             multimodal columns)
+             simhash/ngram/embedding, ANN search, text stats)
 sources/     batch ingestion (paginated collector emulation,
              continuity validation, idempotent sinks, checkpoints)
 streaming/   Structured Streaming ingestion (watermark + dedup)
@@ -142,16 +141,6 @@ _HOME = {
     "write_stream_to_connector": "sinks.connector",
     "lsh_params": "pipelines.embeddings",
     "minhash_params": "pipelines.text_dedup",
-    "decode_image": "pipelines.multimodal",
-    "encode_png": "pipelines.multimodal",
-    "image_feature_extract": "pipelines.multimodal",
-    "synthetic_images": "pipelines.multimodal",
-    "decode_audio": "pipelines.multimodal",
-    "encode_wav": "pipelines.multimodal",
-    "audio_feature_extract": "pipelines.multimodal",
-    "encode_framepack": "pipelines.multimodal",
-    "decode_framepack": "pipelines.multimodal",
-    "video_frame_features": "pipelines.multimodal",
     "pack_sequences": "pipelines.packing",
     "pack_stats": "pipelines.packing",
     "chunk_documents": "pipelines.packing",

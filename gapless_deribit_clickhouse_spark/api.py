@@ -6,9 +6,13 @@ Reference: ``/root/reference/src/gapless_deribit_clickhouse/api.py``
 
 The SQL-template IR disappears: validation happens fail-fast in
 Python, then the query is a DataFrame plan —
-``table -> [dedup] -> filters -> orderBy desc -> limit`` — that
-Catalyst pushes into the parquet scan (predicate pushdown + partition
-pruning on ``underlying``/month).
+``table -> [dedup] -> filters -> orderBy desc -> limit``. Only with
+``use_final=False`` does Catalyst push the filters into the parquet
+scan: ``underlying`` prunes partitions and the other predicates reach
+the scan as data filters; no filter names ``trade_month``, so a time
+range prunes no month partition. With FINAL (the default) the filters
+stay above the ``trade_id`` window (``operators/dedup.py``), so every
+query scans the whole table.
 """
 
 from __future__ import annotations

@@ -1,9 +1,6 @@
 """Remaining-surface bindings: portfolio/bucket Greeks (A13/A14),
-smile metrics, spot coverage (A16), EGARCH grouped fit (rows-only —
-iterative MLE is not SQL-expressible), and the multimodal
-``mapInPandas`` feature extraction exercised over ``documents`` text
-payloads (oracle-checked on the byte-level columns DuckDB can also
-compute: payload size + sha256 prefix)."""
+smile metrics, spot coverage (A16) and EGARCH grouped fit (rows-only —
+iterative MLE is not SQL-expressible)."""
 
 from __future__ import annotations
 
@@ -38,7 +35,6 @@ from gapless_deribit_clickhouse_spark.functions.blackscholes import (
     portfolio_greeks,
     with_greeks,
 )
-from gapless_deribit_clickhouse_spark.pipelines.multimodal import fake_feature_extract
 
 YEAR_SECONDS = 365.25 * 24 * 3600.0
 
@@ -221,182 +217,6 @@ lagged AS (
 SELECT event_type, CAST(idx AS INT) AS idx, r100
 FROM lagged WHERE r100 IS NOT NULL
 ORDER BY event_type, idx
-"""
-
-
-# --- multimodal: mapInPandas feature extraction over text payloads ---
-def multimodal_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-    )
-    out = fake_feature_extract(media)
-    # restrict to the byte-level columns the SQL oracle can also
-    # compute; mean_byte/feature stay covered by unit tests
-    return out.select("media_id", "n_bytes", "payload_sha")
-
-
-MULTIMODAL_SQL = """
-SELECT doc_id AS media_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       substr(sha256(text), 1, 16) AS payload_sha
-FROM documents
-"""
-
-
-# --- multimodal: REAL image decode (pure-stdlib PGM/PNG kernel) ---
-def image_decode_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-level oracle for the real decode path: each ASCII document
-    is wrapped into a valid binary PGM (16x4 gray = first 64 chars,
-    space-padded), decoded by the stdlib image kernel, and reduced to
-    (shape, mean pixel). Because PGM pixels ARE the text bytes, DuckDB
-    can compute the same mean from character codes — a hash-checkable
-    oracle for an operator SQL cannot normally express. ASCII filter
-    (octet_length == char_length) keeps bytes == code points on both
-    sides."""
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        image_feature_extract,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.octet_length(F.col("text")) == F.length(F.col("text"))
-    )
-    padded = F.rpad(F.substring(F.col("text"), 1, 64), 64, " ")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.concat(F.lit(b"P5 16 4 255\n"), F.encode(padded, "UTF-8")).alias(
-            "payload"
-        ),
-    )
-    return image_feature_extract(media).select(
-        "media_id", "height", "width", "channels", "mean_pixel"
-    )
-
-
-IMAGE_DECODE_SQL = """
-SELECT doc_id AS media_id,
-       4 AS height, 16 AS width, 1 AS channels,
-       list_avg(list_transform(range(1, 65),
-                i -> ascii(substr(rpad(substr(text, 1, 64), 64, ' '), i, 1))))
-           AS mean_pixel
-FROM documents
-WHERE octet_length(encode(text)) = length(text)
-"""
-
-
-# --- multimodal: REAL audio decode (stdlib PCM-WAV kernel) ---
-def audio_decode_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio twin of ``image_decode_features_q``: each ASCII document
-    becomes a valid 8-bit PCM WAV (8 kHz mono, first 64 chars as
-    samples), decoded by the stdlib RIFF kernel and reduced to
-    duration/RMS/zero-crossing-rate. WAV samples ARE the text bytes
-    ((code-128)/128), so DuckDB recomputes the same statistics from
-    character codes — a value-level oracle for audio decode."""
-    import struct
-
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        audio_feature_extract,
-    )
-
-    header = (
-        b"RIFF" + struct.pack("<I", 100) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16)
-        + struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-        + b"data" + struct.pack("<I", 64)
-    )
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.octet_length(F.col("text")) == F.length(F.col("text"))
-    )
-    padded = F.rpad(F.substring(F.col("text"), 1, 64), 64, " ")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.concat(F.lit(header), F.encode(padded, "UTF-8")).alias("payload"),
-    )
-    return audio_feature_extract(media).select(
-        "media_id", "n_frames", "channels", "sample_rate",
-        "duration_ms", "rms", "zero_crossing_rate",
-    )
-
-
-AUDIO_DECODE_SQL = """
-WITH base AS (
-  SELECT doc_id,
-         list_transform(range(1, 65),
-             i -> (ascii(substr(rpad(substr(text, 1, 64), 64, ' '), i, 1))
-                   - 128.0) / 128.0) AS v
-  FROM documents
-  WHERE octet_length(encode(text)) = length(text)
-)
-SELECT doc_id AS media_id,
-       CAST(64 AS BIGINT) AS n_frames, 1 AS channels, 8000 AS sample_rate,
-       8.0 AS duration_ms,
-       sqrt(list_avg(list_transform(v, x -> x * x))) AS rms,
-       list_avg(list_transform(range(2, 65),
-           i -> CASE WHEN (v[i] < 0) <> (v[i - 1] < 0)
-                     THEN 1.0 ELSE 0.0 END)) AS zero_crossing_rate
-FROM base
-"""
-
-
-# --- multimodal: REAL video decode (FPK1 framepack, PNG frames) ---
-def video_decode_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video twin of ``image_decode_features_q``: each ASCII document
-    becomes a 2-frame FPK1 framepack (16x4 gray frames from chars
-    1-64 and 65-128, PNG-encoded in an Arrow build stage), then the
-    real per-frame decode explodes it to one row per frame. PNG is
-    LOSSLESS, so each frame's mean pixel equals the mean of the
-    source character codes — DuckDB recomputes it without ever
-    touching a codec, a value-level oracle for video decode."""
-    import numpy as np
-    import pandas as pd
-
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        encode_framepack,
-        video_frame_features,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.octet_length(F.col("text")) == F.length(F.col("text"))
-    )
-    padded = F.rpad(F.substring(F.col("text"), 1, 128), 128, " ")
-    src = docs.select(
-        F.col("doc_id").alias("media_id"), F.encode(padded, "UTF-8").alias("txt")
-    )
-
-    def build(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            payloads = [
-                encode_framepack(
-                    list(
-                        np.frombuffer(bytes(b), dtype=np.uint8).reshape(2, 4, 16, 1)
-                    ),
-                    fps=10.0,
-                )
-                for b in pdf["txt"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["media_id"], "payload": payloads})
-
-    media = src.mapInPandas(build, schema="media_id long, payload binary")
-    return video_frame_features(media, every_n=1).select(
-        "media_id", "frame_idx", "frame_ts_ms",
-        "height", "width", "channels", "mean_pixel",
-    )
-
-
-VIDEO_DECODE_SQL = """
-WITH base AS (
-  SELECT doc_id AS media_id, rpad(substr(text, 1, 128), 128, ' ') AS txt
-  FROM documents
-  WHERE octet_length(encode(text)) = length(text)
-)
-SELECT media_id, f AS frame_idx, f * 100.0 AS frame_ts_ms,
-       4 AS height, 16 AS width, 1 AS channels,
-       list_avg(list_transform(range(1 + 64 * f, 65 + 64 * f),
-                i -> ascii(substr(txt, i, 1)))) AS mean_pixel
-FROM base, (SELECT unnest([0, 1]) AS f) frames
 """
 
 
@@ -1209,10 +1029,6 @@ BINDINGS = [
     ("smile_metrics", smile_metrics_q, SMILE_METRICS_SQL),
     ("spot_coverage", spot_coverage_q, SPOT_COVERAGE_SQL),
     ("egarch_params", egarch_params_q, None),
-    ("image_decode_features", image_decode_features_q, IMAGE_DECODE_SQL),
-    ("multimodal_features", multimodal_features_q, MULTIMODAL_SQL),
-    ("audio_decode_features", audio_decode_features_q, AUDIO_DECODE_SQL),
-    ("video_decode_features", video_decode_features_q, VIDEO_DECODE_SQL),
     ("egarch_inputs", egarch_inputs_q, EGARCH_INPUTS_SQL),
     ("egarch_forecast_path", egarch_forecast_path_q, EGARCH_FORECAST_PATH_SQL),
     ("egarch_loglik", egarch_loglik_q, EGARCH_LOGLIK_SQL),

@@ -1448,70 +1448,6 @@ ORDER BY doc_id
 """
 
 
-# --- Okapi BM25 top-k lexical retrieval ---
-# One source of truth for the bench queries: the Spark binding and the
-# generated VALUES clause both read this dict, so engine and oracle
-# cannot desync on query text or tokenization.
-_BM25_QUERIES = {
-    "q_exec": "hash join scan",
-    "q_retail": "customer order filter",
-    "q_stream": "stream window batch",
-}
-
-
-def bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.retrieval import bm25_topk
-
-    return bm25_topk(_docs(spark, sf_dir), _BM25_QUERIES, k=10)
-
-
-def _bm25_sql() -> str:
-    from gapless_deribit_clickhouse_spark.pipelines.retrieval import tokenize_query
-
-    k, k1, b = 10, 1.2, 0.75  # bm25_q's k and bm25_topk's default k1, b
-
-    values = ", ".join(
-        f"('{qid}', '{tok}')"
-        for qid, qtext in sorted(_BM25_QUERIES.items())
-        for tok in tokenize_query(qtext)
-    )
-    # spell every float the way Python computed it so both engines
-    # subtract/multiply the SAME doubles in the SAME order
-    dl = f"CASE WHEN length({_NORM}) = 0 THEN 0 ELSE len(string_split({_NORM}, ' ')) END"
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {dl} AS dl, unnest(string_split({_NORM}, ' ')) AS token
-  FROM documents),
-tok2 AS (SELECT * FROM toks WHERE len(token) > 0),
-tf AS (
-  SELECT doc_id, token, count(*) AS tf, max(dl) AS dl
-  FROM tok2 GROUP BY doc_id, token),
-q(query_id, token) AS (VALUES {values}),
-s AS (SELECT count(*) AS n_docs, avg({dl}) AS avgdl FROM documents),
-m AS (
-  SELECT q.query_id, tf.doc_id, tf.token, tf.tf, tf.dl,
-         count(*) OVER (PARTITION BY q.query_id, tf.token) AS df
-  FROM tf JOIN q USING (token)),
-sc AS (
-  SELECT query_id, doc_id,
-         CAST(count(*) AS BIGINT) AS n_terms,
-         round(sum(ln(1.0 + ((n_docs - df) + 0.5) / (df + 0.5))
-           * ((CAST(tf AS DOUBLE) * {k1 + 1.0!r})
-              / (CAST(tf AS DOUBLE) + {k1!r}
-                 * ({1.0 - b!r} + {b!r} * (CAST(dl AS DOUBLE) / avgdl))))), 6)
-           AS score
-  FROM m CROSS JOIN s GROUP BY query_id, doc_id),
-r AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, doc_id) AS INT) AS rank
-  FROM sc)
-SELECT query_id, doc_id, n_terms, score, rank FROM r WHERE rank <= {k}
-"""
-
-
-BM25_TOPK_SQL = _bm25_sql()
-
-
 # --- int8 embedding quantization (4x shuffle/storage compression) ---
 def embedding_quantize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector symmetric int8 quantization digest: the full qvec
@@ -1624,42 +1560,6 @@ SELECT query_id, vec_id, rank, qcos_sim FROM r WHERE rank <= 10
 """
 
 
-# --- hybrid retrieval: RRF fusion of exact cosine + LSH-IVF ANN ---
-def hybrid_rrf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal-rank fusion of the exact brute-force ranking and the
-    SRP-LSH IVF ranking over the same 5 queries — the retriever
-    ensemble shape (each system's oracle is already hash-proven; this
-    value-checks the FUSION on top of both)."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import ivf_topk
-    from gapless_deribit_clickhouse_spark.pipelines.retrieval import rrf_fuse
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = cosine_topk(emb, queries, k=10)
-    ann = ivf_topk(emb, queries, k=10)
-    return rrf_fuse([exact, ann], on=("query_id", "vec_id"), k=10)
-
-
-HYBRID_RRF_SQL = f"""
-WITH a AS ({COSINE_TOPK_SQL}),
-b AS ({IVF_TOPK_SQL}),
-f AS (
-  SELECT query_id, vec_id,
-         (CASE WHEN a.rank IS NOT NULL THEN 1 ELSE 0 END
-          + CASE WHEN b.rank IS NOT NULL THEN 1 ELSE 0 END) AS n_systems,
-         coalesce(1.0 / (60.0 + a.rank), 0.0)
-           + coalesce(1.0 / (60.0 + b.rank), 0.0) AS rrf_score
-  FROM a FULL JOIN b USING (query_id, vec_id)),
-r AS (
-  SELECT *, CAST(row_number() OVER (
-      PARTITION BY query_id ORDER BY rrf_score DESC, vec_id) AS INT) AS rank
-  FROM f)
-SELECT query_id, vec_id, n_systems, rrf_score, rank FROM r WHERE rank <= 10
-"""
-
-
 # --- deterministic epoch shuffle (exact distributed global rank) ---
 def epoch_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Epoch-1 training order of the documents table: every doc's
@@ -1760,8 +1660,6 @@ BINDINGS = [
     ("lm_score", lm_score_q, LM_SCORE_SQL),
     ("weighted_sample", weighted_sample_q, WEIGHTED_SAMPLE_SQL),
     ("quality_gate", quality_gate_q, QUALITY_GATE_SQL),
-    ("bm25_topk", bm25_topk_q, BM25_TOPK_SQL),
-    ("hybrid_rrf", hybrid_rrf_q, HYBRID_RRF_SQL),
     ("embedding_quantize", embedding_quantize_q, EMBEDDING_QUANTIZE_SQL),
     ("quantized_topk", quantized_topk_q, QUANTIZED_TOPK_SQL),
     ("epoch_shuffle", epoch_shuffle_q, EPOCH_SHUFFLE_SQL),

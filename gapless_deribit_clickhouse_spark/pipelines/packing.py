@@ -107,12 +107,11 @@ def pack_sequences(
     ``token_col`` supplies precomputed token counts; otherwise the
     BPE-ish regex proxy (``text_stats.bpe_ish_token_count``) is
     computed in the same projection. A null text/token count packs as
-    0 tokens (corrupt upstream rows must not fail the job — same
-    isolation contract as the decode kernels). Output columns:
-    ``id_col``, ``n_tokens``, ``pack_id``, ``pack_pos`` (order within
-    the pack, longest first), ``oversized`` (single doc exceeding the
-    budget — its own CLOSED pack, caller decides chunking; no other
-    doc ever joins it).
+    0 tokens (corrupt upstream rows must not fail the job). Output
+    columns: ``id_col``, ``n_tokens``, ``pack_id``, ``pack_pos`` (order
+    within the pack, longest first), ``oversized`` (single doc
+    exceeding the budget — its own CLOSED pack, caller decides
+    chunking; no other doc ever joins it).
 
     Shards are assigned by ``sampling.hash_u32`` of the id (the
     repo's one canonical md5-bucket derivation, bit-reproducible in

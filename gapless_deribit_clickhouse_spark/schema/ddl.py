@@ -60,7 +60,13 @@ def init_table(spark: SparkSession, schema: TableSchema, location: str | None = 
 def with_partition_columns(df: DataFrame, schema: TableSchema) -> DataFrame:
     """Add declared-but-derived partition columns (e.g. trade_month =
     yyyyMM of timestamp — the Spark analogue of the reference's
-    ``PARTITION BY toYYYYMM(timestamp)``, options_trades.yaml:31)."""
+    ``PARTITION BY toYYYYMM(timestamp)``, options_trades.yaml:31).
+
+    The month is the UTC month: like ``core.tables.load_table``, this
+    sets the session time zone to UTC for the rest of the session,
+    because ``date_format`` renders in the session's zone and callers
+    may hand in a session set to another one."""
+    df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
     for p in schema.partition_by:
         if p not in df.columns and p.endswith("_month"):
             src = p[: -len("_month")] if p != "trade_month" else "timestamp"

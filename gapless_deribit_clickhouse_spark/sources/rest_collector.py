@@ -226,6 +226,32 @@ def _write_batch(spark: SparkSession, rows: list[dict], token: str, output_path:
             os.remove(os.path.join(leaf, name))
 
 
+def _batch_cut(buffer: list[dict], batch_rows: int) -> int:
+    """How many rows of the newest-first ``buffer`` to flush: about
+    ``batch_rows``, cut where the timestamp changes.
+
+    A resume restarts below the oldest flushed timestamp, so a cut
+    inside a run of equal timestamps would lose the rest of the run.
+    The trailing rows that share a timestamp with the next buffered row
+    are held back; if that is the whole chunk, the chunk runs to the
+    end of the run instead. A cut at the end of the buffer is a
+    boundary too: the next page starts below the oldest fetched
+    timestamp, so every row at a buffered timestamp is buffered.
+    """
+
+    def tie(i: int) -> bool:
+        return i < len(buffer) and buffer[i]["timestamp"] == buffer[i - 1]["timestamp"]
+
+    n = batch_rows
+    while n > 0 and tie(n):
+        n -= 1
+    if n == 0:
+        n = batch_rows
+        while tie(n):
+            n += 1
+    return n
+
+
 def collect_trades(
     spark: SparkSession,
     source: SyntheticTradePages,
@@ -264,7 +290,8 @@ def collect_trades(
         cursor = oldest - 1
         prev_page = page
         while len(buffer) >= batch_rows:
-            chunk, buffer = buffer[:batch_rows], buffer[batch_rows:]
+            cut = _batch_cut(buffer, batch_rows)
+            chunk, buffer = buffer[:cut], buffer[cut:]
             token = batch_token(source.currency, start_ts, end_ts, batch_number)
             _write_batch(spark, chunk, token, output_path)
             total += len(chunk)

@@ -218,6 +218,18 @@ def test_calibrate_returns_none_on_registry_drift():
     assert out is None
 
 
+def test_headline_names_registry_entries():
+    """``run`` silently skips a ``HEADLINE`` name the registry lacks,
+    so a deleted binding must leave none of bench.py's name lists."""
+    from bench import CALIBRATION, EXCLUDE, HEADLINE
+
+    from gapless_deribit_clickhouse_spark.bindings import ALL_BINDINGS
+
+    names = {n for n, _f, _s in ALL_BINDINGS}
+    for listed in (HEADLINE, EXCLUDE, CALIBRATION):
+        assert set(listed) <= names, sorted(set(listed) - names)
+
+
 def test_per_entry_stamp_merges_and_deconfounds():
     """r11 (VERDICT r10 #6 + ADVICE r10): every timed entry gets
     pre/post 1-min load stamps AND a de-confounded ``other_cores``

@@ -123,6 +123,43 @@ def test_collect_trades_resume_after_crash(spark, tmp_path):
     assert df.count() == n_expected
 
 
+class _TwoTradesPerMs(SyntheticTradePages):
+    """Two trades at every grid timestamp, as when one order fills two
+    price levels in the same millisecond."""
+
+    def fetch_page(self, start_ts, end_ts, count):
+        page = super().fetch_page(start_ts, end_ts, (count + 1) // 2)
+        return [dict(t, trade_id=f"{t['trade_id']}-{k}") for t in page for k in (0, 1)][:count]
+
+
+def test_resume_keeps_trades_that_share_a_millisecond(spark, tmp_path):
+    """A batch of 9 rows ends between two trades of one millisecond.
+    After a crash, the resume lands exactly the uninterrupted run's
+    trades, each once."""
+    src = _TwoTradesPerMs(step_ms=1000)
+    end = T0 + 99 * 1000
+    kw = dict(batch_rows=9, page_size=10)
+
+    def landed(out):
+        return [r.trade_id for r in spark.read.parquet(out).select("trade_id").collect()]
+
+    whole = str(tmp_path / "whole")
+    collect_trades(spark, src, T0, end, whole, **kw)
+    expected = landed(whole)
+    assert len(expected) == len(set(expected)) == 200
+
+    out, ckpt = str(tmp_path / "trades"), str(tmp_path / "ckpt")
+    with pytest.raises(SourceError):
+        collect_trades(spark, src, T0, end, out, checkpoint_dir=ckpt, max_pages=3, **kw)
+    collect_trades(spark, src, T0, end, out, checkpoint_dir=ckpt, **kw)
+    got = landed(out)
+    assert len(got) == len(set(got))
+    assert set(got) == set(expected)
+    # a run longer than a batch is flushed whole
+    run = [{"timestamp": 5}] * 12 + [{"timestamp": 4}]
+    assert rest_collector._batch_cut(run, 9) == 12
+
+
 def test_checkpoint_save_crash_keeps_previous_checkpoint(spark, tmp_path, monkeypatch):
     """A save that dies mid-write leaves the previous checkpoint
     loadable, and the resume then lands every trade exactly once."""

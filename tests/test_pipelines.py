@@ -1,5 +1,5 @@
-"""LLM pipeline operators: dedup recall, ANN recall, multimodal
-plumbing, text stats sanity."""
+"""LLM pipeline operators: dedup recall, ANN recall, text stats
+sanity."""
 
 from __future__ import annotations
 
@@ -12,11 +12,6 @@ from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
     cosine_topk,
     cosine_topk_pandas,
     ivf_topk,
-)
-from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-    fake_feature_extract,
-    frame_sample_plan,
-    synthetic_media,
 )
 from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
     minhash_lsh_pairs,
@@ -375,285 +370,6 @@ def test_pandas_topk_matches_jvm_topk(emb):
     )
     assert jvm.vec_id.tolist() == arrow.vec_id.tolist()
     assert np.allclose(jvm.cosine_sim.to_numpy(), arrow.cosine_sim.to_numpy(), atol=1e-9)
-
-
-def test_multimodal_feature_plumbing(spark):
-    media = synthetic_media(spark, n=32)
-    feats = fake_feature_extract(media, dim=8).toPandas()
-    assert len(feats) == 32
-    assert (feats.n_bytes > 0).all()
-    assert all(len(f) == 8 for f in feats.feature)
-    assert all(abs(sum(f) - 1.0) < 1e-5 for f in feats.feature)
-    # deterministic: re-run produces identical shas
-    again = fake_feature_extract(media, dim=8).toPandas()
-    assert sorted(feats.payload_sha) == sorted(again.payload_sha)
-
-
-def test_multimodal_decode_unsupported_format():
-    """Formats outside the stdlib-decodable set (PNG/PPM/PGM) need PIL;
-    without it decode raises the documented NotImplementedError."""
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import decode_image
-
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL present: JPEG decode is delegated to it")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\xff\xd8\xff\xe0jpegish")
-
-
-def test_png_roundtrip_all_channel_counts():
-    """encode_png -> decode_image is the identity for 8-bit gray,
-    gray-alpha, RGB and RGBA — pure stdlib zlib, no imaging library."""
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        decode_image,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(3)
-    for c in (1, 2, 3, 4):
-        arr = rng.integers(0, 256, size=(9, 7, c)).astype("uint8")
-        out = decode_image(encode_png(arr))
-        assert out.shape == arr.shape
-        assert (out == arr).all()
-
-
-def test_png_decode_handles_all_filter_types():
-    """The decoder reconstructs scanlines under every PNG filter type
-    (None/Sub/Up/Average/Paeth), not just the filter-0 rows our own
-    encoder emits — real-world PNGs mix them per row."""
-    import struct
-    import zlib
-
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import decode_image
-
-    rng = np.random.default_rng(5)
-    h, w, c = 5, 6, 3
-    img = rng.integers(0, 256, size=(h, w, c)).astype("int32")
-    stride = w * c
-    flat = img.reshape(h, stride)
-
-    def paeth(a, b, cc):
-        p = a + b - cc
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-        return a if pa <= pb and pa <= pc else (b if pb <= pc else cc)
-
-    raw = bytearray()
-    prev = np.zeros(stride, dtype="int32")
-    for y, ftype in enumerate([0, 1, 2, 3, 4]):
-        cur = flat[y]
-        raw.append(ftype)
-        for x in range(stride):
-            a = int(cur[x - c]) if x >= c else 0
-            b = int(prev[x])
-            cc = int(prev[x - c]) if x >= c else 0
-            pred = {0: 0, 1: a, 2: b, 3: (a + b) // 2, 4: paeth(a, b, cc)}[ftype]
-            raw.append((int(cur[x]) - pred) % 256)
-        prev = cur
-
-    def chunk(ctype, body):
-        return (
-            struct.pack(">I", len(body))
-            + ctype
-            + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-    out = decode_image(png)
-    assert (out == img.astype("uint8")).all()
-
-
-def test_pnm_decode():
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import decode_image
-
-    rng = np.random.default_rng(11)
-    rgb = rng.integers(0, 256, size=(4, 5, 3)).astype("uint8")
-    ppm = b"P6\n# comment\n5 4\n255\n" + rgb.tobytes()
-    assert (decode_image(ppm) == rgb).all()
-    gray = rng.integers(0, 256, size=(3, 2, 1)).astype("uint8")
-    pgm = b"P5 2 3 255\n" + gray.tobytes()
-    assert (decode_image(pgm) == gray).all()
-
-
-def test_wav_roundtrip_and_audio_features(spark):
-    """encode_wav -> decode_audio roundtrips 16-bit PCM (mono and
-    stereo), and the mapInPandas audio kernel extracts the analytic
-    features of a known sine tone (duration, RMS ~ 1/sqrt(2) of
-    amplitude, zero-crossing rate ~ 2*f/rate) with corrupt payloads
-    isolated into the error column."""
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        MEDIA_SCHEMA,
-        audio_feature_extract,
-        decode_audio,
-        encode_wav,
-    )
-
-    rate, freq, secs = 8000, 440.0, 0.5
-    t = np.arange(int(rate * secs)) / rate
-    tone = 0.5 * np.sin(2 * np.pi * freq * t)
-    out, got_rate = decode_audio(encode_wav(tone, rate))
-    assert got_rate == rate and out.shape == (len(t), 1)
-    assert np.allclose(out[:, 0], tone, atol=1e-3)
-    stereo = np.stack([tone, -tone], axis=1)
-    out2, _ = decode_audio(encode_wav(stereo, rate))
-    assert out2.shape == (len(t), 2)
-    assert np.allclose(out2, stereo, atol=1e-3)
-
-    rows = [
-        (0, "audio", "audio/wav", bytearray(encode_wav(tone, rate)), None, None, int(secs * 1000)),
-        (1, "audio", "audio/mpeg", bytearray(b"ID3broken"), None, None, None),
-    ]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    feats = audio_feature_extract(media).toPandas().set_index("media_id")
-    ok = feats.loc[0]
-    assert ok.error is None or (isinstance(ok.error, float) and np.isnan(ok.error))
-    assert ok.n_frames == len(t) and ok.sample_rate == rate
-    assert abs(ok.duration_ms - 500.0) < 1e-6
-    assert abs(ok.rms - 0.5 / np.sqrt(2)) < 1e-3
-    assert abs(ok.zero_crossing_rate - 2 * freq / rate) < 0.01
-    assert isinstance(feats.loc[1].error, str) and "NotImplementedError" in feats.loc[1].error
-
-
-def test_decode_kernels_isolate_corrupt_payloads(spark):
-    """Blobs are untrusted: corruption shapes that raise struct.error,
-    zlib.error, IndexError or ZeroDivisionError inside the parsers must
-    land in the error column, never fail the Spark task (the r4 review
-    finding: the original except-list missed all four)."""
-    import struct
-    import zlib
-
-    import pandas as pd
-
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        MEDIA_SCHEMA,
-        audio_feature_extract,
-        encode_framepack,
-        encode_png,
-        image_feature_extract,
-        video_frame_features,
-    )
-
-    # corrupt IDAT: valid signature+IHDR, garbage deflate stream
-    good_png = encode_png(np.zeros((2, 2, 1), dtype="uint8"))
-    bad_idat = good_png[:33] + good_png[33:].replace(
-        zlib.compress(b"\x00\x00\x00\x00\x00\x00"), b"notdeflate00"
-    )
-    images = [
-        (0, bytearray(good_png)),
-        (1, bytearray(good_png[:12])),           # truncated IHDR -> struct/IndexError
-        (2, bytearray(bad_idat)),                 # zlib.error
-        (3, bytearray(b"P5 2")),                  # truncated PGM header
-    ]
-    media = spark.createDataFrame(
-        [(i, "image", None, p, None, None, None) for i, p in images],
-        schema=MEDIA_SCHEMA,
-    )
-    out = image_feature_extract(media).toPandas().set_index("media_id")
-    assert pd.isna(out.loc[0].error)
-    assert all(isinstance(out.loc[i].error, str) for i in (1, 2, 3))
-
-    # truncated WAV fmt chunk -> struct.error
-    bad_wav = b"RIFF" + struct.pack("<I", 20) + b"WAVE" + b"fmt " + struct.pack("<I", 16) + b"\x01\x00"
-    audio = spark.createDataFrame(
-        [(0, "audio", None, bytearray(bad_wav), None, None, None)],
-        schema=MEDIA_SCHEMA,
-    )
-    a = audio_feature_extract(audio).toPandas()
-    assert len(a) == 1 and isinstance(a.error.iloc[0], str)
-
-    # fps=0 framepack -> ZeroDivisionError in the timestamp math
-    zed = encode_framepack([np.zeros((2, 2, 1), dtype="uint8")], fps=0.0)
-    video = spark.createDataFrame(
-        [(0, "video", None, bytearray(zed), None, None, None),
-         (1, "video", None, bytearray(b"FPK1" + b"\x00" * 4), None, None, None)],
-        schema=MEDIA_SCHEMA,
-    )
-    v = video_frame_features(video).toPandas().set_index("media_id")
-    assert "ZeroDivisionError" in v.loc[0].error
-    assert isinstance(v.loc[1].error, str)  # truncated header
-
-
-def test_framepack_roundtrip_and_video_features(spark):
-    """encode_framepack -> decode_framepack roundtrips the frames, and
-    the mapInPandas video kernel samples every Nth frame with correct
-    timestamps; a real-codec payload isolates into the error column."""
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        MEDIA_SCHEMA,
-        decode_framepack,
-        encode_framepack,
-        video_frame_features,
-    )
-
-    rng = np.random.default_rng(21)
-    frames = [
-        rng.integers(0, 256, size=(6, 8, 3)).astype("uint8") for _ in range(10)
-    ]
-    pack = encode_framepack(frames, fps=20.0)
-    got, fps = decode_framepack(pack)
-    assert fps == 20.0 and len(got) == 10
-    assert all((a == b).all() for a, b in zip(got, frames))
-
-    rows = [
-        (0, "video", "video/x-fpk", bytearray(pack), 8, 6, 500),
-        (1, "video", "video/mp4", bytearray(b"\x00\x00\x00 ftypmp42"), None, None, None),
-    ]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    feats = video_frame_features(media, every_n=3).toPandas()
-    ok = feats[feats.media_id == 0].sort_values("frame_idx")
-    assert ok.frame_idx.tolist() == [0, 3, 6, 9]
-    assert np.allclose(ok.frame_ts_ms, [0.0, 150.0, 300.0, 450.0])
-    assert (ok.height == 6).all() and (ok.width == 8).all()
-    expected_means = [float(frames[i].mean()) for i in (0, 3, 6, 9)]
-    assert np.allclose(ok.mean_pixel, expected_means)
-    err = feats[feats.media_id == 1]
-    assert len(err) == 1 and "NotImplementedError" in err.error.iloc[0]
-
-
-def test_image_feature_extract_real_decode(spark):
-    """The real decode kernel end-to-end over mapInPandas: every
-    synthetic PNG decodes (no error rows), shapes match the generator,
-    and a corrupt payload isolates into its error column instead of
-    failing the task."""
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        MEDIA_SCHEMA,
-        image_feature_extract,
-        synthetic_images,
-    )
-
-    media = synthetic_images(spark, n=24, size=12)
-    feats = image_feature_extract(media, dim=8).toPandas()
-    assert len(feats) == 24
-    assert feats.error.isna().all()
-    meta = media.select("media_id", "width", "height").toPandas()
-    merged = feats.merge(meta, on="media_id")
-    assert (merged.width_x == merged.width_y).all()
-    assert (merged.height_x == merged.height_y).all()
-    assert all(abs(sum(f) - 1.0) < 1e-5 for f in feats.feature)
-    bad = spark.createDataFrame(
-        [(999, "image", "image/png", bytearray(b"\x89PNG\r\n\x1a\nbroken"), 1, 1, None)],
-        schema=MEDIA_SCHEMA,
-    )
-    out = image_feature_extract(media.unionByName(bad)).toPandas()
-    err = out[out.media_id == 999]
-    assert len(err) == 1 and err.error.notna().all()
-    assert out[out.media_id != 999].error.isna().all()
-
-
-def test_frame_sample_plan(spark):
-    media = synthetic_media(spark, n=12)
-    frames = frame_sample_plan(media, every_ms=500).toPandas()
-    vids = media.filter(F.col("kind") == "video").toPandas()
-    expected = sum(int(d // 500) + 1 for d in vids.duration_ms)
-    assert len(frames) == expected
-    assert (frames.frame_ts_ms % 500 == 0).all()
 
 
 def test_simhash_base_hash_modes_agree_on_exact_dups(docs):

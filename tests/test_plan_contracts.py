@@ -20,15 +20,10 @@ SF_DIR = "/root/testdata/sf0.001"
 # tests/test_pipelines.py.
 REQUIRED_PYTHON = {
     "egarch_params",
-    "multimodal_features",
-    "image_decode_features",  # real decode kernel (stdlib PNG/PGM)
-    "audio_decode_features",  # real decode kernel (stdlib PCM-WAV)
     "rolling_percentile",
     "embedding_near_dup",
     "ivf_topk",
-    "video_decode_features",  # framepack build + per-frame decode
     "sequence_packing",  # per-shard first-fit-decreasing
-    "hybrid_rrf",  # fuses ivf_topk, inheriting its SRP crossings
     "training_set",  # composed flagship: FFD packing crossing
     "training_set_chunks",  # same flagship, pack columns projected out
     "egarch_loglik",  # the exact _neg_loglik sequential kernel the
@@ -75,8 +70,6 @@ ALLOWED_NLJ = {
     "pit_enrich",  # 1-row horizon (max fact ts) scalar broadcast that
     # closes the SCD2 history's open intervals before the bucketed
     # interval join (operators/scd.py point_in_time_join)
-    "bm25_topk",  # 1-row (n_docs, avgdl) scalar broadcast
-    "hybrid_rrf",  # inherits cosine_topk's broadcast-queries crossJoin
     "quantized_topk",  # broadcast-queries crossJoin over the int8 index
     "event_cooccurrence",  # 1-row total-group-count scalar broadcast
     # (the lift denominator; the pair join itself is an equi-join on

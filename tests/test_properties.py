@@ -143,50 +143,6 @@ def test_dedup_resample_top1_deterministic_under_repartition(spark, trades_df):
 
 
 @given(
-    h=st.integers(1, 12),
-    w=st.integers(1, 12),
-    c=st.sampled_from([1, 2, 3, 4]),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_roundtrip_property(h, w, c, seed):
-    """encode_png ∘ decode_image == identity for every 8-bit shape."""
-    import numpy as np
-
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        decode_image,
-        encode_png,
-    )
-
-    arr = np.random.default_rng(seed).integers(0, 256, size=(h, w, c)).astype("uint8")
-    out = decode_image(encode_png(arr))
-    assert out.shape == arr.shape and (out == arr).all()
-
-
-@given(
-    n=st.integers(1, 400),
-    channels=st.sampled_from([1, 2]),
-    rate=st.sampled_from([8000, 16000, 44100]),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_wav_roundtrip_property(n, channels, rate, seed):
-    """encode_wav ∘ decode_audio preserves shape, rate and values to
-    16-bit quantization error."""
-    import numpy as np
-
-    from gapless_deribit_clickhouse_spark.pipelines.multimodal import (
-        decode_audio,
-        encode_wav,
-    )
-
-    a = np.random.default_rng(seed).uniform(-1, 1, size=(n, channels))
-    out, got_rate = decode_audio(encode_wav(a, rate))
-    assert got_rate == rate and out.shape == a.shape
-    assert np.allclose(out, a, atol=0.51 / 32767)
-
-
-@given(
     n=st.integers(2, 10**9),
     threshold=st.floats(0.5, 0.99),
     recall=st.floats(0.5, 0.99),

@@ -10,6 +10,7 @@ emission, DDL rendering, writer layout, and drift detection.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gapless_deribit_clickhouse_spark.exceptions import SchemaError
@@ -76,6 +77,19 @@ def test_partition_column_derivation(spark, trades_df):
     out = with_partition_columns(trades_df, load_schema("options_trades"))
     row = out.select("trade_month").first()
     assert row.trade_month == "202412"
+
+    # the UTC month, also on a session in another zone: 02:30 UTC on
+    # 1 December is still November in New York
+    early = trades_df.limit(1).withColumn(
+        "timestamp", F.lit("2024-12-01 02:30:00+00:00").cast("timestamp")
+    )
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        out = with_partition_columns(early, load_schema("options_trades"))
+        assert out.select("trade_month").first().trade_month == "202412"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
 
 
 def test_drift_detection(spark, trades_schema):
