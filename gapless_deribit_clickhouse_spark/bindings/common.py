@@ -65,8 +65,6 @@ _DERIVE = [
     ),
 ]
 
-TRADES_COLUMNS = [s.rsplit(" AS ", 1)[1] for s, _ in _DERIVE]
-
 # DuckDB CTE body deriving the trades view from events.
 TRADES_CTE = "SELECT " + ",\n       ".join(d for _, d in _DERIVE) + "\nFROM events"
 

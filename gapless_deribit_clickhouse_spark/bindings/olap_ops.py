@@ -97,9 +97,8 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping key here is low-cardinality but each group is
     SF-proportional, so at 100 TB the move is approx_percentile
     (t-digest sketch, map-side mergeable — the ClickHouse
-    ``quantileTDigest`` analogue); that variant is benched in
-    bench.py rather than oracle-bound because sketches are
-    engine-specific."""
+    ``quantileTDigest`` analogue), which is not oracle-bound because
+    sketches are engine-specific."""
     df = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     pct = F.expr("percentile(value, array(0.25D, 0.5D, 0.75D, 0.9D))")
     return (

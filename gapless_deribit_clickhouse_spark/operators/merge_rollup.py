@@ -32,8 +32,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STATE_COLS = ("n", "s", "mn", "mx", "ss")
-
 
 def partial_rollup(
     df: DataFrame, keys: Sequence[str], value_col: str

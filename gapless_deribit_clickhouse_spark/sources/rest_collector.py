@@ -4,7 +4,9 @@ Spark-native).
 Reference: ``/root/reference/src/gapless_deribit_clickhouse/collectors/
 trades_collector.py`` —
 - S1/S2 cursor pagination: pages of <=1000 trades walking BACKWARDS
-  from end_ts (``current_end_ts = oldest_ts - 1``), :97-144, :290-321
+  from end_ts (``current_end_ts = oldest_ts - 1``), :97-144, :290-321;
+  here each page restarts AT ``oldest_ts`` instead, so no trade is
+  lost where a page ends inside a millisecond
 - S3 continuity validation: inter-page gap > threshold ms and
   duplicate trade_ids -> warnings, :58-94
 - S4 row projection: API dict -> typed row + derived instrument
@@ -12,7 +14,8 @@ trades_collector.py`` —
 - S5 idempotent batched sink: every 10k rows with a dedup token
   sha256(currency,start,end,batch)[:32]; replays rejected, :405-436
 - S7 checkpoint: JSON {last_end_ts, batch_number, total_collected,
-  pagination_warnings}; resume on identical job key, :158-180
+  pagination_warnings}; resume on identical job key, :158-180; here
+  also ``last_end_ids``, the ids already written at ``last_end_ts``
 
 Spark design: the network source is emulated by a deterministic
 synthetic page generator (no internet in this environment; the page
@@ -125,11 +128,19 @@ def validate_page_continuity(
 ) -> tuple[bool, list[str]]:
     """Inter-page gap + duplicate checks (reference
     trades_collector.py:58-94): pages are newest-first; the boundary
-    gap is prev page's OLDEST ts minus curr page's NEWEST ts."""
-    if not prev_page or not curr_page:
+    gap is prev page's OLDEST ts minus curr page's NEWEST ts.
+
+    Each page restarts at the previous page's oldest millisecond, so
+    the trades ``curr_page`` lists again there are a refetch: they are
+    left out of both checks."""
+    if not prev_page:
         return True, []
     warnings: list[str] = []
     prev_oldest = min(t["timestamp"] for t in prev_page)
+    refetched = {t["trade_id"] for t in prev_page if t["timestamp"] == prev_oldest}
+    curr_page = [t for t in curr_page if t["timestamp"] != prev_oldest or t["trade_id"] not in refetched]
+    if not curr_page:
+        return True, []
     curr_newest = max(t["timestamp"] for t in curr_page)
     gap = prev_oldest - curr_newest
     if gap > gap_threshold_ms:
@@ -226,30 +237,13 @@ def _write_batch(spark: SparkSession, rows: list[dict], token: str, output_path:
             os.remove(os.path.join(leaf, name))
 
 
-def _batch_cut(buffer: list[dict], batch_rows: int) -> int:
-    """How many rows of the newest-first ``buffer`` to flush: about
-    ``batch_rows``, cut where the timestamp changes.
-
-    A resume restarts below the oldest flushed timestamp, so a cut
-    inside a run of equal timestamps would lose the rest of the run.
-    The trailing rows that share a timestamp with the next buffered row
-    are held back; if that is the whole chunk, the chunk runs to the
-    end of the run instead. A cut at the end of the buffer is a
-    boundary too: the next page starts below the oldest fetched
-    timestamp, so every row at a buffered timestamp is buffered.
-    """
-
-    def tie(i: int) -> bool:
-        return i < len(buffer) and buffer[i]["timestamp"] == buffer[i - 1]["timestamp"]
-
-    n = batch_rows
-    while n > 0 and tie(n):
-        n -= 1
-    if n == 0:
-        n = batch_rows
-        while tie(n):
-            n += 1
-    return n
+def _frontier(ts: int, ids: set[str], rows: list[dict]) -> tuple[int, set[str]]:
+    """The (millisecond, trade_ids taken there) a backward walk stands
+    at after taking ``rows``, when it stood at (``ts``, ``ids``): the
+    rows' oldest millisecond and the ids taken at it so far."""
+    oldest = min(t["timestamp"] for t in rows)
+    at = {t["trade_id"] for t in rows if t["timestamp"] == oldest}
+    return oldest, (ids | at if oldest == ts else at)
 
 
 def collect_trades(
@@ -266,10 +260,19 @@ def collect_trades(
     """Cursor-paginated backfill with continuity validation, batched
     idempotent writes and resumable checkpoints. Returns a stats dict
     (reference collect_trades(return_data=False) shape,
-    trades_collector.py:371-384)."""
+    trades_collector.py:371-384).
+
+    Each page restarts at the previous page's oldest millisecond and
+    drops the trade_ids already taken there. A page that adds no trade
+    ends the walk, or, if it is full, means one millisecond holds more
+    trades than a page: that raises :class:`SourceError`. The
+    checkpoint holds the same (millisecond, trade_ids) frontier for the
+    written rows, so a resume lands every trade once."""
     ckpt = CheckpointStore(checkpoint_dir) if checkpoint_dir else None
     state = ckpt.load(source.currency, start_ts, end_ts) if ckpt else None
     cursor = state["last_end_ts"] if state else end_ts
+    seen = set(state["last_end_ids"]) if state else set()
+    written = cursor, seen
     batch_number = state["batch_number"] if state else 0
     total = state["total_collected"] if state else 0
     warnings: list[str] = state["pagination_warnings"] if state else []
@@ -280,31 +283,37 @@ def collect_trades(
     while cursor >= start_ts:
         page = source.fetch_page(start_ts, cursor, page_size)
         pages += 1
-        if not page:
-            break
+        new = [t for t in page if t["trade_id"] not in seen]
+        if not new:
+            if len(page) < page_size:
+                break
+            raise SourceError(
+                f"{len(page)} trades at {cursor} ms fill a page of {page_size}: cannot page past them"
+            )
         ok, w = validate_page_continuity(prev_page, page)
         if not ok:
             warnings.extend(w)
-        buffer.extend(page)
-        oldest = min(t["timestamp"] for t in page)
-        cursor = oldest - 1
+        buffer.extend(new)
+        cursor, seen = _frontier(cursor, seen, new)
         prev_page = page
         while len(buffer) >= batch_rows:
-            cut = _batch_cut(buffer, batch_rows)
-            chunk, buffer = buffer[:cut], buffer[cut:]
+            chunk, buffer = buffer[:batch_rows], buffer[batch_rows:]
             token = batch_token(source.currency, start_ts, end_ts, batch_number)
             _write_batch(spark, chunk, token, output_path)
             total += len(chunk)
             batch_number += 1
+            written = _frontier(*written, chunk)
             if ckpt:
-                # resume point = oldest WRITTEN row − 1: rows still in
-                # the buffer are refetched after a crash, never lost
+                # resume at the oldest WRITTEN millisecond, skipping the
+                # ids written there: rows still in the buffer are
+                # refetched after a crash, never lost or duplicated
                 ckpt.save(
                     source.currency,
                     start_ts,
                     end_ts,
                     {
-                        "last_end_ts": min(t["timestamp"] for t in chunk) - 1,
+                        "last_end_ts": written[0],
+                        "last_end_ids": sorted(written[1]),
                         "batch_number": batch_number,
                         "total_collected": total,
                         "pagination_warnings": warnings[-100:],

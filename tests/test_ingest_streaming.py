@@ -71,6 +71,18 @@ def test_continuity_custom_threshold():
     assert ok
 
 
+def test_continuity_accepts_refetched_boundary_ms():
+    # the next page restarts at the previous page's oldest millisecond
+    ok, w = validate_page_continuity(
+        _page([("c", 2000), ("b", 1500), ("a", 1500)]),
+        _page([("b", 1500), ("a", 1500), ("z", 1400)]),
+    )
+    assert ok and not w
+    # ... and the refetch does not hide a gap behind it
+    ok, w = validate_page_continuity(_page([("a", 5000)]), _page([("a", 5000), ("z", 1000)]))
+    assert not ok and "gap" in w[0]
+
+
 def test_continuity_empty_pages():
     assert validate_page_continuity([], _page([("a", 1)]))[0]
 
@@ -123,41 +135,56 @@ def test_collect_trades_resume_after_crash(spark, tmp_path):
     assert df.count() == n_expected
 
 
-class _TwoTradesPerMs(SyntheticTradePages):
-    """Two trades at every grid timestamp, as when one order fills two
-    price levels in the same millisecond."""
+class _TradesPerMs(SyntheticTradePages):
+    """``per_ms`` trades at every grid timestamp, as when one order
+    fills several price levels in the same millisecond."""
+
+    def __init__(self, per_ms):
+        super().__init__(step_ms=1000)
+        self.per_ms = per_ms
 
     def fetch_page(self, start_ts, end_ts, count):
-        page = super().fetch_page(start_ts, end_ts, (count + 1) // 2)
-        return [dict(t, trade_id=f"{t['trade_id']}-{k}") for t in page for k in (0, 1)][:count]
+        page = super().fetch_page(start_ts, end_ts, -(-count // self.per_ms))
+        return [dict(t, trade_id=f"{t['trade_id']}-{k}") for t in page for k in range(self.per_ms)][:count]
 
 
 def test_resume_keeps_trades_that_share_a_millisecond(spark, tmp_path):
-    """A batch of 9 rows ends between two trades of one millisecond.
-    After a crash, the resume lands exactly the uninterrupted run's
-    trades, each once."""
-    src = _TwoTradesPerMs(step_ms=1000)
+    """Batches and pages end inside a millisecond: two trades a
+    millisecond with batches of 9 and pages of 9 or 10, and seven a
+    millisecond with batches of 3 and pages of 8, so one millisecond
+    spans several batches and the last page holds one millisecond. An
+    uninterrupted run lands every trade; after a crash, the resume
+    lands the same trades, each once."""
     end = T0 + 99 * 1000
-    kw = dict(batch_rows=9, page_size=10)
 
     def landed(out):
         return [r.trade_id for r in spark.read.parquet(out).select("trade_id").collect()]
 
-    whole = str(tmp_path / "whole")
-    collect_trades(spark, src, T0, end, whole, **kw)
-    expected = landed(whole)
-    assert len(expected) == len(set(expected)) == 200
+    for per_ms, batch_rows, page_size in ((2, 9, 9), (2, 9, 10), (7, 3, 8)):
+        case = f"{per_ms}-{batch_rows}-{page_size}"
+        src = _TradesPerMs(per_ms)
+        # a walk that stops making progress fails instead of hanging
+        kw = dict(batch_rows=batch_rows, page_size=page_size, max_pages=1000)
+        whole = str(tmp_path / f"whole{case}")
+        collect_trades(spark, src, T0, end, whole, **kw)
+        expected = landed(whole)
+        assert len(expected) == len(set(expected)) == 100 * per_ms, case
 
-    out, ckpt = str(tmp_path / "trades"), str(tmp_path / "ckpt")
-    with pytest.raises(SourceError):
-        collect_trades(spark, src, T0, end, out, checkpoint_dir=ckpt, max_pages=3, **kw)
-    collect_trades(spark, src, T0, end, out, checkpoint_dir=ckpt, **kw)
-    got = landed(out)
-    assert len(got) == len(set(got))
-    assert set(got) == set(expected)
-    # a run longer than a batch is flushed whole
-    run = [{"timestamp": 5}] * 12 + [{"timestamp": 4}]
-    assert rest_collector._batch_cut(run, 9) == 12
+        out, ckpt = str(tmp_path / f"trades{case}"), str(tmp_path / f"ckpt{case}")
+        with pytest.raises(SourceError, match="interrupted"):
+            collect_trades(spark, src, T0, end, out, checkpoint_dir=ckpt, **{**kw, "max_pages": 3})
+        collect_trades(spark, src, T0, end, out, checkpoint_dir=ckpt, **kw)
+        got = landed(out)
+        assert len(got) == len(set(got)), case
+        assert set(got) == set(expected), case
+
+
+def test_millisecond_fuller_than_a_page_raises(spark, tmp_path):
+    """Three trades in every millisecond and pages of 2: the walk cannot
+    get past the newest millisecond, and says so instead of looping."""
+    with pytest.raises(SourceError, match="fill a page of 2"):
+        collect_trades(spark, _TradesPerMs(3), T0, T0 + 9 * 1000, str(tmp_path / "trades"),
+                       batch_rows=100, page_size=2)
 
 
 def test_checkpoint_save_crash_keeps_previous_checkpoint(spark, tmp_path, monkeypatch):
