@@ -56,7 +56,6 @@ _HOME = {
     "build_validation_report": "validation",
     "print_validation_summary": "validation",
     "load_schema": "schema", "validate_table": "schema",
-    "write_bucketed": "schema",
     "get_spark": "core.session",
     "load_table": "core.tables",
     "load_tables": "core.tables",

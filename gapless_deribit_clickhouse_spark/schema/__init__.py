@@ -3,7 +3,6 @@
 from gapless_deribit_clickhouse_spark.schema.ddl import (
     create_table_ddl,
     init_table,
-    write_bucketed,
     with_partition_columns,
     write_table,
 )
@@ -27,7 +26,6 @@ __all__ = [
     "load_schema",
     "create_table_ddl",
     "init_table",
-    "write_bucketed",
     "with_partition_columns",
     "write_table",
     "Drift",

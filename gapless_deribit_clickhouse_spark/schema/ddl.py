@@ -90,42 +90,3 @@ def write_table(df: DataFrame, schema: TableSchema, path: str, mode: str = "appe
         writer = writer.partitionBy(*schema.partition_by)
     writer.save(path)
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write (overwrite) a bucketed, hash-clustered parquet catalog
-    table — Spark's
-    pre-shuffled layout for co-located joins and aggregations, the
-    analogue of the reference's ORDER-BY-keyed MergeTree locality
-    (``options_trades.yaml:30``).
-
-    Scale rationale: a fact table bucketed on its join/group key is
-    shuffled ONCE at write time; every subsequent
-    ``groupBy(bucket_cols)`` or join against a table bucketed the same
-    way runs with NO Exchange — at 100 TB that converts the dominant
-    per-query cost into a one-time layout cost. Requires
-    ``saveAsTable`` (bucket metadata lives in the catalog, not in
-    parquet files); pick ``num_buckets`` so one bucket ≈ 100-500 MB at
-    the target scale.
-    """
-    # Cluster rows by their bucket BEFORE the write (optimization r12,
-    # guide §6 file layout): repartition(num_buckets, bucket_cols)
-    # uses the same HashPartitioning (pmod(murmur3, n)) that assigns
-    # bucket ids at write time, so each write task holds exactly one
-    # bucket — num_buckets parallel writers, ONE file per bucket
-    # (instead of every input task writing a sliver of all
-    # num_buckets files: tasks x buckets small files, and at sf0.1 a
-    # 4-task write doing 32 sequential per-bucket sorts each). Table
-    # content is identical; only file count/parallelism change.
-    clustered = df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
-    writer = (
-        clustered.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)

@@ -6,10 +6,14 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import tempfile
 
 import duckdb
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
@@ -213,6 +217,53 @@ def test_checkpoint_save_crash_keeps_previous_checkpoint(spark, tmp_path, monkey
                    batch_rows=1000, page_size=500)
     df = spark.read.parquet(out)
     assert df.count() == df.select("trade_id").distinct().count() == 3600 + 1
+
+
+@st.composite
+def _backfill_runs(draw):
+    per_ms = draw(st.integers(1, 4))
+    n_ms = draw(st.integers(1, 30))
+    lo = draw(st.integers(0, n_ms - 1))
+    return dict(
+        per_ms=per_ms,
+        n_ms=n_ms,
+        page_size=draw(st.integers(per_ms + 1, 3 * per_ms + 4)),
+        batch_rows=draw(st.integers(per_ms + 1, 4 * per_ms + 8)),
+        stop_after=draw(st.none() | st.integers(1, 40)),
+        replay=draw(st.none() | st.tuples(st.just(lo), st.integers(lo, n_ms - 1))),
+    )
+
+
+@given(run=_backfill_runs())
+@settings(max_examples=100, deadline=None)
+def test_backfill_lands_the_source_set(run):
+    """Any ties, page and batch sizes, an interruption after any page
+    (then a resume from the checkpoint) and an optional replayed
+    sub-range: the staged trade_ids are the source's, and without the
+    replay each lands exactly once. ``_write_batch`` runs no Spark job,
+    so no session is passed and the staging is read with pyarrow."""
+    src = _TradesPerMs(run["per_ms"])
+    end = T0 + (run["n_ms"] - 1) * 1000
+    source_ids = {t["trade_id"] for t in src.fetch_page(T0, end, run["n_ms"] * run["per_ms"])}
+    assert len(source_ids) == run["n_ms"] * run["per_ms"]
+    # a walk that stops making progress fails instead of hanging
+    kw = dict(batch_rows=run["batch_rows"], page_size=run["page_size"], max_pages=1000)
+    with tempfile.TemporaryDirectory() as tmp:
+        out, ckpt = os.path.join(tmp, "trades"), os.path.join(tmp, "ckpt")
+        if run["stop_after"] is not None:
+            try:
+                collect_trades(None, src, T0, end, out, checkpoint_dir=ckpt,
+                               **{**kw, "max_pages": run["stop_after"]})
+            except SourceError as e:
+                assert "interrupted" in str(e)
+        collect_trades(None, src, T0, end, out, checkpoint_dir=ckpt, **kw)
+        if run["replay"] is not None:
+            lo, hi = run["replay"]
+            collect_trades(None, src, T0 + lo * 1000, T0 + hi * 1000, out, **kw)
+        staged = pq.read_table(out, columns=["trade_id"]).column("trade_id").to_pylist()
+    assert set(staged) == source_ids
+    if run["replay"] is None:
+        assert len(staged) == len(source_ids)
 
 
 # --- S5: the staging write (pyarrow + rename, no Spark job) ---

@@ -116,34 +116,6 @@ def test_spot_schema_parses():
     assert spot.properties.get("broadcast") is True
 
 
-def test_write_bucketed_eliminates_agg_and_join_shuffle(spark, tmp_path):
-    """A table bucketed on the key runs groupBy(key) and self-join
-    with ZERO Exchange operators — the co-located layout the 100 TB
-    design relies on."""
-    from pyspark.sql import functions as F
-
-    from gapless_deribit_clickhouse_spark.schema import write_bucketed
-
-    df = spark.range(1000).select(
-        (F.col("id") % 50).alias("k"), F.col("id").alias("v")
-    )
-    write_bucketed(df, "bucketed_probe", ["k"], num_buckets=8, sort_cols=["k"])
-    try:
-        t = spark.table("bucketed_probe")
-        agg_plan = t.groupBy("k").agg(F.sum("v"))._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in agg_plan
-        join_plan = (
-            t.alias("a").join(spark.table("bucketed_probe").alias("b"), "k")
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" not in join_plan.replace("BroadcastExchange", "")
-        # and the result is still right
-        got = t.groupBy("k").agg(F.sum("v").alias("s")).orderBy("k").limit(1).collect()
-        assert got[0]["s"] == sum(range(0, 1000, 50))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bucketed_probe")
-
-
 def test_unknown_schema_raises():
     with pytest.raises(SchemaError):
         load_schema("nonexistent_table")
