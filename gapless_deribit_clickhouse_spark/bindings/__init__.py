@@ -18,7 +18,6 @@ from gapless_deribit_clickhouse_spark.bindings import (
     olap_ops,
     series_ops,
     sketch_ops,
-    tpch_ops,
 )
 
 _MODULES = (
@@ -27,7 +26,6 @@ _MODULES = (
     analytics_ops,
     extra_ops,
     llm_ops,
-    tpch_ops,
     olap_ops,
     sketch_ops,
     series_ops,

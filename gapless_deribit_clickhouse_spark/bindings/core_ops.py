@@ -1,5 +1,6 @@
 """Core engine operators bound to testdata (scan/filter/sort/limit,
-dedup-at-read, OHLC resample, argMin top-1-per-group, TPC-H-style agg).
+dedup-at-read, OHLC resample and WITH FILL, argMin top-1-per-group,
+pagination, fixed-bin histogram).
 
 Reference parity notes per binding are in each function's docstring.
 """
@@ -21,10 +22,6 @@ _BUCKET_SQL = "epoch_ms(((floor(epoch({ts}))::BIGINT // {step}) * {step}) * 1000
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
-
-
-def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "lineitem")
 
 
 # --- S9/F1-F4/O1: scan + predicate + DESC order + limit (fetch_trades path) ---
@@ -134,520 +131,6 @@ FROM (
                             ORDER BY value, event_id) AS rn
   FROM events) t
 WHERE rn = 1
-"""
-
-
-# --- A-group: TPC-H Q1 pricing summary (multi-agg groupBy) ---
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan-heavy multi-aggregate groupBy — the canonical partial-agg +
-    exchange + final-agg shape; all 8 aggregates in one pass."""
-    li = _lineitem(spark, sf_dir)
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.sum("l_extendedprice").alias("sum_base_price"),
-            F.sum(disc_price).alias("sum_disc_price"),
-            F.sum(disc_price * (1 + F.col("l_tax"))).alias("sum_charge"),
-            F.avg("l_quantity").alias("avg_qty"),
-            F.avg("l_extendedprice").alias("avg_price"),
-            F.avg("l_discount").alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-Q1_SQL = """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity) AS sum_qty,
-       sum(l_extendedprice) AS sum_base_price,
-       sum(l_extendedprice * (1 - l_discount)) AS sum_disc_price,
-       sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)) AS sum_charge,
-       avg(l_quantity) AS avg_qty,
-       avg(l_extendedprice) AS avg_price,
-       avg(l_discount) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-# --- multi-way join: returned-revenue by customer (TPC-H Q10 shape) ---
-def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-planning showcase: lineitem joins orders on the shuffled
-    fact key (AQE picks SMJ/shuffled-hash and coalesces), while
-    customer and nation ride broadcast hash joins; the filters sit
-    below the joins (pushed to the scans) and the final top-20 compiles
-    to TakeOrderedAndProject."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-Q10_SQL = """
-SELECT c_custkey, c_name, c_acctbal, n_name,
-       sum(l_extendedprice * (1 - l_discount)) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1997-01-01'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-"""
-
-
-# --- join + group + top-k (TPC-H Q3 shape) ---
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic sales-funnel shape: small dimension filter broadcasts
-    (customer segment), the fact-fact join shuffles on the order key,
-    aggregation is partial below the shuffle, and the top-10 compiles
-    to TakeOrderedAndProject — no global sort ever materializes.
-    (Testdata has no o_shippriority; o_orderpriority stands in.)"""
-    cutoff = "1997-06-01"
-    c = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit(cutoff))
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit(cutoff)
-    )
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-# --- multi-way dimension-chain join (TPC-H Q5 shape) ---
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The join-reordering benchmark: six tables, one region filter.
-    The TRUE dimension chain (region -> nation) broadcasts by explicit
-    hint — the region predicate prunes nations before anything touches
-    a fact table. Supplier and customer carry NO hint: they are
-    SF-proportional in TPC-H, so broadcasting them by hint would OOM
-    executors on a real cluster; the cost-based planner decides.
-    Observed at test scale: customer converts to broadcast, while the
-    supplier edge stays a sort-merge join — static stats cannot size
-    the supplier-joins-nation subtree, and by the time AQE has runtime
-    stats both shuffle stages have already run, so conversion buys
-    nothing (the ONE deliberate SMJ in the binding surface; at 100 TB
-    the region-filtered supplier is millions of rows and the shuffle
-    join is simply correct). The c_nationkey = s_nationkey locality
-    condition rides the customer join as an extra equality on the
-    already-joined nation key, not a separate join."""
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = load_table(spark, sf_dir, "nation").join(
-        F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
-    )
-    s = load_table(spark, sf_dir, "supplier").join(
-        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
-    )
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(
-            c,
-            (F.col("o_custkey") == F.col("c_custkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "revenue"
-            )
-        )
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
-    )
-
-
-Q5_SQL = """
-SELECT n_name, sum(l_extendedprice * (1 - l_discount)) AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1997-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-"""
-
-
-# --- join + conditional-agg ratio (TPC-H Q14 shape) ---
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Promo-revenue share: fact scan filtered to one month, part
-    dimension broadcast, and the CASE-inside-aggregate ratio computed
-    in a single partial->final aggregation — the
-    conditional-agg-over-a-join shape (no second pass for the
-    denominator)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-03-01"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01"))
-    )
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            (
-                100.0
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0))
-                / F.sum(rev)
-            ).alias("promo_revenue_pct")
-        )
-    )
-
-
-Q14_SQL = """
-SELECT 100.0 * sum(CASE WHEN p_type = 'PROMO'
-                        THEN l_extendedprice * (1 - l_discount)
-                        ELSE 0 END)
-            / sum(l_extendedprice * (1 - l_discount)) AS promo_revenue_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1996-03-01'
-  AND l_shipdate <  TIMESTAMP '1996-04-01'
-"""
-
-
-# --- disjunctive multi-attribute join predicate (TPC-H Q19 shape) ---
-def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The OR-of-ANDs predicate benchmark: three (brand, size range,
-    quantity range) disjuncts spanning BOTH join sides. Catalyst
-    extracts the part-only common factors below the join (brand/size
-    prune the broadcast build side) while the mixed quantity terms
-    evaluate post-join — the shape that breaks naive
-    pushdown-everything planners."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_brand", "p_size"
-    )
-    q, b, s = F.col("l_quantity"), F.col("p_brand"), F.col("p_size")
-    cond = (
-        ((b == "Brand#1") & s.between(1, 5) & q.between(1, 11))
-        | ((b == "Brand#13") & s.between(1, 10) & q.between(10, 20))
-        | ((b == "Brand#20") & s.between(1, 15) & q.between(20, 30))
-    )
-    return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .filter(cond)
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "revenue"
-            )
-        )
-    )
-
-
-Q19_SQL = """
-SELECT sum(l_extendedprice * (1 - l_discount)) AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1'  AND p_size BETWEEN 1 AND 5
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#20' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-Q3_SQL = """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       sum(l_extendedprice * (1 - l_discount)) AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-06-01'
-  AND l_shipdate  > TIMESTAMP '1997-06-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-"""
-
-
-# --- large-agg-then-filter semi-join (TPC-H Q18 shape) ---
-def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate-then-filter as a semi-join: the HAVING aggregation
-    over lineitem shrinks to a handful of qualifying orders, so the
-    'IN (subquery)' becomes a broadcast join against the agg output —
-    the fact table is scanned once and never self-joined. Threshold
-    250 ~ p99 of per-order quantity in the testdata (TPC-H uses 300
-    at its own scale)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("sum_qty"))
-        .filter(F.col("sum_qty") > 250)
-    )
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    return (
-        o.join(F.broadcast(big), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            "o_totalprice",
-            "sum_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
-
-
-Q18_SQL = """
-WITH big AS (
-  SELECT l_orderkey, sum(l_quantity) AS sum_qty
-  FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 250)
-SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
-FROM orders
-JOIN big      ON o_orderkey = big.l_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 100
-"""
-
-
-# --- EXISTS semi-join (TPC-H Q4 shape) ---
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The EXISTS-subquery benchmark as a true left-semi join: orders
-    in one quarter that had at least one line item shipped after the
-    order date (the testdata has no commit/receipt dates, so
-    late-shipment stands in for the spec's late-delivery predicate —
-    the defining shape, a semi-join with an extra NON-equi condition
-    riding the equi key, is identical). The semi join never
-    materializes lineitem columns and short-circuits per order on the
-    probe side; at 100 TB both sides shuffle once on orderkey and the
-    non-equi term evaluates inside the join, never as a post-join
-    filter over a fact-fact product."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    return (
-        o.join(
-            li,
-            (F.col("o_orderkey") == F.col("l_orderkey"))
-            & (F.col("l_shipdate") > F.col("o_orderdate")),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-Q4_SQL = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders o
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1996-04-01'
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate)
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-# --- left-outer join + two-level agg (TPC-H Q13 shape) ---
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer order-count histogram: the outer-join-then-double-agg
-    shape. The LEFT OUTER join keeps order-less customers (their
-    count(o_orderkey) is 0, not a dropped row — the semantics an inner
-    join silently gets wrong), the first aggregation reduces on the
-    join key it is already partitioned by (no extra shuffle), and the
-    second aggregation reduces ~millions of per-customer rows to a
-    few dozen histogram buckets — map-side partials do almost all of
-    the work."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
-    per_cust = (
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-Q13_SQL = """
-WITH per_cust AS (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-  GROUP BY c_custkey)
-SELECT c_count, count(*) AS custdist
-FROM per_cust
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-"""
-
-
-# --- decorrelated scalar correlated subquery (TPC-H Q17 shape) ---
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The correlated-scalar-subquery benchmark ('quantity below 20%
-    of this part's average'), decorrelated to a single window
-    aggregate: prune lineitem to one brand via a broadcast part join,
-    then compute the per-part average with avg() OVER (PARTITION BY
-    l_partkey) on the pruned set — ONE shuffle on partkey, no second
-    scan of lineitem and no agg-then-join-back (whose per-part agg
-    output is SF-proportional for a fixed brand, so broadcasting it
-    back would not survive scale-up). The part side carries NO
-    broadcast hint for the same reason Q5's supplier doesn't: a
-    one-brand slice of part is still SF-proportional, so the
-    cost-based planner must choose (it broadcasts at test scale,
-    shuffles at 100 TB — both correct). Per-part lineitem counts are
-    ~constant in TPC-H regardless of SF, so the window partitions are
-    bounded and skew-free."""
-    from pyspark.sql import Window
-
-    p = load_table(spark, sf_dir, "part").filter(
-        F.col("p_brand") == "Brand#13"
-    ).select("p_partkey")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    pruned = li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-    w = Window.partitionBy("l_partkey")
-    return (
-        pruned.withColumn("qty_cut", 0.2 * F.avg("l_quantity").over(w))
-        .filter(F.col("l_quantity") < F.col("qty_cut"))
-        .agg((F.sum("l_extendedprice") / 7.0).alias("avg_yearly"))
-    )
-
-
-Q17_SQL = """
-WITH pruned AS (
-  SELECT l_partkey, l_quantity, l_extendedprice
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_brand = 'Brand#13'),
-wc AS (
-  SELECT *, 0.2 * avg(l_quantity) OVER (PARTITION BY l_partkey) AS qty_cut
-  FROM pruned)
-SELECT sum(l_extendedprice) / 7.0 AS avg_yearly
-FROM wc WHERE l_quantity < qty_cut
-"""
-
-
-# --- anti-join + scalar-subquery filter (TPC-H Q22 shape) ---
-def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NOT-EXISTS benchmark: above-average-balance customers with
-    no order since 1999 (classic Q22's 'no orders ever' is empty on
-    this testdata — every customer has orders — so the recency
-    predicate keeps the anti-join non-trivial while the shape is
-    unchanged). The global average is a 1-row aggregate broadcast
-    into the plan (a bounded-by-construction nested-loop broadcast,
-    NOT a driver collect), the date predicate is pushed into the
-    orders scan BEFORE the anti-join builds its hash table, and the
-    anti join itself is the null-safe NOT IN replacement that scales:
-    one shuffle (or broadcast, if the filtered orders fit) instead of
-    a per-row subquery."""
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_acctbal", "c_mktsegment"
-    )
-    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
-        F.avg("c_acctbal").alias("avg_bal")
-    )
-    recent = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("1999-01-01")
-    ).select("o_custkey")
-    return (
-        c.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(recent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("numcust"),
-            F.sum("c_acctbal").alias("totacctbal"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-Q22_SQL = """
-SELECT c_mktsegment, count(*) AS numcust, sum(c_acctbal) AS totacctbal
-FROM customer c
-WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)
-  AND NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderdate >= TIMESTAMP '1999-01-01')
-GROUP BY c_mktsegment
-ORDER BY c_mktsegment
-"""
-
-
-# --- pure pushdown scan-agg (TPC-H Q6 shape) ---
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pushdown benchmark: three range predicates, no join, one
-    scalar aggregate — every filter reaches the parquet scan
-    (PushedFilters + row-group min/max pruning), the aggregation is a
-    map-side partial collapsing to one row per task. The query whose
-    cost at 100 TB is pure I/O on the pruned byte range."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01"))
-            & (F.col("l_discount").between(0.05, 0.07))
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue")
-        )
-    )
-
-
-Q6_SQL = """
-SELECT sum(l_extendedprice * l_discount) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
 """
 
 
@@ -939,21 +422,9 @@ FROM b GROUP BY bin
 
 BINDINGS = [
     ("scan_topn", scan_topn, SCAN_TOPN_SQL),
-    ("q10_returned_revenue", q10_returned_revenue, Q10_SQL),
-    ("q3_shipping_priority", q3_shipping_priority, Q3_SQL),
-    ("q18_large_volume_customer", q18_large_volume_customer, Q18_SQL),
-    ("q5_local_supplier_volume", q5_local_supplier_volume, Q5_SQL),
-    ("q14_promo_revenue", q14_promo_revenue, Q14_SQL),
-    ("q19_discounted_revenue", q19_discounted_revenue, Q19_SQL),
     ("dedup_latest", dedup_latest_events, DEDUP_LATEST_SQL),
     ("ohlc_15m", ohlc_15m, OHLC_15M_SQL),
     ("top1_min_value", top1_min_value, TOP1_MIN_VALUE_SQL),
-    ("q1_pricing_summary", q1_pricing_summary, Q1_SQL),
-    ("q4_order_priority", q4_order_priority, Q4_SQL),
-    ("q13_customer_distribution", q13_customer_distribution, Q13_SQL),
-    ("q17_small_quantity_revenue", q17_small_quantity_revenue, Q17_SQL),
-    ("q22_dormant_customers", q22_dormant_customers, Q22_SQL),
-    ("q6_forecast_revenue", q6_forecast_revenue, Q6_SQL),
     ("ohlc_15m_gapless", ohlc_15m_gapless, OHLC_GAPLESS_SQL),
     ("value_histogram", value_histogram, VALUE_HISTOGRAM_SQL),
     ("ohlc_gapless_interp", ohlc_gapless_interp, OHLC_GAPLESS_INTERP_SQL),

@@ -51,9 +51,10 @@ WHERE rn <= 3
 
 # --- WITH ROLLUP: subtotal grouping sets in one aggregation ---
 def volume_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1's aggregate recomputed at every rollup level of
-    (l_returnflag, l_linestatus) — detail rows, per-flag subtotals,
-    and the grand total — in ONE aggregation pass (ClickHouse ``WITH
+    """Line count, quantity and revenue of ``lineitem`` at every
+    rollup level of (l_returnflag, l_linestatus) — detail rows,
+    per-flag subtotals and the grand total — in ONE aggregation pass
+    (ClickHouse ``WITH
     ROLLUP`` / Spark ``rollup()`` parity).  Spark expands the rollup
     into grouping sets BEFORE the exchange, so partial aggregation
     still happens map-side for every level and the shuffle carries
@@ -417,8 +418,7 @@ def full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue vs order revenue — via FULL OUTER join: days present in
     only one source survive with the other side NULL-coalesced to
     zero, the shape an inner join silently gets wrong in both
-    directions (q13 covers left-outer; this completes the join-type
-    matrix).  Both sides aggregate BEFORE the join, so the full outer
+    directions.  Both sides aggregate BEFORE the join, so the full outer
     joins two day-cardinality tables — at 100 TB the join inputs are
     thousands of rows regardless of fact size, and the day key is
     unique per side so the join cannot fan out."""

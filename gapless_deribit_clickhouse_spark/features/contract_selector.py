@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.exceptions import QueryError
 from gapless_deribit_clickhouse_spark.features.config import DEFAULT, FeatureConfig
+from gapless_deribit_clickhouse_spark.functions.conditional import safe_div
 from gapless_deribit_clickhouse_spark.functions.timeutils import dte_days, time_bucket
 from gapless_deribit_clickhouse_spark.operators.topk import top1_per_group
 
@@ -48,8 +49,9 @@ def front_month(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
 
 
 def atm_filter(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFrame:
-    """strike/spot within ±atm_width (reference contract_selector.py:64-72)."""
-    ratio = F.col("strike") / F.col("index_price")
+    """strike/spot within ±atm_width (reference contract_selector.py:64-72).
+    A row with a zero ``index_price`` has no ratio and is dropped."""
+    ratio = safe_div(F.col("strike"), F.col("index_price"))
     return df.filter(ratio.between(1 - config.atm_width, 1 + config.atm_width))
 
 

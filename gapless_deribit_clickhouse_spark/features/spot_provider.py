@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.features.config import DEFAULT, FeatureConfig
+from gapless_deribit_clickhouse_spark.functions.conditional import safe_div
 from gapless_deribit_clickhouse_spark.functions.timeutils import time_bucket
 
 # reference spot_provider.py:37-40
@@ -40,7 +41,7 @@ def enrich_with_spot(
 ) -> DataFrame:
     """Left-join trades to the spot dimension on (symbol, 15-min
     bucket); output adds ``binance_spot``, ``spot_price`` (hybrid
-    coalesce), ``moneyness``.
+    coalesce), ``moneyness`` (null where ``spot_price`` is 0).
 
     The spot side is pre-bucketed + deduplicated (one close per key,
     latest wins) then broadcast.
@@ -81,7 +82,7 @@ def enrich_with_spot(
     return out.select(
         *[c for c in out.columns if c not in ("__sym", "__w")],
         spot_price.alias("spot_price"),
-        (F.col("strike") / spot_price).alias("moneyness"),
+        safe_div(F.col("strike"), spot_price).alias("moneyness"),
     )
 
 
@@ -113,7 +114,8 @@ def ensure_spot_dictionary(
 def spot_coverage(enriched: DataFrame) -> DataFrame:
     """Coverage-rate diagnostics after enrichment (reference
     spot_provider.py:313-364): index-price rate, fallback rate, total
-    coalesce rate — one aggregate pass."""
+    coalesce rate — one aggregate pass. The rates are null on an empty
+    frame."""
     n = F.count(F.lit(1))
     has_idx = F.count(F.when(F.col("index_price").isNotNull(), F.lit(1)))
     has_fb = F.count(
@@ -122,7 +124,7 @@ def spot_coverage(enriched: DataFrame) -> DataFrame:
     has_spot = F.count(F.when(F.col("spot_price").isNotNull(), F.lit(1)))
     return enriched.agg(
         n.alias("total_rows"),
-        (has_idx.cast("double") / n).alias("index_price_rate"),
-        (has_fb.cast("double") / n).alias("fallback_rate"),
-        (has_spot.cast("double") / n).alias("spot_coverage_rate"),
+        safe_div(has_idx.cast("double"), n).alias("index_price_rate"),
+        safe_div(has_fb.cast("double"), n).alias("fallback_rate"),
+        safe_div(has_spot.cast("double"), n).alias("spot_coverage_rate"),
     )

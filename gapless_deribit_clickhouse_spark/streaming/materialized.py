@@ -39,8 +39,8 @@ from gapless_deribit_clickhouse_spark.sinks.connector import ParquetServingConne
 
 def _is_missing_path(exc: Exception) -> bool:
     """True only for the path-does-not-exist AnalysisException."""
-    cls = getattr(exc, "getErrorClass", lambda: None)() or ""
-    return "PATH_NOT_FOUND" in cls or "Path does not exist" in str(exc)
+    cond = exc.getCondition() or ""
+    return cond == "PATH_NOT_FOUND" or "Path does not exist" in str(exc)
 
 
 def _latest_version_before(spark, state_path: str, batch_id: int):

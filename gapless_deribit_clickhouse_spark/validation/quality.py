@@ -19,14 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gapless_deribit_clickhouse_spark.functions.conditional import count_if
+from gapless_deribit_clickhouse_spark.functions.conditional import count_if, safe_div
 
 
 def quality_metrics(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     """One-row global quality aggregate (reference data_quality.py:30-45):
     total rows, exact distinct ``trade_id``s, dedup rate, ``timestamp``
     span, null-or-zero rates of ``iv`` and ``index_price``, rows per
-    hour.
+    hour. An empty frame gives one row with ``total_rows`` 0 and null
+    rates.
 
     ``approx_distinct=True`` swaps exact ``countDistinct`` (which
     inserts an Expand + second shuffle keyed by the id — the one
@@ -46,7 +47,7 @@ def quality_metrics(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     aggs = [
         n.alias("total_rows"),
         uniq.alias("unique_ids"),
-        (uniq.cast("double") / n).alias("dedup_rate"),
+        safe_div(uniq.cast("double"), n).alias("dedup_rate"),
         F.min("timestamp").alias("min_ts"),
         F.max("timestamp").alias("max_ts"),
         span_hours.alias("span_hours"),
@@ -54,7 +55,7 @@ def quality_metrics(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
     ]
     for c in ("iv", "index_price"):
         bad = count_if(F.col(c).isNull() | (F.col(c) == 0))
-        aggs.append((bad.cast("double") / n).alias(f"{c}_null_or_zero_rate"))
+        aggs.append(safe_div(bad.cast("double"), n).alias(f"{c}_null_or_zero_rate"))
     return df.agg(*aggs)
 
 

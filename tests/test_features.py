@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.features import (
     aggregate_by_moneyness,
+    atm_filter,
     dte_bucket_agg,
     dte_distribution,
     enrich_with_spot,
@@ -20,6 +21,7 @@ from gapless_deribit_clickhouse_spark.features import (
     pcr_by_tenor,
     resample_iv,
     select_contracts,
+    spot_coverage,
     term_structure,
     term_structure_ratio,
     term_structure_slope,
@@ -32,6 +34,7 @@ from gapless_deribit_clickhouse_spark.features.config import (
     get_preset,
 )
 from gapless_deribit_clickhouse_spark.features.moneyness import moneyness_bucket_col
+from gapless_deribit_clickhouse_spark.validation import quality_metrics
 
 
 def test_resample_ohlc_columns_and_bounds(trades_df):
@@ -290,6 +293,44 @@ def test_enrich_with_spot_hybrid(spark, trades_df, spot_pdf):
     assert (filled.spot_price == filled.binance_spot).all()
     kept = out[out.index_price.notna()]
     assert (kept.spot_price == kept.index_price).all()
+
+
+@pytest.mark.parametrize(
+    "call", ["quality_metrics", "spot_coverage", "atm_filter", "enrich_with_spot"]
+)
+def test_zero_divisor_gives_null_not_divide_by_zero(spark, trades_df, spot_pdf, call):
+    """Spark 4 runs with ANSI on, where a bare ``/`` by 0 raises
+    DIVIDE_BY_ZERO. An empty frame has null rates, a zero
+    ``index_price`` has no ATM ratio (the row is dropped) and a zero
+    ``spot_price`` has a null ``moneyness``."""
+    empty = trades_df.limit(0)
+    # a trade_id ending in 0 has a null index, one ending in 1 a zero index
+    last = F.col("trade_id").substr(-1, 1)
+    broken = trades_df.withColumn(
+        "index_price",
+        F.when(last == "0", None).when(last == "1", 0.0).otherwise(F.col("index_price")),
+    )
+    if call == "quality_metrics":
+        (row,) = quality_metrics(empty).collect()
+        assert row.total_rows == 0
+        rates = (row.dedup_rate, row.iv_null_or_zero_rate, row.index_price_null_or_zero_rate)
+        assert rates == (None, None, None)
+    elif call == "spot_coverage":
+        (row,) = spot_coverage(enrich_with_spot(empty, spark.createDataFrame(spot_pdf))).collect()
+        assert row.total_rows == 0
+        assert (row.index_price_rate, row.fallback_rate, row.spot_coverage_rate) == (None, None, None)
+    elif call == "atm_filter":
+        kept = atm_filter(broken).toPandas()
+        assert len(kept) > 0 and (kept.index_price > 0).all()
+    else:
+        # a zero Binance close stands in for every null index
+        zero_close = spark.createDataFrame(spot_pdf.assign(close=0.0))
+        out = enrich_with_spot(broken, zero_close).toPandas()
+        zero = out[out.spot_price == 0]
+        assert zero.index_price.isna().any() and (zero.index_price == 0).any()
+        assert zero.moneyness.isna().all()
+        assert out[out.spot_price > 0].moneyness.notna().all()
+        assert aggregate_by_moneyness(enrich_with_spot(broken, zero_close)).count() > 0
 
 
 def test_greeks_sanity(spark):
