@@ -6,13 +6,20 @@ Reference: ``/root/reference/src/gapless_deribit_clickhouse/api.py``
 
 The SQL-template IR disappears: validation happens fail-fast in
 Python, then the query is a DataFrame plan —
-``table -> [dedup] -> filters -> orderBy desc -> limit``. Only with
-``use_final=False`` does Catalyst push the filters into the parquet
-scan: ``underlying`` prunes partitions and the other predicates reach
-the scan as data filters; no filter names ``trade_month``, so a time
-range prunes no month partition. With FINAL (the default) the filters
-stay above the ``trade_id`` window (``operators/dedup.py``), so every
-query scans the whole table.
+``table -> instrument filter -> [dedup] -> time filter -> orderBy desc
+-> limit``. The instrument filter holds the predicates on columns that
+every version of a trade shares (``dedup_invariant`` in
+``schema/options_trades.yaml``), so it is exact below the ``trade_id``
+window (``operators/dedup.py``): Catalyst pushes it into the parquet
+scan, where ``underlying`` prunes partitions and the other predicates
+reach the scan as data filters, and a FINAL point lookup windows only
+the versions of the few trades on its instrument. The ``timestamp``
+range stays above the window, because a later re-delivery (even one in
+a later ``trade_month``, or after ``end``) must still evict the version
+it replaces. So a FINAL query windows every row its instrument filter
+keeps: the latest-N query windows its whole underlying. Only with
+``use_final=False`` does the time range reach the scan too. No filter
+names ``trade_month``, so a time range prunes no month partition.
 """
 
 from __future__ import annotations
@@ -31,18 +38,23 @@ from gapless_deribit_clickhouse_spark.exceptions import QueryError
 from gapless_deribit_clickhouse_spark.operators.dedup import dedup_latest
 
 if TYPE_CHECKING:
-    from gapless_deribit_clickhouse_spark.schema.loader import ColumnSpec
+    from gapless_deribit_clickhouse_spark.schema.loader import ColumnSpec, TableSchema
 
 
 _ISO_DATE = re.compile(r"\d{4}-\d{2}-\d{2}")
 
 
 @cache
-def _column(name: str) -> ColumnSpec:
-    """A column spec of the ``options_trades`` schema."""
+def _schema() -> TableSchema:
+    """The ``options_trades`` schema."""
     from gapless_deribit_clickhouse_spark.schema.loader import load_schema
 
-    return load_schema("options_trades").column(name)
+    return load_schema("options_trades")
+
+
+def _column(name: str) -> ColumnSpec:
+    """A column spec of the ``options_trades`` schema."""
+    return _schema().column(name)
 
 
 def _validate_fetch_params(
@@ -127,21 +139,33 @@ def fetch_trades(
     (F1-F4, W5, O1). ``use_final`` toggles dedup-at-read (FINAL
     parity, reference api.py:121-124)."""
     _validate_fetch_params(underlying, start, end, limit, option_type, expiry, strike)
+    preds = []  # (column, predicate), in the reference's order
+    if underlying is not None:
+        preds.append(("underlying", F.col("underlying") == underlying))
+    if option_type is not None:
+        preds.append(("option_type", F.col("option_type") == option_type))
+    if expiry is not None:
+        preds.append(("expiry", F.col("expiry") == F.lit(expiry).cast("date")))
+    if strike is not None:
+        preds.append(("strike", F.col("strike") == float(strike)))
+    if start is not None:
+        preds.append(("timestamp", F.col("timestamp") >= F.lit(_parse_ts(start))))
+    if end is not None:
+        preds.append(("timestamp", F.col("timestamp") < F.lit(_parse_ts(end, end_side=True))))
+    # A predicate on a column that every version of a trade shares keeps
+    # all of its versions or none, so it runs below the dedup window and
+    # reaches the scan; a timestamp predicate must see only the winner.
+    # Catalyst combines each run of filters into one Filter node.
+    invariant = _schema().dedup_invariant
+    below = [p for c, p in preds if c in invariant]
+    above = [p for c, p in preds if c not in invariant]
     df = trades
+    for p in below:
+        df = df.filter(p)
     if use_final:
         df = dedup_latest(df, keys=["trade_id"], version_cols=["timestamp"])
-    if underlying is not None:
-        df = df.filter(F.col("underlying") == underlying)
-    if option_type is not None:
-        df = df.filter(F.col("option_type") == option_type)
-    if expiry is not None:
-        df = df.filter(F.col("expiry") == F.lit(expiry).cast("date"))
-    if strike is not None:
-        df = df.filter(F.col("strike") == float(strike))
-    if start is not None:
-        df = df.filter(F.col("timestamp") >= F.lit(_parse_ts(start)))
-    if end is not None:
-        df = df.filter(F.col("timestamp") < F.lit(_parse_ts(end, end_side=True)))
+    for p in above:
+        df = df.filter(p)
     df = df.orderBy(F.col("timestamp").desc(), F.col("trade_id").desc())
     if limit is not None:
         df = df.limit(limit)

@@ -25,6 +25,16 @@ SparkSession configured for the workload:
   collector, since a cluster executor with a large heap and many cores
   is what G1 is for. A caller whose own driver options select a
   collector (``-XX:+Use<Name>GC``) gets that one instead.
+- PySpark's per-call origin capture is off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``pyspark.sql.functions`` call records its Python call site in
+  the JVM: a bare ``F.col`` costs 13 Py4J round trips instead of 3, and
+  building one FINAL point ``fetch_trades`` plan 622 instead of 164.
+  The cost is that an analysis error no longer names the Python line
+  that built the failing expression; the error itself is unchanged.
+  PySpark reads the conf once per process, from the active session
+  (``pyspark/errors/utils.py:is_debugging_enabled``), so it is set in
+  the builder.
 """
 
 from __future__ import annotations
@@ -94,6 +104,8 @@ def get_spark(
     pauses that grow with the live set (longest measured 102-256 ms);
     executors keep the JVM default. A collector chosen in the caller's
     ``spark.driver.extraJavaOptions`` wins over the pinned one.
+    Origin capture is off, so an analysis error carries no Python call
+    site (module docstring).
     """
     cpus = int(_DEFAULT_CPUS)
     builder = (
@@ -112,6 +124,7 @@ def get_spark(
         # (core.tables normalizes to microsecond TimestampType).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     extra_conf = extra_conf or {}

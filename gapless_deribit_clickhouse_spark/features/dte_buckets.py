@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.features.config import DEFAULT, FeatureConfig, bucket_label
+from gapless_deribit_clickhouse_spark.functions.conditional import safe_div
 from gapless_deribit_clickhouse_spark.functions.timeutils import dte_days, time_bucket
 
 
@@ -54,7 +55,7 @@ def dte_distribution(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFram
     """Per-bucket share of each window's total volume, in percent
     (reference dte_buckets.py:132-198). The % normalization is a
     window-sum over the aggregate output (rows = windows × buckets),
-    not a re-scan."""
+    not a re-scan. A window whose volumes sum to 0 has null shares."""
     agg = (
         df.withColumn(
             "__bucket", dte_bucket_col(dte_days(F.col("timestamp"), F.col("expiry")), config)
@@ -66,10 +67,12 @@ def dte_distribution(df: DataFrame, config: FeatureConfig = DEFAULT) -> DataFram
         )
         .agg(F.sum("amount").alias("volume_sum"))
     )
-    total = Window.partitionBy("ts")
-    return agg.select(
+    # the total is its own column: safe_div reads its divisor twice, and
+    # an inline window sum would be computed twice
+    total = F.sum("volume_sum").over(Window.partitionBy("ts"))
+    return agg.withColumn("__total", total).select(
         "ts",
         "dte_bucket",
         "volume_sum",
-        (F.col("volume_sum") / F.sum("volume_sum").over(total) * 100.0).alias("volume_pct"),
+        (safe_div(F.col("volume_sum"), F.col("__total")) * 100.0).alias("volume_pct"),
     )

@@ -15,12 +15,16 @@ hatch (`use_final=True` parity). The streaming path's
 ``dropDuplicatesWithinWatermark`` is not this semantics: it keeps the
 first-arriving version of a key, not the latest
 (``streaming/ingest.py:dedup_stream``). The window variant below lets
-AQE handle skew. It is not partition-pruned: the ``options_trades``
+AQE handle skew. Catalyst moves a filter below a window only when the
+filter names partition-spec columns alone, and the ``options_trades``
 dedup key is ``trade_id`` alone (``schema/options_trades.yaml``), so
-the window spans every partition the input holds, and a filter on a
-column outside the key (``underlying``, ``timestamp``) stays above it.
-A re-delivery may also land in a later ``trade_month`` partition than
-the version it replaces.
+the window spans every row of its input and a filter applied to its
+output stays above it. ``fetch_trades`` therefore filters the input on
+the columns every version of a trade shares (``dedup_invariant``):
+``underlying`` prunes partitions and a point lookup windows a few
+rows. Its ``timestamp`` range stays above the window, because a
+re-delivery may land in a later ``trade_month`` partition, or after
+the range, than the version it replaces.
 """
 
 from __future__ import annotations

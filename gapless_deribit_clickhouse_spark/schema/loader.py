@@ -5,8 +5,9 @@ Parity with the reference's schema layer
 the same JSON-Schema-in-YAML single source of truth, but the engine
 extension block is ``x-spark`` instead of ``x-clickhouse`` — it emits a
 ``StructType`` plus physical-layout properties (partition columns,
-within-partition sort, dedup key/version) that the DDL generator and
-the dedup view consume.
+within-partition sort, dedup key/version, and the columns every version
+of a dedup key shares) that the DDL generator and the dedup view
+consume.
 """
 
 from __future__ import annotations
@@ -72,6 +73,7 @@ class TableSchema:
     sort_within_partitions: tuple[str, ...] = ()
     dedup_key: tuple[str, ...] = ()
     dedup_version: tuple[str, ...] = ()
+    dedup_invariant: tuple[str, ...] = ()
     properties: dict = field(default_factory=dict)
 
     def column(self, name: str) -> ColumnSpec:
@@ -129,6 +131,10 @@ def load_schema(source: str | Path) -> TableSchema:
     missing = set(required) - set(props)
     if missing:
         raise SchemaError(f"{path}: required columns not declared: {sorted(missing)}")
+    invariant = tuple(xs.get("dedup_invariant") or ())
+    undeclared = set(invariant) - set(props)
+    if undeclared:
+        raise SchemaError(f"{path}: dedup_invariant columns not declared: {sorted(undeclared)}")
 
     columns = tuple(_parse_column(n, s or {}, set(required)) for n, s in props.items())
     return TableSchema(
@@ -141,7 +147,8 @@ def load_schema(source: str | Path) -> TableSchema:
         sort_within_partitions=tuple(xs.get("sort_within_partitions") or ()),
         dedup_key=tuple(xs.get("dedup_key") or ()),
         dedup_version=tuple(xs.get("dedup_version") or ()),
+        dedup_invariant=invariant,
         properties={k: v for k, v in xs.items() if k not in {
             "table", "format", "partition_by", "sort_within_partitions",
-            "dedup_key", "dedup_version"}},
+            "dedup_key", "dedup_version", "dedup_invariant"}},
     )

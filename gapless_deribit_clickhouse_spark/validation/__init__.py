@@ -1,4 +1,5 @@
 from gapless_deribit_clickhouse_spark.validation.quality import (
+    check_dedup_invariant,
     coverage_by_group,
     gap_analysis,
     quality_metrics,
@@ -10,6 +11,7 @@ from gapless_deribit_clickhouse_spark.validation.reporter import (
 )
 
 __all__ = [
+    "check_dedup_invariant",
     "coverage_by_group",
     "gap_analysis",
     "quality_metrics",

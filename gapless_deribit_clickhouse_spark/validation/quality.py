@@ -7,6 +7,9 @@ data_quality.py`` — server-side SQL aggregates:
 - coverage GROUP BY underlying at :69-81, 182-226;
 - gap report via ``leadInFrame`` at :48-66, 139-179.
 
+``check_dedup_invariant`` has no reference counterpart: it checks the
+assumption that lets ``fetch_trades`` filter below the FINAL window.
+
 Scale notes: ``countDistinct`` is exact to match ``uniqExact``; at
 100 TB swap for ``approx_count_distinct`` (noted in SURVEY §2.4 A11).
 The gap window orders globally within each group key — group first
@@ -16,10 +19,16 @@ on the full fact table.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gapless_deribit_clickhouse_spark.exceptions import SchemaError
 from gapless_deribit_clickhouse_spark.functions.conditional import count_if, safe_div
+
+if TYPE_CHECKING:
+    from gapless_deribit_clickhouse_spark.schema.loader import TableSchema
 
 
 def quality_metrics(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
@@ -57,6 +66,31 @@ def quality_metrics(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
         bad = count_if(F.col(c).isNull() | (F.col(c) == 0))
         aggs.append(safe_div(bad.cast("double"), n).alias(f"{c}_null_or_zero_rate"))
     return df.agg(*aggs)
+
+
+def check_dedup_invariant(df: DataFrame, schema: TableSchema) -> None:
+    """Raise ``SchemaError`` when some ``schema.dedup_key`` value has
+    more than one distinct ``schema.dedup_invariant`` tuple, naming up
+    to five such keys. ``fetch_trades`` filters on those columns
+    below the FINAL window, which is exact only while every version of
+    a key agrees on them (one aggregate job)."""
+    keys, invariant = list(schema.dedup_key), list(schema.dedup_invariant)
+    if not keys or not invariant:
+        return
+    bad = (
+        df.groupBy(*keys)
+        .agg(F.countDistinct(F.struct(*invariant)).alias("__n"))
+        .filter(F.col("__n") > 1)
+        .select(*keys)
+        .limit(5)
+        .collect()
+    )
+    if bad:
+        names = ", ".join(str(r[0] if len(keys) == 1 else tuple(r)) for r in bad)
+        raise SchemaError(
+            f"{schema.table}: versions of one {'/'.join(keys)} disagree on "
+            f"{', '.join(invariant)}: {names}"
+        )
 
 
 def coverage_by_group(df: DataFrame) -> DataFrame:

@@ -7,12 +7,14 @@ import datetime as dt
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import TRADES_SCHEMA, make_trades_pdf
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.api import describe, fetch_trades
 from gapless_deribit_clickhouse_spark.exceptions import (
     InstrumentParseError,
     QueryError,
+    SchemaError,
 )
 from gapless_deribit_clickhouse_spark.functions.instrument import (
     Instrument,
@@ -22,7 +24,10 @@ from gapless_deribit_clickhouse_spark.functions.instrument import (
     with_parsed_instrument,
 )
 from gapless_deribit_clickhouse_spark.operators.dedup import dedup_latest
+from gapless_deribit_clickhouse_spark.schema.ddl import write_table
+from gapless_deribit_clickhouse_spark.schema.loader import load_schema
 from gapless_deribit_clickhouse_spark.validation import (
+    check_dedup_invariant,
     coverage_by_group,
     gap_analysis,
     quality_metrics,
@@ -315,6 +320,118 @@ def test_use_final_flag(spark):
     )
     assert fetch_trades(df, limit=10, use_final=True).count() == 1
     assert fetch_trades(df, limit=10, use_final=False).count() == 2
+
+
+def _redelivered_trades_pdf() -> pd.DataFrame:
+    """The fixture's BTC trades on 2024-12-01, an ETH copy, and
+    re-deliveries (a later timestamp, a revised price): every tenth BTC
+    trade a minute later; TRD-Y, first seen in November, again in
+    December (the next ``trade_month``); TRD-Z, first seen late on
+    12-01, again on 12-02 (after a date-only ``end`` of 12-01)."""
+    btc = make_trades_pdf()
+    eth = make_trades_pdf(seed=7).assign(
+        trade_id=lambda d: "E" + d.trade_id,
+        instrument_name=lambda d: d.instrument_name.str.replace("BTC-", "ETH-"),
+        underlying="ETH",
+    )
+
+    def version(i, trade_id, ts):
+        return btc.iloc[[i]].assign(
+            trade_id=trade_id, timestamp=pd.Timestamp(ts), price=btc.price.iloc[i] + 0.01
+        )
+
+    return pd.concat(
+        [
+            btc,
+            eth,
+            btc.iloc[::10].assign(
+                timestamp=lambda d: d.timestamp + pd.Timedelta(minutes=1),
+                price=lambda d: d.price + 0.01,
+            ),
+            version(0, "TRD-Y", "2024-11-30 23:59:30"),
+            version(0, "TRD-Y", "2024-12-01 00:00:30"),
+            version(1, "TRD-Z", "2024-12-01 23:59:00"),
+            version(1, "TRD-Z", "2024-12-02 00:01:00"),
+        ],
+        ignore_index=True,
+    )
+
+
+def _nodes_below_window(df):
+    """The nodes below a Window of ``df``'s executed plan, through the
+    adaptive-execution wrappers."""
+    found, stack = [], [(df._jdf.queryExecution().executedPlan(), False)]
+    while stack:
+        node, below = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append((node.executedPlan(), below))
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append((node.plan(), below))
+            continue
+        if below:
+            found.append(node)
+        below = below or name == "WindowExec"
+        children = node.children()
+        stack.extend((children.apply(i), below) for i in range(children.size()))
+    return found
+
+
+def test_final_pushdown_matches_whole_table_dedup(spark, tmp_path):
+    """FINAL filters on the trade's invariant columns below the dedup
+    window and on ``timestamp`` above it: every result equals a
+    whole-table ``dedup_latest`` followed by the same filters, and a
+    later version (in the next month, or after ``end``) still evicts
+    the earlier one."""
+    path = str(tmp_path / "options_trades")
+    pdf = _redelivered_trades_pdf()
+    write_table(spark.createDataFrame(pdf, schema=TRADES_SCHEMA), load_schema("options_trades"), path)
+    table = spark.read.parquet(path)
+    whole = dedup_latest(table, keys=["trade_id"], version_cols=["timestamp"])
+    z = pdf[pdf.trade_id == "TRD-Z"].iloc[0]
+    cases = {
+        "point": dict(underlying="BTC", expiry=z.expiry.isoformat(), strike=z.strike,
+                      option_type=z.option_type, start="2024-12-01", end="2024-12-01"),
+        "latest": dict(underlying="BTC", end="2024-12-01", limit=50),
+        "range": dict(underlying="BTC", start="2024-11-30", end="2024-12-01"),
+        "range_november": dict(underlying="BTC", start="2024-11-30", end="2024-11-30"),
+    }
+    got = {name: fetch_trades(table, **args).collect() for name, args in cases.items()}
+    for name, args in cases.items():
+        assert got[name] == fetch_trades(whole, use_final=False, **args).collect(), name
+    assert len(got["point"]) > 0 and len(got["latest"]) == 50
+
+    def ids(rows):
+        return {r.trade_id for r in rows}
+
+    # the superseded versions are there to leak: without FINAL they show
+    raw = {name: fetch_trades(table, use_final=False, **args).collect() for name, args in cases.items()}
+    for name in ("point", "latest"):
+        assert "TRD-Z" in ids(raw[name]) and "TRD-Z" not in ids(got[name]), name
+    assert ids(raw["range_november"]) == {"TRD-Y"} and got["range_november"] == []
+
+    below = _nodes_below_window(fetch_trades(table, **cases["point"]))
+    scans = [n for n in below if n.getClass().getSimpleName() == "FileSourceScanExec"]
+    assert scans and all("underlying" in n.partitionFilters().toString() for n in scans)
+    conditions = [n.condition().toString() for n in below if n.getClass().getSimpleName() == "FilterExec"]
+    conditions += [n.dataFilters().toString() for n in scans]
+    assert conditions and not any("timestamp" in c for c in conditions)
+
+
+def test_check_dedup_invariant(spark):
+    """Re-deliveries that keep their instrument pass; a trade_id whose
+    versions name two instruments raises, naming that trade_id."""
+    schema = load_schema("options_trades")
+    pdf = _redelivered_trades_pdf()
+    check_dedup_invariant(spark.createDataFrame(pdf, schema=TRADES_SCHEMA), schema)
+    moved = pdf[pdf.trade_id == "TRD-000003"].assign(
+        timestamp=lambda d: d.timestamp + pd.Timedelta(minutes=5),
+        instrument_name=lambda d: d.instrument_name.str[:-1] + "X",
+    )
+    bad = spark.createDataFrame(pd.concat([pdf, moved], ignore_index=True), schema=TRADES_SCHEMA)
+    with pytest.raises(SchemaError, match=r"disagree on instrument_name.*: TRD-000003$"):
+        check_dedup_invariant(bad, schema)
 
 
 # --- instrument parser (reference tests/test_instrument_parser.py) ---

@@ -296,13 +296,15 @@ def test_enrich_with_spot_hybrid(spark, trades_df, spot_pdf):
 
 
 @pytest.mark.parametrize(
-    "call", ["quality_metrics", "spot_coverage", "atm_filter", "enrich_with_spot"]
+    "call",
+    ["quality_metrics", "spot_coverage", "atm_filter", "enrich_with_spot", "dte_distribution"],
 )
 def test_zero_divisor_gives_null_not_divide_by_zero(spark, trades_df, spot_pdf, call):
     """Spark 4 runs with ANSI on, where a bare ``/`` by 0 raises
     DIVIDE_BY_ZERO. An empty frame has null rates, a zero
-    ``index_price`` has no ATM ratio (the row is dropped) and a zero
-    ``spot_price`` has a null ``moneyness``."""
+    ``index_price`` has no ATM ratio (the row is dropped), a zero
+    ``spot_price`` has a null ``moneyness`` and a window whose amounts
+    sum to 0 has null volume shares."""
     empty = trades_df.limit(0)
     # a trade_id ending in 0 has a null index, one ending in 1 a zero index
     last = F.col("trade_id").substr(-1, 1)
@@ -319,6 +321,10 @@ def test_zero_divisor_gives_null_not_divide_by_zero(spark, trades_df, spot_pdf, 
         (row,) = spot_coverage(enrich_with_spot(empty, spark.createDataFrame(spot_pdf))).collect()
         assert row.total_rows == 0
         assert (row.index_price_rate, row.fallback_rate, row.spot_coverage_rate) == (None, None, None)
+    elif call == "dte_distribution":
+        dist = dte_distribution(trades_df.withColumn("amount", F.lit(0.0))).toPandas()
+        assert len(dist) > 0 and (dist.volume_sum == 0).all()
+        assert dist.volume_pct.isna().all()
     elif call == "atm_filter":
         kept = atm_filter(broken).toPandas()
         assert len(kept) > 0 and (kept.index_price > 0).all()

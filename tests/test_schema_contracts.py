@@ -62,6 +62,9 @@ def test_physical_layout_declared(trades_schema):
     assert trades_schema.partition_by == ("underlying", "trade_month")
     assert trades_schema.sort_within_partitions == ("expiry", "timestamp")
     assert trades_schema.dedup_key == ("trade_id",)
+    assert trades_schema.dedup_invariant == (
+        "instrument_name", "underlying", "expiry", "strike", "option_type"
+    )
 
 
 def test_ddl_renders_partitioning(trades_schema):
@@ -130,8 +133,12 @@ _COLUMN_A = "properties:\n  a:\n    type: string\n    x-spark: {type: string}\n"
         ("type: object\nproperties: [a\n", "invalid YAML"),
         ("type: object\nproperties: {}\n", "no properties"),
         ("type: object\n" + _COLUMN_A + "required: [a, b]\n", "required columns not declared"),
+        (
+            "type: object\nx-spark: {dedup_invariant: [a, b]}\n" + _COLUMN_A,
+            "dedup_invariant columns not declared",
+        ),
     ],
-    ids=["invalid_yaml", "no_properties", "undeclared_required"],
+    ids=["invalid_yaml", "no_properties", "undeclared_required", "undeclared_dedup_invariant"],
 )
 def test_malformed_schema_file_raises(tmp_path, text, match):
     path = tmp_path / "broken.yaml"

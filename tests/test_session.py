@@ -1,6 +1,7 @@
 """The session factory's JVM options: the merge of the pins with a
 caller's ``extraJavaOptions`` (pure, no JVM), and the collector the
-live driver JVM actually runs."""
+live driver JVM actually runs; and PySpark's per-call origin capture,
+which the session switches off."""
 
 from __future__ import annotations
 
@@ -54,3 +55,29 @@ def test_live_driver_runs_the_serial_collector(spark):
     factory = spark.sparkContext._jvm.java.lang.management.ManagementFactory
     names = {bean.getName() for bean in factory.getGarbageCollectorMXBeans()}
     assert names == {"Copy", "MarkSweepCompact"}
+
+
+def test_origin_capture_is_off(spark, monkeypatch):
+    """Building a bare ``F.col`` costs 3 Py4J round trips; with
+    PySpark's origin capture on it costs 13 (it reads a conf and sets
+    and clears the JVM's current origin around every call). PySpark
+    reads the conf once per process, so the cached value is cleared to
+    read it from the fixture session."""
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.errors import utils
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    F.col("x")  # reads the conf into the cache
+    sent = []
+    real = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    F.col("x")
+    monkeypatch.undo()
+    assert len(sent) <= 3
