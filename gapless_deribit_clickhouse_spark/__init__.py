@@ -102,18 +102,8 @@ _HOME = {
     "bigram_lm_score": "pipelines.text_stats",
     "token_topk": "pipelines.text_stats",
     "tfidf_top_terms": "pipelines.text_stats",
-    "curate_corpus": "pipelines.curation",
-    "quality_gate": "pipelines.curation",
-    "build_training_set": "pipelines.curation",
-    "contamination_check": "pipelines.curation",
     "repetition_stats": "pipelines.text_stats",
     "corpus_profile": "pipelines.text_stats",
-    "sample_n_per_group": "pipelines.sampling",
-    "hash_sample": "pipelines.sampling",
-    "stratified_hash_sample": "pipelines.sampling",
-    "weighted_sample_per_group": "pipelines.sampling",
-    "split_assign": "pipelines.sampling",
-    "split_thresholds": "pipelines.sampling",
     "interdoc_repetition": "pipelines.text_dedup",
     "incremental_dedup": "pipelines.text_dedup",
     "project_embeddings": "pipelines.embeddings",
@@ -140,11 +130,6 @@ _HOME = {
     "write_stream_to_connector": "sinks.connector",
     "lsh_params": "pipelines.embeddings",
     "minhash_params": "pipelines.text_dedup",
-    "pack_sequences": "pipelines.packing",
-    "pack_stats": "pipelines.packing",
-    "chunk_documents": "pipelines.packing",
-    "mixture_sample": "pipelines.sampling",
-    "mixture_thresholds": "pipelines.sampling",
     "hashed_linear_score": "pipelines.text_stats",
 }
 # reference-name aliases (reference __init__.py:42-65 /

@@ -1,7 +1,8 @@
 """LLM-data-pipeline bindings: dedup (exact / n-gram Jaccard /
-MinHash-LSH / SimHash), embedding similarity (brute-force + IVF +
-near-dup), and text analysis — each with a DuckDB oracle built from
-the SAME deterministic md5/arithmetic primitives."""
+MinHash-LSH / SimHash / containment, corpus-level near-dedup),
+embedding similarity (brute-force + IVF + near-dup, projection, int8
+quantization) and text analysis — each with a DuckDB oracle built
+from the SAME deterministic md5/arithmetic primitives."""
 
 from __future__ import annotations
 
@@ -20,7 +21,6 @@ from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
     ngram_jaccard_pairs,
     simhash_near_pairs,
 )
-from gapless_deribit_clickhouse_spark.pipelines.curation import contamination_check
 from gapless_deribit_clickhouse_spark.pipelines.text_stats import (
     bpe_ish_token_count,
     fingerprint,
@@ -31,8 +31,8 @@ from gapless_deribit_clickhouse_spark.pipelines.text_stats import (
 )
 
 # One source of truth for the near-dedup Jaccard cutoff: the Spark
-# calls (near_dedup_docs_q, the two training_set bindings) and the
-# generated DuckDB CTE chain (_lsh_cc_kept_ctes) all read this, so the
+# calls (near_dedup_docs_q, incremental_dedup_q) and the generated
+# DuckDB CTE chain (_lsh_cc_kept_ctes) all read this, so the
 # engine and oracle cannot desync on threshold / minhash_params sizing.
 _DEDUP_THRESHOLD = 0.8
 
@@ -43,22 +43,6 @@ _GRAMS3 = (
     "CASE WHEN len(t) >= 3 THEN list_transform(range(1, len(t) - 1), i -> array_to_string(t[i:i+2], ' ')) "
     "ELSE [array_to_string(t, ' ')] END)) AS shingle FROM toks"
 )
-
-
-def _md5_bucket_sql(key_expr: str, salt: str = "", buckets: int = 10_000) -> str:
-    """DuckDB mirror of ``sampling.hash_bucket``: first 8 md5 hex
-    chars of (salt || key) parsed base-16 (Horner over the hex
-    digits), mod ``buckets``. The ONE generator for every oracle that
-    buckets on md5 (hash_sample / mixture_sample / split_assign) —
-    change ``hash_u32`` and update this mirror, nowhere else."""
-    key = f"CAST({key_expr} AS VARCHAR)"
-    if salt:
-        key = f"'{salt}' || {key}"
-    return (
-        "list_reduce(list_transform(range(1, 9), i ->\n"
-        f"           CAST(strpos('0123456789abcdef', substr(md5({key}), i, 1)) - 1 AS BIGINT)),\n"
-        f"           (acc, d) -> acc * 16 + d) % {buckets}"
-    )
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,86 +399,6 @@ FROM documents
 """
 
 
-# --- deterministic stratified hash sampling (train-split stability) ---
-def hash_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import (
-        stratified_hash_sample,
-    )
-
-    docs = _docs(spark, sf_dir)
-    out = stratified_hash_sample(
-        docs, key_col="doc_id", stratum_col="lang",
-        rates={"en": 0.5, "de": 0.25}, default_rate=0.1,
-    )
-    return out.select("doc_id", "lang", "source")
-
-
-def mixture_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import mixture_sample
-
-    docs = _docs(spark, sf_dir)
-    out = mixture_sample(
-        docs, key_col="doc_id", domain_col="lang",
-        parts={"en": 4, "zh": 2, "es": 2, "de": 1, "fr": 1},
-    )
-    return out.select("doc_id", "lang", "source")
-
-
-# Same exact-integer threshold derivation as pipelines/sampling.py
-# mixture_thresholds (Python bigints there, HUGEINT here): N = largest
-# total with no domain oversampled, threshold_d = floor(p*N*B/(P*c)).
-MIXTURE_SAMPLE_SQL = f"""
-WITH parts(domain, p) AS (
-  VALUES ('en', 4), ('zh', 2), ('es', 2), ('de', 1), ('fr', 1)),
-tot AS (SELECT SUM(p) AS tp FROM parts),
-counts AS (SELECT lang AS domain, COUNT(*) AS c FROM documents GROUP BY 1),
-j AS (SELECT pa.domain, pa.p, COALESCE(co.c, 0) AS c
-      FROM parts pa LEFT JOIN counts co USING (domain)),
-nmax AS (SELECT MIN(c * (SELECT tp FROM tot) // p) AS n FROM j),
-th AS (SELECT domain,
-              CASE WHEN c = 0 THEN 0
-                   ELSE LEAST(10000, p * (SELECT n FROM nmax) * 10000
-                              // ((SELECT tp FROM tot) * c)) END AS t
-       FROM j),
-b AS (
-  SELECT doc_id, lang, source,
-         {_md5_bucket_sql("doc_id")} AS bucket
-  FROM documents)
-SELECT b.doc_id, b.lang, b.source
-FROM b JOIN th ON b.lang = th.domain
-WHERE b.bucket < th.t
-"""
-
-
-def sample_per_group_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import sample_n_per_group
-
-    docs = _docs(spark, sf_dir)
-    out = sample_n_per_group(docs, group_col="lang", n=20, key_col="doc_id")
-    return out.select("doc_id", "lang")
-
-
-SAMPLE_PER_GROUP_SQL = """
-SELECT doc_id, lang FROM (
-  SELECT doc_id, lang,
-         row_number() OVER (
-           PARTITION BY lang
-           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-  FROM documents) t
-WHERE rn <= 20
-"""
-
-
-HASH_SAMPLE_SQL = f"""
-WITH b AS (
-  SELECT doc_id, lang, source,
-         {_md5_bucket_sql("doc_id")} AS bucket
-  FROM documents)
-SELECT doc_id, lang, source FROM b
-WHERE bucket < (CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 2500 ELSE 1000 END)
-"""
-
-
 # --- corpus vocabulary head: top-k tokens by frequency ---
 def token_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gapless_deribit_clickhouse_spark.pipelines.text_stats import token_topk
@@ -586,61 +490,6 @@ FROM r WHERE rank <= 5
 """
 
 
-# --- composed corpus-curation filter (dedup ∧ lang ∧ quality ∧ length) ---
-def curate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.curation import curate_corpus
-
-    return curate_corpus(
-        _docs(spark, sf_dir), lang="en", min_quality=0.5, min_tokens=5,
-        max_tokens=100_000,
-    )
-
-
-def _curate_ctes(min_quality: float) -> str:
-    """The curation gauntlet as reusable CTEs ending in ``curated``
-    (doc_id, lang_pred, n_tokens, quality_score) — shared by the
-    standalone CURATE_SQL oracle and the composed training_set_chunks
-    oracle, so a scoring tweak cannot desync the two."""
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import LANG_MARKERS
-
-    hits = {
-        lang: " + ".join(
-            f"len(list_filter(string_split({_NORM}, ' '), x -> x = '{w}'))" for w in words
-        )
-        for lang, words in LANG_MARKERS.items()
-    }
-    hit_cols = ",\n       ".join(f"{hits[lang]} AS hits_{lang}" for lang in sorted(hits))
-    best = "greatest(" + ", ".join(f"hits_{lang}" for lang in sorted(hits)) + ")"
-    pred = "CASE " + " ".join(
-        f"WHEN hits_{lang} = {best} AND {best} > 0 THEN '{lang}'" for lang in sorted(hits)
-    ) + " ELSE 'und' END"
-    score = f"""least({_NT} / 100.0, 1.0) * 0.4
-          + least(CASE WHEN {_NT} > 0 THEN ({_STOP_HITS}) / {_NT} ELSE 0.0 END * 5.0, 1.0) * 0.3
-          + (1.0 - least(CASE WHEN length(text) > 0 THEN length(regexp_replace({_NORM}, '[a-z0-9 ]', '', 'g')) / length(text) ELSE 0.0 END * 4.0, 1.0)) * 0.2
-          + (1.0 - least(CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[^A-Z]', '', 'g')) / length(text) ELSE 0.0 END * 5.0, 1.0)) * 0.1"""
-    return f"""h AS (
-  SELECT doc_id, md5({_NORM}) AS th,
-       CAST({_NT} AS BIGINT) AS n_tokens,
-       CAST({score} AS DOUBLE) AS quality_score,
-       {hit_cols}
-  FROM documents),
-p AS (
-  SELECT doc_id, n_tokens, quality_score, {pred} AS lang_pred,
-         min(doc_id) OVER (PARTITION BY th) = doc_id AS is_canonical
-  FROM h),
-curated AS (
-  SELECT doc_id, lang_pred, n_tokens, quality_score
-  FROM p
-  WHERE is_canonical AND lang_pred = 'en' AND quality_score >= {min_quality}
-    AND n_tokens BETWEEN 5 AND 100000)"""
-
-
-CURATE_SQL = f"""
-WITH {_curate_ctes(0.5)}
-SELECT doc_id, lang_pred, n_tokens, quality_score FROM curated
-"""
-
-
 # --- per-group corpus profile (count / tokens / percentiles) ---
 def corpus_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gapless_deribit_clickhouse_spark.pipelines.text_stats import corpus_profile
@@ -695,30 +544,6 @@ FROM toks t JOIN grams g USING (doc_id) JOIN top USING (doc_id)
 """
 
 
-# --- train/test contamination scan (benchmark n-gram overlap) ---
-def contamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    train = docs.filter(F.col("doc_id") % 97 != 0)
-    return contamination_check(train, bench, n=3)
-
-
-CONTAMINATION_SQL = f"""
-WITH toks AS ({_TOKS}),
-grams AS ({_GRAMS3}),
-bench AS (SELECT DISTINCT shingle FROM grams WHERE doc_id % 97 = 0),
-docg AS (SELECT doc_id, shingle FROM grams WHERE doc_id % 97 <> 0),
-tot AS (SELECT doc_id, count(*) AS n_grams FROM docg GROUP BY 1),
-m AS (
-  SELECT d.doc_id, count(*) AS n_matched
-  FROM docg d JOIN bench b USING (shingle) GROUP BY 1)
-SELECT m.doc_id, CAST(t.n_grams AS BIGINT) AS n_grams, m.n_matched,
-       m.n_matched / CAST(t.n_grams AS DOUBLE) AS contamination_frac
-FROM m JOIN tot t USING (doc_id)
-WHERE m.n_matched >= 1
-"""
-
-
 # --- hashed linear classifier (quality-filter inference) ---
 # Deterministic stand-in weight vector (md5-derived, environment-
 # independent) — the single source of truth for BOTH the Spark plan
@@ -764,88 +589,6 @@ FROM toks, wt
 """
 
 
-# --- sliding-window document chunking (context-window prep) ---
-def doc_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.packing import chunk_documents
-
-    return chunk_documents(
-        _docs(spark, sf_dir), max_tokens=32, overlap=8
-    )
-
-
-# stride = 32 - 8 = 24; DuckDB list slicing t[a:b] is 1-based
-# inclusive and clips at the end, matching Spark F.slice(toks, a, 32)
-DOC_CHUNKS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id,
-         COALESCE(list_filter(string_split({_NORM}, ' '), x -> len(x) > 0), []) AS t
-  FROM documents),
-n AS (
-  SELECT doc_id, t, len(t) AS nt,
-         CASE WHEN len(t) <= 32 THEN 1
-              ELSE CAST(ceil((len(t) - 32) / 24.0) AS INT) + 1 END AS nc
-  FROM toks),
-ex AS (
-  SELECT doc_id, nt, nc,
-         unnest(list_transform(range(nc), i -> {{
-             'chunk_idx': CAST(i AS INT),
-             'chunk_text': array_to_string(t[i * 24 + 1 : i * 24 + 32], ' ')
-         }})) AS ch
-  FROM n)
-SELECT doc_id, ch.chunk_idx AS chunk_idx,
-       CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR) || ':'
-           || CAST(doc_id AS VARCHAR) || ':'
-           || CAST(ch.chunk_idx AS VARCHAR) AS chunk_uid,
-       ch.chunk_text AS chunk_text,
-       CAST(nt AS BIGINT) AS doc_n_tokens, nc AS n_chunks
-FROM ex
-"""
-
-
-def training_set_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-set assembly flagship (curate -> near
-    dedup -> chunk -> pack) on the documents table.
-
-    FULL cross-engine value oracle since r10 (was rows-only): the
-    chunk-projection chain was already oracled
-    (TRAINING_SET_CHUNKS_SQL); the FFD pack tier joins it via the
-    shared keyed-recursion walk (see sequence_packing), so every
-    output column — pack_id and pack_pos included — is value-checked
-    against DuckDB. Invariants additionally pinned in
-    tests/test_packing.py::test_build_training_set_end_to_end."""
-    from gapless_deribit_clickhouse_spark.pipelines.curation import (
-        build_training_set,
-    )
-
-    return build_training_set(
-        _docs(spark, sf_dir), lang="en", min_quality=0.3,
-        dedup_threshold=_DEDUP_THRESHOLD,
-        max_tokens=_TS_BUDGET, overlap=16, num_shards=_PACK_SHARDS,
-    )
-
-
-def training_set_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship's chunk projection, oracle-checked (VERDICT r4
-    next-round #1): everything ``build_training_set`` emits EXCEPT the
-    FFD pack assignment — chunk identity, text, and the per-chunk
-    BPE-ish token count the packer budgets on — is deterministic
-    column algebra over curate -> LSH near-dedup -> chunk, all
-    SQL-expressible. Runs the REAL composed pipeline (same params as
-    ``training_set``), then drops the two iterative columns, so the
-    driver/CI value-compare pins the flagship end to end up to pack
-    assignment; the pack tier is pinned by the SQL invariant test in
-    tests/test_packing.py."""
-    from gapless_deribit_clickhouse_spark.pipelines.curation import (
-        build_training_set,
-    )
-
-    return build_training_set(
-        _docs(spark, sf_dir), lang="en", min_quality=0.3,
-        dedup_threshold=_DEDUP_THRESHOLD,
-        max_tokens=128, overlap=16, num_shards=16,
-    ).select("chunk_uid", "doc_id", "chunk_idx", "chunk_text", "n_tokens")
-
-
 def _minhash_sql_parts(thr: float) -> tuple[str, str, str]:
     """The three DuckDB fragments of the banded-minhash derivation —
     (base shingle hash, per-signature min expressions, band equality
@@ -884,7 +627,7 @@ def _lsh_cc_kept_ctes(survivor_cte: str, thr: float) -> str:
     """The MinHash-LSH -> exact-Jaccard -> connected-components ->
     survivors CTE chain, from a (doc_id) relation named
     ``survivor_cte`` to a ``kept`` relation — shared by the
-    training_set_chunks and near_dedup_docs oracles so the dedup
+    near_dedup_docs and incremental_dedup oracles so the dedup
     semantics cannot desync. Auto-sizes (num_hashes, bands) from the
     threshold with the SAME ``minhash_params`` derivation the Spark
     side uses; components via recursive reachability (the
@@ -933,147 +676,9 @@ kept AS (
   WHERE doc_id NOT IN (SELECT id FROM losers))"""
 
 
-def _training_chunks_sql() -> str:
-    """Composed oracle for the flagship's chunk projection: the
-    curation CTEs (shared with CURATE_SQL), the shared LSH/CC dedup
-    chain (``_lsh_cc_kept_ctes``, shared with NEAR_DEDUP_DOCS_SQL),
-    then the 128/16 sliding chunker (the DOC_CHUNKS_SQL pattern) over
-    the kept docs, with the packer's BPE-ish per-chunk token count."""
-    # chunker params must match training_set_chunks_q: 128-token
-    # windows, overlap 16 -> stride 112
-    mt, stride = 128, 112
-    bpe = (
-        "CAST(len(list_filter(regexp_split_to_array(ch.chunk_text, '[^a-z0-9]+'), x -> len(x) > 0))"
-        " + length(regexp_replace(ch.chunk_text, '[a-z0-9 ]', '', 'g')) AS BIGINT)"
-    )
-    return f"""
-WITH RECURSIVE {_curate_ctes(0.3)},
-{_lsh_cc_kept_ctes("curated", _DEDUP_THRESHOLD)},
-ctoks AS (
-  SELECT d.doc_id,
-         COALESCE(list_filter(string_split({_NORM}, ' '), x -> len(x) > 0), []) AS t
-  FROM documents d JOIN kept USING (doc_id)),
-cn AS (
-  SELECT doc_id, t, len(t) AS nt,
-         CASE WHEN len(t) <= {mt} THEN 1
-              ELSE CAST(ceil((len(t) - {mt}) / {stride}.0) AS INT) + 1 END AS nc
-  FROM ctoks),
-ex AS (
-  SELECT doc_id, nt, nc,
-         unnest(list_transform(range(nc), i -> {{
-             'chunk_idx': CAST(i AS INT),
-             'chunk_text': array_to_string(t[i * {stride} + 1 : i * {stride} + {mt}], ' ')
-         }})) AS ch
-  FROM cn)
-SELECT CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR) || ':'
-           || CAST(doc_id AS VARCHAR) || ':'
-           || CAST(ch.chunk_idx AS VARCHAR) AS chunk_uid,
-       doc_id, ch.chunk_idx AS chunk_idx, ch.chunk_text AS chunk_text,
-       {bpe} AS n_tokens
-FROM ex
-"""
-
-
-TRAINING_SET_CHUNKS_SQL = _training_chunks_sql()
-
-# packer params shared by the sequence_packing binding (512-token
-# budget over raw documents) and its oracle; the shard count is also
-# the training_set flagship's, whose chunker AND packer budget is
-# _TS_BUDGET (declared here, before first use — constants after
-# their referencing functions only work until someone moves the
-# module-level *_SQL = fn() calls, r10 self-review)
-_PACK_BUDGET, _PACK_SHARDS = 512, 16
-_TS_BUDGET = 128
-
-
-def _ffd_rec_ctes(
-    items_cte: str, budget: int, id_sql_type: str = "BIGINT"
-) -> str:
-    """The FFD walk as a keyed recursion, from an ``{items_cte}``
-    relation (id, n_tokens, shard) to an ``assigned`` relation (id,
-    n_tokens, pack_id) — shared by the sequence_packing and
-    training_set oracles. State per shard: ``rooms`` (remaining
-    capacity of each OPEN pack, creation order — oversized packs are
-    closed at creation and never enter), ``tree_pack`` (open-pack ->
-    global pack index), ``next_pack``. First-fit = lowest-index room
-    that fits (list_position == the segment tree's prefer-left
-    descent; 0 = not found, hence the nullif). The fit position is
-    computed ONCE per step in a derived table (r10 self-review: six
-    textual inlinings rescanned the rooms list six times). pack_pos
-    is NOT carried: docs join packs in processing order, so it is a
-    post-hoc window (row_number per pack over the same order)."""
-    return f"""ord AS MATERIALIZED (
-  SELECT *, row_number() OVER (PARTITION BY shard
-                               ORDER BY n_tokens DESC, id) AS idx
-  FROM {items_cte}),
-rec(shard, idx, id, n_tokens, pack_local, rooms, tree_pack, next_pack) AS (
-  SELECT shard, 0, CAST(NULL AS {id_sql_type}), CAST(NULL AS BIGINT),
-         CAST(NULL AS BIGINT), CAST([] AS BIGINT[]), CAST([] AS BIGINT[]),
-         CAST(0 AS BIGINT)
-  FROM (SELECT DISTINCT shard FROM ord)
-  UNION ALL
-  SELECT shard, idx, id, n_tokens,
-         CASE WHEN fit IS NOT NULL THEN tree_pack[fit] ELSE next_pack END,
-         CASE WHEN fit IS NOT NULL THEN
-                list_transform(rooms, (rm, j) ->
-                  CASE WHEN j = fit THEN rm - n_tokens ELSE rm END)
-              WHEN n_tokens <= {budget} THEN
-                list_append(rooms, {budget} - n_tokens)
-              ELSE rooms END,
-         CASE WHEN fit IS NULL AND n_tokens <= {budget} THEN
-                list_append(tree_pack, next_pack)
-              ELSE tree_pack END,
-         next_pack + CASE WHEN fit IS NULL THEN 1 ELSE 0 END
-  FROM (
-    SELECT r.shard, i.idx, i.id, i.n_tokens,
-           r.rooms, r.tree_pack, r.next_pack,
-           CASE WHEN i.n_tokens <= {budget} THEN
-             nullif(list_position(
-               list_transform(r.rooms, rm -> rm >= i.n_tokens), true), 0)
-           END AS fit
-    FROM rec r JOIN ord i ON i.shard = r.shard AND i.idx = r.idx + 1)),
-assigned AS (
-  SELECT id, n_tokens, shard * {1 << 40} + pack_local AS pack_id
-  FROM rec WHERE idx > 0)"""
-
-
-def _training_set_oracle_sql() -> str:
-    """The FULL flagship oracle (r10 — was rows-only): the proven
-    chunk-projection chain (curate -> LSH/CC dedup -> chunker, the
-    TRAINING_SET_CHUNKS_SQL statement verbatim, nested as a
-    MATERIALIZED CTE) plus the shared FFD recursion over chunk_uid
-    items at the binding's 128-token budget and the md5 shard split,
-    with pack_pos recovered post-hoc (docs join packs in processing
-    order, so it is a per-pack row_number over the same (n_tokens
-    DESC, id) order)."""
-    return f"""
-WITH RECURSIVE chunks AS MATERIALIZED ({TRAINING_SET_CHUNKS_SQL}),
-items AS MATERIALIZED (
-  SELECT chunk_uid AS id, n_tokens,
-         CAST(('0x' || substr(md5(chunk_uid), 1, 8)) AS BIGINT)
-           % {_PACK_SHARDS} AS shard
-  FROM chunks),
-{_ffd_rec_ctes('items', _TS_BUDGET, id_sql_type='VARCHAR')},
-pos AS (
-  SELECT id, n_tokens, pack_id,
-         CAST(row_number() OVER (PARTITION BY pack_id
-                                 ORDER BY n_tokens DESC, id) - 1 AS INT)
-           AS pack_pos
-  FROM assigned)
-SELECT c.chunk_uid, c.doc_id, c.chunk_idx, c.chunk_text,
-       p.pack_id, p.pack_pos, p.n_tokens,
-       p.n_tokens > {_TS_BUDGET} AS oversized
-FROM pos p JOIN chunks c ON c.chunk_uid = p.id
-"""
-
-
-TRAINING_SET_SQL = _training_set_oracle_sql()
-
-
 def near_dedup_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-call near-dedup corpus filter as its own oracle-checked
-    binding (round 5 — previously exercised only inside the
-    training_set composition): exact tier -> auto-sized MinHash-LSH
+    binding: exact tier -> auto-sized MinHash-LSH
     pairs on survivors -> connected components -> anti-join losers,
     projected to the compare-friendly columns."""
     from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
@@ -1092,106 +697,6 @@ WITH RECURSIVE winners AS (
 SELECT d.doc_id, d.lang, d.source
 FROM documents d JOIN kept USING (doc_id)
 """
-
-
-def sequence_packing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget packing of the documents table (BPE-ish token
-    proxy, 512-token packs) reduced to the corpus-level packing
-    quality rollup (pack count, fill rate, oversized packs).
-
-    FULL cross-engine value oracle since r10 (was rows-only): first-
-    fit-decreasing is sequential per shard, but the per-item decision
-    is loop-free — "first open pack with room >= size, else open one"
-    — so the DuckDB twin walks each shard's (n_tokens DESC, id ASC)
-    order as a keyed WITH RECURSIVE whose state carries the open-pack
-    rooms list (the segment tree is an ACCELERATOR for that list
-    scan, not different semantics), then replays the pack_stats
-    rollup. Requires the md5 shard split (``pack_sequences``
-    shard_hash default) so both engines partition identically."""
-    from gapless_deribit_clickhouse_spark.pipelines.packing import (
-        pack_sequences,
-        pack_stats,
-    )
-
-    docs = _docs(spark, sf_dir)
-    packed = pack_sequences(
-        docs, id_col="doc_id", text_col="text",
-        max_tokens=_PACK_BUDGET, num_shards=_PACK_SHARDS,
-    )
-    return pack_stats(packed, max_tokens=_PACK_BUDGET)
-
-
-def _sequence_packing_oracle_sql() -> str:
-    """items = BPE-ish token counts + the hash_u32 md5 shard split,
-    then the shared FFD recursion, then the pack_stats rollup."""
-    bpe = (
-        f"len(list_filter(regexp_split_to_array({_NORM}, '[^a-z0-9]+'), x -> len(x) > 0))"
-        f" + length(regexp_replace({_NORM}, '[a-z0-9 ]', '', 'g'))"
-    )
-    return f"""
-WITH RECURSIVE items AS MATERIALIZED (
-  SELECT doc_id AS id,
-         CAST(COALESCE({bpe}, 0) AS BIGINT) AS n_tokens,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-           % {_PACK_SHARDS} AS shard
-  FROM documents),
-{_ffd_rec_ctes('items', _PACK_BUDGET)},
-per_pack AS (
-  SELECT pack_id, count(*) AS n_docs, sum(n_tokens) AS pack_tokens,
-         max(CASE WHEN n_tokens > {_PACK_BUDGET} THEN 1 ELSE 0 END) AS has_oversized
-  FROM assigned GROUP BY pack_id)
-SELECT CAST(count(*) AS BIGINT) AS n_packs,
-       CAST(sum(n_docs) AS BIGINT) AS n_docs,
-       avg(n_docs) AS avg_docs_per_pack,
-       sum(least(pack_tokens, {_PACK_BUDGET}))
-         / (count(*) * CAST({_PACK_BUDGET} AS DOUBLE)) AS fill_rate,
-       CAST(sum(has_oversized) AS BIGINT) AS oversized_packs
-FROM per_pack
-"""
-
-
-SEQUENCE_PACKING_SQL = _sequence_packing_oracle_sql()
-
-
-# --- leakage-safe deterministic split assignment ---
-_SPLIT_WEIGHTS = [("train", 0.9), ("val", 0.05), ("test", 0.05)]
-
-
-def split_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """90/5/5 train/val/test labels keyed on doc_id: a salted
-    md5-bucket when-chain — pure map, no shuffle, hash-stable
-    membership the DuckDB oracle reproduces bit-for-bit (both sides
-    derive thresholds from the SAME ``split_thresholds`` call and the
-    same md5 bucket mirror, so they cannot desync)."""
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import split_assign
-
-    return split_assign(_docs(spark, sf_dir), "doc_id", weights=_SPLIT_WEIGHTS).select(
-        "doc_id", "lang", "split"
-    )
-
-
-def _split_assign_sql() -> str:
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import (
-        split_thresholds,
-    )
-
-    cases = "\n            ".join(
-        f"WHEN bucket < {t} THEN '{name}'"
-        for name, t in split_thresholds(_SPLIT_WEIGHTS)
-    )
-    return f"""
-WITH b AS (
-  SELECT doc_id, lang,
-         {_md5_bucket_sql("doc_id", salt="split")} AS bucket
-  FROM documents)
-SELECT doc_id, lang,
-       CASE {cases}
-            ELSE '{_SPLIT_WEIGHTS[-1][0]}' END AS split
-FROM b
-"""
-
-
-SPLIT_ASSIGN_SQL = _split_assign_sql()
 
 
 # --- inter-document repetition (duplicated n-gram fraction) ---
@@ -1386,68 +891,6 @@ GROUP BY doc_id
 """
 
 
-# --- weighted reservoir sampling (A-Res, deterministic) ---
-def weighted_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5 docs per language, probability proportional to length
-    (Efraimidis-Spirtsos A-Res over the canonical md5-uniform):
-    the curation move for building length-balanced eval slices.
-    WindowGroupLimit caps per-task output at n per group."""
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import (
-        weighted_sample_per_group,
-    )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
-    out = weighted_sample_per_group(
-        docs, group_col="lang", n=5, key_col="doc_id",
-        weight_col="n_chars", salt="wsamp",
-    )
-    return out.select("lang", "rn", "doc_id", "n_chars", "priority")
-
-
-def _weighted_sample_sql() -> str:
-    u32 = _md5_bucket_sql("doc_id", salt="wsamp", buckets=4_294_967_296)
-    return f"""
-WITH w AS (
-  SELECT doc_id, lang, n_chars,
-         -ln(CAST(({u32}) + 1 AS DOUBLE) / 4294967296.0)
-           / CAST(n_chars AS DOUBLE) AS priority
-  FROM documents
-  WHERE n_chars IS NOT NULL AND n_chars > 0),
-r AS (
-  SELECT *, row_number() OVER (
-      PARTITION BY lang ORDER BY priority ASC, doc_id ASC) AS rn
-  FROM w)
-SELECT lang, rn, doc_id, n_chars, priority
-FROM r WHERE rn <= 5
-"""
-
-
-WEIGHTED_SAMPLE_SQL = _weighted_sample_sql()
-
-
-# --- composed two-signal quality gate (heuristics x corpus LM) ---
-def quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs clearing BOTH the heuristic quality floor and the
-    corpus-median perplexity cut — the composed gate whose oracle is
-    the conjunction of the two already-proven chains plus an exact
-    median scalar, so the composition (not just the parts) is
-    value-checked."""
-    from gapless_deribit_clickhouse_spark.pipelines.curation import quality_gate
-
-    return quality_gate(_docs(spark, sf_dir), min_quality=0.5).orderBy("doc_id")
-
-
-QUALITY_GATE_SQL = f"""
-WITH lm AS ({LM_SCORE_SQL}),
-q AS ({QUALITY_SQL})
-SELECT doc_id, quality_score, ppl
-FROM q JOIN lm USING (doc_id)
-WHERE quality_score >= 0.5
-  AND ppl <= (SELECT quantile_cont(ppl, 0.5) FROM lm)
-ORDER BY doc_id
-"""
-
-
 # --- int8 embedding quantization (4x shuffle/storage compression) ---
 def embedding_quantize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector symmetric int8 quantization digest: the full qvec
@@ -1560,32 +1003,6 @@ SELECT query_id, vec_id, rank, qcos_sim FROM r WHERE rank <= 10
 """
 
 
-# --- deterministic epoch shuffle (exact distributed global rank) ---
-def epoch_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epoch-1 training order of the documents table: every doc's
-    exact global position under the md5 permutation
-    (``pipelines/sampling.py:epoch_shuffle``). The rank is computed
-    with NO global window — order-preserving 32-bit-prefix shards +
-    per-shard row_number + broadcast cumulative offsets — and the
-    DuckDB oracle is the naive single-sort
-    ``row_number() OVER (ORDER BY md5(...), doc_id)``, so the compare
-    proves the sharded derivation IS the global sort."""
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import epoch_shuffle
-
-    return epoch_shuffle(
-        _docs(spark, sf_dir), "doc_id", epoch=1, salt="shuffle", shards=64
-    ).select("doc_id", "epoch_rank")
-
-
-EPOCH_SHUFFLE_SQL = """
-SELECT doc_id,
-       CAST(row_number() OVER (
-           ORDER BY md5('shuffle:1:' || CAST(doc_id AS VARCHAR)), doc_id
-       ) - 1 AS BIGINT) AS epoch_rank
-FROM documents
-"""
-
-
 # --- asymmetric near-containment pairs (round 8) ---
 def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """|A∩B| / min(|A|,|B|) >= 0.9 over trigram shingle sets — the
@@ -1620,13 +1037,8 @@ WHERE inter / least(sa.c, sb.c) >= 0.9
 BINDINGS = [
     ("tfidf_top_terms", tfidf_q, TFIDF_SQL),
     ("repetition_stats", repetition_q, REPETITION_SQL),
-    ("contamination", contamination_q, CONTAMINATION_SQL),
     ("corpus_profile", corpus_profile_q, CORPUS_PROFILE_SQL),
-    ("curate_corpus", curate_q, CURATE_SQL),
     ("dup_clusters", dup_clusters_q, DUP_CLUSTERS_SQL),
-    ("hash_sample", hash_sample_q, HASH_SAMPLE_SQL),
-    ("mixture_sample", mixture_sample_q, MIXTURE_SAMPLE_SQL),
-    ("sample_per_group", sample_per_group_q, SAMPLE_PER_GROUP_SQL),
     ("token_topk", token_topk_q, TOKEN_TOPK_SQL),
     ("dedup_exact", dedup_exact_q, DEDUP_EXACT_SQL),
     ("ngram_jaccard_pairs", ngram_jaccard_q, NGRAM_JACCARD_SQL),
@@ -1639,29 +1051,14 @@ BINDINGS = [
     ("lang_id", lang_id_q, LANG_ID_SQL),
     ("doc_fingerprint", fingerprint_q, FINGERPRINT_SQL),
     ("token_counts", token_counts_q, TOKEN_COUNTS_SQL),
-    # iterative operators, fully value-oracled (the fixed budgets make
-    # them SQL-expressible as keyed recursions); value-level behavior
-    # is ALSO pinned in tests/test_packing.py. egarch_params
-    # (extra_ops) is the one remaining rows-only binding.
-    ("sequence_packing", sequence_packing_q, SEQUENCE_PACKING_SQL),
-    ("training_set", training_set_q, TRAINING_SET_SQL),
     ("classifier_score", classifier_score_q, CLASSIFIER_SQL),
-    ("doc_chunks", doc_chunks_q, DOC_CHUNKS_SQL),
-    # the flagship's chunk projection with a FULL composed oracle
-    # (curate -> LSH near-dedup -> components -> chunk); the pack tier
-    # is pinned by the SQL invariant test in tests/test_packing.py
-    ("training_set_chunks", training_set_chunks_q, TRAINING_SET_CHUNKS_SQL),
     # the one-call near-dedup filter, oracle-checked standalone
     ("near_dedup_docs", near_dedup_docs_q, NEAR_DEDUP_DOCS_SQL),
-    ("split_assign", split_assign_q, SPLIT_ASSIGN_SQL),
     ("interdoc_repetition", interdoc_repetition_q, INTERDOC_REPETITION_SQL),
     ("incremental_dedup", incremental_dedup_q, INCREMENTAL_DEDUP_SQL),
     ("embedding_project", embedding_project_q, EMBEDDING_PROJECT_SQL),
     ("lm_score", lm_score_q, LM_SCORE_SQL),
-    ("weighted_sample", weighted_sample_q, WEIGHTED_SAMPLE_SQL),
-    ("quality_gate", quality_gate_q, QUALITY_GATE_SQL),
     ("embedding_quantize", embedding_quantize_q, EMBEDDING_QUANTIZE_SQL),
     ("quantized_topk", quantized_topk_q, QUANTIZED_TOPK_SQL),
-    ("epoch_shuffle", epoch_shuffle_q, EPOCH_SHUFFLE_SQL),
     ("containment_pairs", containment_pairs_q, CONTAINMENT_PAIRS_SQL),
 ]

@@ -1,18 +1,15 @@
 """Series-tier bindings: per-key time-series analytics (drawdown,
 realized volatility, EWMA), ClickHouse CollapsingMergeTree read
-parity, SCD2 dimension history, temperature-based domain sampling,
-and exact-substring duplication coverage.
+parity, SCD2 dimension history, exact-substring duplication
+coverage and lag-1 autocorrelation.
 
-All seven carry full DuckDB oracles. Float-parity choices:
+All eight carry full DuckDB oracles. Float-parity choices:
 
 - EWMA's oracle is ``list_reduce`` with the constants spelled
   ``CAST(1.0 AS DOUBLE) - CAST(0.9 AS DOUBLE)`` so DuckDB performs
   the same double subtraction Python's ``1.0 - decay`` does (a
   DECIMAL ``0.1`` literal would be a DIFFERENT double, off by 1 ulp —
   the exact hazard ADVICE r5 flagged on value_histogram).
-- temperature_sample decides membership in pure integer math
-  (``math.isqrt`` mirrored by ``floor(sqrt())`` over counts far below
-  the 2^52 exactness bound), so no float ever crosses engines.
 """
 
 from __future__ import annotations
@@ -20,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gapless_deribit_clickhouse_spark.bindings.llm_ops import _md5_bucket_sql
 from gapless_deribit_clickhouse_spark.core.partitioning import ensure_parallelism
 from gapless_deribit_clickhouse_spark.core.tables import load_table
 from gapless_deribit_clickhouse_spark.features.timeseries import (
@@ -34,7 +30,6 @@ from gapless_deribit_clickhouse_spark.operators.scd import (
     point_in_time_join,
     scd2_history,
 )
-from gapless_deribit_clickhouse_spark.pipelines.sampling import temperature_sample
 from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
     substring_dup_fraction,
 )
@@ -212,27 +207,6 @@ FROM events e JOIN hist h
 """
 
 
-# --- temperature-2 domain rebalancing over documents ---
-def temperature_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return temperature_sample(
-        docs, "doc_id", "source", 1, 2, salt="temp"
-    ).select("doc_id", "source", "n_chars")
-
-
-TEMPERATURE_SAMPLE_SQL = f"""
-WITH c AS (SELECT source AS d, count(*) AS c FROM documents GROUP BY 1),
-s AS (SELECT CAST(sum(CAST(floor(sqrt(c)) AS BIGINT)) AS BIGINT) AS sq,
-             (CAST(sum(c) AS BIGINT) * 1) // 2 AS target FROM c),
-th AS (SELECT d, least(10000,
-              (target * 10000 * CAST(floor(sqrt(c)) AS BIGINT)) // (sq * c)) AS t
-       FROM c, s)
-SELECT doc_id, source, n_chars
-FROM documents JOIN th ON source = th.d
-WHERE {_md5_bucket_sql("doc_id", salt="temp")} < t
-"""
-
-
 # --- exact-substring duplication coverage per document ---
 def substring_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_dup_fraction(
@@ -286,7 +260,6 @@ BINDINGS = [
     ("collapsing_merge", collapsing_merge_q, COLLAPSING_MERGE_SQL),
     ("scd2_history", scd2_q, SCD2_SQL),
     ("pit_enrich", pit_enrich_q, PIT_ENRICH_SQL),
-    ("temperature_sample", temperature_sample_q, TEMPERATURE_SAMPLE_SQL),
     ("substring_dup_fraction", substring_dup_q, SUBSTRING_DUP_SQL),
     ("value_autocorr", autocorr_q, AUTOCORR_SQL),
 ]

@@ -435,8 +435,8 @@ def minhash_lsh_pairs(
     # the dominant map cost of the whole tier) runs ONCE and feeds
     # both the signature minima and the verification sets; without the
     # lazy localCheckpoint barrier Catalyst executes the projection
-    # once per consumer (VERDICT r7 #3: the re-tokenization between
-    # the sig and verify branches was the training_set floor)
+    # once per consumer (VERDICT r7 #3: the sig and verify branches
+    # each re-tokenized)
     harr = _hashed_shingles(df, n, base_hash).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     sig = _signatures_from_hashed(harr, num_hashes)
     banded = _banded(sig, num_hashes, bands)

@@ -42,9 +42,9 @@ def bpe_ish_token_count(col: Column) -> Column:
 
 
 def quality_exprs(raw: Column) -> dict[str, Column]:
-    """The quality feature columns as plain expressions, so composite
-    pipelines (e.g. corpus curation) can inline them into a single
-    pass instead of joining feature frames."""
+    """The quality feature columns as plain expressions, so a composite
+    pipeline can inline them into a single pass instead of joining
+    feature frames."""
     t = normalized_text(raw)
     n_chars = F.length(raw)
     n_tokens = token_count(raw)
@@ -304,6 +304,15 @@ def fingerprint(df: DataFrame) -> DataFrame:
     )
 
 
+def _md5_bucket(key: Column, buckets: int) -> Column:
+    """Uniform bucket in [0, buckets): the first 8 md5 hex chars (32
+    bits) of the key, as a long, mod ``buckets``. ``_CLF_BUCKET_SQL``
+    in bindings/llm_ops.py is the DuckDB mirror."""
+    return (
+        F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast("long") % buckets
+    ).cast("int")
+
+
 def hashed_linear_score(
     df: DataFrame,
     weights: list[float],
@@ -320,16 +329,13 @@ def hashed_linear_score(
     LITERAL (one array constant in the codegen'd expression, shipped
     once inside the serialized plan, not per row), so quality-filter
     scoring runs at full scan speed and pushes below any downstream
-    shuffle. Token hashing reuses the md5 bucket scheme of
-    ``pipelines/sampling.py`` (first 8 hex chars mod len(weights)) so
-    a SQL oracle reproduces scores bit-for-bit; training the weights
-    happens offline (any logistic-regression fit) — this operator is
-    the serving side.
+    shuffle. Each token's bucket is its first 8 md5 hex chars mod
+    len(weights) (``_md5_bucket``), so a SQL oracle reproduces scores
+    bit-for-bit; training the weights happens offline (any
+    logistic-regression fit) — this operator is the serving side.
 
     A doc with no tokens scores sigmoid(bias) — the prior.
     """
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import hash_bucket
-
     if not weights:
         raise ValueError("weights must be non-empty")
     n = len(weights)
@@ -337,8 +343,7 @@ def hashed_linear_score(
     # null text -> EMPTY token array (coalesced here, not at size():
     # under spark.sql.ansi.enabled=false size(NULL) is -1, not NULL,
     # so a size-level coalesce never fires — the array-level coalesce
-    # makes the 0-count contract config-independent, the same pattern
-    # as chunk_documents)
+    # makes the 0-count contract config-independent)
     toks = F.coalesce(
         F.filter(
             F.split(normalized_text(F.col("text")), " "),
@@ -347,7 +352,7 @@ def hashed_linear_score(
         F.array().cast("array<string>"),
     )
     tok_w = F.transform(
-        toks, lambda t: F.element_at(w_arr, hash_bucket(t, buckets=n) + 1)
+        toks, lambda t: F.element_at(w_arr, _md5_bucket(t, n) + 1)
     )
     logit = F.lit(float(bias)) + F.when(F.size(tok_w) > 0,
         F.aggregate(tok_w, F.lit(0.0), lambda a, x: a + x) / F.size(tok_w)
@@ -419,7 +424,7 @@ def bigram_lm_score(docs: DataFrame, k: float = 0.5) -> DataFrame:
         # pairs feed FOUR consumers (c2, c1, vocab, and the final
         # join); the lazy localCheckpoint cuts the lineage so the
         # tokenize+explode prefix scans the corpus once, not once per
-        # consumer (the curation-flagship pattern)
+        # consumer
         .localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     )
     c2 = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))

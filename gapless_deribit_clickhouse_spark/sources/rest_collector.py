@@ -268,6 +268,9 @@ def collect_trades(
     trades than a page: that raises :class:`SourceError`. The
     checkpoint holds the same (millisecond, trade_ids) frontier for the
     written rows, so a resume lands every trade once."""
+    for name, size in (("batch_rows", batch_rows), ("page_size", page_size)):
+        if size < 1:
+            raise ValueError(f"{name} must be >= 1, got {size}")
     ckpt = CheckpointStore(checkpoint_dir) if checkpoint_dir else None
     state = ckpt.load(source.currency, start_ts, end_ts) if ckpt else None
     cursor = state["last_end_ts"] if state else end_ts

@@ -65,8 +65,10 @@ def format_validation_report(
         for key, value in sorted(quality_row.items()):
             if key.endswith("_null_or_zero_rate"):
                 col = key[: -len("_null_or_zero_rate")]
-                flag = "OK" if value <= 0.05 else "!!"
-                lines.append(f"  [{flag}] {col} null/zero rate: {value:.4%}")
+                # an empty table's rates are null
+                flag = "OK" if value is not None and value <= 0.05 else "!!"
+                shown = "n/a" if value is None else f"{value:.4%}"
+                lines.append(f"  [{flag}] {col} null/zero rate: {shown}")
     else:
         lines.append("  [!!] no quality metrics available")
 

@@ -1,5 +1,5 @@
-"""LLM pipeline operators: dedup recall, ANN recall, text stats
-sanity."""
+"""LLM pipeline operators: dedup recall, ANN recall, embedding-op
+edge cases, text stats sanity."""
 
 from __future__ import annotations
 
@@ -402,91 +402,6 @@ def test_simhash_base_hash_modes_agree_on_exact_dups(docs):
         assert same_tokens <= got
 
 
-def test_hash_sample_deterministic_and_stratified(docs):
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import (
-        hash_sample,
-        stratified_hash_sample,
-    )
-
-    a = {r.doc_id for r in hash_sample(docs, "doc_id", 0.3).select("doc_id").collect()}
-    b = {r.doc_id for r in hash_sample(docs, "doc_id", 0.3).select("doc_id").collect()}
-    assert a == b  # stable across runs
-    n = docs.count()
-    assert 0.2 * n < len(a) < 0.4 * n  # roughly the requested rate
-    # monotone: raising the rate only adds members (nested splits)
-    bigger = {r.doc_id for r in hash_sample(docs, "doc_id", 0.6).select("doc_id").collect()}
-    assert a <= bigger
-    # different salt -> a different (roughly independent) subset
-    salted = {r.doc_id for r in hash_sample(docs, "doc_id", 0.3, salt="v2").select("doc_id").collect()}
-    assert salted != a
-    # stratified: zero-rate stratum vanishes, others keep their rate
-    strat = stratified_hash_sample(
-        docs, "doc_id", "lang", rates={"en": 1.0}, default_rate=0.0
-    ).toPandas()
-    assert set(strat.lang) == {"en"}
-    assert len(strat) == docs.filter(F.col("lang") == "en").count()
-
-
-def test_mixture_thresholds_exact_integer_math():
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import (
-        BUCKETS,
-        mixture_thresholds,
-    )
-
-    # binding scenario at sf0.01: hand-computed expected thresholds
-    counts = {"en": 218, "zh": 75, "es": 73, "de": 70, "fr": 64}
-    parts = {"en": 4, "zh": 2, "es": 2, "de": 1, "fr": 1}
-    th = mixture_thresholds(counts, parts)
-    # N = min(218*10//4, 75*10//2, 73*10//2, 70*10//1, 64*10//1) = 365
-    assert th == {"en": 6697, "zh": 9733, "es": 10000, "de": 5214, "fr": 5703}
-    # the binding domain (es) hits the cap: it is the scarce domain
-    assert max(th.values()) == BUCKETS
-    # a zero-count domain collapses the whole mixture (unrealizable)
-    th0 = mixture_thresholds({"en": 218, "code": 0}, {"en": 1, "code": 1})
-    assert th0 == {"en": 0, "code": 0}
-    with pytest.raises(ValueError):
-        mixture_thresholds(counts, {})
-    with pytest.raises(ValueError):
-        mixture_thresholds(counts, {"en": 0})
-
-
-def test_mixture_sample_hits_target_shares(docs):
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import mixture_sample
-
-    parts = {"en": 2, "de": 1}
-    out = mixture_sample(docs, "doc_id", "lang", parts).toPandas()
-    # domains outside the recipe are dropped entirely
-    assert set(out.lang) <= {"en", "de"}
-    got = out.groupby("lang").size()
-    # md5 buckets are uniform, so realized shares track the recipe
-    # within sampling noise on a few-hundred-row corpus
-    assert got["en"] / got["de"] == pytest.approx(2.0, rel=0.35)
-    # deterministic: same members on a rerun
-    again = mixture_sample(docs, "doc_id", "lang", parts).toPandas()
-    assert set(out.doc_id) == set(again.doc_id)
-
-
-def test_sample_n_per_group_fixed_and_stable(docs):
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import sample_n_per_group
-
-    a = sample_n_per_group(docs, group_col="lang", n=5, key_col="doc_id").toPandas()
-    b = sample_n_per_group(docs, group_col="lang", n=5, key_col="doc_id").toPandas()
-    assert (a.groupby("lang").size() <= 5).all()
-    # identical membership across runs
-    assert sorted(a.doc_id) == sorted(b.doc_id)
-    # a different salt draws a different subset
-    c = sample_n_per_group(
-        docs, group_col="lang", n=5, key_col="doc_id", salt="v2"
-    ).toPandas()
-    assert sorted(c.doc_id) != sorted(a.doc_id)
-    # the two-level tournament must select the identical rows a single
-    # per-group window would (exactness of the split pre-rank)
-    d = sample_n_per_group(
-        docs, group_col="lang", n=5, key_col="doc_id", splits=1
-    ).toPandas()
-    assert sorted(a.doc_id) == sorted(d.doc_id)
-
-
 def test_token_topk_vocab_head(docs):
     from gapless_deribit_clickhouse_spark.pipelines.text_stats import token_topk
 
@@ -594,26 +509,6 @@ def test_tfidf_top_terms(spark):
     assert abs(d1.tfidf.iloc[0] - exp) < 1e-9
 
 
-def test_curate_corpus_gauntlet(spark):
-    from gapless_deribit_clickhouse_spark.pipelines.curation import curate_corpus
-
-    good = "the quick brown fox and the lazy dog walk to the park in the morning " * 8
-    docs = spark.createDataFrame(
-        [
-            (1, good),                      # survives
-            (2, good),                      # exact dup of 1 -> dropped
-            (3, "der hund und die katze nicht das haus " * 10),  # German
-            (4, "x " * 3),                  # too short
-            (5, "!!! ??? $$$ %%% ^^^ &&& " * 30),  # junk punctuation
-        ],
-        "doc_id long, text string",
-    )
-    out = curate_corpus(docs, min_tokens=5).toPandas()
-    assert out.doc_id.tolist() == [1]
-    assert out.lang_pred.iloc[0] == "en"
-    assert out.quality_score.iloc[0] >= 0.5
-
-
 def test_minhash_fast_hash_path_finds_same_dups(spark):
     from gapless_deribit_clickhouse_spark.pipelines.text_dedup import minhash_lsh_pairs
 
@@ -673,27 +568,6 @@ def test_corpus_profile_groups_and_percentiles(spark):
     assert out.loc["de"].total_tokens == 0  # empty text counts 0 tokens
     approx = corpus_profile(df).toPandas().set_index("lang")
     assert approx.loc["en"].p50_tokens in (2.0, 3.0)  # sketch picks a sample
-
-
-def test_contamination_check_flags_overlap(spark):
-    from gapless_deribit_clickhouse_spark.pipelines.curation import contamination_check
-
-    bench = spark.createDataFrame(
-        [(100, "the capital of france is paris")], "doc_id long, text string"
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, "we know the capital of france is paris obviously"),  # contaminated
-            (2, "completely unrelated text about cooking pasta well"),  # clean
-        ],
-        "doc_id long, text string",
-    )
-    out = contamination_check(docs, bench, n=3).toPandas()
-    assert out.doc_id.tolist() == [1]
-    row = out.iloc[0]
-    # doc 1 has 7 distinct trigrams; 4 appear in the benchmark sentence
-    assert row.n_grams == 7 and row.n_matched == 4
-    assert abs(row.contamination_frac - 4 / 7) < 1e-12
 
 
 def test_hashed_linear_score_edges(spark):
@@ -768,35 +642,6 @@ def test_near_dedup_corpus_one_call_filter(spark, docs):
     assert set(again.doc_id) == ids
 
 
-def test_split_assign_total_stable_and_leakage_safe(docs):
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import split_assign
-
-    out = split_assign(docs, "doc_id").select("doc_id", "source", "split").toPandas()
-    n = docs.count()
-    assert len(out) == n  # a total labeling: no row dropped or duplicated
-    assert set(out.split) <= {"train", "val", "test"}
-    shares = out.split.value_counts(normalize=True)
-    assert 0.85 < shares.get("train", 0.0) < 0.95
-    # stable across runs
-    again = split_assign(docs, "doc_id").select("doc_id", "split").toPandas()
-    merged = out.merge(again, on="doc_id", suffixes=("", "_again"))
-    assert (merged.split == merged.split_again).all()
-    # a different salt gives a genuinely different assignment
-    resalted = split_assign(docs, "doc_id", salt="resplit-v2").select(
-        "doc_id", "split"
-    ).toPandas()
-    m2 = out.merge(resalted, on="doc_id", suffixes=("", "_v2"))
-    assert (m2.split != m2.split_v2).any()
-    # leakage guard: keying on a GROUP column sends whole groups to one split
-    grouped = split_assign(docs, "source").select("source", "split").toPandas()
-    assert grouped.groupby("source").split.nunique().max() == 1
-    # weight validation
-    with pytest.raises(ValueError):
-        split_assign(docs, "doc_id", weights=[("train", 1.0)])
-    with pytest.raises(ValueError):
-        split_assign(docs, "doc_id", weights=[("a", -0.1), ("b", 1.1)])
-
-
 def test_interdoc_repetition_flags_planted_boilerplate(spark):
     from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
         interdoc_repetition,
@@ -824,33 +669,6 @@ def test_interdoc_repetition_flags_planted_boilerplate(spark):
     # raising min_docs past the clique size clears the signal
     strict = interdoc_repetition(df, min_docs=11).toPandas()
     assert (strict.shared_shingles == 0).all()
-
-
-def test_split_thresholds_exact_integer_math():
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import (
-        split_thresholds,
-    )
-
-    # defaults: decimal-exact 9000/9500, no float rounding involved
-    assert split_thresholds([("train", 0.9), ("val", 0.05), ("test", 0.05)]) == [
-        ("train", 9000),
-        ("val", 9500),
-    ]
-    # thirds floor to 3333/6666 (NOT banker's-rounded 3333/6667) —
-    # any oracle following the documented exact-integer recipe agrees
-    assert split_thresholds([("a", 1), ("b", 1), ("c", 1)]) == [
-        ("a", 3333),
-        ("b", 6666),
-    ]
-    # a positive weight that floors to an empty bucket range raises
-    # instead of yielding a silently-empty split
-    with pytest.raises(ValueError):
-        split_thresholds([("a", 0.00001), ("b", 1.9999)])
-    # an explicitly ZERO weight is an intentional empty split: allowed
-    assert split_thresholds([("a", 0.0), ("b", 1.0), ("c", 1.0)]) == [
-        ("a", 0),
-        ("b", 5000),
-    ]
 
 
 def test_incremental_dedup_against_corpus(spark):
@@ -1048,39 +866,6 @@ def test_bigram_lm_score_separates_fluent_from_gibberish(spark):
         assert r["n_bigrams"] >= 1
 
 
-def test_weighted_sample_per_group_properties(spark):
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import (
-        weighted_sample_per_group,
-    )
-
-    rows = [(f"d{i}", "en" if i % 2 else "de", 10.0) for i in range(40)]
-    rows += [("heavy_en", "en", 1e12), ("heavy_de", "de", 1e12)]
-    rows += [("zero", "en", 0.0), ("nullw", "de", None)]
-    df = spark.createDataFrame(rows, "doc_id string, lang string, w double")
-
-    out = weighted_sample_per_group(
-        df, group_col="lang", n=5, key_col="doc_id", weight_col="w", salt="t"
-    ).collect()
-    by_lang = {}
-    for r in out:
-        by_lang.setdefault(r["lang"], []).append(r["doc_id"])
-    # exactly n per group, ranks 1..n
-    assert sorted(len(v) for v in by_lang.values()) == [5, 5]
-    assert sorted(r["rn"] for r in out if r["lang"] == "en") == [1, 2, 3, 4, 5]
-    # overwhelming weight -> certain inclusion; zero/null weight -> excluded
-    assert "heavy_en" in by_lang["en"] and "heavy_de" in by_lang["de"]
-    picked = {r["doc_id"] for r in out}
-    assert "zero" not in picked and "nullw" not in picked
-    # partition-invariant determinism
-    out2 = weighted_sample_per_group(
-        df.repartition(13), group_col="lang", n=5, key_col="doc_id",
-        weight_col="w", salt="t",
-    ).collect()
-    assert {(r["lang"], r["rn"], r["doc_id"]) for r in out2} == {
-        (r["lang"], r["rn"], r["doc_id"]) for r in out
-    }
-
-
 def test_quantize_embeddings_exact(spark):
     from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
         quantize_embeddings,
@@ -1178,46 +963,6 @@ def test_dedup_index_digests_written_last(spark, tmp_path, monkeypatch):
     append_dedup_index(batch, idx)
     assert set(order) == {"bands", "sets", "digests"}
     assert order[-1] == "digests"
-
-
-def test_epoch_shuffle_exact_rank_and_epoch_independence(docs):
-    from gapless_deribit_clickhouse_spark.pipelines.sampling import epoch_shuffle
-
-    n = docs.count()
-    out = epoch_shuffle(docs, "doc_id", epoch=0).select(
-        "doc_id", "epoch_rank"
-    ).toPandas()
-    # a permutation: every position 0..n-1 exactly once
-    assert sorted(out.epoch_rank) == list(range(n))
-    # shard count is parallelism only — the rank is shard-invariant
-    for shards in (1, 7, 512):
-        again = epoch_shuffle(docs, "doc_id", epoch=0, shards=shards).select(
-            "doc_id", "epoch_rank"
-        ).toPandas()
-        m = out.merge(again, on="doc_id", suffixes=("", "_s"))
-        assert (m.epoch_rank == m.epoch_rank_s).all(), shards
-    # a different epoch is a genuinely different permutation
-    e1 = epoch_shuffle(docs, "doc_id", epoch=1).select(
-        "doc_id", "epoch_rank"
-    ).toPandas()
-    m = out.merge(e1, on="doc_id", suffixes=("", "_e1"))
-    assert (m.epoch_rank != m.epoch_rank_e1).any()
-    # and matches the naive global sort (the oracle's formulation)
-    import pyspark.sql.functions as F
-
-    naive = (
-        docs.select(
-            "doc_id",
-            F.md5(F.concat(F.lit("shuffle:0:"), F.col("doc_id").cast("string"))).alias(
-                "h"
-            ),
-        )
-        .orderBy("h", "doc_id")
-        .toPandas()
-    )
-    naive["rank"] = range(n)
-    m = out.merge(naive[["doc_id", "rank"]], on="doc_id")
-    assert (m.epoch_rank == m["rank"]).all()
 
 
 def test_containment_catches_what_jaccard_misses(spark):

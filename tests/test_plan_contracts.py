@@ -23,9 +23,6 @@ REQUIRED_PYTHON = {
     "rolling_percentile",
     "embedding_near_dup",
     "ivf_topk",
-    "sequence_packing",  # per-shard first-fit-decreasing
-    "training_set",  # composed flagship: FFD packing crossing
-    "training_set_chunks",  # same flagship, pack columns projected out
     "egarch_loglik",  # the exact _neg_loglik sequential kernel the
     # optimizer evaluates, one applyInPandas crossing per group —
     # the crossing IS the thing the DuckDB recursive oracle checks
@@ -43,8 +40,6 @@ REQUIRED_PYTHON = {
 #   since round 3's banded-LSH equi-join rewrite
 # - value_histogram: 1-row min/max-bounds scalar broadcast
 # - lm_score: 1-row vocabulary-size scalar broadcast
-# - quality_gate: lm_score's vocabulary scalar + the 1-row
-#   median-ppl percentile scalar
 # - scan_keyset: 1-row pagination-cursor broadcast (LIMIT 1 by
 #   construction — the keyset predicate references the cursor's
 #   (ts, event_id) on every row, the textbook scalar-broadcast shape)
@@ -53,7 +48,6 @@ ALLOWED_NLJ = {
     "cosine_topk",
     "value_histogram",
     "lm_score",
-    "quality_gate",
     "scan_keyset",
     "frequent_tokens",  # 1-row total-count scalar broadcast
     "pit_enrich",  # 1-row horizon (max fact ts) scalar broadcast that

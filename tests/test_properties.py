@@ -179,37 +179,3 @@ def test_minhash_params_always_meets_recall_within_budget(threshold, recall):
     assert achieved >= recall - 1e-9
 
 
-@given(
-    n_tokens=st.integers(0, 120),
-    max_tokens=st.integers(2, 40),
-    overlap_frac=st.floats(0.0, 0.9),
-)
-@settings(max_examples=40, deadline=None)
-def test_chunk_documents_matches_python_reference(
-    spark, n_tokens, max_tokens, overlap_frac
-):
-    """chunk_documents vs a direct Python reference chunker on random
-    shapes: same chunk count, same windows, full coverage."""
-    from gapless_deribit_clickhouse_spark.pipelines.packing import chunk_documents
-
-    overlap = min(int(max_tokens * overlap_frac), max_tokens - 1)
-    stride = max_tokens - overlap
-    toks = [f"t{i}" for i in range(n_tokens)]
-    df = spark.createDataFrame([(1, " ".join(toks))], "doc_id long, text string")
-    got = (
-        chunk_documents(df, max_tokens=max_tokens, overlap=overlap)
-        .toPandas()
-        .sort_values("chunk_idx")
-    )
-    # python reference: windows every `stride` until the tail is covered
-    if n_tokens <= max_tokens:
-        want = [toks[0:max_tokens]]
-    else:
-        import math
-
-        nc = 1 + math.ceil((n_tokens - max_tokens) / stride)
-        want = [toks[i * stride : i * stride + max_tokens] for i in range(nc)]
-    assert list(got.chunk_idx) == list(range(len(want)))
-    for c, w in zip(got.chunk_text, want):
-        assert c.split() == w
-    assert (got.doc_n_tokens == n_tokens).all()

@@ -110,3 +110,7 @@ def test_build_validation_report_end_to_end(spark, trades_df):
     assert "Validation Report" in text
     assert "rows: 200" in text
     assert "partitioned by: underlying, trade_month" in text
+    # an empty table gives null rates, shown as n/a and flagged
+    empty = build_validation_report(spark, trades_df.limit(0))
+    assert "rows: 0" in empty
+    assert "[!!] iv null/zero rate: n/a" in empty

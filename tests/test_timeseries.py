@@ -1,7 +1,7 @@
 """Semantics tests for the series tier: drawdown / realized vol /
 EWMA (features/timeseries.py), CollapsingMergeTree parity
-(operators/dedup.collapse_by_sign), SCD2 history (operators/scd.py),
-temperature sampling, and substring duplication coverage — hand-built
+(operators/dedup.collapse_by_sign), SCD2 history (operators/scd.py)
+and substring duplication coverage — hand-built
 inputs with hand-computed expected values; the DuckDB value oracles
 live in bindings/series_ops.py."""
 
@@ -22,10 +22,6 @@ from gapless_deribit_clickhouse_spark.operators.dedup import collapse_by_sign
 from gapless_deribit_clickhouse_spark.operators.scd import (
     point_in_time_join,
     scd2_history,
-)
-from gapless_deribit_clickhouse_spark.pipelines.sampling import (
-    temperature_sample,
-    temperature_thresholds,
 )
 from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
     substring_dup_fraction,
@@ -197,29 +193,6 @@ def test_point_in_time_join_half_open(spark):
     assert out == {0: "A", 1: "A", 2: "B", 3: "B"}
     # each fact matches exactly one version — no interval overlap
     assert point_in_time_join(facts, hist, "ts", ["key"]).count() == 4
-
-
-def test_temperature_thresholds_integer_math():
-    # counts 100 and 25: isqrt 10 and 5, S=15; target 62
-    th = temperature_thresholds({"a": 100, "b": 25}, 62)
-    assert th == {"a": 62 * 10_000 * 10 // (15 * 100), "b": 62 * 10_000 * 5 // (15 * 25)}
-    # small domain never oversampled past rate 1
-    th = temperature_thresholds({"a": 10_000, "b": 4}, 9_000)
-    assert th["b"] == 10_000
-    assert temperature_thresholds({"a": 0}, 10) == {"a": 0}
-
-
-def test_temperature_sample_rebalances(spark):
-    rows = [(i, "big") for i in range(900)] + [(i + 900, "small") for i in range(100)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = temperature_sample(df, "doc_id", "source", 1, 2).groupBy("source").count()
-    got = {r["source"]: r["count"] for r in out.collect()}
-    # temperature-2: small keeps a ~3x higher RATE than big (sqrt(900/100))
-    rate_big, rate_small = got.get("big", 0) / 900, got.get("small", 0) / 100
-    assert rate_small > 2.0 * rate_big
-    # and membership is deterministic
-    again = temperature_sample(df, "doc_id", "source", 1, 2).groupBy("source").count()
-    assert {r["source"]: r["count"] for r in again.collect()} == got
 
 
 def test_substring_dup_fraction(spark):
