@@ -66,7 +66,7 @@ FROM events GROUP BY 1, 2
 """
 
 
-# --- W2: trailing event-time percentile rank (applyInPandas kernel) ---
+# --- W2: trailing event-time percentile rank (range window) ---
 def rolling_percentile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rolling_percentile_rank(
         _series(spark, sf_dir),

@@ -141,39 +141,113 @@ def test_iv_percentile_bounds(spark, regular_iv_series):
 
 def test_iv_rank_bounds_and_null_guard(spark, regular_iv_series):
     df = spark.createDataFrame(regular_iv_series)
-    out = iv_rank(df, lookback_days=1, min_periods=4).toPandas()
-    valid = out.iv_rank.dropna()
-    assert valid.between(0, 100).all()
-    # first rows below min_periods are null
-    assert out.sort_values("ts").iv_rank.iloc[0] != out.sort_values("ts").iv_rank.iloc[0] or True
+    mp = 4
+    for build, col in ((iv_rank, "iv_rank"), (iv_percentile, "iv_percentile")):
+        out = build(df, lookback_days=1, min_periods=mp).toPandas().sort_values("ts")
+        assert out[col].dropna().between(0, 100).all()
+        # on the gapless grid the first min_periods - 1 frames are too
+        # short, and the next one is not
+        assert out[col].iloc[: mp - 1].isna().all(), col
+        assert out[col].iloc[mp - 1 :].notna().all(), col
+
+
+def _rolling_reference(keys, ts, v, lookback, min_periods):
+    """Brute force over every row: the frame is the rows of the same key
+    with ``ts - lookback <= ts_r <= ts`` (NaN value = null). Returns the
+    percentile rank (nulls count in the frame, are <= nothing) and the
+    min-max rank (over the non-null values)."""
+    n = len(ts)
+    pct, mm = np.full(n, np.nan), np.full(n, np.nan)
+    for i in range(n):
+        w = v[(keys == keys[i]) & (ts >= ts[i] - lookback) & (ts <= ts[i])]
+        if len(w) >= min_periods:
+            pct[i] = 100.0 * np.count_nonzero(w <= v[i]) / len(w)
+        vals = w[~np.isnan(w)]
+        if len(vals) >= min_periods and vals.max() > vals.min():
+            mm[i] = (v[i] - vals.min()) / (vals.max() - vals.min()) * 100.0
+    return pct, mm
+
+
+def _check_against_reference(df, pdf, lookback, min_periods, bucket_seconds=None):
+    """Both operators over ``df`` (keyed ``k``, ``id``-tagged, value
+    ``v``) equal ``_rolling_reference`` over ``pdf`` (``ts`` in epoch
+    seconds) row for row."""
+    from gapless_deribit_clickhouse_spark.operators.rolling import (
+        rolling_minmax_rank,
+        rolling_percentile_rank,
+    )
+
+    args = (df, "ts", "v", ["k"], lookback, min_periods)
+    pct = rolling_percentile_rank(*args, bucket_seconds=bucket_seconds)
+    mm = rolling_minmax_rank(*args, bucket_seconds=bucket_seconds)
+    got = pct.join(mm.select("id", "minmax_rank"), "id").toPandas().sort_values("id")
+    assert got.id.tolist() == pdf.id.tolist()
+    want_pct, want_mm = _rolling_reference(
+        pdf.k.to_numpy(dtype=object), pdf.ts.to_numpy(), pdf.v.to_numpy(dtype="float64"),
+        lookback, min_periods,
+    )
+    assert np.allclose(got.pct_rank.astype(float), want_pct, equal_nan=True, rtol=1e-12)
+    assert np.allclose(got.minmax_rank.astype(float), want_mm, equal_nan=True, rtol=1e-12)
 
 
 def test_rolling_impls_agree(spark, regular_iv_series):
-    """applyInPandas kernel == declarative range self-join."""
-    from gapless_deribit_clickhouse_spark.operators.rolling import (
-        rolling_percentile_rank,
-        rolling_percentile_rank_join,
+    """Percentile and min-max rank, per key and bucket-parallel, equal
+    the brute-force reference on the 15-min series."""
+    pdf = pd.DataFrame({
+        "id": np.arange(len(regular_iv_series)),
+        "k": "x",
+        "ts": regular_iv_series.ts.astype("int64").to_numpy() / 1e9,
+        "v": regular_iv_series.iv_close,
+    })
+    df = spark.createDataFrame(pdf, "id long, k string, ts double, v double").withColumn(
+        "ts", F.timestamp_seconds("ts")
     )
+    _check_against_reference(df, pdf, 86400, 4)
+    _check_against_reference(df, pdf, 3600, 4, bucket_seconds=3600)
 
-    df = spark.createDataFrame(regular_iv_series).withColumn("k", F.lit("x"))
-    a = (
-        rolling_percentile_rank(df, "ts", "iv_close", ["k"], 86400, 4)
-        .toPandas()
-        .sort_values("ts")
-        .reset_index(drop=True)
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "double"])
+def test_rolling_matches_reference_on_ties_nulls_subsecond(spark, ts_type):
+    """Seeded series with value ties, timestamp ties, quarter-second
+    gaps, 5% null values and a null key: both operators equal the
+    brute-force reference, on a timestamp and an epoch-seconds ``ts``,
+    per key and bucket-parallel."""
+    rng = np.random.default_rng(17)
+    n = 240
+    pdf = pd.DataFrame({
+        "id": np.arange(n),
+        "k": rng.choice(np.array(["a", "b", None], dtype=object), n),
+        "ts": 1_700_000_000.0 + np.sort(rng.choice(np.arange(0.0, 300.0, 0.25), n)),
+        "v": np.where(rng.random(n) < 0.05, np.nan, rng.integers(0, 12, n).astype(float)),
+    })
+    df = spark.createDataFrame(pdf, "id long, k string, ts double, v double").withColumn(
+        "v", F.when(~F.isnan("v"), F.col("v"))
     )
-    b = (
-        rolling_percentile_rank_join(df, "ts", "iv_close", ["k"], 86400, 4)
-        .toPandas()
-        .sort_values("ts")
-        .reset_index(drop=True)
-    )
-    assert np.allclose(a.pct_rank, b.pct_rank, equal_nan=True)
+    if ts_type == "timestamp":
+        df = df.withColumn("ts", F.timestamp_seconds("ts"))
+    assert df.filter(F.col("v").isNull()).count() > 0
+    for lookback, mp, bucket in ((1, 1, None), (20, 3, None), (20, 3, 20.5)):
+        _check_against_reference(df, pdf, lookback, mp, bucket_seconds=bucket)
+
+
+def test_minmax_rank_frames_sub_second(spark):
+    """The trailing frame is exact below a second: with a 1 s lookback
+    the row at 10.2 s is outside the frames of the rows at 11.5 s and
+    11.9 s (framing on whole seconds let it in)."""
+    from gapless_deribit_clickhouse_spark.operators.rolling import rolling_minmax_rank
+
+    rows = [("x", 10.2, 100.0), ("x", 11.5, 0.0), ("x", 11.9, 50.0)]
+    num = spark.createDataFrame(rows, "k string, ts double, v double")
+    ts = num.withColumn("ts", F.timestamp_seconds("ts"))
+    for df in (num, ts, ts.withColumn("ts", F.col("ts").cast("timestamp_ntz"))):
+        got = rolling_minmax_rank(df, "ts", "v", ["k"], 1, 1).toPandas().sort_values("ts")
+        r = got.minmax_rank.tolist()
+        assert pd.isna(r[0]) and pd.isna(r[1]) and r[2] == 100.0, r
 
 
 def test_percentile_rank_bucketed_matches_unbucketed(spark, regular_iv_series):
-    """The bucket-parallel kernel (donor copies from the previous
-    bucket, ranks for own rows only) must reproduce the per-key kernel
+    """The bucket-parallel window (donor copies from the previous
+    bucket, ranks for own rows only) must reproduce the per-key window
     exactly."""
     from gapless_deribit_clickhouse_spark.operators.rolling import (
         rolling_percentile_rank,
@@ -462,13 +536,8 @@ def test_rolling_percentile_numeric_epoch_and_ties(spark):
     """r4 operator review: (a) a numeric epoch-seconds ts column used
     to be silently rescaled through datetime64[us], making every
     window span the whole series; (b) rows tied on timestamp must all
-    see each other (join-twin semantics), not depend on shuffle order."""
-    import numpy as np
-
-    from gapless_deribit_clickhouse_spark.operators.rolling import (
-        rolling_percentile_rank,
-        rolling_percentile_rank_join,
-    )
+    see each other, not depend on shuffle order."""
+    from gapless_deribit_clickhouse_spark.operators.rolling import rolling_percentile_rank
 
     base = 1_700_000_000.0
     rows = [
@@ -490,20 +559,18 @@ def test_rolling_percentile_numeric_epoch_and_ties(spark):
     # tied rows both see the full 3-row window {10,20,30}
     assert got.iloc[1].pct_rank == pytest.approx(100 * 2 / 3)
     assert got.iloc[2].pct_rank == pytest.approx(100.0)
-    # and the kernel agrees with the declarative join twin
-    ts_rows = [(k, t, v) for k, t, v in rows]
-    tdf = spark.createDataFrame(ts_rows, "k string, ts double, v double").select(
-        "k", F.timestamp_seconds("ts").alias("ts"), "v"
+    # a timestamp ts ranks the same, and both equal the brute-force reference
+    want, _ = _rolling_reference(
+        np.array(["x"] * 4, dtype=object), got.ts.to_numpy(), got.v.to_numpy(), 3600, 1
     )
-    a = (
-        rolling_percentile_rank(tdf, "ts", "v", ["k"], 3600, 1)
-        .toPandas().sort_values(["ts", "v"]).reset_index(drop=True)
-    )
-    b = (
-        rolling_percentile_rank_join(tdf, "ts", "v", ["k"], 3600, 1)
-        .toPandas().sort_values(["ts", "v"]).reset_index(drop=True)
-    )
-    assert np.allclose(a.pct_rank, b.pct_rank, equal_nan=True)
+    assert np.allclose(got.pct_rank, want)
+    tdf = num.withColumn("ts", F.timestamp_seconds("ts"))
+    for d in (tdf, tdf.withColumn("ts", F.col("ts").cast("timestamp_ntz"))):
+        a = (
+            rolling_percentile_rank(d, "ts", "v", ["k"], 3600, 1)
+            .toPandas().sort_values(["ts", "v"]).reset_index(drop=True)
+        )
+        assert np.allclose(a.pct_rank, want)
 
 
 def test_connected_components_raises_without_convergence(spark):

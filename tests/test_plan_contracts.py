@@ -9,6 +9,19 @@ from __future__ import annotations
 import pytest
 
 from gapless_deribit_clickhouse_spark.bindings import ALL_BINDINGS
+from gapless_deribit_clickhouse_spark.features import (
+    aggregate_by_moneyness,
+    dte_bucket_agg,
+    enrich_with_spot,
+    iv_percentile,
+    pcr_by_tenor,
+    resample_iv,
+    select_contracts,
+    term_structure,
+    with_greeks,
+)
+from gapless_deribit_clickhouse_spark.functions.blackscholes import portfolio_greeks
+from gapless_deribit_clickhouse_spark.validation import gap_analysis, quality_metrics
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,7 +33,6 @@ SF_DIR = "/root/testdata/sf0.001"
 # tests/test_pipelines.py.
 REQUIRED_PYTHON = {
     "egarch_params",
-    "rolling_percentile",
     "embedding_near_dup",
     "ivf_topk",
     "egarch_loglik",  # the exact _neg_loglik sequential kernel the
@@ -98,6 +110,38 @@ def test_python_only_at_declared_edges(spark, name, fn):
     assert (crossings >= 1) == (name in REQUIRED_PYTHON), (
         f"{name}: {crossings} Arrow-batched crossings"
     )
+
+
+# The feature stages perfbench's feature_batch times, built with the
+# same builders and arguments over the conftest trades: none of them
+# may leave the JVM.
+FEATURE_STAGES = {
+    "contract_pipeline": lambda df, spot: aggregate_by_moneyness(
+        enrich_with_spot(select_contracts(df, "front_month_atm_liquid"), spot)
+    ),
+    "pcr_by_tenor": lambda df, spot: pcr_by_tenor(df),
+    "term_structure": lambda df, spot: term_structure(df),
+    "dte_bucket_agg": lambda df, spot: dte_bucket_agg(df),
+    "iv_percentile": lambda df, spot: iv_percentile(
+        resample_iv(df, keys=("underlying",)),
+        ts_col="bucket_ts", keys=("underlying",), lookback_days=7,
+    ),
+    "greeks": lambda df, spot: portfolio_greeks(
+        with_greeks(enrich_with_spot(df, spot)), group_cols=("underlying",)
+    ),
+    "quality_metrics": lambda df, spot: quality_metrics(df),
+    "gap_analysis": lambda df, spot: gap_analysis(df, group_cols=("underlying",)),
+}
+
+PYTHON_EVAL_NODES = ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+@pytest.mark.parametrize("stage", sorted(FEATURE_STAGES))
+def test_feature_stages_plan_no_python(spark, trades_df, spot_pdf, stage):
+    df = FEATURE_STAGES[stage](trades_df, spark.createDataFrame(spot_pdf))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    found = [op for op in PYTHON_EVAL_NODES if op in plan]
+    assert not found, f"{stage} plans {found}"
 
 
 def test_simhash_has_no_post_checkpoint_exchange(spark):
