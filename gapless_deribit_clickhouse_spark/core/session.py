@@ -25,6 +25,36 @@ SparkSession configured for the workload:
   collector, since a cluster executor with a large heap and many cores
   is what G1 is for. A caller whose own driver options select a
   collector (``-XX:+Use<Name>GC``) gets that one instead.
+- the driver JVM does not C2-compile the engine's one-shot machinery.
+  Sessions here are short, and the JIT is most of their CPU: C2 alone
+  took 33 s in a perfbench point_queries JVM and 40 s in a
+  feature_batch one (JFR ``jdk.Compilation``), most of it on code that
+  runs once per session, plan, task or generated class. The HotSpot
+  compiler-directives file ``compiler_directives.json`` next to this
+  module (``-XX:+UnlockDiagnosticVMOptions
+  -XX:CompilerDirectivesFile=...``, driver key only) sets
+  ``c2: {Exclude: true}`` for Janino and Spark's code generator, the
+  SQL parser (ANTLR), Catalyst's analyzer, optimizer and planner,
+  Java and Scala-collection serialization, closure cleaning (ASM),
+  class loading and jar reading, method-handle linkage, Scala
+  reflection and Hadoop's Configuration parsing; HotSpot compiles
+  those methods at C1 level 1 instead. C2 stays on for all code that
+  can run per row: the generated classes, expressions, parquet,
+  aggregation, sorting, ``unsafe``, regex and ICU (``initcap``). C2
+  time per seed-1 JVM fell 33 -> 21 s (point_queries), 40 -> 25 s
+  (feature_batch) and 17 -> 9 s (backfill). Median ``op_cpu_ms`` fell
+  30% on point_queries (10 of 10 pairs) and 19% on the other two, with
+  ``query_p50_ms`` and ``feature_rows_per_s`` no worse. C1 alone
+  (``-XX:TieredStopAtLevel=1``) saves more CPU but runs row code
+  slower: ``feature_rows_per_s`` -19%, and a repeated 1M-row feature
+  pass +60% wall time (ROADMAP item 5). The JVM prints "N compiler
+  directives added" on stdout at start. A caller whose own driver
+  options name a ``-XX:CompilerDirectivesFile`` gets that one instead.
+- the generated-code cache holds 1000 classes
+  (``spark.sql.codegen.cache.maxEntries``, a static conf, so it is set
+  in the builder). A pass of the 8 feature stages generates 125-140;
+  at Spark's default of 100 the LRU evicts them, and every later pass
+  in the session compiles all of them again.
 - PySpark's per-call origin capture is off
   (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
   every ``pyspark.sql.functions`` call records its Python call site in
@@ -67,6 +97,20 @@ _JVM_PIN = (
 # a caller's own -XX:+Use<Name>GC suppresses this one.
 _DRIVER_GC = "-XX:+UseSerialGC"
 _SELECTS_GC = re.compile(r"-XX:\+Use\w+GC\b")
+
+
+def _quoted(option: str) -> str:
+    """``option`` as one token of an extraJavaOptions value, which
+    Spark splits on whitespace, reading quotes and backslashes as
+    escapes."""
+    return '"' + option.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+
+# C2 off for the engine's one-shot machinery (see the module
+# docstring). CompilerDirectivesFile is a diagnostic flag, so the
+# unlock goes first; the path is quoted, as it may hold a space.
+_DIRECTIVES_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "compiler_directives.json")
+_DIRECTIVES_FLAG = "-XX:CompilerDirectivesFile="
 _DRIVER_OPTS = "spark.driver.extraJavaOptions"
 _EXECUTOR_OPTS = "spark.executor.extraJavaOptions"
 
@@ -75,14 +119,21 @@ def _java_options(extra_conf: dict[str, str]) -> dict[str, str]:
     """The extraJavaOptions values ``get_spark`` sets for ``extra_conf``.
 
     The pins come first and the caller's options follow on both keys,
-    appended rather than replaced (ADVICE r8); the collector pin goes
-    on the driver key only.
+    appended rather than replaced (ADVICE r8); the collector and
+    compiler-directives pins go on the driver key only, and each is
+    left out when the caller's driver options set their own.
     """
     merged = {}
     for key in (_DRIVER_OPTS, _EXECUTOR_OPTS):
         caller = extra_conf.get(key, "")
-        gc = _DRIVER_GC if key == _DRIVER_OPTS and not _SELECTS_GC.search(caller) else ""
-        value = " ".join(x for x in (_JVM_PIN, gc, caller) if x)
+        driver = key == _DRIVER_OPTS
+        gc = _DRIVER_GC if driver and not _SELECTS_GC.search(caller) else ""
+        jit = (
+            f"-XX:+UnlockDiagnosticVMOptions {_quoted(_DIRECTIVES_FLAG + _DIRECTIVES_FILE)}"
+            if driver and _DIRECTIVES_FLAG not in caller
+            else ""
+        )
+        value = " ".join(x for x in (_JVM_PIN, gc, jit, caller) if x)
         if value:
             merged[key] = value
     return merged
@@ -103,7 +154,13 @@ def get_spark(
     for local mode's small live heap, at the cost of stop-the-world
     pauses that grow with the live set (longest measured 102-256 ms);
     executors keep the JVM default. A collector chosen in the caller's
-    ``spark.driver.extraJavaOptions`` wins over the pinned one.
+    ``spark.driver.extraJavaOptions`` wins over the pinned one. The
+    driver also loads ``compiler_directives.json``, which keeps C2 off
+    the code that runs once per session, plan, task or generated class
+    (C1 compiles it): point_queries ``op_cpu_ms`` -30% with latency no
+    worse; the JVM prints "N compiler directives added" at start, and a
+    caller's own ``-XX:CompilerDirectivesFile`` wins. The codegen cache
+    holds 1000 classes, so a repeated feature pass compiles almost none.
     Origin capture is off, so an analysis error carries no Python call
     site (module docstring).
     """
@@ -125,6 +182,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # room for every class one feature pass generates (125-140 for
+        # the 8 feature stages): at the default 100, LRU eviction makes
+        # every later pass recompile all of them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     extra_conf = extra_conf or {}

@@ -16,7 +16,7 @@ Spark's sliding min/max/count.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -32,10 +32,14 @@ def _trailing_window(
     lookback_seconds: int,
     bucket_seconds: float | None,
     out_col: str,
-    rank: Callable[[WindowSpec], Column],
+    frame: Mapping[str, Column],
+    rank: Column,
 ) -> DataFrame:
-    """``df`` with ``out_col = rank(w)``, where ``w`` is the trailing
-    frame ``[ts − lookback, ts]`` (inclusive) per key.
+    """``df`` with ``out_col = rank``, where ``rank`` reads the columns
+    that ``frame`` names, each its aggregate over the trailing frame
+    ``[ts − lookback, ts]`` (inclusive) per key. Each aggregate is
+    evaluated once: Catalyst does not merge equal window expressions,
+    so one used twice inside ``rank`` would be computed twice.
 
     The order key is ``ts`` in epoch microseconds: ``unix_micros`` of a
     timestamp column (a ``timestamp_ntz`` one read in the session's
@@ -63,9 +67,13 @@ def _trailing_window(
         ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     lb_us = int(lookback_seconds) * 1_000_000
 
+    def ranked(d: DataFrame, w: WindowSpec) -> DataFrame:
+        framed = d.withColumns({c: agg.over(w) for c, agg in frame.items()})
+        return framed.withColumn(out_col, rank).drop(*frame)
+
     if bucket_seconds is None:
         w = Window.partitionBy(*keys).orderBy(ts_us).rangeBetween(-lb_us, 0)
-        return df.withColumn(out_col, rank(w))
+        return ranked(df, w)
 
     # reject a non-positive width instead of a per-row bucket explosion
     width_us = round(float(bucket_seconds) * 1_000_000)
@@ -82,8 +90,7 @@ def _trailing_window(
     carry = df.withColumn("__bucket", bucket + width_us).withColumn("__carry", F.lit(True))
     w = Window.partitionBy(*keys, "__bucket").orderBy(ts_us).rangeBetween(-lb_us, 0)
     return (
-        own.unionByName(carry)
-        .withColumn(out_col, rank(w))
+        ranked(own.unionByName(carry), w)
         .filter(~F.col("__carry"))
         .drop("__bucket", "__carry")
     )
@@ -107,13 +114,11 @@ def rolling_percentile_rank(
     null current value ranks 0. ``bucket_seconds``: see
     ``_trailing_window``."""
     v = F.col(value_col)
-
-    def rank(w: WindowSpec) -> Column:
-        n = F.count(F.lit(1)).over(w)
-        le = F.size(F.filter(F.collect_list(v).over(w), lambda x: x <= v))
-        return F.when(n >= min_periods, 100.0 * le / n)
-
-    return _trailing_window(df, ts_col, keys, lookback_seconds, bucket_seconds, out_col, rank)
+    frame = {"__n": F.count(F.lit(1)), "__values": F.collect_list(v)}
+    n = F.col("__n")
+    le = F.size(F.filter(F.col("__values"), lambda x: x <= v))
+    rank = F.when(n >= min_periods, 100.0 * le / n)
+    return _trailing_window(df, ts_col, keys, lookback_seconds, bucket_seconds, out_col, frame, rank)
 
 
 def rolling_minmax_rank(
@@ -131,9 +136,7 @@ def rolling_minmax_rank(
     -> null (reference iv_percentile.py:142-147, inf -> NaN).
     ``bucket_seconds``: see ``_trailing_window``."""
     v = F.col(value_col)
-
-    def rank(w: WindowSpec) -> Column:
-        lo, hi, cnt = F.min(v).over(w), F.max(v).over(w), F.count(v).over(w)
-        return F.when(cnt >= min_periods, (v - lo) / nullif_zero(hi - lo) * 100.0)
-
-    return _trailing_window(df, ts_col, keys, lookback_seconds, bucket_seconds, out_col, rank)
+    frame = {"__lo": F.min(v), "__hi": F.max(v), "__cnt": F.count(v)}
+    lo, hi, cnt = F.col("__lo"), F.col("__hi"), F.col("__cnt")
+    rank = F.when(cnt >= min_periods, (v - lo) / nullif_zero(hi - lo) * 100.0)
+    return _trailing_window(df, ts_col, keys, lookback_seconds, bucket_seconds, out_col, frame, rank)

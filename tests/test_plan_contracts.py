@@ -144,6 +144,34 @@ def test_feature_stages_plan_no_python(spark, trades_df, spot_pdf, stage):
     assert not found, f"{stage} plans {found}"
 
 
+def test_codegen_cache_holds_a_feature_pass(spark, trades_df, spot_pdf):
+    """A second build and collect of perfbench's 8 feature stages
+    compiles no class: the generated-code cache holds every class a
+    pass generates. At Spark's default of 100 entries the LRU evicts
+    them (a pass over perfbench's table generates 125-140), and every
+    pass compiles them again. AQE is off for the test so that both
+    passes plan the same classes: with it on, the second pass of
+    ``contract_pipeline`` can re-plan a few (6 of 46 over a 200k-row
+    table; none from the third pass on)."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    spot = spark.createDataFrame(spot_pdf)
+
+    def one_pass() -> int:
+        for build in FEATURE_STAGES.values():
+            build(trades_df, spot).collect()
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        compiled = one_pass()
+        assert one_pass() == compiled
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_simhash_has_no_post_checkpoint_exchange(spark):
     """r11 rework pin: simhash_near_pairs' candidate dedup is a
     first-zero-XOR-chunk filter, not a distinct() — the visible plan
