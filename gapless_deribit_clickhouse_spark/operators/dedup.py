@@ -25,17 +25,35 @@ the columns every version of a trade shares (``dedup_invariant``):
 rows. Its ``timestamp`` range stays above the window, because a
 re-delivery may land in a later ``trade_month`` partition, or after
 the range, than the version it replaces.
+
+Land cheaply, merge later: ``schema.ddl.write_table(mode="append")``
+dedups each batch as it lands (a version that loses inside the batch
+also loses in the table) and marks the partition leaves it created
+with a clean marker (:func:`mark_clean`). :func:`compact_table` then
+launches no Spark job for a selection that one dedup pass left clean.
+The marker validates itself (:func:`clean_mark`): it lists the leaf's
+data files, so any later write to the leaf makes it dirty again
+without anyone removing the marker. Appends to an existing leaf do not
+merge with it (no copy-on-write): they leave it dirty until the next
+compaction.
 """
 
 from __future__ import annotations
 
+import json
 import shutil
-from collections.abc import Mapping, Sequence
+import uuid
+from collections.abc import Iterable, Mapping, Sequence
 from pathlib import Path
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+
+# Spark, pyarrow and ``*.parquet`` globs all skip this name: it starts
+# with ``_``, holds no ``=`` and is not a ``.parquet`` file.
+CLEAN_MARKER = "_DEDUP_CLEAN"
 
 
 def dedup_latest(
@@ -66,7 +84,7 @@ def dedup_latest(
     )
 
 
-def _partition_leaves(root: Path, depth: int) -> list[Path]:
+def partition_leaves(root: Path, depth: int) -> list[Path]:
     """Partition leaf dirs ``depth`` levels under ``root``, relative to
     it; ``Path(".")`` stands for an unpartitioned table's root."""
     if not root.exists():
@@ -89,6 +107,34 @@ def _selected(rel: Path, selectors: Sequence[Mapping[str, str]] | None) -> bool:
         c, v = part.split("=", 1)
         values[unquote(c)] = unquote(v)
     return any(all(values[c] == str(v) for c, v in sel.items()) for sel in selectors)
+
+
+def _data_files(leaf: Path) -> list[str]:
+    """The sorted names of the files Spark reads in ``leaf``: it skips
+    names that start with ``_`` or ``.`` (the marker, checksums)."""
+    return sorted(f.name for f in leaf.iterdir() if f.is_file() and not f.name.startswith(("_", ".")))
+
+
+def mark_clean(root: Path, leaves: Iterable[Path]) -> None:
+    """Mark the leaves under ``root`` as the output of one dedup pass:
+    each gets a :data:`CLEAN_MARKER` holding one id shared by the call
+    and the names of the leaf's data files as they are now."""
+    mark = uuid.uuid4().hex
+    for rel in leaves:
+        leaf = root / rel
+        (leaf / CLEAN_MARKER).write_text(json.dumps({"id": mark, "files": _data_files(leaf)}))
+
+
+def clean_mark(leaf: Path) -> str | None:
+    """The id of ``leaf``'s marker while it lists exactly the leaf's
+    data files, else None. Any change to the files after the marker
+    was written (an append, a crash before the marker, a restore)
+    leaves the leaf dirty without anyone removing the marker."""
+    try:
+        marker = json.loads((leaf / CLEAN_MARKER).read_text())
+    except (OSError, ValueError):
+        return None
+    return marker["id"] if marker["files"] == _data_files(leaf) else None
 
 
 def _restore(old: Path, target: Path) -> None:
@@ -114,7 +160,7 @@ def _recover(root: Path, staging: Path, aside: Path, depth: int) -> None:
     (roll back). Only then is staging deleted: by now it holds no
     partition's only copy.
     """
-    for rel in _partition_leaves(aside, depth):
+    for rel in partition_leaves(aside, depth):
         if (staging / rel).exists():
             _restore(aside / rel, root / rel)
     shutil.rmtree(aside, ignore_errors=True)
@@ -163,6 +209,23 @@ def compact_table(
     ``trade_month`` boundary. A full compaction (no ``only_partitions``)
     dedups across every partition and swaps out a partition whose rows
     all lost to winners elsewhere.
+
+    A merge with nothing to merge costs nothing. After the recovery
+    pass, if every selected leaf holds a :data:`CLEAN_MARKER` that
+    still lists its files, and all those markers carry one id (one
+    dedup pass, an append's or a compaction's, covered the whole
+    selection), no Spark job runs: the stats come from the parquet
+    footers, with ``removed`` 0 and ``partitions`` ``[]`` (nothing was
+    swapped). A selection that mixes ids runs: a later version in one
+    leaf may still have to evict an earlier one in another. A
+    compaction that runs counts its input and output rows with two
+    observations on its write job (3 Spark jobs: schema inference, the
+    shuffle map stage, the write) and marks its staged leaves with one
+    id before the swap, so each leaf and its marker move in one rename.
+
+    One writer per table: no ``write_table`` append may land while a
+    compaction of the same table runs (see
+    :func:`~gapless_deribit_clickhouse_spark.schema.ddl.write_table`).
     """
     root = Path(path)
     staging = root.with_name(root.name + "__compacting")
@@ -177,8 +240,20 @@ def compact_table(
                 f"partition_cols {list(partition_cols)}"
             )
     _recover(root, staging, aside, depth)
-    if only_partitions is not None and not only_partitions:
+    # every partition read is swapped, also one whose rows all lost to
+    # winners in other partitions and so has no staged leaf
+    leaves = {rel for rel in partition_leaves(root, depth) if _selected(rel, only_partitions)}
+    if only_partitions is not None and not leaves:
         return {"rows_before": 0, "rows_after": 0, "removed": 0, "partitions": []}
+    marks = {clean_mark(root / rel) for rel in leaves}
+    if len(marks) == 1 and None not in marks:
+        # one dedup pass left the whole selection clean: nothing to merge
+        rows = sum(
+            pq.read_metadata(root / rel / name).num_rows
+            for rel in leaves
+            for name in _data_files(root / rel)
+        )
+        return {"rows_before": rows, "rows_after": rows, "removed": 0, "partitions": []}
 
     df = spark.read.parquet(path)
     if only_partitions:
@@ -190,11 +265,10 @@ def compact_table(
                 one = cond if one is None else one & cond
             sel = one if sel is None else sel | one
         df = df.filter(sel)
-    # every partition read is swapped, also one whose rows all lost to
-    # winners in other partitions and so has no staged leaf
-    leaves = {rel for rel in _partition_leaves(root, depth) if _selected(rel, only_partitions)}
-    rows_before = df.count()
-    out = dedup_latest(df, keys, version_cols)
+    # the row counts ride on the write job instead of two count() jobs
+    read, kept = Observation(), Observation()
+    df = df.observe(read, F.count(F.lit(1)).alias("rows"))
+    out = dedup_latest(df, keys, version_cols).observe(kept, F.count(F.lit(1)).alias("rows"))
     if sort_within_partitions:
         out = out.sortWithinPartitions(*sort_within_partitions)
 
@@ -202,7 +276,11 @@ def compact_table(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.save(str(staging))
-    leaves |= set(_partition_leaves(staging, depth))
+    rows_before, rows_after = read.get["rows"], kept.get["rows"]
+    staged = partition_leaves(staging, depth)
+    # the marker goes in before the swap, so it moves with its leaf
+    mark_clean(staging, staged)
+    leaves |= set(staged)
 
     for rel in sorted(leaves):
         target, new, old = root / rel, staging / rel, aside / rel
@@ -215,12 +293,6 @@ def compact_table(
         shutil.rmtree(old, ignore_errors=True)
     shutil.rmtree(aside, ignore_errors=True)
     shutil.rmtree(staging, ignore_errors=True)
-
-    # one real count on the rewritten slice keeps the stats honest
-    compacted = spark.read.parquet(path)
-    if only_partitions:
-        compacted = compacted.filter(sel)
-    rows_after = compacted.count()
     return {
         "rows_before": rows_before,
         "rows_after": rows_after,

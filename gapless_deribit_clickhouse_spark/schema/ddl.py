@@ -11,9 +11,12 @@ within-partition sort order is applied by the writer, not the DDL
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gapless_deribit_clickhouse_spark.operators.dedup import dedup_latest, mark_clean, partition_leaves
 from gapless_deribit_clickhouse_spark.schema.loader import TableSchema
 
 _DDL_TYPES = {
@@ -81,12 +84,38 @@ def with_partition_columns(df: DataFrame, schema: TableSchema) -> DataFrame:
 def write_table(df: DataFrame, schema: TableSchema, path: str, mode: str = "append") -> None:
     """Write parquet in the declared physical layout: derived partition
     columns, partitionBy, and within-partition sort for row-group
-    pruning (the reference's ORDER BY analogue)."""
+    pruning (the reference's ORDER BY analogue).
+
+    ``mode="append"`` on a schema with a ``dedup_key`` lands the batch
+    already deduplicated (:func:`~gapless_deribit_clickhouse_spark.operators.dedup.dedup_latest`
+    on ``dedup_key``/``dedup_version``): a version that loses inside
+    the batch also loses in the table, so FINAL reads do not change.
+    Every partition leaf the batch created then gets a clean marker
+    (``operators.dedup.mark_clean``, one id per call), so a later
+    ``compact_table`` over those leaves alone launches no Spark job. A
+    leaf the batch appended to is left unmarked, and its old marker no
+    longer matches its files: it is dirty until compacted. Any other
+    ``mode`` (``"overwrite"``) lands the frame exactly as given, with
+    its duplicates and no marker.
+
+    One writer per table: an append must not run while a
+    ``compact_table`` of the same table runs. A file that lands in a
+    leaf between the compaction's read and its swap is deleted with the
+    leaf's old copy.
+    """
     out = with_partition_columns(df, schema)
+    dedup = mode == "append" and bool(schema.dedup_key)
+    if dedup:
+        out = dedup_latest(out, schema.dedup_key, schema.dedup_version)
     if schema.sort_within_partitions:
         out = out.sortWithinPartitions(*schema.sort_within_partitions)
     writer = out.write.mode(mode).format(schema.format)
     if schema.partition_by:
         writer = writer.partitionBy(*schema.partition_by)
+    if not dedup:
+        writer.save(path)
+        return
+    root, depth = Path(path), len(schema.partition_by)
+    existing = set(partition_leaves(root, depth))
     writer.save(path)
-
+    mark_clean(root, [rel for rel in partition_leaves(root, depth) if rel not in existing])

@@ -2,12 +2,20 @@
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
+import json
+import os
+import tempfile
+import uuid
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
 from conftest import TRADES_SCHEMA, make_trades_pdf
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.api import describe, fetch_trades
@@ -103,6 +111,20 @@ def test_dedup_keeps_latest(spark):
     assert out.loc["t1"].price == 2.0
 
 
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_compact_table_partition_selective(spark, tmp_path):
     from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
 
@@ -156,15 +178,23 @@ def test_compact_table_unpartitioned(spark, tmp_path):
     path = str(tmp_path / "flat")
     rows = [("a", 1, 1.0), ("a", 2, 2.0), ("b", 1, 3.0)]
     spark.createDataFrame(rows, "k string, v int, x double").write.parquet(path)
-    stats = compact_table(spark, path, keys=["k"], version_cols=["v"])
+    stats, jobs = _jobs(spark, lambda: compact_table(spark, path, keys=["k"], version_cols=["v"]))
     assert stats == {
         "rows_before": 3, "rows_after": 2, "removed": 1, "partitions": ["."],
     }
+    # schema inference, the shuffle map stage and the write: the stats
+    # ride on the write job instead of two count() jobs
+    assert 0 < jobs <= 3
     got = spark.read.parquet(path).toPandas().set_index("k")
     assert got.loc["a"].x == 2.0
 
 
 _FACT_DDL = "trade_id string, timestamp timestamp, price double, trade_month string"
+# the layout ``_FACT_DDL`` rows land in through ``write_table``
+_FACT = dataclasses.replace(
+    load_schema("options_trades"), partition_by=("trade_month",),
+    sort_within_partitions=("timestamp",), dedup_version=("timestamp",),
+)
 
 
 def test_compact_table_all_losers_partition(spark, tmp_path):
@@ -227,14 +257,32 @@ class _Crash(Exception):
     pass
 
 
+def _leaf_marks(path, depth: int = 1) -> dict[str, str | None]:
+    """Each partition leaf's ``clean_mark``, checking on the way that a
+    marker validates a leaf only while it lists exactly the leaf's
+    parquet files."""
+    from gapless_deribit_clickhouse_spark.operators.dedup import CLEAN_MARKER, clean_mark
+
+    marks = {}
+    for leaf in sorted(Path(path).glob("/".join(["*=*"] * depth))):
+        mark = marks[str(leaf.relative_to(path))] = clean_mark(leaf)
+        if mark is not None:
+            listed = json.loads((leaf / CLEAN_MARKER).read_text())["files"]
+            assert listed == sorted(f.name for f in leaf.glob("*.parquet")), leaf
+    return marks
+
+
 def test_compact_table_recovers_from_a_crash_at_every_step(spark, tmp_path, monkeypatch):
     """Crash the compaction at each rename and rmtree it makes, then
     rerun it: every trade_id survives exactly once, as its winner, and
-    no aside or staging copy is left."""
+    no aside or staging copy is left. After the recovery pass rolls the
+    swap back or forward, no marker validates a leaf whose files
+    differ from its list, and after the rerun one marker id covers the
+    table."""
     import os
     import shutil
 
-    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+    from gapless_deribit_clickhouse_spark.operators.dedup import CLEAN_MARKER, compact_table
 
     rows, want = _fault_rows()
     calls, crash_at = [], [0]
@@ -249,20 +297,30 @@ def test_compact_table_recovers_from_a_crash_at_every_step(spark, tmp_path, monk
 
     monkeypatch.setattr(os, "rename", failing(os.rename))
     monkeypatch.setattr(shutil, "rmtree", failing(shutil.rmtree))
+    kwargs = dict(keys=["trade_id"], version_cols=["timestamp"], partition_cols=["trade_month"])
 
     def compact(path):
         calls.clear()
-        return compact_table(
-            spark, path, keys=["trade_id"], version_cols=["timestamp"],
-            partition_cols=["trade_month"], sort_within_partitions=["timestamp"],
-        )
+        return compact_table(spark, path, sort_within_partitions=["timestamp"], **kwargs)
 
     def fresh(name):
+        """Each trade's first version landed by ``write_table`` (its
+        leaves marked clean), the re-deliveries appended as plain files
+        (the leaves they reach keep a stale marker)."""
         path = tmp_path / name / "fact"
-        spark.createDataFrame(rows, _FACT_DDL).write.partitionBy("trade_month").parquet(str(path))
+        firsts, later, seen = [], [], set()
+        for r in rows:
+            (later if r[0] in seen else firsts).append(r)
+            seen.add(r[0])
+        write_table(spark.createDataFrame(firsts, _FACT_DDL), _FACT, str(path))
+        spark.createDataFrame(later, _FACT_DDL).write.mode("append").partitionBy("trade_month").parquet(str(path))
         return path
 
-    compact(str(fresh("clean")))
+    path = fresh("clean")
+    marks = _leaf_marks(path)
+    stale = [leaf for leaf, mark in marks.items() if mark is None and (path / leaf / CLEAN_MARKER).exists()]
+    assert stale and set(marks.values()) - {None}
+    compact(str(path))
     steps = len(calls)
     assert calls.count("rename") >= 5  # two leaves renamed aside and in, one aside only
     for n in range(1, steps + 1):
@@ -271,11 +329,15 @@ def test_compact_table_recovers_from_a_crash_at_every_step(spark, tmp_path, monk
         with pytest.raises(_Crash):
             compact(str(path))
         crash_at[0] = 0
+        compact_table(spark, str(path), only_partitions=[], **kwargs)  # the recovery pass alone
+        _leaf_marks(path)
         compact(str(path))
         got = _fact_rows(spark, str(path))
         assert got.select("trade_id").distinct().count() == len(want), f"crash at step {n}"
         assert sorted(map(tuple, got.collect())) == want, f"crash at step {n}"
         assert not any(p.name.endswith(("__old", "__compacting")) for p in path.parent.iterdir())
+        marks = set(_leaf_marks(path).values())
+        assert len(marks) == 1 and None not in marks, f"crash at step {n}"
 
 
 def test_compact_table_recovery_keeps_rows_written_after_a_crash(spark, tmp_path, monkeypatch):
@@ -307,6 +369,150 @@ def test_compact_table_recovery_keeps_rows_written_after_a_crash(spark, tmp_path
     compact_table(spark, path, **kwargs)
     got = _fact_rows(spark, path)
     assert sorted(map(tuple, got.collect())) == sorted(want + late)
+
+
+_TRADES_KW = dict(
+    keys=["trade_id"], version_cols=["timestamp", "trade_id"],
+    partition_cols=["underlying", "trade_month"], sort_within_partitions=["expiry", "timestamp"],
+)
+
+
+def _trade_rows(df):
+    return sorted(map(tuple, df.select(*TRADES_SCHEMA.names).collect()))
+
+
+def test_append_lands_deduplicated_and_marks_new_leaves(spark, tmp_path):
+    """An append keeps each trade's winner within the batch and marks
+    the leaves it created with one id; compacting them launches no
+    Spark job and reads its stats from the parquet footers."""
+    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+
+    schema, path = load_schema("options_trades"), str(tmp_path / "options_trades")
+    batch = spark.createDataFrame(_redelivered_trades_pdf(), schema=TRADES_SCHEMA)
+    write_table(batch, schema, path)
+    table = spark.read.parquet(path)
+    assert _trade_rows(table) == _trade_rows(dedup_latest(batch, ["trade_id"], ["timestamp", "trade_id"]))
+    # TRD-Y's November version lost inside the batch: no November leaf
+    marks = _leaf_marks(path, depth=2)
+    assert sorted(marks) == ["underlying=BTC/trade_month=202412", "underlying=ETH/trade_month=202412"]
+    assert len(set(marks.values())) == 1 and None not in marks.values()
+    stats, jobs = _jobs(spark, lambda: compact_table(spark, path, **_TRADES_KW))
+    assert jobs == 0
+    assert stats == {"rows_before": table.count(), "rows_after": table.count(), "removed": 0, "partitions": []}
+
+
+def test_compact_table_skips_only_a_selection_one_dedup_pass_covered(spark, tmp_path):
+    """TRD-Y's first version lands in a November leaf with one append,
+    its winner in a new December leaf with the next. Compacting
+    December alone launches no job; compacting both (two marker ids)
+    runs and evicts the November version. FINAL reads equal a
+    whole-table dedup before and after."""
+    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+
+    schema, path = load_schema("options_trades"), str(tmp_path / "options_trades")
+    pdf = _redelivered_trades_pdf()
+    november = pdf.timestamp < pd.Timestamp("2024-12-01")
+    assert set(pdf[november].trade_id) == {"TRD-Y"}
+    for part in (pdf[november], pdf[~november]):
+        write_table(spark.createDataFrame(part, schema=TRADES_SCHEMA), schema, path)
+    cases = [
+        dict(underlying="BTC", end="2024-12-01", limit=50),
+        dict(underlying="BTC", start="2024-11-30", end="2024-12-01"),
+        dict(underlying="BTC", start="2024-11-30", end="2024-11-30"),
+    ]
+
+    def final_matches_whole_table_dedup():
+        table = spark.read.parquet(path)
+        whole = dedup_latest(table, keys=["trade_id"], version_cols=["timestamp", "trade_id"])
+        for args in cases:
+            assert fetch_trades(table, **args).collect() == fetch_trades(whole, use_final=False, **args).collect()
+        return table.filter(F.col("trade_id") == "TRD-Y").count()
+
+    assert final_matches_whole_table_dedup() == 2
+    nov = {"underlying": "BTC", "trade_month": "202411"}
+    dec = {"underlying": "BTC", "trade_month": "202412"}
+    stats, jobs = _jobs(spark, lambda: compact_table(spark, path, only_partitions=[dec], **_TRADES_KW))
+    in_dec = spark.read.parquet(path).filter("underlying = 'BTC' AND trade_month = '202412'").count()
+    assert jobs == 0
+    assert stats == {"rows_before": in_dec, "rows_after": in_dec, "removed": 0, "partitions": []}
+    stats, jobs = _jobs(spark, lambda: compact_table(spark, path, only_partitions=[nov, dec], **_TRADES_KW))
+    assert jobs > 0 and stats["removed"] == 1
+    assert stats["partitions"] == ["underlying=BTC/trade_month=202411", "underlying=BTC/trade_month=202412"]
+    assert final_matches_whole_table_dedup() == 1
+
+
+def test_compact_table_compacts_a_clean_leaf_again_after_a_plain_append(spark, tmp_path):
+    """A file a plain Spark append adds to a marked leaf leaves the
+    marker stale, so the next compaction runs."""
+    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+    from gapless_deribit_clickhouse_spark.schema.ddl import with_partition_columns
+
+    schema, path = load_schema("options_trades"), str(tmp_path / "options_trades")
+    pdf = make_trades_pdf()
+    write_table(spark.createDataFrame(pdf, schema=TRADES_SCHEMA), schema, path)
+    later = pdf.iloc[::5].assign(timestamp=lambda d: d.timestamp + pd.Timedelta(seconds=1), price=lambda d: d.price + 1)
+    late = with_partition_columns(spark.createDataFrame(later, schema=TRADES_SCHEMA), schema)
+    late.write.mode("append").partitionBy(*schema.partition_by).parquet(path)
+    stats, jobs = _jobs(spark, lambda: compact_table(spark, path, **_TRADES_KW))
+    assert jobs > 0
+    assert stats == {
+        "rows_before": len(pdf) + len(later), "rows_after": len(pdf), "removed": len(later),
+        "partitions": ["underlying=BTC/trade_month=202412"],
+    }
+    got = spark.read.parquet(path).toPandas().set_index("trade_id")
+    assert got.loc[later.trade_id, "price"].tolist() == later.price.tolist()
+
+
+def test_append_crash_before_the_markers_then_a_rerun_keeps_the_winners(spark, tmp_path, monkeypatch):
+    """An append that dies after its data write and before its
+    markers, then the batch replayed and the table compacted: exactly
+    the winners remain. The replay lands in leaves it did not create,
+    so it marks none of them and the compaction runs."""
+    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+    from gapless_deribit_clickhouse_spark.schema import ddl
+
+    schema, path = load_schema("options_trades"), str(tmp_path / "options_trades")
+    batch = spark.createDataFrame(_redelivered_trades_pdf(), schema=TRADES_SCHEMA)
+    winners = _trade_rows(dedup_latest(batch, ["trade_id"], ["timestamp", "trade_id"]))
+
+    def crash(*args):
+        raise _Crash("before the markers")
+
+    monkeypatch.setattr(ddl, "mark_clean", crash)
+    with pytest.raises(_Crash):
+        write_table(batch, schema, path)
+    monkeypatch.undo()
+    assert set(_leaf_marks(path, depth=2).values()) == {None}
+    write_table(batch, schema, path)
+    stats = compact_table(spark, path, **_TRADES_KW)
+    assert stats["removed"] == len(winners)
+    assert _trade_rows(spark.read.parquet(path)) == winners
+
+
+def test_one_writer_per_table(spark, tmp_path, monkeypatch):
+    """``write_table`` and ``compact_table`` assume one writer per
+    table. An append that lands in a leaf after the compaction read it
+    and before the swap is deleted with the leaf's old copy; the same
+    append after ``compact_table`` returns is kept."""
+    from gapless_deribit_clickhouse_spark.operators import dedup
+
+    rows, want = _fault_rows()
+    path = str(tmp_path / "fact")
+    spark.createDataFrame(rows, _FACT_DDL).write.partitionBy("trade_month").parquet(path)
+    late = [("t_late", dt.datetime(2024, 1, 15, 12), 9.0, "202401")]
+    real_mark = dedup.mark_clean
+
+    def append_then_mark(root, leaves):
+        write_table(spark.createDataFrame(late, _FACT_DDL), _FACT, path)
+        real_mark(root, leaves)
+
+    kwargs = dict(keys=["trade_id"], version_cols=["timestamp"], partition_cols=["trade_month"])
+    monkeypatch.setattr(dedup, "mark_clean", append_then_mark)
+    dedup.compact_table(spark, path, **kwargs)
+    monkeypatch.undo()
+    assert sorted(map(tuple, _fact_rows(spark, path).collect())) == want
+    write_table(spark.createDataFrame(late, _FACT_DDL), _FACT, path)
+    assert sorted(map(tuple, _fact_rows(spark, path).collect())) == sorted(want + late)
 
 
 def test_use_final_flag(spark):
@@ -386,7 +592,9 @@ def test_final_pushdown_matches_whole_table_dedup(spark, tmp_path):
     the earlier one."""
     path = str(tmp_path / "options_trades")
     pdf = _redelivered_trades_pdf()
-    write_table(spark.createDataFrame(pdf, schema=TRADES_SCHEMA), load_schema("options_trades"), path)
+    # overwrite lands the superseded versions too (an append dedups)
+    write_table(spark.createDataFrame(pdf, schema=TRADES_SCHEMA), load_schema("options_trades"), path,
+                mode="overwrite")
     table = spark.read.parquet(path)
     whole = dedup_latest(table, keys=["trade_id"], version_cols=["timestamp"])
     z = pdf[pdf.trade_id == "TRD-Z"].iloc[0]
@@ -417,6 +625,62 @@ def test_final_pushdown_matches_whole_table_dedup(spark, tmp_path):
     conditions = [n.condition().toString() for n in below if n.getClass().getSimpleName() == "FilterExec"]
     conditions += [n.dataFilters().toString() for n in scans]
     assert conditions and not any("timestamp" in c for c in conditions)
+
+
+_T0 = dt.datetime(2024, 11, 30, 23, 59, 58)
+
+
+@st.composite
+def _landed_batches(draw):
+    """1-4 batches of versions of five trades (three BTC, two ETH), as
+    (trade, seconds after ``_T0``, price step): versions tie on
+    ``timestamp`` (the price breaks the tie), a trade comes again in
+    the same batch or a later one, and seconds 2-3 cross into
+    December."""
+    version = st.tuples(st.integers(0, 4), st.integers(0, 3), st.integers(0, 2))
+    return draw(st.lists(st.lists(version, min_size=1, max_size=6), min_size=1, max_size=4))
+
+
+def _version_rows(batch):
+    rows = []
+    for trade, seconds, step in batch:
+        und, strike = ("BTC" if trade < 3 else "ETH"), 1000.0 * (trade + 1)
+        rows.append((
+            f"T{trade}", f"{und}-27DEC24-{int(strike)}-C", _T0 + dt.timedelta(seconds=seconds),
+            0.01 * (1 + step), 1.0, "buy", 50.0, None, None, und, dt.date(2024, 12, 27), strike, "C",
+        ))
+    return rows
+
+
+@given(batches=_landed_batches())
+@settings(max_examples=6, deadline=None)
+def test_deduplicated_appends_match_plain_appends(spark, batches):
+    """The same batches landed by ``write_table(mode="append")`` and
+    as plain parquet appends: FINAL point and latest-N reads agree
+    before any compaction, and after ``compact_table()`` the two
+    tables hold identical rows."""
+    from gapless_deribit_clickhouse_spark.operators.dedup import compact_table
+    from gapless_deribit_clickhouse_spark.schema.ddl import with_partition_columns
+
+    schema = load_schema("options_trades")
+    queries = [
+        dict(underlying="BTC", expiry="2024-12-27", strike=1000.0, option_type="C",
+             start="2024-11-30", end="2024-12-01"),
+        dict(underlying="BTC", end="2024-12-01", limit=2),
+        dict(underlying="ETH", end="2024-12-01", limit=1),
+    ]
+    with tempfile.TemporaryDirectory() as tmp:
+        deduped, plain = os.path.join(tmp, "deduped"), os.path.join(tmp, "plain")
+        for batch in batches:
+            df = spark.createDataFrame(_version_rows(batch), schema=TRADES_SCHEMA)
+            write_table(df, schema, deduped)
+            with_partition_columns(df, schema).write.mode("append").partitionBy(*schema.partition_by).parquet(plain)
+        for q in queries:
+            assert (fetch_trades(spark.read.parquet(deduped), **q).collect()
+                    == fetch_trades(spark.read.parquet(plain), **q).collect()), q
+        for path in (deduped, plain):
+            compact_table(spark, path, **_TRADES_KW)
+        assert _trade_rows(spark.read.parquet(deduped)) == _trade_rows(spark.read.parquet(plain))
 
 
 def test_check_dedup_invariant(spark):
