@@ -21,7 +21,7 @@ features/    the reference's domain feature surface (contract
              selection, spot enrichment, moneyness, PCR, term
              structure, DTE buckets, IV percentile, Greeks, EGARCH)
 pipelines/   large-scale training-data ops (dedup exact/minhash/
-             simhash/ngram/embedding, ANN search, text stats)
+             simhash/ngram/embedding, ANN search)
 sources/     batch ingestion (paginated collector emulation,
              continuity validation, idempotent sinks, checkpoints)
 streaming/   Structured Streaming ingestion (watermark + dedup)
@@ -94,16 +94,6 @@ _HOME = {
     "cosine_topk": "pipelines.embeddings",
     "ivf_topk": "pipelines.embeddings",
     "embedding_near_dup_pairs": "pipelines.embeddings",
-    "quality_score": "pipelines.text_stats",
-    "lang_id": "pipelines.text_stats",
-    "token_count": "pipelines.text_stats",
-    "bpe_ish_token_count": "pipelines.text_stats",
-    "fingerprint": "pipelines.text_stats",
-    "bigram_lm_score": "pipelines.text_stats",
-    "token_topk": "pipelines.text_stats",
-    "tfidf_top_terms": "pipelines.text_stats",
-    "repetition_stats": "pipelines.text_stats",
-    "corpus_profile": "pipelines.text_stats",
     "interdoc_repetition": "pipelines.text_dedup",
     "incremental_dedup": "pipelines.text_dedup",
     "project_embeddings": "pipelines.embeddings",
@@ -130,7 +120,6 @@ _HOME = {
     "write_stream_to_connector": "sinks.connector",
     "lsh_params": "pipelines.embeddings",
     "minhash_params": "pipelines.text_dedup",
-    "hashed_linear_score": "pipelines.text_stats",
 }
 # reference-name aliases (reference __init__.py:42-65 /
 # features/__init__.py:61-88): a reference user's import keeps working

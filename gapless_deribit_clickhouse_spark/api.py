@@ -193,7 +193,6 @@ def describe() -> dict:
             "pipelines": [
                 "exact_dedup", "minhash_lsh", "simhash", "ngram_jaccard",
                 "cosine_topk", "ivf_topk", "embedding_near_dup",
-                "lang_id", "quality_score", "token_count", "fingerprint",
             ],
         },
         "data_sources": ["parquet", "parquet_stream"],

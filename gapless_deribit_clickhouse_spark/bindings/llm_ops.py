@@ -1,8 +1,8 @@
 """LLM-data-pipeline bindings: dedup (exact / n-gram Jaccard /
 MinHash-LSH / SimHash / containment, corpus-level near-dedup),
 embedding similarity (brute-force + IVF + near-dup, projection, int8
-quantization) and text analysis — each with a DuckDB oracle built
-from the SAME deterministic md5/arithmetic primitives."""
+quantization) — each with a DuckDB oracle built from the SAME
+deterministic md5/arithmetic primitives."""
 
 from __future__ import annotations
 
@@ -20,14 +20,6 @@ from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_pairs,
-)
-from gapless_deribit_clickhouse_spark.pipelines.text_stats import (
-    bpe_ish_token_count,
-    fingerprint,
-    lang_id,
-    quality_score,
-    repetition_stats,
-    token_count,
 )
 
 # One source of truth for the near-dedup Jaccard cutoff: the Spark
@@ -311,110 +303,6 @@ SELECT query_id, vec_id, rank, cosine_sim FROM r WHERE rank <= 10
 """
 
 
-# --- text analysis ---
-def quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return quality_score(_docs(spark, sf_dir))
-
-
-_NT = f"CASE WHEN length({_NORM}) = 0 THEN 0 ELSE len(string_split({_NORM}, ' ')) END"
-_STOP_HITS = " + ".join(
-    f"len(list_filter(string_split({_NORM}, ' '), x -> x = '{w}'))"
-    for w in ("the", "and", "of", "to", "in")
-)
-
-QUALITY_SQL = f"""
-SELECT doc_id,
-       CAST(length(text) AS BIGINT) AS char_count,
-       CAST({_NT} AS BIGINT) AS n_tokens,
-       CAST(CASE WHEN {_NT} > 0 THEN length({_NORM}) / {_NT} ELSE 0.0 END AS DOUBLE) AS mean_token_len,
-       CAST(CASE WHEN length(text) > 0 THEN length(regexp_replace({_NORM}, '[a-z0-9 ]', '', 'g')) / length(text) ELSE 0.0 END AS DOUBLE) AS punct_ratio,
-       CAST(CASE WHEN {_NT} > 0 THEN ({_STOP_HITS}) / {_NT} ELSE 0.0 END AS DOUBLE) AS stopword_ratio,
-       CAST(CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[^A-Z]', '', 'g')) / length(text) ELSE 0.0 END AS DOUBLE) AS upper_ratio,
-       CAST(least({_NT} / 100.0, 1.0) * 0.4
-          + least(CASE WHEN {_NT} > 0 THEN ({_STOP_HITS}) / {_NT} ELSE 0.0 END * 5.0, 1.0) * 0.3
-          + (1.0 - least(CASE WHEN length(text) > 0 THEN length(regexp_replace({_NORM}, '[a-z0-9 ]', '', 'g')) / length(text) ELSE 0.0 END * 4.0, 1.0)) * 0.2
-          + (1.0 - least(CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[^A-Z]', '', 'g')) / length(text) ELSE 0.0 END * 5.0, 1.0)) * 0.1 AS DOUBLE) AS quality_score
-FROM documents
-"""
-
-
-def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lang_id(_docs(spark, sf_dir))
-
-
-def _lang_sql() -> str:
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import LANG_MARKERS
-
-    hits = {
-        lang: " + ".join(
-            f"len(list_filter(string_split({_NORM}, ' '), x -> x = '{w}'))" for w in words
-        )
-        for lang, words in LANG_MARKERS.items()
-    }
-    best = "greatest(" + ", ".join(f"hits_{lang}" for lang in sorted(hits)) + ")"
-    pred = "CASE " + " ".join(
-        f"WHEN hits_{lang} = {best} AND {best} > 0 THEN '{lang}'" for lang in sorted(hits)
-    ) + " ELSE 'und' END"
-    cols = ",\n       ".join(f"CAST({hits[lang]} AS BIGINT) AS hits_{lang}" for lang in sorted(hits))
-    return f"""
-WITH h AS (
-  SELECT doc_id,
-       {cols}
-  FROM documents)
-SELECT doc_id, {', '.join(f'hits_{lang}' for lang in sorted(hits))}, {pred} AS lang_pred
-FROM h
-"""
-
-
-LANG_ID_SQL = _lang_sql()
-
-
-def fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fingerprint(_docs(spark, sf_dir))
-
-
-FINGERPRINT_SQL = f"""
-SELECT doc_id,
-       md5(array_to_string(list_sort(list_distinct(string_split({_NORM}, ' '))), ' ')) AS fingerprint,
-       CAST(len(list_distinct(string_split({_NORM}, ' '))) AS BIGINT) AS n_distinct_tokens
-FROM documents
-"""
-
-
-def token_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        token_count(F.col("text")).cast("bigint").alias("ws_tokens"),
-        bpe_ish_token_count(F.col("text")).cast("bigint").alias("bpe_tokens"),
-    )
-
-
-TOKEN_COUNTS_SQL = f"""
-SELECT doc_id,
-       CAST({_NT} AS BIGINT) AS ws_tokens,
-       CAST(len(list_filter(regexp_split_to_array({_NORM}, '[^a-z0-9]+'), x -> len(x) > 0))
-            + length(regexp_replace({_NORM}, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS bpe_tokens
-FROM documents
-"""
-
-
-# --- corpus vocabulary head: top-k tokens by frequency ---
-def token_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import token_topk
-
-    return token_topk(_docs(spark, sf_dir), k=50)
-
-
-TOKEN_TOPK_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS token FROM documents)
-SELECT token, count(*) AS term_count, count(DISTINCT doc_id) AS doc_freq
-FROM toks WHERE len(token) > 0
-GROUP BY token ORDER BY term_count DESC, token ASC LIMIT 50
-"""
-
-
 # --- duplicate clustering: near-dup pairs -> connected components ->
 #     canonical representative per cluster ---
 def dup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -460,132 +348,6 @@ SELECT e.vec_id,
 FROM embeddings e
 LEFT JOIN comp cm ON e.vec_id = cm.id
 LEFT JOIN sizes s ON cm.component = s.component
-"""
-
-
-# --- tf-idf top terms per document ---
-def tfidf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import tfidf_top_terms
-
-    return tfidf_top_terms(_docs(spark, sf_dir), k_per_doc=5)
-
-
-TFIDF_SQL = f"""
-WITH toks AS (
-  SELECT doc_id AS doc, unnest(string_split({_NORM}, ' ')) AS token FROM documents),
-tf AS (
-  SELECT doc, token, count(*) AS tf FROM toks WHERE len(token) > 0 GROUP BY 1, 2),
-dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-n AS (SELECT count(*) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc AS doc_id, tf.token, tf.tf,
-         tf.tf * (ln((n.n_docs + 1.0) / (dfreq.df + 1.0)) + 1.0) AS tfidf
-  FROM tf JOIN dfreq USING (token) CROSS JOIN n),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, token) AS rank
-  FROM scored)
-SELECT doc_id, token, CAST(tf AS BIGINT) AS tf, CAST(rank AS BIGINT) AS rank,
-       CAST(tfidf AS DOUBLE) AS tfidf
-FROM r WHERE rank <= 5
-"""
-
-
-# --- per-group corpus profile (count / tokens / percentiles) ---
-def corpus_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import corpus_profile
-
-    # exact percentiles for cross-engine reproducibility (the approx
-    # t-digest default is the scale path but not oracle-comparable)
-    return corpus_profile(_docs(spark, sf_dir), group_col="lang", exact=True)
-
-
-_NT_D = (
-    f"CAST(CASE WHEN length({_NORM}) = 0 THEN 0 "
-    f"ELSE len(string_split({_NORM}, ' ')) END AS DOUBLE)"
-)
-
-CORPUS_PROFILE_SQL = f"""
-SELECT lang,
-       count(*) AS n_docs,
-       CAST(sum({_NT_D}) AS BIGINT) AS total_tokens,
-       avg({_NT_D}) AS avg_tokens,
-       quantile_cont({_NT_D}, 0.5) AS p50_tokens,
-       quantile_cont({_NT_D}, 0.9) AS p90_tokens,
-       quantile_cont({_NT_D}, 0.99) AS p99_tokens
-FROM documents GROUP BY lang
-"""
-
-
-# --- within-document repetition signals (Gopher-style filters) ---
-def repetition_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return repetition_stats(_docs(spark, sf_dir), n=2)
-
-
-REPETITION_SQL = f"""
-WITH toks AS ({_TOKS}),
-grams AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 2
-              THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
-              ELSE [array_to_string(t, ' ')] END AS g
-  FROM toks),
-top AS (
-  SELECT doc_id, max(c) AS top_cnt FROM (
-    SELECT doc_id, u, count(*) AS c
-    FROM (SELECT doc_id, unnest(t) AS u FROM toks) GROUP BY 1, 2)
-  GROUP BY 1)
-SELECT t.doc_id,
-       CAST(len(t.t) AS BIGINT) AS n_tokens,
-       (len(t.t) - len(list_distinct(t.t))) / CAST(len(t.t) AS DOUBLE) AS dup_token_frac,
-       (len(g.g) - len(list_distinct(g.g))) / CAST(len(g.g) AS DOUBLE) AS dup_ngram_frac,
-       CAST(top.top_cnt AS BIGINT) AS top_token_count,
-       top.top_cnt / CAST(len(t.t) AS DOUBLE) AS top_token_frac
-FROM toks t JOIN grams g USING (doc_id) JOIN top USING (doc_id)
-"""
-
-
-# --- hashed linear classifier (quality-filter inference) ---
-# Deterministic stand-in weight vector (md5-derived, environment-
-# independent) — the single source of truth for BOTH the Spark plan
-# literal and the DuckDB oracle literal. Real use loads trained
-# logistic-regression weights.
-import hashlib as _hashlib
-
-_CLF_BUCKETS = 256
-_CLF_WEIGHTS = [
-    (int(_hashlib.md5(f"w{i}".encode()).hexdigest()[:8], 16) % 2001 - 1000)
-    / 1000.0
-    for i in range(_CLF_BUCKETS)
-]
-_CLF_BIAS = 0.1
-
-
-def classifier_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import (
-        hashed_linear_score,
-    )
-
-    return hashed_linear_score(
-        _docs(spark, sf_dir), weights=_CLF_WEIGHTS, bias=_CLF_BIAS
-    )
-
-
-_CLF_BUCKET_SQL = (
-    "list_reduce(list_transform(range(1, 9), i -> "
-    "CAST(strpos('0123456789abcdef', substr(md5(tok), i, 1)) - 1 AS BIGINT)), "
-    f"(acc, d) -> acc * 16 + d) % {_CLF_BUCKETS}"
-)
-CLASSIFIER_SQL = f"""
-WITH wt AS (SELECT [{", ".join(repr(w) for w in _CLF_WEIGHTS)}] AS w),
-toks AS (
-  SELECT doc_id, list_filter(string_split({_NORM}, ' '), x -> len(x) > 0) AS t
-  FROM documents)
-SELECT doc_id,
-       1.0 / (1.0 + exp(-({_CLF_BIAS!r} + CASE WHEN len(t) > 0 THEN
-           list_avg(list_transform(t, tok -> w[CAST({_CLF_BUCKET_SQL} AS INT) + 1]))
-           ELSE 0.0 END))) AS clf_score,
-       CAST(COALESCE(len(t), 0) AS BIGINT) AS n_tokens
-FROM toks, wt
 """
 
 
@@ -702,8 +464,7 @@ FROM documents d JOIN kept USING (doc_id)
 # --- inter-document repetition (duplicated n-gram fraction) ---
 def interdoc_repetition_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc fraction of distinct 3-gram shingles shared with >= 5
-    documents — the RefinedWeb-style boilerplate/template signal,
-    complementing repetition_stats' intra-document measure."""
+    documents — the RefinedWeb-style boilerplate/template signal."""
     from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
         interdoc_repetition,
     )
@@ -862,35 +623,6 @@ WHERE e.embedding IS NOT NULL AND len(e.embedding) = {dim}
 EMBEDDING_PROJECT_SQL = _embedding_project_sql()
 
 
-# --- corpus bigram LM quality scoring (CCNet-style ppl filter) ---
-def lm_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import (
-        bigram_lm_score,
-    )
-
-    return bigram_lm_score(_docs(spark, sf_dir), k=0.5)
-
-
-LM_SCORE_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, string_split({_NORM}, ' ') AS l
-  FROM documents
-  WHERE length({_NORM}) > 0 AND len(string_split({_NORM}, ' ')) >= 2),
-pairs AS (
-  SELECT doc_id, pr[1] AS w1, pr[2] AS w2
-  FROM (SELECT doc_id, unnest(list_zip(l[1:-2], l[2:])) AS pr FROM toks) u),
-cnt2 AS (SELECT w1, w2, count(*) AS c2 FROM pairs GROUP BY w1, w2),
-cnt1 AS (SELECT w1, count(*) AS c1 FROM pairs GROUP BY w1),
-voc AS (SELECT count(DISTINCT w2) AS v FROM pairs)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_bigrams,
-       avg(ln((c2 + 0.5) / (c1 + 0.5 * v))) AS avg_logp,
-       exp(-avg(ln((c2 + 0.5) / (c1 + 0.5 * v)))) AS ppl
-FROM pairs JOIN cnt2 USING (w1, w2) JOIN cnt1 USING (w1), voc
-GROUP BY doc_id
-"""
-
-
 # --- int8 embedding quantization (4x shuffle/storage compression) ---
 def embedding_quantize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector symmetric int8 quantization digest: the full qvec
@@ -1035,11 +767,7 @@ WHERE inter / least(sa.c, sb.c) >= 0.9
 
 
 BINDINGS = [
-    ("tfidf_top_terms", tfidf_q, TFIDF_SQL),
-    ("repetition_stats", repetition_q, REPETITION_SQL),
-    ("corpus_profile", corpus_profile_q, CORPUS_PROFILE_SQL),
     ("dup_clusters", dup_clusters_q, DUP_CLUSTERS_SQL),
-    ("token_topk", token_topk_q, TOKEN_TOPK_SQL),
     ("dedup_exact", dedup_exact_q, DEDUP_EXACT_SQL),
     ("ngram_jaccard_pairs", ngram_jaccard_q, NGRAM_JACCARD_SQL),
     ("minhash_lsh_pairs", minhash_lsh_q, MINHASH_LSH_SQL),
@@ -1047,17 +775,11 @@ BINDINGS = [
     ("cosine_topk", cosine_topk_q, COSINE_TOPK_SQL),
     ("embedding_near_dup", emb_near_dup_q, EMB_NEAR_DUP_SQL),
     ("ivf_topk", ivf_topk_q, IVF_TOPK_SQL),
-    ("text_quality", quality_q, QUALITY_SQL),
-    ("lang_id", lang_id_q, LANG_ID_SQL),
-    ("doc_fingerprint", fingerprint_q, FINGERPRINT_SQL),
-    ("token_counts", token_counts_q, TOKEN_COUNTS_SQL),
-    ("classifier_score", classifier_score_q, CLASSIFIER_SQL),
     # the one-call near-dedup filter, oracle-checked standalone
     ("near_dedup_docs", near_dedup_docs_q, NEAR_DEDUP_DOCS_SQL),
     ("interdoc_repetition", interdoc_repetition_q, INTERDOC_REPETITION_SQL),
     ("incremental_dedup", incremental_dedup_q, INCREMENTAL_DEDUP_SQL),
     ("embedding_project", embedding_project_q, EMBEDDING_PROJECT_SQL),
-    ("lm_score", lm_score_q, LM_SCORE_SQL),
     ("embedding_quantize", embedding_quantize_q, EMBEDDING_QUANTIZE_SQL),
     ("quantized_topk", quantized_topk_q, QUANTIZED_TOPK_SQL),
     ("containment_pairs", containment_pairs_q, CONTAINMENT_PAIRS_SQL),

@@ -200,15 +200,17 @@ def compact_table(
     Scale design: pass ``only_partitions`` (list of
     ``{partition_col: value}`` selectors, CH ``OPTIMIZE PARTITION``
     parity) to touch only hot partitions — cost is proportional to the
-    partitions rewritten, never the table; an empty list selects no
-    partition and runs only the recovery pass. The dedup runs only within
-    the selected slice: a key whose versions sit both inside and
-    outside it keeps one version in each. For ``options_trades`` that
-    can happen, because the key is ``trade_id`` alone, not a partition
-    column, and a re-delivery with a later ``timestamp`` can cross a
-    ``trade_month`` boundary. A full compaction (no ``only_partitions``)
-    dedups across every partition and swaps out a partition whose rows
-    all lost to winners elsewhere.
+    partitions rewritten, never the table. A selection with no partition
+    leaf (an empty list, a path never written, a table whose appends
+    were all empty) runs only the recovery pass and returns zero stats,
+    as ``OPTIMIZE ... FINAL`` on an empty ClickHouse table succeeds.
+    The dedup runs only within the selected slice: a key whose versions
+    sit both inside and outside it keeps one version in each. For
+    ``options_trades`` that can happen, because the key is ``trade_id``
+    alone, not a partition column, and a re-delivery with a later
+    ``timestamp`` can cross a ``trade_month`` boundary. A full
+    compaction (no ``only_partitions``) dedups across every partition
+    and swaps out a partition whose rows all lost to winners elsewhere.
 
     A merge with nothing to merge costs nothing. After the recovery
     pass, if every selected leaf holds a :data:`CLEAN_MARKER` that
@@ -243,7 +245,7 @@ def compact_table(
     # every partition read is swapped, also one whose rows all lost to
     # winners in other partitions and so has no staged leaf
     leaves = {rel for rel in partition_leaves(root, depth) if _selected(rel, only_partitions)}
-    if only_partitions is not None and not leaves:
+    if not leaves:
         return {"rows_before": 0, "rows_after": 0, "removed": 0, "partitions": []}
     marks = {clean_mark(root / rel) for rel in leaves}
     if len(marks) == 1 and None not in marks:

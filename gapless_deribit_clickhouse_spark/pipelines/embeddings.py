@@ -624,55 +624,6 @@ def embedding_near_dup_pairs(
     return pairs.filter(F.col("cosine_sim") >= threshold)
 
 
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    query_vecs: list[tuple[int, list[float]]],
-    k: int = 10,
-) -> DataFrame:
-    """Arrow/numpy brute-force variant: queries as a broadcast numpy
-    matrix, corpus streamed through mapInPandas — the high-throughput
-    path when queries are many and vectors wide."""
-    import numpy as np
-
-    spark = corpus.sparkSession
-    qids = [q[0] for q in query_vecs]
-    qmat = np.array([q[1] for q in query_vecs], dtype="float64")
-    qnorm = np.linalg.norm(qmat, axis=1)
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    def score(it):
-        qids_b, qmat_b, qnorm_b = bc.value
-        for pdf in it:
-            mat = np.array(pdf["embedding"].tolist(), dtype="float64")
-            norms = np.linalg.norm(mat, axis=1)
-            denom = np.outer(norms, qnorm_b)
-            # zero-norm mask: NaN would sort ABOVE every real cosine in
-            # Spark; null matches the Column path's divide-by-zero
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = (mat @ qmat_b.T) / denom
-            for j, qid in enumerate(qids_b):
-                col = pd.array(sims[:, j], dtype="Float64")
-                col[denom[:, j] == 0.0] = pd.NA
-                out = pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "vec_id": pdf["vec_id"].to_numpy(),
-                        "cosine_sim": col,
-                    }
-                )
-                yield out
-
-    scored = corpus.select("vec_id", "embedding").mapInPandas(
-        score, schema="query_id long, vec_id long, cosine_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "cosine_sim")
-    )
-
-
 def quantize_embeddings(
     df: DataFrame,
     id_col: str = "vec_id",

@@ -21,8 +21,6 @@ and tests can reproduce values exactly.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -203,9 +201,8 @@ def interdoc_repetition(df: DataFrame, min_docs: int = 5) -> DataFrame:
     document's distinct word 3-grams that also appear in at least
     ``min_docs`` documents (RefinedWeb/C4-style duplicated-n-gram
     fraction — the doc-level boilerplate signal that catches template
-    pages and mirror spam, complementing ``repetition_stats``' INTRA-
-    document measure). Output: (doc_id, n_shingles, shared_shingles,
-    shared_fraction).
+    pages and mirror spam). Output: (doc_id, n_shingles,
+    shared_shingles, shared_fraction).
 
     Scale shape: shingle once, explode 64-bit shingle hashes (not
     strings — ~4x less shuffle), annotate each (doc, shingle) row with
@@ -274,33 +271,6 @@ def minhash_affine_params(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 32,
-    base_hash: str = "md5",
-) -> DataFrame:
-    """Per doc: array of ``num_hashes`` bigint min-hash values over its
-    shingle set.
-
-    Computed entirely WITHIN the row — no explode, NO SHUFFLE. The
-    base md5 hash runs ONCE per shingle (its own projection; Spark's
-    CollapseProject keeps non-cheap expressions single-evaluated);
-    the ``num_hashes`` minima are affine transforms of that base —
-    cheap long arithmetic instead of per-seed md5 (32x fewer digest
-    evaluations; md5 dominated execution). Built as SQL strings: one
-    F.expr = one py4j call, not hundreds of Column-API round-trips.
-
-    ``base_hash``: ``md5`` (default) is bit-reproducible in the DuckDB
-    oracle; ``xxhash64`` is the scale path — the same codegen'd 64-bit
-    hash Spark's own MinHashLSH family builds on, ~3x cheaper than a
-    hex digest + parse, engine-internal only. Near-dup quality is
-    equivalent (both are uniform over the shingle set); signatures are
-    NOT comparable across the two modes."""
-    harr = _hashed_shingles(df, n, base_hash)
-    return _signatures_from_hashed(harr, num_hashes)
-
-
 def _hashed_shingles(df: DataFrame, n: int, base_hash: str) -> DataFrame:
     """(id, __harr): the hashed-shingle array — the ONE
     tokenize+shingle+hash pass both the signature minima and the
@@ -312,8 +282,13 @@ def _hashed_shingles(df: DataFrame, n: int, base_hash: str) -> DataFrame:
     comparison domain to 31 bits and let unrelated large shingle sets
     accrue spurious intersections. ``shingles()`` is distinct and the
     hash effectively injective at this width, so ``__harr`` doubles as
-    the comparison set (the same collision tolerance the 64-bit
-    ``_hashed_sets`` verify arrays always had)."""
+    the comparison set.
+
+    ``base_hash``: ``md5`` is bit-reproducible in the DuckDB oracle;
+    ``xxhash64`` is the scale path — the same codegen'd 64-bit hash
+    Spark's own MinHashLSH family builds on, ~3x cheaper than a hex
+    digest + parse, engine-internal only. Signatures are NOT
+    comparable across the two modes."""
     arr = ensure_parallelism(df).select(
         F.col("doc_id").alias("id"), shingles(F.col("text"), n).alias("__arr")
     )
@@ -379,17 +354,6 @@ def minhash_params(threshold: float, target_recall: float = 0.9) -> tuple[int, i
             best = (r, b)
     r, b = best
     return (r * b, b)
-
-
-def _hashed_sets(df: DataFrame, n: int, out_id: str, out_set: str) -> DataFrame:
-    """(id, hashed-shingle array) projection — the exact-Jaccard
-    verification input of the persisted dedup index."""
-    return ensure_parallelism(df).select(
-        F.col("doc_id").alias(out_id),
-        F.array_distinct(
-            F.transform(shingles(F.col("text"), n), lambda s: F.xxhash64(s))
-        ).alias(out_set),
-    )
 
 
 def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -580,11 +544,9 @@ def simhash_near_pairs(
 
 def near_dedup_corpus(
     df: DataFrame,
-    n: int = 3,
     threshold: float = 0.8,
     num_hashes: int | None = None,
     bands: int | None = None,
-    base_hash: str = "md5",
 ) -> DataFrame:
     """The one-call near-dedup filter: exact dedup -> MinHash-LSH
     candidate pairs -> connected components -> keep one canonical doc
@@ -618,11 +580,9 @@ def near_dedup_corpus(
     survivors = df.join(winners, "doc_id", "semi").localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
     pairs = minhash_lsh_pairs(
         survivors,
-        n=n,
         num_hashes=num_hashes,
         bands=bands,
         threshold=threshold,
-        base_hash=base_hash,
     )
     cc_stats: dict = {}
     comp = connected_components(pairs, stats=cc_stats)
@@ -661,36 +621,16 @@ def incremental_dedup(
     minhash signature + band explosion; shingle arrays for the
     candidate verification) — no corpus-corpus pairs are ever
     generated (that work happened when the corpus was built). The
-    digest/band tables are pure functions of the corpus, so a
-    production deployment persists them once and appends per batch:
-    that path is :func:`build_dedup_index` +
-    :func:`incremental_dedup_indexed` (equivalent output, zero
-    corpus-text passes per batch). This function recomputes them from
-    ``corpus_df`` for the index-free one-shot case.
-    Candidate volume is batch-sized x band-collision rate, so the
+    corpus-side tables are recomputed from ``corpus_df`` on every
+    call. Candidate volume is batch-sized x band-collision rate, so the
     cross join scales with the BATCH, not the corpus."""
     num_hashes, bands = minhash_params(threshold)
 
-    # Corpus-side hashed shingles FIRST (optimization r13, guide §2.6
-    # overlap): the pass is checkpointed and entirely independent of
-    # the batch, so a background action materializes its blocks while
-    # the driver constructs the within-batch pipeline — whose
-    # connected-components stage runs eager jobs that would otherwise
-    # leave the corpus-side map pass to serialize after them inside
-    # the final action. FIFO scheduling back-fills idle cores; if the
-    # warm-up fails (or is still running) the main lineage simply
-    # computes the missing partitions itself.
+    # Corpus-side hashed shingles behind a lazy checkpoint: the
+    # signature minima and the verification sets both read them.
     harr_corp = _hashed_shingles(corpus_df, 3, "md5").localCheckpoint(
         eager=False, storageLevel=BARRIER_STORAGE
     )
-
-    def _warm_corpus() -> None:
-        try:
-            harr_corp.count()
-        except Exception:
-            pass  # the main path recomputes (and reports) on its own
-
-    threading.Thread(target=_warm_corpus, daemon=True).start()
 
     # (1) within-batch exact + near dedup. No extra barrier here: the
     # chain's reuse point is the post-digest checkpoint below, and
@@ -748,172 +688,6 @@ def incremental_dedup(
     joined = cand.join(_sets(harr_new, "new_id", "set_a"), "new_id").join(
         _sets(harr_corp, "corp_id", "set_b"), "corp_id"
     )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    losers = (
-        joined.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select(F.col("new_id").alias("doc_id"))
-        .distinct()
-    )
-    return batch.join(losers, "doc_id", "left_anti")
-
-
-# --- persisted dedup index (VERDICT r5 #5) ------------------------------
-#
-# The steady-state 100 TB shape: the corpus's dedup artifacts are pure
-# functions of its text, so they are computed ONCE when the corpus is
-# built and appended per batch — each incoming batch then touches ZERO
-# corpus text. Three parquet tables:
-#
-#   digests/  (digest)              exact-tier anti-join key, distinct
-#   bands/    (id, band, band_hash) LSH bucket table, written
-#                                   partitioned by band so the batch-
-#                                   side probe prunes to its own bands
-#   sets/     (id, sset)            hashed-shingle arrays for exact-
-#                                   Jaccard verification of candidates
-#   meta/     (1 row)               the LSH parameters baked into the
-#                                   tables; the indexed operator
-#                                   refuses mismatched parameters
-#                                   instead of silently mixing hash
-#                                   families
-
-_INDEX_META_COLS = ("n", "threshold", "num_hashes", "bands", "base_hash")
-
-
-def build_dedup_index(corpus_df: DataFrame, path: str, threshold: float = 0.8) -> None:
-    """Materialize the corpus-side dedup artifacts as parquet under
-    ``path`` — one corpus pass now, zero corpus passes per future
-    batch. ``incremental_dedup_indexed(batch, spark, path)`` is then
-    output-equivalent to ``incremental_dedup(batch, corpus)`` (pinned
-    by tests/test_text_dedup.py).
-
-    Appending a deduped batch to the corpus = appending the SAME three
-    projections of the batch's survivors (mode="append"); parquet
-    append is atomic per file, so index growth is a plain ETL step. The
-    signature family is :func:`incremental_dedup`'s (3-grams, md5,
-    auto-sized from ``threshold``)."""
-    num_hashes, bands = minhash_params(threshold)
-    spark = corpus_df.sparkSession
-
-    _write_index_tables(corpus_df, path, "overwrite", 3, num_hashes, bands, "md5")
-
-    spark.createDataFrame(
-        [(3, float(threshold), int(num_hashes), int(bands), "md5")],
-        list(_INDEX_META_COLS),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def _write_index_tables(
-    df: DataFrame,
-    path: str,
-    mode: str,
-    n: int,
-    num_hashes: int,
-    bands: int,
-    base_hash: str,
-) -> None:
-    # Write order is a crash-recovery contract (ADVICE r6): digests go
-    # LAST. The digests table is what a replayed batch anti-joins
-    # itself away against — if a crash landed digests but not
-    # bands/sets, the replay would skip the batch and its LSH rows
-    # would be missing FOREVER (future near-duplicates escape). With
-    # digests last, a partial append leaves the batch still visible to
-    # the replay: it re-appends bands/sets (duplicate rows degrade
-    # space, not answers — consumers distinct() candidates and losers)
-    # and only then commits the digests marker.
-    sig = minhash_signatures(df, n, num_hashes, base_hash)
-    # partitioned by band: the batch probe joins on (band, band_hash),
-    # so partition pruning would let a band-sliced probe read 1/bands
-    # of the table; more importantly the layout keeps each band's
-    # bucket table contiguous for the shuffle read
-    _banded(sig, num_hashes, bands).write.mode(mode).partitionBy("band").parquet(
-        f"{path}/bands"
-    )
-
-    _hashed_sets(df, n, "id", "sset").write.mode(mode).parquet(
-        f"{path}/sets"
-    )
-
-    digest = F.md5(normalized_text(F.col("text")))
-    df.select(digest.alias("digest")).distinct().write.mode(mode).parquet(
-        f"{path}/digests"
-    )
-
-
-def append_dedup_index(batch_df: DataFrame, path: str) -> None:
-    """Append a (deduplicated) batch's three index projections to an
-    existing index — the "plain ETL step" the build docstring promises.
-    LSH parameters come from the index's meta table so the appended
-    signatures use the SAME hash family the stored ones do; the meta
-    table itself never changes. Re-appending the same batch (e.g. a
-    replayed foreachBatch) degrades only space, not answers: the
-    consumers anti-join digests and ``distinct()`` both the candidate
-    pairs and the loser set, so duplicate index rows cannot change the
-    survivor set."""
-    spark = batch_df.sparkSession
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    _write_index_tables(
-        batch_df,
-        path,
-        "append",
-        int(meta["n"]),
-        int(meta["num_hashes"]),
-        int(meta["bands"]),
-        meta["base_hash"],
-    )
-
-
-def incremental_dedup_indexed(new_df: DataFrame, index_path: str) -> DataFrame:
-    """``incremental_dedup`` against a persisted index instead of the
-    corpus itself: same three tiers (within-batch near-dedup, exact
-    anti-join, banded-LSH + exact-Jaccard verify), but every
-    corpus-side input is a pre-computed parquet read — the per-batch
-    cost no longer includes normalizing/shingling/hashing the corpus
-    at all. LSH parameters come from the index's meta table (they are
-    baked into the stored signatures; passing different ones would
-    silently compare incompatible hash families)."""
-    spark = new_df.sparkSession
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    n, threshold = int(meta["n"]), float(meta["threshold"])
-    num_hashes, bands = int(meta["num_hashes"]), int(meta["bands"])
-    base_hash = meta["base_hash"]
-
-    batch = near_dedup_corpus(
-        new_df, n, threshold, num_hashes, bands, base_hash
-    ).localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-
-    h = "__h"
-    while h in batch.columns:
-        h += "_"
-    digest = F.md5(normalized_text(F.col("text")))
-    corpus_hashes = spark.read.parquet(f"{index_path}/digests").select(
-        F.col("digest").alias(h)
-    )
-    batch = (
-        batch.withColumn(h, digest)
-        .join(corpus_hashes, h, "left_anti")
-        .drop(h)
-        .localCheckpoint(eager=False, storageLevel=BARRIER_STORAGE)
-    )
-
-    sig_new = minhash_signatures(batch, n, num_hashes, base_hash)
-    corp_bands = spark.read.parquet(f"{index_path}/bands").select(
-        F.col("id").alias("corp_id"), "band", "band_hash"
-    )
-    cand = (
-        _banded(sig_new, num_hashes, bands)
-        .withColumnRenamed("id", "new_id")
-        .join(corp_bands, ["band", "band_hash"])
-        .select("new_id", "corp_id")
-        .distinct()
-    )
-    corp_sets = spark.read.parquet(f"{index_path}/sets").select(
-        F.col("id").alias("corp_id"), F.col("sset").alias("set_b")
-    )
-    joined = cand.join(
-        _hashed_sets(batch, n, "new_id", "set_a"), "new_id"
-    ).join(corp_sets, "corp_id")
     inter = F.size(F.array_intersect("set_a", "set_b"))
     union = F.size("set_a") + F.size("set_b") - inter
     losers = (

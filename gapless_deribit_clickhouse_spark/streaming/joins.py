@@ -58,20 +58,3 @@ def stream_stream_enrich(
     age = (F.col("ts").cast("double") - F.col("spot_ts").cast("double")).alias("spot_age_s")
     return joined.drop("__spot_key").withColumn("spot_age_s", age)
 
-
-def stream_static_enrich(stream: DataFrame, dim: DataFrame) -> DataFrame:
-    """Left-join a live stream to a STATIC dimension table on
-    ``underlying`` — the streaming sibling of the batch broadcast
-    enrich (`features/spot_provider.py` J1/J2): stateless, no
-    watermark, no state store.
-
-    Spark re-binds the static side per micro-batch, so a dimension
-    stored as parquet picks up slowly-changing refreshes between
-    batches without restarting the query (the streaming counterpart
-    of the reference's dictionary ensure/auto-create cycle,
-    reference `features/spot_provider.py`). The broadcast hint keeps
-    the join map-side: at 100 TB/day of stream, the dimension is the
-    small side by construction, and no shuffle of the stream ever
-    happens — each micro-batch's tasks join locally.
-    """
-    return stream.join(F.broadcast(dim), "underlying", "left")

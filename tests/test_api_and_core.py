@@ -162,6 +162,18 @@ def test_compact_table_partition_selective(spark, tmp_path):
     assert stats == {"rows_before": 0, "rows_after": 0, "removed": 0, "partitions": []}
     assert len(spark.read.parquet(path).toPandas()) == 4
 
+    # so does a whole-table compaction of a table with no partition
+    # leaf: a path never written, and one whose only append was empty
+    # (its root holds _SUCCESS and its checksum, no directory)
+    never = str(tmp_path / "never_written")
+    emptied = str(tmp_path / "empty_append")
+    write_table(spark.createDataFrame([], schema=TRADES_SCHEMA), load_schema("options_trades"), emptied)
+    assert sorted(p.name for p in Path(emptied).iterdir()) == ["._SUCCESS.crc", "_SUCCESS"]
+    for empty in (never, emptied):
+        stats, jobs = _jobs(spark, lambda: compact_table(spark, empty, **_TRADES_KW))
+        assert stats == {"rows_before": 0, "rows_after": 0, "removed": 0, "partitions": []}
+        assert jobs == 0
+
     stats = compact_table(
         spark, path, keys=["trade_id"], version_cols=["timestamp"],
         partition_cols=["trade_month"],

@@ -1,5 +1,5 @@
 """LLM pipeline operators: dedup recall, ANN recall, embedding-op
-edge cases, text stats sanity."""
+edge cases."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from gapless_deribit_clickhouse_spark.core.tables import load_table
 from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
     cosine_topk,
-    cosine_topk_pandas,
     ivf_topk,
 )
 from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
@@ -257,11 +256,10 @@ def test_embedding_ops_drop_zero_norm_vectors(spark, emb):
     near-dup or a top-k hit (ADVICE r3): naive numpy cosine yields NaN
     for 0/0 and Spark orders NaN ABOVE every number, so an unmasked
     Arrow path would rank the zero vector first. Both Arrow and Column
-    paths must agree with the clean-corpus result."""
+    paths, and the brute-force top-k, must agree with the clean-corpus
+    result."""
     from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        cosine_topk_pandas,
         embedding_near_dup_pairs,
-        ivf_topk,
     )
 
     clean = emb.select(
@@ -283,9 +281,8 @@ def test_embedding_ops_drop_zero_norm_vectors(spark, emb):
         topk = ivf_topk(dirty, queries, k=5, use_arrow=use_arrow).collect()
         assert all(r.vec_id != -1 for r in topk)
         assert all(r.cosine_sim is not None for r in topk)
-    qvecs = [(int(r.query_id), list(r.query_vec)) for r in queries.collect()]
-    pk = cosine_topk_pandas(dirty, qvecs, k=5).collect()
-    assert all(r.vec_id != -1 for r in pk)
+    bf = cosine_topk(dirty, queries, k=5).collect()
+    assert all(r.vec_id != -1 for r in bf)
 
 
 def test_embedding_ops_empty_input_yields_empty_output(spark):
@@ -359,19 +356,6 @@ def test_query_probe_table_arrow_matches_column(spark, emb):
         assert len(a) == 25 * 6 * (1 + mp)
 
 
-def test_pandas_topk_matches_jvm_topk(emb):
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    jvm = cosine_topk(emb, queries, k=5).toPandas().sort_values(["query_id", "rank"])
-    qv = [(r.query_id, list(r.query_vec)) for r in queries.collect()]
-    arrow = (
-        cosine_topk_pandas(emb, qv, k=5).toPandas().sort_values(["query_id", "rank"])
-    )
-    assert jvm.vec_id.tolist() == arrow.vec_id.tolist()
-    assert np.allclose(jvm.cosine_sim.to_numpy(), arrow.cosine_sim.to_numpy(), atol=1e-9)
-
-
 def test_simhash_base_hash_modes_agree_on_exact_dups(docs):
     """Docs with identical distinct-token sets hash identically under
     EITHER signature mode, so those pairs must be hamming-0 in both
@@ -400,18 +384,6 @@ def test_simhash_base_hash_modes_agree_on_exact_dups(docs):
             for r in simhash_near_pairs(docs, max_hamming=0, base_hash=mode).collect()
         }
         assert same_tokens <= got
-
-
-def test_token_topk_vocab_head(docs):
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import token_topk
-
-    top = token_topk(docs, k=10).toPandas()
-    assert len(top) <= 10
-    # sorted by count desc with token tiebreak
-    assert list(top.term_count) == sorted(top.term_count, reverse=True)
-    # doc_freq can never exceed term_count nor the corpus size
-    assert (top.doc_freq <= top.term_count).all()
-    assert (top.doc_freq <= docs.count()).all()
 
 
 def test_sessionize_gap_splits(spark):
@@ -487,28 +459,6 @@ def test_connected_components_and_dedup_clusters(spark):
     assert out.is_duplicate.sum() == 6  # one canonical per cluster + singleton
 
 
-def test_tfidf_top_terms(spark):
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import tfidf_top_terms
-
-    docs = spark.createDataFrame(
-        [
-            (1, "apple banana apple"),
-            (2, "banana cherry"),
-            (3, "cherry durian cherry durian"),
-        ],
-        "doc_id long, text string",
-    )
-    out = tfidf_top_terms(docs, k_per_doc=2).toPandas()
-    # every doc gets at most k terms, ranked 1..k
-    assert set(out.groupby("doc_id")["rank"].max()) <= {1, 2}
-    d1 = out[out.doc_id == 1].sort_values("rank")
-    # 'apple' (tf=2, df=1) dominates 'banana' (tf=1, df=2) for doc 1
-    assert d1.token.tolist() == ["apple", "banana"]
-    import math
-    exp = 2 * (math.log(4 / 2) + 1)
-    assert abs(d1.tfidf.iloc[0] - exp) < 1e-9
-
-
 def test_minhash_fast_hash_path_finds_same_dups(spark):
     from gapless_deribit_clickhouse_spark.pipelines.text_dedup import minhash_lsh_pairs
 
@@ -531,83 +481,6 @@ def test_minhash_fast_hash_path_finds_same_dups(spark):
 
     with pytest.raises(ValueError):
         minhash_lsh_pairs(docs, base_hash="sha9000").collect()
-
-
-def test_repetition_stats_signals(spark):
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import repetition_stats
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spam spam spam spam spam"),          # fully repetitive
-            (2, "one two three four five"),           # fully diverse
-            (3, "a b a b a b a b"),                   # repeated bigram
-        ],
-        "doc_id long, text string",
-    )
-    out = repetition_stats(docs, n=2).toPandas().set_index("doc_id")
-    assert out.loc[1].top_token_count == 5 and out.loc[1].top_token_frac == 1.0
-    assert out.loc[1].dup_token_frac == 0.8   # 1 distinct of 5
-    assert out.loc[1].dup_ngram_frac == 0.75  # 1 distinct of 4 bigrams
-    assert out.loc[2].dup_token_frac == 0.0
-    assert out.loc[2].dup_ngram_frac == 0.0
-    assert out.loc[2].top_token_count == 1
-    assert out.loc[3].top_token_count == 4    # 'a' and 'b' 4x each
-    assert out.loc[3].dup_ngram_frac == (7 - 2) / 7  # 'a b' + 'b a'
-
-
-def test_corpus_profile_groups_and_percentiles(spark):
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import corpus_profile
-
-    df = spark.createDataFrame(
-        [(1, "a b c", "en"), (2, "a b", "en"), (3, "", "de")],
-        "doc_id long, text string, lang string",
-    )
-    out = corpus_profile(df, exact=True).toPandas().set_index("lang")
-    assert out.loc["en"].n_docs == 2 and out.loc["en"].total_tokens == 5
-    assert out.loc["en"].p50_tokens == 2.5  # linear interpolation
-    assert out.loc["de"].total_tokens == 0  # empty text counts 0 tokens
-    approx = corpus_profile(df).toPandas().set_index("lang")
-    assert approx.loc["en"].p50_tokens in (2.0, 3.0)  # sketch picks a sample
-
-
-def test_hashed_linear_score_edges(spark):
-    import math
-
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import (
-        hashed_linear_score,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "hello world"), (2, ""), (3, None), (4, "hello hello")],
-        "doc_id long, text string",
-    )
-    w = [0.5] * 8  # uniform weights -> mean token weight is 0.5
-    out = {
-        r.doc_id: r
-        for r in hashed_linear_score(df, weights=w, bias=0.25).collect()
-    }
-    sig = lambda x: 1.0 / (1.0 + math.exp(-x))  # noqa: E731
-    # any tokens -> logit = bias + 0.5
-    assert out[1].clf_score == pytest.approx(sig(0.75), abs=1e-12)
-    assert out[1].n_tokens == 2
-    # empty / null text -> the prior sigmoid(bias)
-    assert out[2].clf_score == pytest.approx(sig(0.25), abs=1e-12)
-    assert out[3].clf_score == pytest.approx(sig(0.25), abs=1e-12)
-    assert out[3].n_tokens == 0
-    assert out[4].clf_score == pytest.approx(sig(0.75), abs=1e-12)
-    with pytest.raises(ValueError):
-        hashed_linear_score(df, weights=[])
-    # discriminative weights separate docs (hashing trick actually
-    # routes different tokens to different buckets)
-    import hashlib
-
-    wid = [
-        (int(hashlib.md5(f"w{i}".encode()).hexdigest()[:8], 16) % 2001 - 1000)
-        / 1000.0
-        for i in range(64)
-    ]
-    scored = hashed_linear_score(df, weights=wid).toPandas()
-    assert scored.clf_score.nunique() > 1
 
 
 def test_near_dedup_corpus_one_call_filter(spark, docs):
@@ -702,62 +575,6 @@ def test_incremental_dedup_against_corpus(spark):
     assert set(again.doc_id) == ids
 
 
-def test_incremental_dedup_indexed_equivalent(spark, tmp_path):
-    """The persisted-index path must return EXACTLY the recompute
-    path's rows: build_dedup_index(corpus) then
-    incremental_dedup_indexed(batch, index) == incremental_dedup(
-    batch, corpus) — the steady-state 100 TB shape where each batch
-    touches zero corpus text (VERDICT r5 #5)."""
-    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
-        build_dedup_index,
-        incremental_dedup,
-        incremental_dedup_indexed,
-    )
-
-    def sent(i: int) -> str:
-        return " ".join(f"corp{i}tok{j}" for j in range(12))
-
-    corpus = spark.createDataFrame(
-        [(i, sent(i)) for i in range(10)], ["doc_id", "text"]
-    )
-    fresh = [
-        (100 + i, " ".join(f"new{i}tok{j}" for j in range(12))) for i in range(5)
-    ]
-    batch = spark.createDataFrame(
-        fresh
-        + [
-            (200, sent(3)),                # exact copy of corpus doc 3
-            (201, sent(4) + " extra"),     # near copy of corpus doc 4
-            (202, fresh[0][1]),            # exact within-batch copy
-            (203, fresh[1][1] + " tail"),  # near within-batch copy
-        ],
-        ["doc_id", "text"],
-    )
-
-    idx = str(tmp_path / "dedup_index")
-    build_dedup_index(corpus, idx, threshold=0.8)
-    via_index = incremental_dedup_indexed(batch, idx).toPandas()
-    recompute = incremental_dedup(batch, corpus, threshold=0.8).toPandas()
-    assert sorted(via_index.doc_id) == sorted(recompute.doc_id) == [
-        100, 101, 102, 103, 104,
-    ]
-    assert list(via_index.columns) == list(recompute.columns)
-    # the meta table pins the LSH family; the stored params round-trip
-    meta = spark.read.parquet(f"{idx}/meta").collect()[0]
-    assert (meta["n"], meta["base_hash"]) == (3, "md5")
-    # appending the surviving batch through the API (the "plain ETL
-    # step" the build docstring promises): after the append, re-running
-    # the batch drops everything — the index now contains it
-    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
-        append_dedup_index,
-    )
-
-    kept_df = spark.createDataFrame(via_index, "doc_id long, text string")
-    append_dedup_index(kept_df, idx)
-    rerun = incremental_dedup_indexed(batch, idx).toPandas()
-    assert len(rerun) == 0
-
-
 def test_project_embeddings_jl_properties(spark, emb):
     import numpy as np
 
@@ -837,35 +654,6 @@ def test_project_embeddings_guards_and_normalize(spark):
     assert norm_out[4] is None
 
 
-def test_bigram_lm_score_separates_fluent_from_gibberish(spark):
-    from gapless_deribit_clickhouse_spark.pipelines.text_stats import (
-        bigram_lm_score,
-    )
-
-    fluent = "the cat sat on the mat and the cat sat on the mat again"
-    rows = [
-        ("f1", fluent),
-        ("f2", fluent + " and the cat sat down"),
-        # tokens never repeat a context seen elsewhere -> every bigram
-        # is a smoothing-only probability
-        ("g1", "zq xv qj wk vb nm pl ty re ua"),
-        ("s1", "onetoken"),  # < 2 tokens: no bigram evidence, excluded
-        ("n1", None),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id string, text string")
-    out = {r["doc_id"]: r for r in bigram_lm_score(docs).collect()}
-    assert set(out) == {"f1", "f2", "g1"}
-    # repeated fluent bigrams score far better than unseen-context ones
-    assert out["f1"]["avg_logp"] > out["g1"]["avg_logp"]
-    assert out["g1"]["ppl"] > out["f1"]["ppl"]
-    # perplexity is exp(-avg_logp) by construction
-    import math
-
-    for r in out.values():
-        assert math.isclose(r["ppl"], math.exp(-r["avg_logp"]), rel_tol=1e-12)
-        assert r["n_bigrams"] >= 1
-
-
 def test_quantize_embeddings_exact(spark):
     from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
         quantize_embeddings,
@@ -926,43 +714,6 @@ def test_quantized_topk_recall_vs_exact(spark):
         # set is essentially unchanged
         assert recall >= 0.8, (qid, recall)
         assert top1[qid] == qid  # self-similarity survives quantization
-
-
-def test_dedup_index_digests_written_last(spark, tmp_path, monkeypatch):
-    """ADVICE r6 crash-recovery contract: the digests projection — the
-    table a replayed batch anti-joins itself away against — must be
-    the LAST index table written, so a crash mid-append leaves the
-    batch visible to its replay instead of permanently missing its
-    bands/sets rows."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
-        append_dedup_index,
-        build_dedup_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "pack my box with five dozen liquor jugs")],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "order_idx")
-    build_dedup_index(docs, idx, threshold=0.8)
-
-    batch = spark.createDataFrame(
-        [(3, "sphinx of black quartz judge my vow")], "doc_id long, text string"
-    )
-    order: list[str] = []
-    real_parquet = DataFrameWriter.parquet
-
-    def recording_parquet(self, path, *a, **kw):
-        order.append(path.rsplit("/", 1)[-1])
-        return real_parquet(self, path, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
-    append_dedup_index(batch, idx)
-    assert set(order) == {"bands", "sets", "digests"}
-    assert order[-1] == "digests"
 
 
 def test_containment_catches_what_jaccard_misses(spark):

@@ -45,21 +45,17 @@ REQUIRED_PYTHON = {
 
 # BroadcastNestedLoopJoin is allowed ONLY where the build side is
 # bounded by construction, and each listed entry must plan one:
-# - tfidf_top_terms: 1-row corpus-size scalar broadcast
 # - cosine_topk: brute-force similarity baseline — each corpus row
 #   scans the (small, broadcast) query set; the scale paths
 #   (ivf_topk, embedding_near_dup, minhash_lsh_pairs) must NOT NLJ
 #   since round 3's banded-LSH equi-join rewrite
 # - value_histogram: 1-row min/max-bounds scalar broadcast
-# - lm_score: 1-row vocabulary-size scalar broadcast
 # - scan_keyset: 1-row pagination-cursor broadcast (LIMIT 1 by
 #   construction — the keyset predicate references the cursor's
 #   (ts, event_id) on every row, the textbook scalar-broadcast shape)
 ALLOWED_NLJ = {
-    "tfidf_top_terms",
     "cosine_topk",
     "value_histogram",
-    "lm_score",
     "scan_keyset",
     "frequent_tokens",  # 1-row total-count scalar broadcast
     "pit_enrich",  # 1-row horizon (max fact ts) scalar broadcast that

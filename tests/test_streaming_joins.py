@@ -98,40 +98,3 @@ def test_stream_stream_left_outer_flushes_null(spark, tmp_path):
     assert len(unmatched) == 1
     assert pd.isna(unmatched.spot.iloc[0]) and pd.isna(unmatched.spot_age_s.iloc[0])
 
-
-def test_stream_static_enrich_broadcasts_dim(spark, tmp_path):
-    """Stateless stream-static enrichment: every micro-batch row picks
-    up its dimension attributes; unmatched keys keep NULLs under the
-    default left join (no watermark, no state store involved)."""
-    from gapless_deribit_clickhouse_spark.streaming.joins import (
-        stream_static_enrich,
-    )
-
-    tdir = str(tmp_path / "t")
-    trades = [
-        ("BTC", _sec(600), 100.0),
-        ("ETH", _sec(610), 10.0),
-        ("XRP", _sec(620), 1.0),  # no dim row -> NULL tick_size
-    ]
-    spark.createDataFrame(trades, TRADE_SCHEMA).coalesce(1).write.parquet(tdir)
-    dim = spark.createDataFrame(
-        [("BTC", 0.5), ("ETH", 0.05)], "underlying string, tick_size double"
-    )
-    stream = spark.readStream.schema(TRADE_SCHEMA).parquet(tdir)
-    q = (
-        stream_static_enrich(stream, dim)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_static")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT underlying, tick_size FROM ss_static"
-        ).toPandas()
-    finally:
-        q.stop()
-    by_u = dict(zip(got.underlying, got.tick_size))
-    assert by_u["BTC"] == 0.5 and by_u["ETH"] == 0.05
-    assert pd.isna(by_u["XRP"])
