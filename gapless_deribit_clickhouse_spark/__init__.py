@@ -20,8 +20,8 @@ operators/   generic engine operators (dedup, top-k, OHLC resample,
 features/    the reference's domain feature surface (contract
              selection, spot enrichment, moneyness, PCR, term
              structure, DTE buckets, IV percentile, Greeks, EGARCH)
-pipelines/   large-scale training-data ops (dedup exact/minhash/
-             simhash/ngram/embedding, ANN search)
+pipelines/   corpus near-dedup (exact, MinHash-LSH, SimHash,
+             n-gram Jaccard, containment)
 sources/     batch ingestion (paginated collector emulation,
              continuity validation, idempotent sinks, checkpoints)
 streaming/   Structured Streaming ingestion (watermark + dedup)
@@ -91,14 +91,9 @@ _HOME = {
     "minhash_lsh_pairs": "pipelines.text_dedup",
     "near_dedup_corpus": "pipelines.text_dedup",
     "simhash_near_pairs": "pipelines.text_dedup",
-    "cosine_topk": "pipelines.embeddings",
-    "ivf_topk": "pipelines.embeddings",
-    "embedding_near_dup_pairs": "pipelines.embeddings",
     "interdoc_repetition": "pipelines.text_dedup",
     "incremental_dedup": "pipelines.text_dedup",
-    "project_embeddings": "pipelines.embeddings",
     "connected_components": "operators.connected_components",
-    "dedup_clusters": "operators.connected_components",
     "compact_table": "operators.dedup",
     "interval_join": "operators.range_join",
     "sessionize": "operators.sessionize",
@@ -118,7 +113,6 @@ _HOME = {
     "ClickHouseHTTPConnector": "sinks.connector",
     "ClickHouseConnectorConfig": "sinks.connector",
     "write_stream_to_connector": "sinks.connector",
-    "lsh_params": "pipelines.embeddings",
     "minhash_params": "pipelines.text_dedup",
 }
 # reference-name aliases (reference __init__.py:42-65 /

@@ -1,8 +1,7 @@
-"""LLM-data-pipeline bindings: dedup (exact / n-gram Jaccard /
-MinHash-LSH / SimHash / containment, corpus-level near-dedup),
-embedding similarity (brute-force + IVF + near-dup, projection, int8
-quantization) — each with a DuckDB oracle built from the SAME
-deterministic md5/arithmetic primitives."""
+"""LLM-data-pipeline bindings: text dedup (exact / n-gram Jaccard /
+MinHash-LSH / SimHash / containment, corpus-level and incremental
+near-dedup, inter-document repetition) — each with a DuckDB oracle
+built from the SAME deterministic md5/arithmetic primitives."""
 
 from __future__ import annotations
 
@@ -10,11 +9,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.core.tables import load_table
-from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-    cosine_topk,
-    embedding_near_dup_pairs,
-    ivf_topk,
-)
 from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -39,10 +33,6 @@ _GRAMS3 = (
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
 
 
 # --- exact dedup (hash groupBy) ---
@@ -178,179 +168,6 @@ WHERE ({chunk_eq}) AND bit_count(xor(a.simhash, b.simhash)) <= 3
 SIMHASH_SQL = _simhash_sql()
 
 
-# --- embedding cosine top-k (brute force, exact) ---
-_COS = (
-    "list_sum(list_transform(range(1, len(e.embedding) + 1), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))"
-    " / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    " * sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
-)
-
-
-def cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return cosine_topk(emb, queries, k=10)
-
-
-COSINE_TOPK_SQL = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-scored AS (
-  SELECT q.query_id, e.vec_id, {_COS} AS cosine_sim
-  FROM embeddings e CROSS JOIN q),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rank
-  FROM scored)
-SELECT query_id, vec_id, rank, cosine_sim FROM r WHERE rank <= 10
-"""
-
-
-# --- embedding near-dup pairs (banded sign-LSH candidates) ---
-def emb_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return embedding_near_dup_pairs(_emb(spark, sf_dir), threshold=0.35)
-
-
-def _lsh_band_ctes(band_bits: int) -> str:
-    """CTE fragment replicating pipelines/embeddings.band_hashes in
-    DuckDB for the testdata's 64-dim embeddings: same seeded projection
-    matrix (literals round-trip exactly through repr), same sign rule,
-    same band packing."""
-    dim = 64
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        DEFAULT_N_BITS,
-        random_projections,
-    )
-
-    proj = random_projections(dim, DEFAULT_N_BITS)
-    values = ",\n".join(
-        f"({i}, [{', '.join(repr(w) for w in row)}]::DOUBLE[])"
-        for i, row in enumerate(proj)
-    )
-    r = band_bits
-    return f"""proj AS (SELECT * FROM (VALUES {values}) AS t(bit, w)),
-bits AS (
-  SELECT e.vec_id, p.bit,
-         CASE WHEN list_sum(list_transform(range(1, {dim} + 1),
-              d -> CAST(e.embedding[d] AS DOUBLE) * p.w[d])) > 0 THEN 1 ELSE 0 END AS bv
-  FROM embeddings e CROSS JOIN proj p),
-bands AS (
-  SELECT vec_id, CAST(bit // {r} AS INTEGER) AS band,
-         CAST(sum(bv * CAST(power(2, bit % {r}) AS INTEGER)) AS INTEGER) AS h
-  FROM bits GROUP BY 1, 2)"""
-
-
-def _lsh_ctes_topk() -> str:
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import DEFAULT_BAND_BITS
-
-    return _lsh_band_ctes(DEFAULT_BAND_BITS)
-
-
-def _lsh_ctes_near_dup() -> str:
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import NEAR_DUP_BAND_BITS
-
-    return _lsh_band_ctes(NEAR_DUP_BAND_BITS)
-
-
-_LSH_CTES = _lsh_ctes_near_dup()
-_LSH_CTES_TOPK = _lsh_ctes_topk()
-
-_COS_XY = (
-    "list_sum(list_transform(range(1, len(x.embedding) + 1), i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))"
-    " / (sqrt(list_sum(list_transform(x.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))"
-    " * sqrt(list_sum(list_transform(y.embedding, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))))"
-)
-
-EMB_NEAR_DUP_SQL = f"""
-WITH {_LSH_CTES},
-cand AS (
-  SELECT DISTINCT bx.vec_id AS id_a, bb.vec_id AS id_b
-  FROM bands bx JOIN bands bb
-    ON bx.band = bb.band AND bx.h = bb.h AND bx.vec_id < bb.vec_id)
-SELECT cand.id_a, cand.id_b, {_COS_XY} AS cosine_sim
-FROM cand
-JOIN embeddings x ON cand.id_a = x.vec_id
-JOIN embeddings y ON cand.id_b = y.vec_id
-WHERE {_COS_XY} >= 0.35
-"""
-
-
-# --- IVF ANN (approximate; recall pinned by tests, rows-only here) ---
-def ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return ivf_topk(emb, queries, k=10)
-
-
-IVF_TOPK_SQL = f"""
-WITH {_LSH_CTES_TOPK},
-cand AS (
-  SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id
-  FROM bands cb JOIN bands qb ON cb.band = qb.band AND cb.h = qb.h
-  WHERE qb.vec_id < 5),
-q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-scored AS (
-  SELECT cand.query_id, cand.vec_id, {_COS} AS cosine_sim
-  FROM cand
-  JOIN embeddings e ON cand.vec_id = e.vec_id
-  JOIN q ON cand.query_id = q.query_id),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rank
-  FROM scored)
-SELECT query_id, vec_id, rank, cosine_sim FROM r WHERE rank <= 10
-"""
-
-
-# --- duplicate clustering: near-dup pairs -> connected components ->
-#     canonical representative per cluster ---
-def dup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.operators.connected_components import (
-        dedup_clusters,
-    )
-
-    emb = _emb(spark, sf_dir)
-    pairs = embedding_near_dup_pairs(emb, threshold=0.35)
-    return dedup_clusters(emb, pairs, id_col="vec_id")
-
-
-# oracle: same pair graph, components via recursive reachability
-# (UNION dedups rows, so the walk reaches a fixpoint), label = min
-# reachable id.
-DUP_CLUSTERS_SQL = f"""
-WITH RECURSIVE {_LSH_CTES},
-cand AS (
-  SELECT DISTINCT bx.vec_id AS id_a, bb.vec_id AS id_b
-  FROM bands bx JOIN bands bb
-    ON bx.band = bb.band AND bx.h = bb.h AND bx.vec_id < bb.vec_id),
-pairs AS (
-  SELECT cand.id_a, cand.id_b
-  FROM cand
-  JOIN embeddings x ON cand.id_a = x.vec_id
-  JOIN embeddings y ON cand.id_b = y.vec_id
-  WHERE {_COS_XY} >= 0.35),
-edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION SELECT id_b, id_a FROM pairs),
-walk(u, r) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT w.u, e.v FROM walk w JOIN edges e ON w.r = e.u AND e.v <> w.u),
-comp AS (
-  SELECT u AS id, least(min(r), u) AS component FROM walk GROUP BY u),
-sizes AS (
-  SELECT component, count(*) AS sz FROM comp GROUP BY component)
-SELECT e.vec_id,
-       coalesce(cm.component, e.vec_id) AS canonical_id,
-       CAST(coalesce(s.sz, 1) AS BIGINT) AS cluster_size,
-       e.vec_id <> coalesce(cm.component, e.vec_id) AS is_duplicate
-FROM embeddings e
-LEFT JOIN comp cm ON e.vec_id = cm.id
-LEFT JOIN sizes s ON cm.component = s.component
-"""
-
-
 def _minhash_sql_parts(thr: float) -> tuple[str, str, str]:
     """The three DuckDB fragments of the banded-minhash derivation —
     (base shingle hash, per-signature min expressions, band equality
@@ -392,9 +209,9 @@ def _lsh_cc_kept_ctes(survivor_cte: str, thr: float) -> str:
     near_dedup_docs and incremental_dedup oracles so the dedup
     semantics cannot desync. Auto-sizes (num_hashes, bands) from the
     threshold with the SAME ``minhash_params`` derivation the Spark
-    side uses; components via recursive reachability (the
-    DUP_CLUSTERS_SQL pattern). Must be spliced after a
-    ``WITH RECURSIVE`` head."""
+    side uses; components via recursive reachability (UNION dedups
+    rows, so the walk reaches a fixpoint; label = min reachable id).
+    Must be spliced after a ``WITH RECURSIVE`` head."""
     base, mins, band_eq = _minhash_sql_parts(thr)
     return f"""stoks AS (
   SELECT d.doc_id, string_split({_NORM}, ' ') AS t
@@ -569,172 +386,6 @@ WHERE d.doc_id NOT IN (SELECT doc_id FROM crosslosers)
 INCREMENTAL_DEDUP_SQL = _incremental_dedup_sql(_DEDUP_THRESHOLD)
 
 
-# --- JL random-projection dimensionality reduction ---
-_PROJECT_OUT_DIM = 8
-
-
-def embedding_project_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Project the 64-d embeddings to 8 components against the seeded
-    Gaussian matrix and explode to (vec_id, dim_idx, value) rows — a
-    float-scalar layout the rounded value compare handles exactly
-    (array-of-double string formatting differs across engines)."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        project_embeddings,
-    )
-
-    out = project_embeddings(_emb(spark, sf_dir), out_dim=_PROJECT_OUT_DIM)
-    return out.select(
-        "vec_id", F.posexplode("projected").alias("dim_idx", "value")
-    )
-
-
-def _embedding_project_sql() -> str:
-    """Oracle regenerates the SAME seeded Gaussian matrix (identical
-    ``random_projections`` call) as literal VALUES rows; the dot is
-    list_sum(list_transform(...)) — the evaluation order
-    ``_proj_dot``'s fold mirrors."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        DEFAULT_LSH_SEED,
-        random_projections,
-    )
-
-    dim = 64  # testdata embeddings are FLOAT[64]
-    proj = random_projections(dim, _PROJECT_OUT_DIM, DEFAULT_LSH_SEED)
-    # ::DOUBLE[] is load-bearing: without it DuckDB types the literal
-    # list from the repr'd values (DECIMAL unless one happens to print
-    # in scientific notation), FLOAT * DECIMAL evaluates single-
-    # precision, and the 64-term accumulation drifts past the
-    # harness's 6dp compare
-    rows = ",\n  ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in row)}]::DOUBLE[])"
-        for i, row in enumerate(proj)
-    )
-    return f"""
-WITH proj(dim_idx, w) AS (VALUES
-  {rows})
-SELECT e.vec_id, p.dim_idx,
-       list_sum(list_transform(range(1, {dim + 1}),
-                j -> CAST(e.embedding[j] AS DOUBLE) * p.w[j])) AS value
-FROM embeddings e CROSS JOIN proj p
-WHERE e.embedding IS NOT NULL AND len(e.embedding) = {dim}
-"""
-
-
-EMBEDDING_PROJECT_SQL = _embedding_project_sql()
-
-
-# --- int8 embedding quantization (4x shuffle/storage compression) ---
-def embedding_quantize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector symmetric int8 quantization digest: the full qvec
-    arrays stay in pytest pins (array columns stringify differently
-    across engines); here every coordinate is pinned through EXACT
-    integer digests — L1 mass, position-weighted checksum (catches
-    any misplaced element), min/max — plus the float scale and the
-    bounded reconstruction error."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        quantize_embeddings,
-    )
-
-    out = quantize_embeddings(_emb(spark, sf_dir))
-    q = F.col("qvec")
-    return out.select(
-        "vec_id",
-        "scale",
-        "n_dims",
-        "max_abs_err",
-        F.aggregate(
-            q, F.lit(0).cast("long"), lambda a, x: a + F.abs(x).cast("long")
-        ).alias("q_l1"),
-        F.aggregate(
-            F.zip_with(
-                q,
-                F.sequence(F.lit(1).cast("long"), F.size(q).cast("long")),
-                lambda x, i: x.cast("long") * i,
-            ),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        ).alias("q_checksum"),
-        F.array_min(q).cast("int").alias("q_min"),
-        F.array_max(q).cast("int").alias("q_max"),
-    )
-
-
-EMBEDDING_QUANTIZE_SQL = """
-WITH b AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-a AS (
-  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS amax FROM b),
-s AS (
-  SELECT vec_id, v, CASE WHEN amax > 0 THEN amax / 127.0 END AS scale FROM a),
-q AS (
-  SELECT vec_id, v, scale,
-         CASE WHEN scale IS NOT NULL THEN
-           list_transform(v, x -> CAST(round(x / scale) AS TINYINT)) END AS qv
-  FROM s)
-SELECT vec_id, scale, len(v) AS n_dims,
-       CASE WHEN scale IS NOT NULL THEN
-         list_max(list_transform(range(1, len(v) + 1),
-                  i -> abs(v[i] - CAST(qv[i] AS DOUBLE) * scale))) END
-         AS max_abs_err,
-       CAST(list_sum(list_transform(qv, x -> abs(CAST(x AS BIGINT)))) AS BIGINT)
-         AS q_l1,
-       CAST(list_sum(list_transform(range(1, len(qv) + 1),
-                     i -> CAST(qv[i] AS BIGINT) * i)) AS BIGINT) AS q_checksum,
-       CAST(list_min(qv) AS INT) AS q_min,
-       CAST(list_max(qv) AS INT) AS q_max
-FROM q
-"""
-
-
-# --- brute-force top-k over the int8-quantized index ---
-def quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        quantized_cosine_topk,
-    )
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return quantized_cosine_topk(emb, queries, k=10)
-
-
-QUANTIZED_TOPK_SQL = """
-WITH b AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings),
-a AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS amax FROM b),
-s AS (SELECT vec_id, v, amax / 127.0 AS scale FROM a WHERE amax > 0),
-q AS (
-  SELECT vec_id,
-         list_transform(v, x -> CAST(round(x / scale) AS TINYINT)) AS qv
-  FROM s),
-n AS (
-  SELECT vec_id, qv,
-         CAST(list_sum(list_transform(qv, x -> CAST(x AS BIGINT) * CAST(x AS BIGINT)))
-              AS BIGINT) AS n2
-  FROM q),
-pairs AS (
-  SELECT qq.vec_id AS query_id, cc.vec_id,
-         CAST(list_sum(list_transform(range(1, len(cc.qv) + 1),
-              i -> CAST(cc.qv[i] AS BIGINT) * CAST(qq.qv[i] AS BIGINT))) AS BIGINT)
-           AS idot,
-         cc.n2 AS cn2, qq.n2 AS qn2
-  FROM n cc CROSS JOIN n qq WHERE qq.vec_id < 5),
-r AS (
-  SELECT query_id, vec_id,
-         CAST(idot AS DOUBLE)
-           / (sqrt(CAST(cn2 AS DOUBLE)) * sqrt(CAST(qn2 AS DOUBLE))) AS qcos_sim,
-         CAST(row_number() OVER (PARTITION BY query_id ORDER BY
-              CAST(idot AS DOUBLE)
-                / (sqrt(CAST(cn2 AS DOUBLE)) * sqrt(CAST(qn2 AS DOUBLE))) DESC,
-              vec_id) AS INT) AS rank
-  FROM pairs)
-SELECT query_id, vec_id, rank, qcos_sim FROM r WHERE rank <= 10
-"""
-
-
 # --- asymmetric near-containment pairs (round 8) ---
 def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """|A∩B| / min(|A|,|B|) >= 0.9 over trigram shingle sets — the
@@ -767,20 +418,13 @@ WHERE inter / least(sa.c, sb.c) >= 0.9
 
 
 BINDINGS = [
-    ("dup_clusters", dup_clusters_q, DUP_CLUSTERS_SQL),
     ("dedup_exact", dedup_exact_q, DEDUP_EXACT_SQL),
     ("ngram_jaccard_pairs", ngram_jaccard_q, NGRAM_JACCARD_SQL),
     ("minhash_lsh_pairs", minhash_lsh_q, MINHASH_LSH_SQL),
     ("simhash_near_pairs", simhash_q, SIMHASH_SQL),
-    ("cosine_topk", cosine_topk_q, COSINE_TOPK_SQL),
-    ("embedding_near_dup", emb_near_dup_q, EMB_NEAR_DUP_SQL),
-    ("ivf_topk", ivf_topk_q, IVF_TOPK_SQL),
     # the one-call near-dedup filter, oracle-checked standalone
     ("near_dedup_docs", near_dedup_docs_q, NEAR_DEDUP_DOCS_SQL),
     ("interdoc_repetition", interdoc_repetition_q, INTERDOC_REPETITION_SQL),
     ("incremental_dedup", incremental_dedup_q, INCREMENTAL_DEDUP_SQL),
-    ("embedding_project", embedding_project_q, EMBEDDING_PROJECT_SQL),
-    ("embedding_quantize", embedding_quantize_q, EMBEDDING_QUANTIZE_SQL),
-    ("quantized_topk", quantized_topk_q, QUANTIZED_TOPK_SQL),
     ("containment_pairs", containment_pairs_q, CONTAINMENT_PAIRS_SQL),
 ]

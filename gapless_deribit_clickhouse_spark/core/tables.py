@@ -1,8 +1,8 @@
 """Test-data table registration.
 
 The testdata directories (``sf*/``, see ``DEFAULT_SF_DIR``) hold TPC-H-ish
-parquet tables plus ``events`` (an event stream), ``documents`` (text
-corpus) and ``embeddings`` (vectors). Every engine query addresses
+parquet tables plus ``events`` (an event stream) and ``documents``
+(text corpus). Every engine query addresses
 them as temp views so the same code runs over any scale factor
 directory — and, on a real deployment, over a catalog table instead
 (swap ``load_tables`` for ``spark.table``).
@@ -26,7 +26,6 @@ TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

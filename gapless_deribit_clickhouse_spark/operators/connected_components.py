@@ -1,7 +1,7 @@
-"""Connected components over a pair graph + canonical-representative
-selection — the final stage of corpus deduplication (near-dup PAIRS
-from MinHash-LSH / SimHash / embedding-cosine must be closed into
-CLUSTERS before one canonical document per cluster can be kept).
+"""Connected components over a pair graph — the final stage of corpus
+deduplication (near-dup PAIRS from MinHash-LSH / SimHash must be
+closed into CLUSTERS before one canonical document per cluster can be
+kept; ``text_dedup.near_dedup_corpus`` keeps each component's minimum).
 
 Not in the reference (its dedup is single-key ReplacingMergeTree —
 `schema/clickhouse/options_trades.yaml:26`); this belongs to the
@@ -164,37 +164,4 @@ def connected_components(
     )
     return comp.select(F.col("u").alias("node"), "component").union(
         roots.select(F.col("v").alias("node"), F.col("v").alias("component"))
-    )
-
-
-def dedup_clusters(
-    universe: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-) -> DataFrame:
-    """Canonical-representative map over the full corpus: every row of
-    ``universe`` gets (id, canonical_id, cluster_size, is_duplicate);
-    ``pairs`` holds the near-dup edges as (``id_a``, ``id_b``).
-    Rows in no near-dup pair are their own singleton cluster. Keeping
-    ``is_duplicate = false`` rows IS the dedup.
-
-    The components table is tiny relative to the corpus (only ids
-    that occur in a near-dup pair), so cluster sizes are computed on
-    it alone (singletons are size 1 by construction) and the single
-    enrichment join broadcasts — the corpus itself is never
-    shuffled."""
-    comp = connected_components(pairs)
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
-    comp = comp.join(F.broadcast(sizes), "component")
-    return (
-        universe.select(F.col(id_col).alias("id"))
-        .join(F.broadcast(comp.withColumnRenamed("node", "id")), "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("component", F.col("id")).alias("canonical_id"),
-            F.coalesce("sz", F.lit(1)).cast("long").alias("cluster_size"),
-            (F.col("id") != F.coalesce("component", F.col("id"))).alias(
-                "is_duplicate"
-            ),
-        )
     )

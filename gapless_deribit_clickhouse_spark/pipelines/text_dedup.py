@@ -333,15 +333,15 @@ def _signatures_from_hashed(harr: DataFrame, num_hashes: int) -> DataFrame:
 
 def minhash_params(threshold: float, target_recall: float = 0.9) -> tuple[int, int]:
     """Derive ``(num_hashes, bands)`` for banded MinHash-LSH from the
-    Jaccard threshold — the companion of ``embeddings.lsh_params``.
+    Jaccard threshold.
 
     A band of ``r`` rows matches a pair at Jaccard ``s`` with ``s**r``;
     ``B`` bands give recall ``1 − (1 − s**r)**B``. Larger ``r`` is more
     selective (random low-similarity pairs collide at ``s_low**r``),
     so we pick the LARGEST ``r`` whose band count for the recall
-    target still fits a 256-hash signature budget. Unlike
-    sign-LSH, bucket count here is the full hash space, so corpus size
-    does not enter — selectivity is governed by ``r`` alone.
+    target still fits a 256-hash signature budget. The bucket count
+    is the full hash space, so corpus size does not enter —
+    selectivity is governed by ``r`` alone.
     """
     import math
 

@@ -83,16 +83,6 @@ class ParquetServingConnector(ServingConnector):
             .parquet(self.output_path)
         )
 
-    def written_batches(self) -> list[int]:
-        try:
-            return sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(self.output_path)
-                if d.startswith("batch_id=")
-            )
-        except FileNotFoundError:
-            return []
-
 
 _CH_TYPES = {
     "string": "String",

@@ -12,9 +12,9 @@ assumption that lets ``fetch_trades`` filter below the FINAL window.
 
 Scale notes: ``countDistinct`` is exact to match ``uniqExact``; at
 100 TB swap for ``approx_count_distinct`` (noted in SURVEY §2.4 A11).
-The gap window orders globally within each group key — group first
-(per underlying/event_type) so no single-partition global sort occurs
-on the full fact table.
+The gap window sorts within each group key; with no group key (what
+``validation/reporter.py`` asks for) it sorts the whole frame in one
+task, which the reference's volume (~2M trades a year) fits easily.
 """
 
 from __future__ import annotations
@@ -109,42 +109,25 @@ def gap_analysis(
     ts_col: str = "timestamp",
     group_cols: tuple[str, ...] = (),
     threshold_hours: float = 1.0,
-    bucket_seconds: float = 86400.0,
 ) -> DataFrame:
     """Top-100 inter-row gaps exceeding ``threshold_hours`` (reference
-    data_quality.py:48-66): lead(ts) per group, gap in hours, DESC
-    limit. Output: group cols + gap_start, gap_end, gap_hours.
+    data_quality.py:48-66): ``lead(ts) OVER (PARTITION BY group_cols
+    ORDER BY ts)``, gap in hours, DESC limit. Output: group cols +
+    gap_start, gap_end, gap_hours.
 
-    Bucketed (VERDICT r2 #9): with ``group_cols=()`` a plain
-    ``lead() OVER (ORDER BY ts)`` is a single-partition global sort of
-    the whole fact table. Instead the lead runs within (group, day
-    bucket) partitions, and each bucket's LAST row takes its successor
-    from a boundary table — per-bucket first timestamps, metadata-scale
-    (one row per non-empty bucket), broadcast back. The only
-    single-partition sort left orders that tiny boundary table."""
-    epoch = F.col(ts_col).cast("double")
-    base = df.select(*group_cols, F.col(ts_col)).withColumn(
-        "__b", F.floor(epoch / F.lit(float(bucket_seconds)))
+    With ``group_cols=()`` the window has no partition key, so Spark
+    sorts every row in one task; at the reference's volume (~2M trades
+    a year) one task holds that easily."""
+    w = Window.partitionBy(*group_cols).orderBy(F.col(ts_col))
+    gaps = df.select(
+        *group_cols,
+        F.col(ts_col).alias("gap_start"),
+        F.lead(F.col(ts_col)).over(w).alias("gap_end"),
     )
-    w = Window.partitionBy(*group_cols, "__b").orderBy(F.col(ts_col))
-    next_in_bucket = F.lead(F.col(ts_col)).over(w)
-    # one row per non-empty (group, bucket): the bucket's first ts and,
-    # via lead over the bucket sequence, the NEXT non-empty bucket's
-    # first ts (empty buckets in between are skipped correctly)
-    wb = Window.partitionBy(*group_cols).orderBy("__b")
-    bounds = (
-        base.groupBy(*group_cols, "__b")
-        .agg(F.min(ts_col).alias("__first"))
-        .withColumn("__next_first", F.lead("__first").over(wb))
-        .select(*group_cols, "__b", "__next_first")
-    )
-    next_ts = F.coalesce(next_in_bucket, F.col("__next_first"))
-    gap_hours = (next_ts.cast("double") - F.col(ts_col).cast("double")) / 3600.0
-    out = (
-        base.join(F.broadcast(bounds), on=[*group_cols, "__b"], how="left")
-        .withColumn("gap_end", next_ts)
-        .withColumn("gap_hours", gap_hours)
+    gap_hours = (F.col("gap_end").cast("double") - F.col("gap_start").cast("double")) / 3600.0
+    return (
+        gaps.withColumn("gap_hours", gap_hours)
         .filter(F.col("gap_hours") > threshold_hours)
-        .select(*group_cols, F.col(ts_col).alias("gap_start"), "gap_end", "gap_hours")
+        .orderBy(F.col("gap_hours").desc(), F.col("gap_start"))
+        .limit(100)
     )
-    return out.orderBy(F.col("gap_hours").desc(), F.col("gap_start")).limit(100)

@@ -3,11 +3,6 @@
 Each ``ALL_BINDINGS`` entry with DuckDB oracle SQL is compared against
 it at sf0.001: row count, column set, and values. Only the rows-only
 ``egarch_params`` has no oracle.
-
-Also pins the one coupling the LSH oracles can't check themselves:
-the DuckDB CTEs embed a dim=64 projection matrix at import time, so
-the testdata's embedding width must stay 64 (a regenerated corpus
-with a new width would silently diverge engine and oracle).
 """
 
 from __future__ import annotations
@@ -68,14 +63,3 @@ def test_demoted_binding_matches_oracle(spark, duck, name, fn, sql):
             ), f"{name}.{c}"
         else:
             assert a.astype(str).equals(b.astype(str)), f"{name}.{c}"
-
-
-def test_embedding_width_matches_lsh_oracle_assumption():
-    con = duckdb.connect()
-    widths = con.execute(
-        f"SELECT DISTINCT len(embedding) FROM '{SF_DIR}/embeddings.parquet'"
-    ).fetchall()
-    assert widths == [(64,)], (
-        "LSH oracle CTEs are generated for dim=64; regenerate "
-        "bindings/llm_ops._lsh_band_ctes for the new width"
-    )

@@ -1,17 +1,12 @@
-"""LLM pipeline operators: dedup recall, ANN recall, embedding-op
-edge cases."""
+"""LLM pipeline operators: dedup recall and edge cases, connected
+components, sessionization."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from gapless_deribit_clickhouse_spark.core.tables import load_table
-from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-    cosine_topk,
-    ivf_topk,
-)
 from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -23,11 +18,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return load_table(spark, SF, "documents").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return load_table(spark, SF, "embeddings").cache()
 
 
 def test_minhash_lsh_recall_vs_exact(docs):
@@ -74,286 +64,6 @@ def test_minhash_params_rule_and_auto_recall(docs):
     }
     assert exact and len(exact & auto) / len(exact) >= 0.9
     assert auto <= exact
-
-
-def _ivf_recall(emb, queries, multiprobe):
-    exact = cosine_topk(emb, queries, k=5).toPandas()
-    approx = ivf_topk(emb, queries, k=5, multiprobe=multiprobe).toPandas()
-    e = exact.groupby("query_id").vec_id.apply(set)
-    a = approx.groupby("query_id").vec_id.apply(set)
-    return np.mean([len(e[q] & a.get(q, set())) / len(e[q]) for q in e.index]), approx
-
-
-def test_ivf_recall_vs_brute_force(emb):
-    """COVERAGE promise: banded SRP-LSH with query-directed multi-probe
-    recovers >= 0.9 of the brute-force top-k. The test corpus is
-    near-uniform (top-10 cosine ~0.25-0.4, barely above random), the
-    hardest case for LSH — real clustered embeddings hit the same
-    recall with fewer probes."""
-    queries = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    base_recall, _ = _ivf_recall(emb, queries, multiprobe=0)
-    probed_recall, approx = _ivf_recall(emb, queries, multiprobe=2)
-    assert probed_recall >= 0.9
-    # multi-probe only ever adds candidates
-    assert probed_recall >= base_recall
-    # rank 1 is the vector itself (cosine=1), always in its own buckets
-    self_hits = approx[approx["rank"] == 1]
-    assert (self_hits.query_id == self_hits.vec_id).all()
-
-
-def test_embedding_near_dup_recovers_planted_dups(spark, emb):
-    """At the operator's design point (cosine >= 0.95): plant a noisy
-    copy of every 5th vector and require the banded 4x6-bit LSH to
-    recover >= 90% of the planted pairs (analytic recall ~0.95) with
-    zero false positives (exact-cosine verification)."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        embedding_near_dup_pairs,
-    )
-
-    rng = np.random.default_rng(99)
-    base = emb.orderBy("vec_id").toPandas()
-    planted = []
-    rows = []
-    for _, r in base.iterrows():
-        rows.append((int(r.vec_id), [float(x) for x in r.embedding]))
-        if r.vec_id % 5 == 0:
-            v = np.asarray(r.embedding, dtype="float64")
-            noisy = v + rng.standard_normal(len(v)) * 0.02 * np.linalg.norm(v) / np.sqrt(len(v))
-            cos = float(v @ noisy / (np.linalg.norm(v) * np.linalg.norm(noisy)))
-            assert cos >= 0.95, "planted copy must sit above the threshold"
-            dup_id = int(r.vec_id) + 100_000
-            rows.append((dup_id, [float(x) for x in noisy]))
-            planted.append((int(r.vec_id), dup_id))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    result = embedding_near_dup_pairs(df, threshold=0.95).collect()
-    # exact verification: nothing below the threshold survives
-    assert all(r.cosine_sim >= 0.95 for r in result)
-    got = {(r.id_a, r.id_b) for r in result}
-    hit = sum(1 for p in planted if p in got)
-    assert hit / len(planted) >= 0.9
-
-
-def test_lsh_band_table_arrow_matches_column(emb):
-    """The BLAS signature stage (mapInPandas) and the pure-Column
-    left-fold path must produce identical (id, band, h) rows — they
-    can only diverge if a |projection| lands within float summation
-    error of zero (measure-zero for Gaussian hyperplanes)."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        lsh_band_table,
-        random_projections,
-    )
-
-    proj = random_projections(64, 24)
-    for bb in (4, 6):
-        arrow = sorted(
-            map(tuple, lsh_band_table(emb, "vec_id", "embedding", proj, bb).collect())
-        )
-        column = sorted(
-            map(
-                tuple,
-                lsh_band_table(
-                    emb, "vec_id", "embedding", proj, bb, use_arrow=False
-                ).collect(),
-            )
-        )
-        assert arrow == column
-
-
-def test_embedding_ops_ignore_null_vectors(spark, emb):
-    """A null embedding row (corrupt upstream record) must neither
-    crash the Arrow stages nor silently empty the result: non-null
-    vectors are processed exactly as if the null row were absent."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        embedding_near_dup_pairs,
-        ivf_topk,
-    )
-
-    clean = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    # null row FIRST so a naive dim probe would hit it
-    null_row = spark.createDataFrame([(-1, None)], "vec_id long, embedding array<double>")
-    dirty = null_row.unionByName(clean)
-    want = {
-        (r.id_a, r.id_b)
-        for r in embedding_near_dup_pairs(clean, threshold=0.35).collect()
-    }
-    got = {
-        (r.id_a, r.id_b)
-        for r in embedding_near_dup_pairs(dirty, threshold=0.35).collect()
-    }
-    assert got == want and len(got) > 0
-    queries = clean.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    a = ivf_topk(clean, queries, k=5).collect()
-    b = ivf_topk(dirty, queries, k=5).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_lsh_params_growth_rule():
-    """The auto-sizer turns the documented scaling story into code:
-    band_bits grows ~log2(corpus) (bounded buckets), band count covers
-    the target recall analytically, and the bit budget is respected."""
-    import math
-
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import lsh_params
-
-    prev_b = 0
-    for n in (1_000, 10_000, 100_000, 1_000_000):
-        n_bits, b = lsh_params(n, threshold=0.95)
-        assert b >= prev_b, "band_bits must not shrink as the corpus grows"
-        prev_b = b
-        assert 4 <= b <= 16 and n_bits % b == 0 and n_bits <= 512
-        # analytic recall at the threshold must clear the 0.9 target
-        p = 1.0 - math.acos(0.95) / math.pi
-        recall = 1.0 - (1.0 - p**b) ** (n_bits // b)
-        assert recall >= 0.9
-    # clipped floor at tiny corpora
-    assert lsh_params(10)[1] == 4
-
-
-def test_near_dup_auto_params_at_1e5_rows(spark):
-    """VERDICT r3 #3 'done' criterion: at a 10^5-row synthetic corpus
-    with AUTO-chosen LSH params (n_bits=None), planted near-dup pairs
-    are recovered with recall >= 0.9 and zero sub-threshold survivors —
-    the growth rule proven, not just documented."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        embedding_near_dup_pairs,
-    )
-
-    rng = np.random.default_rng(7)
-    n, dim, n_dups = 100_000, 16, 150
-    base = rng.standard_normal((n, dim))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    planted = []
-    dup_rows = np.empty((n_dups, dim))
-    for j in range(n_dups):
-        i = j * (n // n_dups)
-        noisy = base[i] + rng.standard_normal(dim) * 0.18 / np.sqrt(dim)
-        cos = float(base[i] @ noisy / np.linalg.norm(noisy))
-        assert cos >= 0.95, "planted copy must sit above the threshold"
-        dup_rows[j] = noisy
-        planted.append((i, n + j))
-    import pandas as pd
-
-    all_vecs = np.vstack([base, dup_rows])
-    pdf = pd.DataFrame(
-        {"vec_id": np.arange(len(all_vecs), dtype="int64"), "embedding": list(map(list, all_vecs))}
-    )
-    df = spark.createDataFrame(pdf).repartition(32)
-    result = embedding_near_dup_pairs(
-        df, threshold=0.95, n_bits=None, band_bits=None, corpus_size=len(all_vecs)
-    ).collect()
-    assert all(r.cosine_sim >= 0.95 for r in result)
-    got = {(r.id_a, r.id_b) for r in result}
-    hit = sum(1 for p in planted if p in got)
-    assert hit / len(planted) >= 0.9
-
-
-def test_embedding_ops_drop_zero_norm_vectors(spark, emb):
-    """A zero-norm embedding (all-zero vector) must never surface as a
-    near-dup or a top-k hit (ADVICE r3): naive numpy cosine yields NaN
-    for 0/0 and Spark orders NaN ABOVE every number, so an unmasked
-    Arrow path would rank the zero vector first. Both Arrow and Column
-    paths, and the brute-force top-k, must agree with the clean-corpus
-    result."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        embedding_near_dup_pairs,
-    )
-
-    clean = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    dim = len(clean.first().embedding)
-    zero_row = spark.createDataFrame(
-        [(-1, [0.0] * dim)], "vec_id long, embedding array<double>"
-    )
-    dirty = zero_row.unionByName(clean)
-    queries = clean.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    for use_arrow in (True, False):
-        pairs = embedding_near_dup_pairs(
-            dirty, threshold=0.35, use_arrow=use_arrow
-        ).collect()
-        assert all(r.id_a != -1 and r.id_b != -1 for r in pairs)
-        topk = ivf_topk(dirty, queries, k=5, use_arrow=use_arrow).collect()
-        assert all(r.vec_id != -1 for r in topk)
-        assert all(r.cosine_sim is not None for r in topk)
-    bf = cosine_topk(dirty, queries, k=5).collect()
-    assert all(r.vec_id != -1 for r in bf)
-
-
-def test_embedding_ops_empty_input_yields_empty_output(spark):
-    """An empty corpus (e.g. a fully-filtered upstream stage) must
-    yield empty, correctly-typed results — not a pipeline failure."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        embedding_near_dup_pairs,
-        ivf_topk,
-    )
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    pairs = embedding_near_dup_pairs(empty)
-    assert pairs.count() == 0
-    assert set(pairs.columns) == {"id_a", "id_b", "cosine_sim"}
-    queries = spark.createDataFrame([], "query_id long, query_vec array<double>")
-    topk = ivf_topk(empty, queries, k=5)
-    assert topk.count() == 0
-    assert set(topk.columns) == {"query_id", "vec_id", "rank", "cosine_sim"}
-
-
-def test_lsh_pairs_invariant_to_partitioning(spark, emb):
-    """Shuffle-layout invariance: the near-dup pair set must not
-    depend on how the input happens to be partitioned (catches
-    accidental partition-local logic or nondeterministic dedup)."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        embedding_near_dup_pairs,
-    )
-
-    a = {
-        (r.id_a, r.id_b)
-        for r in embedding_near_dup_pairs(emb.repartition(17), threshold=0.35).collect()
-    }
-    b = {
-        (r.id_a, r.id_b)
-        for r in embedding_near_dup_pairs(emb.coalesce(1), threshold=0.35).collect()
-    }
-    assert a == b and len(a) > 0
-
-
-def test_query_probe_table_arrow_matches_column(spark, emb):
-    """Arrow probe expansion == Column probe expansion (same base
-    hashes, same lowest-|margin| flips, same tie-break by bit index)."""
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        _query_probe_table,
-        _query_probe_table_arrow,
-        random_projections,
-    )
-
-    queries = emb.filter(F.col("vec_id") < 25).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    proj = random_projections(64, 24)
-    for mp in (0, 2):
-        a = sorted(
-            map(
-                tuple,
-                _query_probe_table_arrow(
-                    queries, "query_id", "query_vec", proj, 4, mp
-                ).collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                _query_probe_table(
-                    queries, "query_id", "query_vec", proj, 4, mp
-                ).collect(),
-            )
-        )
-        assert a == b
-        assert len(a) == 25 * 6 * (1 + mp)
 
 
 def test_simhash_base_hash_modes_agree_on_exact_dups(docs):
@@ -411,10 +121,9 @@ def test_sessionize_gap_splits(spark):
     assert u2.n_events.tolist() == [2] and u2.duration_s.tolist() == [29 * 60.0]
 
 
-def test_connected_components_and_dedup_clusters(spark):
+def test_connected_components_tiers_agree(spark):
     from gapless_deribit_clickhouse_spark.operators.connected_components import (
         connected_components,
-        dedup_clusters,
     )
 
     # chain 1-2-3-4, triangle 10-11-12 (+ redundant edge), pair 20-21
@@ -449,14 +158,6 @@ def test_connected_components_and_dedup_clusters(spark):
     }
     assert st_dist["input_edges"] == 7 and st_dist["local_tier"] is False
     assert st_dist["rounds"] >= 1  # star rounds actually ran
-
-    universe = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 12, 20, 21, 99]], "doc long")
-    out = dedup_clusters(universe, pairs, id_col="doc").toPandas().set_index("doc")
-    assert out.loc[99].canonical_id == 99 and out.loc[99].cluster_size == 1
-    assert not out.loc[99].is_duplicate
-    assert out.loc[4].canonical_id == 1 and out.loc[4].cluster_size == 4
-    assert out.loc[10].cluster_size == 3 and not out.loc[10].is_duplicate
-    assert out.is_duplicate.sum() == 6  # one canonical per cluster + singleton
 
 
 def test_minhash_fast_hash_path_finds_same_dups(spark):
@@ -573,147 +274,6 @@ def test_incremental_dedup_against_corpus(spark):
     kept_df = spark.createDataFrame(kept, "doc_id long, text string")
     again = incremental_dedup(kept_df, corpus, threshold=0.8).toPandas()
     assert set(again.doc_id) == ids
-
-
-def test_project_embeddings_jl_properties(spark, emb):
-    import numpy as np
-
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        project_embeddings,
-    )
-
-    def cos_pairs(m):
-        nrm = np.linalg.norm(m, axis=1, keepdims=True)
-        u = m / np.clip(nrm, 1e-12, None)
-        sims = u @ u.T
-        iu = np.triu_indices(len(m), k=1)
-        return sims[iu]
-
-    def corr_at(out_dim):
-        pdf = (
-            project_embeddings(emb, out_dim=out_dim)
-            .filter(F.col("projected").isNotNull())
-            .orderBy("vec_id")
-            .limit(200)
-            .toPandas()
-        )
-        hi = np.stack([np.asarray(v, dtype=float) for v in pdf.embedding])
-        lo = np.stack([np.asarray(v, dtype=float) for v in pdf.projected])
-        return np.corrcoef(cos_pairs(hi), cos_pairs(lo))[0, 1], lo
-
-    # JL: projected cosines track the high-dim cosines across pairs,
-    # and fidelity improves with out_dim (distortion ~ 1/sqrt(out_dim))
-    corr24, _ = corr_at(24)
-    corr48, lo = corr_at(48)
-    assert corr48 > 0.6, corr48
-    assert corr48 > corr24 - 0.05, (corr24, corr48)
-    # deterministic: same seed -> identical values
-    again = (
-        project_embeddings(emb, out_dim=48)
-        .filter(F.col("projected").isNotNull())
-        .orderBy("vec_id")
-        .limit(200)
-        .toPandas()
-    )
-    lo2 = np.stack([np.asarray(v, dtype=float) for v in again.projected])
-    assert np.array_equal(lo, lo2)
-
-
-def test_project_embeddings_guards_and_normalize(spark):
-    import numpy as np
-
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        project_embeddings,
-    )
-
-    rows = [
-        (1, [1.0, 2.0, 3.0, 4.0]),
-        (2, None),            # null vector -> null projection
-        (3, [1.0, 2.0]),      # width mismatch -> null, never truncated
-        (4, [0.0, 0.0, 0.0, 0.0]),  # zero vector
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {r.vec_id: r.projected for r in project_embeddings(df, out_dim=3).collect()}
-    assert out[1] is not None and len(out[1]) == 3
-    assert out[2] is None
-    assert out[3] is None
-    # zero vector projects to all-zero (valid), and linearity holds:
-    # proj(2v) == 2*proj(v)
-    assert all(abs(x) < 1e-12 for x in out[4])
-    df2 = spark.createDataFrame(
-        [(1, [2.0, 4.0, 6.0, 8.0])], "vec_id long, embedding array<double>"
-    )
-    doubled = project_embeddings(df2, out_dim=3).collect()[0].projected
-    assert np.allclose(np.asarray(doubled), 2 * np.asarray(out[1]))
-    # normalize: unit L2 norm for non-zero, NULL for the zero vector
-    norm_out = {
-        r.vec_id: r.projected
-        for r in project_embeddings(df, out_dim=3, normalize=True).collect()
-    }
-    assert abs(np.linalg.norm(np.asarray(norm_out[1])) - 1.0) < 1e-9
-    assert norm_out[4] is None
-
-
-def test_quantize_embeddings_exact(spark):
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        quantize_embeddings,
-    )
-
-    rows = [
-        (0, [1.27, -1.27, 0.635, 0.0]),   # amax 1.27 -> scale 0.01
-        (1, [0.0, 0.0]),                  # zero vector: no scale
-        (2, None),                        # null vector: all null
-        (3, [-2.0]),                      # single negative: q = -127
-    ]
-    out = {
-        r["vec_id"]: r
-        for r in quantize_embeddings(
-            spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        ).collect()
-    }
-    r0 = out[0]
-    assert r0["scale"] == pytest.approx(0.01)
-    assert list(r0["qvec"]) == [127, -127, 64, 0]  # 63.5 rounds HALF_UP
-    assert r0["n_dims"] == 4
-    assert r0["max_abs_err"] <= r0["scale"] / 2 + 1e-12
-    assert out[1]["scale"] is None and out[1]["qvec"] is None
-    assert out[2]["qvec"] is None and out[2]["n_dims"] is None
-    assert list(out[3]["qvec"]) == [-127] and out[3]["max_abs_err"] == 0.0
-
-
-def test_quantized_topk_recall_vs_exact(spark):
-    import random
-
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import (
-        cosine_topk,
-        quantized_cosine_topk,
-    )
-
-    rng = random.Random(7)
-    corpus = [
-        (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(200)
-    ]
-    emb = spark.createDataFrame(corpus, "vec_id long, embedding array<double>")
-    queries = emb.filter("vec_id < 3").selectExpr(
-        "vec_id AS query_id", "embedding AS query_vec"
-    )
-    exact = cosine_topk(emb, queries, k=10).collect()
-    quant = quantized_cosine_topk(emb, queries, k=10).collect()
-    by_q_exact: dict = {}
-    for r in exact:
-        by_q_exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    by_q_quant: dict = {}
-    top1 = {}
-    for r in quant:
-        by_q_quant.setdefault(r["query_id"], set()).add(r["vec_id"])
-        if r["rank"] == 1:
-            top1[r["query_id"]] = r["vec_id"]
-    for qid, ex in by_q_exact.items():
-        recall = len(ex & by_q_quant[qid]) / len(ex)
-        # int8 keeps ~2 decimal digits of cosine resolution: the top
-        # set is essentially unchanged
-        assert recall >= 0.8, (qid, recall)
-        assert top1[qid] == qid  # self-similarity survives quantization
 
 
 def test_containment_catches_what_jaccard_misses(spark):

@@ -26,15 +26,8 @@ from gapless_deribit_clickhouse_spark.validation import gap_analysis, quality_me
 SF_DIR = "/root/testdata/sf0.001"
 
 # the only operators allowed off the JVM (Arrow-batched, SURVEY §2.10).
-# The embedding bindings cross once for the LSH signature stage: a
-# whole-Arrow-batch BLAS matmul (batch x dim @ dim x n_bits) — the
-# wide-vector-math case §2.10 reserves the crossing for. The
-# pure-Column twin (use_arrow=False) is pinned equal by
-# tests/test_pipelines.py.
 REQUIRED_PYTHON = {
     "egarch_params",
-    "embedding_near_dup",
-    "ivf_topk",
     "egarch_loglik",  # the exact _neg_loglik sequential kernel the
     # optimizer evaluates, one applyInPandas crossing per group —
     # the crossing IS the thing the DuckDB recursive oracle checks
@@ -45,23 +38,17 @@ REQUIRED_PYTHON = {
 
 # BroadcastNestedLoopJoin is allowed ONLY where the build side is
 # bounded by construction, and each listed entry must plan one:
-# - cosine_topk: brute-force similarity baseline — each corpus row
-#   scans the (small, broadcast) query set; the scale paths
-#   (ivf_topk, embedding_near_dup, minhash_lsh_pairs) must NOT NLJ
-#   since round 3's banded-LSH equi-join rewrite
 # - value_histogram: 1-row min/max-bounds scalar broadcast
 # - scan_keyset: 1-row pagination-cursor broadcast (LIMIT 1 by
 #   construction — the keyset predicate references the cursor's
 #   (ts, event_id) on every row, the textbook scalar-broadcast shape)
 ALLOWED_NLJ = {
-    "cosine_topk",
     "value_histogram",
     "scan_keyset",
     "frequent_tokens",  # 1-row total-count scalar broadcast
     "pit_enrich",  # 1-row horizon (max fact ts) scalar broadcast that
     # closes the SCD2 history's open intervals before the bucketed
     # interval join (operators/scd.py point_in_time_join)
-    "quantized_topk",  # broadcast-queries crossJoin over the int8 index
     "event_cooccurrence",  # 1-row total-group-count scalar broadcast
     # (the lift denominator; the pair join itself is an equi-join on
     # the group id)
@@ -97,12 +84,10 @@ def test_python_only_at_declared_edges(spark, name, fn):
         plan.count(op)
         for op in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
     )
-    # Two entries cross into Python outside the visible plan, so they
-    # count 0 here: dup_clusters consumes the LSH stage too, but its
-    # connected-components local tier executes during construction on
-    # small graphs and returns a LocalTableScan; frequent_tokens'
-    # Misra-Gries mapInPandas pass sits behind its lazy localCheckpoint
-    # barrier, so the plan shows the checkpoint's RDD scan instead.
+    # One entry crosses into Python outside the visible plan, so it
+    # counts 0 here: frequent_tokens' Misra-Gries mapInPandas pass sits
+    # behind its lazy localCheckpoint barrier, so the plan shows the
+    # checkpoint's RDD scan instead.
     assert (crossings >= 1) == (name in REQUIRED_PYTHON), (
         f"{name}: {crossings} Arrow-batched crossings"
     )

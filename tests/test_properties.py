@@ -143,28 +143,6 @@ def test_dedup_resample_top1_deterministic_under_repartition(spark, trades_df):
 
 
 @given(
-    n=st.integers(2, 10**9),
-    threshold=st.floats(0.5, 0.99),
-    recall=st.floats(0.5, 0.99),
-)
-@settings(max_examples=200, deadline=None)
-def test_lsh_params_always_meets_recall_within_budget(n, threshold, recall):
-    """For any corpus size/threshold/recall target: the derived config
-    respects the bit budget, and (unless clipped to the b=4 floor)
-    analytically clears the recall target."""
-    import math
-
-    from gapless_deribit_clickhouse_spark.pipelines.embeddings import lsh_params
-
-    n_bits, b = lsh_params(n, threshold=threshold, target_recall=recall)
-    assert 4 <= b <= 16 and n_bits % b == 0 and n_bits <= 512
-    p = 1.0 - math.acos(threshold) / math.pi
-    achieved = 1.0 - (1.0 - p**b) ** (n_bits // b)
-    if b > 4 or n_bits > 4:  # not clipped by the floor/budget corner
-        assert achieved >= recall - 1e-9
-
-
-@given(
     threshold=st.floats(0.2, 0.95),
     recall=st.floats(0.5, 0.99),
 )

@@ -31,7 +31,6 @@ def test_parquet_connector_replayed_batch_is_idempotent(spark, tmp_path):
     conn.write_batch(df, batch_id=1)
     got = spark.read.parquet(out)
     assert got.count() == 200
-    assert conn.written_batches() == [0, 1]
     per_batch = {
         r.batch_id: r.n
         for r in got.groupBy("batch_id").agg(F.count("*").alias("n")).collect()
