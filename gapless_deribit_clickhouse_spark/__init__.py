@@ -13,15 +13,12 @@ Layout
 core/        SparkSession factory + table registration
 schema/      declarative schema SSoT -> StructType / DDL / contracts
 functions/   column-level helpers (conditional aggs, time buckets,
-             instrument parsing, Black-Scholes, text hashing)
+             instrument parsing, Black-Scholes)
 operators/   generic engine operators (dedup, top-k, OHLC resample,
-             conditional pivot, rolling windows, gap analysis,
-             broadcast enrichment, as-of join)
+             rolling windows, broadcast enrichment, as-of join)
 features/    the reference's domain feature surface (contract
              selection, spot enrichment, moneyness, PCR, term
              structure, DTE buckets, IV percentile, Greeks, EGARCH)
-pipelines/   corpus near-dedup (exact, MinHash-LSH, SimHash,
-             n-gram Jaccard, containment)
 sources/     batch ingestion (paginated collector emulation,
              continuity validation, idempotent sinks, checkpoints)
 streaming/   Structured Streaming ingestion (watermark + dedup)
@@ -85,15 +82,6 @@ _HOME = {
     "greeks_by_bucket": "functions.blackscholes",
     "format_instrument_col": "functions.instrument",
     "format_instrument": "functions.instrument",
-    # large-scale training-data pipeline tier
-    "exact_dedup": "pipelines.text_dedup",
-    "ngram_jaccard_pairs": "pipelines.text_dedup",
-    "minhash_lsh_pairs": "pipelines.text_dedup",
-    "near_dedup_corpus": "pipelines.text_dedup",
-    "simhash_near_pairs": "pipelines.text_dedup",
-    "interdoc_repetition": "pipelines.text_dedup",
-    "incremental_dedup": "pipelines.text_dedup",
-    "connected_components": "operators.connected_components",
     "compact_table": "operators.dedup",
     "interval_join": "operators.range_join",
     "sessionize": "operators.sessionize",
@@ -113,7 +101,6 @@ _HOME = {
     "ClickHouseHTTPConnector": "sinks.connector",
     "ClickHouseConnectorConfig": "sinks.connector",
     "write_stream_to_connector": "sinks.connector",
-    "minhash_params": "pipelines.text_dedup",
 }
 # reference-name aliases (reference __init__.py:42-65 /
 # features/__init__.py:61-88): a reference user's import keeps working

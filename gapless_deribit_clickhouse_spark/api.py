@@ -190,7 +190,6 @@ def describe() -> dict:
             ],
             "validation": ["quality_metrics", "coverage_by_group", "gap_analysis"],
             "ingest": ["paginated_backfill", "structured_streaming"],
-            "pipelines": ["exact_dedup", "minhash_lsh", "simhash", "ngram_jaccard"],
         },
         "data_sources": ["parquet", "parquet_stream"],
     }

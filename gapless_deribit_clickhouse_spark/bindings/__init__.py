@@ -13,7 +13,6 @@ from gapless_deribit_clickhouse_spark.bindings import (
     core_ops,
     extra_ops,
     features_ops,
-    llm_ops,
     mining_ops,
     olap_ops,
     series_ops,
@@ -25,7 +24,6 @@ _MODULES = (
     features_ops,
     analytics_ops,
     extra_ops,
-    llm_ops,
     olap_ops,
     sketch_ops,
     series_ops,

@@ -1,9 +1,8 @@
 """Series-tier bindings: per-key time-series analytics (drawdown,
 realized volatility, EWMA), ClickHouse CollapsingMergeTree read
-parity, SCD2 dimension history, exact-substring duplication
-coverage and lag-1 autocorrelation.
+parity, SCD2 dimension history and lag-1 autocorrelation.
 
-All eight carry full DuckDB oracles. Float-parity choices:
+All seven carry full DuckDB oracles. Float-parity choices:
 
 - EWMA's oracle is ``list_reduce`` with the constants spelled
   ``CAST(1.0 AS DOUBLE) - CAST(0.9 AS DOUBLE)`` so DuckDB performs
@@ -30,11 +29,6 @@ from gapless_deribit_clickhouse_spark.operators.scd import (
     point_in_time_join,
     scd2_history,
 )
-from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
-    substring_dup_fraction,
-)
-
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,32 +201,6 @@ FROM events e JOIN hist h
 """
 
 
-# --- exact-substring duplication coverage per document ---
-def substring_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return substring_dup_fraction(
-        load_table(spark, sf_dir, "documents"), window=8
-    )
-
-
-SUBSTRING_DUP_SQL = f"""
-WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS toks FROM documents),
-tt AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-u AS (SELECT doc_id, toks, n,
-             unnest(range(1, greatest(n - 7, 1) + 1)) AS i FROM tt),
-w AS (SELECT doc_id, n, i - 1 AS pos,
-             array_to_string(toks[i:i+7], ' ') AS g FROM u),
-dup AS (SELECT g FROM w GROUP BY g HAVING count(DISTINCT doc_id) >= 2),
-j AS (SELECT w.doc_id, w.pos, w.n FROM w JOIN dup USING (g)),
-c1 AS (SELECT doc_id, pos, n, unnest(range(0, 8)) AS o FROM j),
-cov AS (SELECT DISTINCT doc_id, pos + o AS p FROM c1 WHERE pos + o <= n - 1),
-cnt AS (SELECT doc_id, count(*) AS n_dup_positions FROM cov GROUP BY doc_id)
-SELECT tt.doc_id, tt.n AS n_tokens,
-       coalesce(cnt.n_dup_positions, 0) AS n_dup_positions,
-       coalesce(cnt.n_dup_positions, 0) / tt.n AS dup_fraction
-FROM tt LEFT JOIN cnt USING (doc_id)
-"""
-
-
 # --- lag-1 autocorrelation per user series ---
 def autocorr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return autocorr_by_key(
@@ -260,6 +228,5 @@ BINDINGS = [
     ("collapsing_merge", collapsing_merge_q, COLLAPSING_MERGE_SQL),
     ("scd2_history", scd2_q, SCD2_SQL),
     ("pit_enrich", pit_enrich_q, PIT_ENRICH_SQL),
-    ("substring_dup_fraction", substring_dup_q, SUBSTRING_DUP_SQL),
     ("value_autocorr", autocorr_q, AUTOCORR_SQL),
 ]

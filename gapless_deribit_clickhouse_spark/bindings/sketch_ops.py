@@ -1,6 +1,6 @@
 """Sketch-tier bindings: ClickHouse approximate-aggregate parity
-(``topK``, ``uniq``/``uniqState``+``uniqMerge``, ``quantileTDigest``)
-done Spark-first — see operators/sketches.py for the scale rationale.
+(``uniq``/``uniqState``+``uniqMerge``, ``quantileTDigest``) done with
+Spark's built-in mergeable sketches.
 
 Oracle strategy. Sketch ESTIMATES are engine-specific (Spark's HLL++
 and DuckDB's approx_count_distinct disagree by design), so a value
@@ -10,10 +10,7 @@ the oracle recomputes — and (b) the sketch's error *contract* as a
 boolean (``abs(est - exact) <= tol * exact``), which the oracle states
 as its expected value (TRUE). The driver's hash compare then fails if
 Spark's sketch ever violates its own error bound, while the exact
-columns get the usual bit-level check. ``frequent_tokens`` needs no
-such seam: the Misra-Gries pass only *bounds where counting happens*,
-and the output is provably the exact support-threshold answer, so it
-carries a full plain-SQL oracle.
+columns get the usual bit-level check.
 """
 
 from __future__ import annotations
@@ -21,38 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gapless_deribit_clickhouse_spark.core.partitioning import ensure_parallelism
 from gapless_deribit_clickhouse_spark.core.tables import load_table
-from gapless_deribit_clickhouse_spark.operators.sketches import frequent_keys_exact
-from gapless_deribit_clickhouse_spark.pipelines.text_dedup import normalized_text
-
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-
-# --- ClickHouse topK parity: guaranteed-exact heavy hitters ---
-def frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus tokens at support >= 1/500 of all occurrences (the
-    vocabulary-head / stopword-mining query ``topK`` serves) via the
-    bounded-memory Misra-Gries candidate pass + exact verification.
-    Integer-rational threshold (freq * 500 >= total) so the cut is
-    bit-identical to the oracle's."""
-    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    toks = docs.select(
-        F.explode(F.split(normalized_text(F.col("text")), " ")).alias("token")
-    ).filter(F.length("token") > 0)
-    return frequent_keys_exact(toks, "token", support_num=1, support_den=500)
-
-
-FREQUENT_TOKENS_SQL = f"""
-WITH toks AS (
-  SELECT unnest(string_split({_NORM}, ' ')) AS token FROM documents),
-t2 AS (SELECT token FROM toks WHERE length(token) > 0),
-tot AS (SELECT count(*) AS total FROM t2)
-SELECT token, freq
-FROM (SELECT token, count(*) AS freq FROM t2 GROUP BY token) x, tot
-WHERE freq * 500 >= 1 * tot.total
-ORDER BY freq DESC, token ASC
-"""
 
 
 # --- ClickHouse uniq / uniqState+uniqMerge parity ---
@@ -158,7 +124,6 @@ ORDER BY event_type
 
 
 BINDINGS = [
-    ("frequent_tokens", frequent_tokens, FREQUENT_TOKENS_SQL),
     ("approx_distinct_rollup", approx_distinct_rollup, APPROX_DISTINCT_SQL),
     ("quantile_sketch_rollup", quantile_sketch_rollup, QUANTILE_SKETCH_SQL),
 ]

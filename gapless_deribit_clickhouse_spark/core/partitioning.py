@@ -1,6 +1,6 @@
 """Partition-count guards.
 
-Expensive per-row expression trees (shingling, hashing, feature
+Expensive per-row expression trees (window frames, feature
 extraction) inherit the scan's split count. A small file arrives as
 ONE split, so the whole pipeline runs in one task regardless of
 cluster size — invisible at 100 TB (plenty of splits), pathological
@@ -12,32 +12,6 @@ at scale.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def spread_expansion(df: DataFrame) -> DataFrame:
-    """Unconditional round-robin repartition for stages whose OUTPUT
-    explodes past their input (in-bucket pair generation, window
-    explodes). AQE sizes a post-shuffle stage by the exchange's input
-    bytes, so an expansion stage gets coalesced to a handful of tasks
-    no matter how much work it emits (guide §2.5). Unlike
-    :func:`ensure_parallelism` this never inspects ``df.rdd`` — on a
-    post-shuffle plan that inspection would force the upstream query
-    stages to execute during CONSTRUCTION under AQE. The cost is one
-    exchange of the (narrow) pre-expansion rows.
-
-    The target is a FLOOR of executor-core count and the session's
-    configured shuffle parallelism (ADVICE r12): pinning to
-    ``defaultParallelism`` alone could repartition a wider input DOWN
-    on a cluster whose shuffle partitioning exceeds its core count,
-    shrinking parallelism and fattening partitions. Locally both
-    values are the core count, so the bench shape is unchanged."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    try:
-        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_parts = 0
-    return df.repartition(max(sc.defaultParallelism, shuffle_parts))
 
 
 # analyzed-plan node names through which ``df.rdd`` stays a pure

@@ -1,11 +1,10 @@
 """Test-data table registration.
 
 The testdata directories (``sf*/``, see ``DEFAULT_SF_DIR``) hold TPC-H-ish
-parquet tables plus ``events`` (an event stream) and ``documents``
-(text corpus). Every engine query addresses
-them as temp views so the same code runs over any scale factor
-directory — and, on a real deployment, over a catalog table instead
-(swap ``load_tables`` for ``spark.table``).
+parquet tables plus ``events`` (an event stream). Every engine query
+addresses them as temp views so the same code runs over any scale
+factor directory — and, on a real deployment, over a catalog table
+instead (swap ``load_tables`` for ``spark.table``).
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ TABLES = (
     "orders",
     "lineitem",
     "events",
-    "documents",
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

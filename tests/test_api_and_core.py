@@ -25,7 +25,6 @@ from gapless_deribit_clickhouse_spark.exceptions import (
     SchemaError,
 )
 from gapless_deribit_clickhouse_spark.functions.instrument import (
-    Instrument,
     format_instrument_col,
     is_valid_instrument,
     parse_instrument,

@@ -45,7 +45,6 @@ REQUIRED_PYTHON = {
 ALLOWED_NLJ = {
     "value_histogram",
     "scan_keyset",
-    "frequent_tokens",  # 1-row total-count scalar broadcast
     "pit_enrich",  # 1-row horizon (max fact ts) scalar broadcast that
     # closes the SCD2 history's open intervals before the bucketed
     # interval join (operators/scd.py point_in_time_join)
@@ -84,10 +83,6 @@ def test_python_only_at_declared_edges(spark, name, fn):
         plan.count(op)
         for op in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
     )
-    # One entry crosses into Python outside the visible plan, so it
-    # counts 0 here: frequent_tokens' Misra-Gries mapInPandas pass sits
-    # behind its lazy localCheckpoint barrier, so the plan shows the
-    # checkpoint's RDD scan instead.
     assert (crossings >= 1) == (name in REQUIRED_PYTHON), (
         f"{name}: {crossings} Arrow-batched crossings"
     )
@@ -151,21 +146,3 @@ def test_codegen_cache_holds_a_feature_pass(spark, trades_df, spot_pdf):
         assert one_pass() == compiled
     finally:
         spark.conf.set(key, old)
-
-
-def test_simhash_has_no_post_checkpoint_exchange(spark):
-    """r11 rework pin: simhash_near_pairs' candidate dedup is a
-    first-zero-XOR-chunk filter, not a distinct() — the visible plan
-    (everything downstream of the checkpointed signature table) must
-    contain NO Exchange at all. A refactor that reintroduces a
-    shuffle over the candidate set fails here, not in a bench diff."""
-    import re
-
-    from gapless_deribit_clickhouse_spark.bindings import ALL_BINDINGS
-
-    fn = next(f for n, f, _ in ALL_BINDINGS if n == "simhash_near_pairs")
-    plan = _plan(fn, spark)
-    exchanges = len(re.findall(r"\bExchange\b", plan)) - len(
-        re.findall(r"ReusedExchange", plan)
-    )
-    assert exchanges == 0, f"simhash candidate stage shuffles:\n{plan[:2000]}"

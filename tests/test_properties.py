@@ -67,38 +67,6 @@ def test_arbitrary_text_never_crashes_validator(s):
     assert is_valid_instrument(s) in (True, False)
 
 
-def test_gram_array_matches_python_reference(spark):
-    """Pin the zip-shifted-slices n-gram shape against a trivial
-    Python implementation across awkward lengths (empty, < n, == n)."""
-    from pyspark.sql import functions as F
-
-    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
-        gram_array,
-        normalized_text,
-    )
-
-    texts = [
-        "", "one", "one two", "one two three", "one two three four",
-        "a a a a a", "  spaced   out  tokens   here ", "x " * 40,
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
-    for n in (2, 3, 5):
-        got = {
-            r["i"]: r["g"]
-            for r in df.select(
-                "i", gram_array(F.split(normalized_text(F.col("text")), " "), n).alias("g")
-            ).collect()
-        }
-        for i, t in enumerate(texts):
-            toks = " ".join(t.lower().split()).split(" ")
-            want = (
-                [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
-                if len(toks) >= n
-                else [" ".join(toks)]
-            )
-            assert got[i] == want, (n, t, got[i], want)
-
-
 def _sorted_rows(df):
     # floats rounded: parallel SUM order legitimately perturbs the
     # last bit; open/high/low/close/winner picks must be EXACT
@@ -140,20 +108,3 @@ def test_dedup_resample_top1_deterministic_under_repartition(spark, trades_df):
         a = _sorted_rows(build(noisy.repartition(1)))
         b = _sorted_rows(build(noisy.repartition(17, "option_type")))
         assert a == b
-
-
-@given(
-    threshold=st.floats(0.2, 0.95),
-    recall=st.floats(0.5, 0.99),
-)
-@settings(max_examples=200, deadline=None)
-def test_minhash_params_always_meets_recall_within_budget(threshold, recall):
-    from gapless_deribit_clickhouse_spark.pipelines.text_dedup import minhash_params
-
-    num_hashes, bands = minhash_params(threshold, target_recall=recall)
-    r = num_hashes // bands
-    assert num_hashes <= 256 and num_hashes % bands == 0 and r >= 1
-    achieved = 1.0 - (1.0 - threshold**r) ** bands
-    assert achieved >= recall - 1e-9
-
-

@@ -1,9 +1,9 @@
 """Semantics tests for the series tier: drawdown / realized vol /
 EWMA (features/timeseries.py), CollapsingMergeTree parity
 (operators/dedup.collapse_by_sign), SCD2 history (operators/scd.py)
-and substring duplication coverage — hand-built
-inputs with hand-computed expected values; the DuckDB value oracles
-live in bindings/series_ops.py."""
+and lag-1 autocorrelation — hand-built inputs with hand-computed
+expected values; the DuckDB value oracles live in
+bindings/series_ops.py."""
 
 from __future__ import annotations
 
@@ -22,9 +22,6 @@ from gapless_deribit_clickhouse_spark.operators.dedup import collapse_by_sign
 from gapless_deribit_clickhouse_spark.operators.scd import (
     point_in_time_join,
     scd2_history,
-)
-from gapless_deribit_clickhouse_spark.pipelines.text_dedup import (
-    substring_dup_fraction,
 )
 
 
@@ -193,31 +190,6 @@ def test_point_in_time_join_half_open(spark):
     assert out == {0: "A", 1: "A", 2: "B", 3: "B"}
     # each fact matches exactly one version — no interval overlap
     assert point_in_time_join(facts, hist, "ts", ["key"]).count() == 4
-
-
-def test_substring_dup_fraction(spark):
-    shared = "alpha bravo charlie delta echo foxtrot golf hotel"  # 8 tokens
-    rows = [
-        (0, shared + " unique zero tail"),
-        (1, "one head " + shared),
-        (2, "entirely different words with no overlap at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in substring_dup_fraction(df, window=8).collect()}
-    # docs 0/1 share exactly the one 8-token window; it covers 8 of 11
-    # (doc 0) and the last 8 of 10 (doc 1) token positions
-    assert out[0]["n_tokens"] == 11 and out[0]["n_dup_positions"] == 8
-    assert out[0]["dup_fraction"] == pytest.approx(8 / 11)
-    assert out[1]["n_tokens"] == 10 and out[1]["n_dup_positions"] == 8
-    assert out[2]["n_dup_positions"] == 0 and out[2]["dup_fraction"] == 0.0
-
-
-def test_substring_dup_short_docs_whole_text(spark):
-    rows = [(0, "tiny doc"), (1, "tiny doc"), (2, "tiny other")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in substring_dup_fraction(df, window=8).collect()}
-    assert out[0]["dup_fraction"] == 1.0 and out[1]["dup_fraction"] == 1.0
-    assert out[2]["dup_fraction"] == 0.0
 
 
 def test_autocorr_planted_series(spark):
